@@ -320,8 +320,8 @@ object ScaleProbe {
         (System.nanoTime() - t0) / 1e9
       }
       println(f"bt_construct_only sec=$tCons%.3f")
-      // gather-only floor: the same groupBy+sort_array+collect_list the
-      // backtest (and forecastBy) pays, with no kernel on top
+      // gather-only floor: the same Series.gather forecastBy pays, with no
+      // kernel on top
       val tGather = m3v(onceDf(graft.ops.Series.gather(series10, "g", "ds", "y")))
       println(f"bt_gather_only sec=$tGather%.3f")
       // alternative gather shape: one raw-row shuffle + per-partition sort +

@@ -431,8 +431,8 @@ object RetrievalOps {
 
   private def requireBoundedQueryBatch(n: Int, what: String): Unit =
     require(n <= MaxCollectedQueryTerms,
-      s"$what has $n rows — the query side must be a BOUNDED eval/probe " +
-        s"batch (≤ $MaxCollectedQueryTerms distinct (qid, term) pairs); " +
+      s"$what has more than $MaxCollectedQueryTerms rows — the query side must be a " +
+        s"BOUNDED eval/probe batch (≤ $MaxCollectedQueryTerms distinct (qid, term) pairs); " +
         "this looks like a corpus passed as queries")
 
   private[graft] final case class IndexQueryPrep(nBuckets: Int, hasDocGroup: Boolean,
@@ -453,9 +453,11 @@ object RetrievalOps {
     val hasDocGroup = metaRow.schema.fieldNames.contains("has_docgroup") &&
       metaRow.getBoolean(metaRow.fieldIndex("has_docgroup"))
     val qidField = queries.schema(qidCol)
+    // the limit bounds driver memory BEFORE the collect: an oversize
+    // batch brings back one row too many and fails the check below
     val qtPairs = queries.select(col(qidCol).as("_qid"),
         explode(toks(col(qtextCol))).as("term"))
-      .distinct().collect()
+      .distinct().limit(MaxCollectedQueryTerms + 1).collect()
     requireBoundedQueryBatch(qtPairs.length, "the distinct (qid, term) batch")
     val qtLocal = spark.createDataFrame(
       java.util.Arrays.asList(qtPairs: _*),

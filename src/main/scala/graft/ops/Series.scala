@@ -8,10 +8,11 @@ import org.apache.spark.sql.types._
   *
   * The reference materializes each group into dense arrays via
   * `LIST(value ORDER BY date)` inside a GROUP BY (ts_macros.cpp:37-42); the
-  * Spark shape is `groupBy(g).agg(sort_array(collect_list(struct(ds, y))))` —
-  * Catalyst plans partial + final hash aggregation around a shuffle on the
-  * group key, so per-task memory stays O(series length), matching the
-  * reference's O(group) contract (ts_forecast_native.cpp:23-26).
+  * Spark shape is `groupBy(g).agg(series_gather(t, v, nu))`, a native
+  * aggregate ([[graft.functions.SeriesGather]]) whose map-side partial packs
+  * each series into primitive arrays before the group-key exchange, so
+  * per-task memory stays O(series length), matching the reference's
+  * O(group) contract (ts_forecast_native.cpp:23-26).
   *
   * Date columns may be DATE, TIMESTAMP, INTEGER or BIGINT and are normalized
   * to epoch micros (raw value for integer columns), with the original type
@@ -45,32 +46,44 @@ object Series {
     case _ => false
   }
 
-  /** Gather each group into parallel arrays `(_ts, _vs, _nu)` sorted by time:
-    * epoch-micros timestamps, values (NaN where null), null mask.
+  /** The aggregate column gathering a group's rows into one
+    * `struct<t, v, nu>` of parallel arrays sorted by time: epoch-micros
+    * timestamps, values (NaN where y is null) and the y-is-null mask.
+    * Rows with a null ds are skipped; callers filter them first. */
+  def sortedSeries(dsCol: String, dsType: DataType, yCol: String): Column = {
+    val B = org.apache.spark.sql.GraftExpressionBridge
+    B.column(graft.functions.SeriesGather(
+      B.expression(toMicros(col(dsCol), dsType)),
+      B.expression(coalesce(col(yCol).cast(DoubleType), lit(Double.NaN))),
+      B.expression(col(yCol).isNull)).toAggregateExpression())
+  }
+
+  /** Gather each group into parallel arrays `(_ts, _vs, _nu)` sorted by time
+    * (see [[sortedSeries]]).
     *
-    * Partitioning (r11): the gather output feeds PER-SERIES KERNELS
-    * (forecast optimizers, stats, changepoints) whose downstream cost is
-    * CPU per row, not bytes — exactly the case AQE's byte-based partition
-    * coalescing cannot see. At bench scale the gathered table is ~1 MB, so
-    * AQE collapsed the agg exchange to ONE partition and the whole AutoETS
-    * pass ran on a single core (measured: 2.2 s kernel stage ≈ the 2.3 s
-    * single-thread kernel CPU of all 1,500 series). The fix keys the ONE
-    * exchange with an EXPLICIT partition count (`repartition(n, g)` before
-    * the groupBy — the aggregate reuses that partitioning, so no second
-    * exchange, same bytes on the wire): a REPARTITION_BY_NUM shuffle is
-    * never coalesced by AQE, and `n` comes from spark.sql.shuffle.partitions
-    * — the standard cluster-sized knob (the bench sets it to
-    * SPARK_GRAFT_CPUS), never a local constant. */
+    * Plan shape: partial aggregate → group-key exchange → final aggregate →
+    * round-robin `repartition(n)` → the caller's per-series kernel. The
+    * partial aggregate packs rows map-side, so about one record per series
+    * and input partition crosses the key exchange instead of every raw row.
+    *
+    * Partitioning: the gather output feeds PER-SERIES KERNELS (forecast
+    * optimizers, stats, changepoints) whose downstream cost is CPU per row,
+    * not bytes — exactly the case AQE's byte-based partition coalescing
+    * cannot see. The gathered table is small, so AQE may fold the key
+    * exchange onto one partition; the kernel therefore reads from a second,
+    * REPARTITION_BY_NUM exchange, which AQE never coalesces, with `n` from
+    * spark.sql.shuffle.partitions (the standard cluster-sized knob, never a
+    * local constant). A `repartition(n, g)` in that place does not work:
+    * EnsureRequirements drops it as redundant with the aggregate's own
+    * hash exchange, which is then coalescible again. The output is
+    * therefore NOT hash-partitioned on the group key: a consumer that joins
+    * or aggregates on the key pays its own exchange (no op in `ops/` does). */
   def gather(df: DataFrame, groupCol: String, dsCol: String, yCol: String): DataFrame = {
-    val dsType = df.schema(dsCol).dataType
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
     df.filter(col(dsCol).isNotNull)
-      .repartition(n, col(groupCol))
       .groupBy(col(groupCol))
-      .agg(sort_array(collect_list(struct(
-        toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu")))).as("_s"))
+      .agg(sortedSeries(dsCol, df.schema(dsCol).dataType, yCol).as("_s"))
+      .repartition(n)
       .select(col(groupCol), col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
   }
 }

@@ -120,18 +120,18 @@ object TsCvOp {
     val testCounts = test.groupBy(col("fold_id"), col(groupCol))
       .agg(count(lit(1)).cast(IntegerType).as("_h"))
 
+    // no explicit repartition here (unlike Series.gather): the join with
+    // testCounts needs the (fold_id, g) hash partitioning the aggregate
+    // already has, and a round-robin exchange would add a second one
     val gathered = train
       .filter(col(dsCol).isNotNull)
       .groupBy(col("fold_id"), col(groupCol))
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu")))).as("_s"))
+      .agg(Series.sortedSeries(dsCol, dsType, yCol).as("_s"))
       .join(testCounts, Seq("fold_id", groupCol))
 
-    val fcUdf = udf((vs: Seq[Double], nu: Seq[Boolean], h: Int) => {
+    val fcUdf = udf((vs: Array[Double], nu: Array[Boolean], h: Int) => {
       try {
-        val out = Forecast.forecast(vs.toArray, nu.map(!_).toArray, opts.copy(horizon = h))
+        val out = Forecast.forecast(vs, nu.map(!_), opts.copy(horizon = h))
         Some((0 until out.point.length).map(i =>
           CvFcStep(i + 1, out.point(i), out.lower(i), out.upper(i), out.modelName)))
       } catch {
@@ -206,6 +206,9 @@ object TsCvOp {
     // one shuffle: gather each group's full ordered series (positions match
     // cvFoldsBy's row_number-over-ds — all rows counted, null-ds rows sort
     // first and are dropped from the kernel input only, like cvForecastBy).
+    // This keeps sort_array(collect_list(struct)) rather than the native
+    // Series.sortedSeries, which skips null-ds rows: here they must stay in
+    // the array because they count toward every fold position.
     // The struct carries only (t, v, nu): the original ds value is
     // reconstructed from the micros sort key on output (Series.fromMicros
     // is toMicros' exact inverse), so the gather shuffle never moves a

@@ -44,6 +44,9 @@ object TsExogOp {
     val dsType = df.schema(dsCol).dataType
     val freq = Frequency.parse(frequency).forIntegerDs(Series.isIntegerDs(dsType))
 
+    // collect_list of structs, not the native Series.sortedSeries: each row
+    // also carries its regressor array `x`, which the primitive (t, v, nu)
+    // buffers cannot hold
     val hist = df.filter(col(dsCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(sort_array(collect_list(struct(

@@ -11,9 +11,12 @@ import graft.types.Frequency
   *
   * Reference lifecycle (ts_macros.cpp:575-602 → _ts_forecast_scalar →
   * Rust forecast): GROUP BY gather → per-group kernel → unnest. Spark shape:
-  * groupBy + collect_list (partial agg + shuffle on the group key) → kernel
-  * UDF per group → explode. One kernel invocation per series; parallelism
-  * scales with the number of series across executors.
+  * [[Series.gather]] (native map-side partial aggregate → group-key exchange
+  * → final aggregate → round-robin exchange with an explicit partition
+  * count) → kernel UDF per group over primitive `Array[Long]/Array[Double]/
+  * Array[Boolean]` inputs (no per-element boxing) → explode. One kernel
+  * invocation per series; parallelism scales with the number of series
+  * across executors. The output is not hash-partitioned on the group key.
   *
   * Error isolation contract (ts_forecast_native.cpp:666-672): per-group data
   * errors (insufficient data, computation failures) skip the group; invalid
@@ -32,12 +35,10 @@ object TsForecastOp {
                              aic: Option[Double], bic: Option[Double])
 
   /** Run the kernel for one gathered series; None ⇒ skip group. */
-  private def runKernel(ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean],
+  private def runKernel(ts: Array[Long], vs: Array[Double], nu: Array[Boolean],
                         opts: Forecast.Options, freq: Frequency): Option[Seq[FcStep]] = {
     try {
-      val values = vs.toArray
-      val valid = nu.map(!_).toArray
-      val out = Forecast.forecast(values, valid, opts)
+      val out = Forecast.forecast(vs, nu.map(!_), opts)
       val lastT = ts.last
       Some((0 until out.point.length).map { i =>
         FcStep(i + 1, freq.advance(lastT, i + 1L), out.point(i), out.lower(i), out.upper(i),
@@ -64,7 +65,7 @@ object TsForecastOp {
     val dsType = df.schema(dsCol).dataType
     val freq = Frequency.parse(frequency).forIntegerDs(Series.isIntegerDs(dsType))
 
-    val fc = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) =>
+    val fc = udf((ts: Array[Long], vs: Array[Double], nu: Array[Boolean]) =>
       runKernel(ts, vs, nu, opts, freq))
 
     Series.gather(df, groupCol, dsCol, yCol)
@@ -84,8 +85,8 @@ object TsForecastOp {
   def forecastInspectBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                         method: String, params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, 1, params)
-    val insUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      try Some(graft.kernels.Introspect.inspect(vs.toArray, nu.map(!_).toArray, opts))
+    val insUdf = udf((vs: Array[Double], nu: Array[Boolean]) => {
+      try Some(graft.kernels.Introspect.inspect(vs, nu.map(!_), opts))
       catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => None }
     })
     Series.gather(df, groupCol, dsCol, yCol)
@@ -100,9 +101,9 @@ object TsForecastOp {
                         method: String, horizon: Int,
                         params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, horizon, params)
-    val exUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
+    val exUdf = udf((vs: Array[Double], nu: Array[Boolean]) => {
       try {
-        val e = graft.kernels.Introspect.explain(vs.toArray, nu.map(!_).toArray, horizon, opts)
+        val e = graft.kernels.Introspect.explain(vs, nu.map(!_), horizon, opts)
         Some(e.forecast_step.indices.map(i =>
           (e.forecast_step(i), e.level(i), e.trend(i), e.seasonal(i), e.residual(i), e.model_name)))
       } catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => None }
@@ -122,22 +123,19 @@ object TsForecastOp {
     val dsType = df.schema(dsCol).dataType
     val gathered = df
       .filter(col(dsCol).isNotNull)
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu")))).as("_s"))
-      .select(col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
+      .agg(Series.sortedSeries(dsCol, dsType, yCol).as("_s"))
+      .select(col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
 
-    val fc = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
+    val fc = udf((vs: Array[Double], nu: Array[Boolean]) => {
       try {
-        val out = Forecast.forecast(vs.toArray, nu.map(!_).toArray, opts)
+        val out = Forecast.forecast(vs, nu.map(!_), opts)
         Some(SingleOut(out.point.toSeq, out.lower.toSeq, out.upper.toSeq, out.modelName,
           out.aic, out.bic))
       } catch {
         case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
       }
     })
-    gathered.select(fc(col("_ts"), col("_vs"), col("_nu")).as("_o"))
+    gathered.select(fc(col("_vs"), col("_nu")).as("_o"))
       .filter(col("_o").isNotNull)
       .select(col("_o.point_forecasts").as("point_forecasts"),
         col("_o.lower_bounds").as("lower_bounds"),

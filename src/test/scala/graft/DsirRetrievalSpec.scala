@@ -1,8 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{DsirOps, MixOps, RetrievalOps}
@@ -293,6 +298,38 @@ class DsirRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val adaptive = snap(RetrievalOps.bm25QueryIndex(spark, dir,
       queries, "qid", "text", k = 5))
     assert(adaptive == direct)
+  }
+
+  test("bm25 index query: an oversize (qid, term) batch fails with the bounded-batch error") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25_idx_bound").toString
+    RetrievalOps.bm25BuildIndex(bmCorpus, "doc_id", "text", dir, nTermBuckets = 4)
+    val max = RetrievalOps.MaxCollectedQueryTerms
+    // max + 1 distinct (qid, term) pairs: every qid has the one term "x"
+    val queries = spark.range(max + 1L).select(col("id").as("qid"), lit("x").as("text"))
+    val collectLimits = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    def limits(p: SparkPlan): Seq[Int] = p match {
+      case a: AdaptiveSparkPlanExec => limits(a.executedPlan)
+      case q: QueryStageExec => limits(q.plan)
+      case c: CollectLimitExec => c.limit +: c.children.flatMap(limits)
+      case o => o.children.flatMap(limits)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") limits(qe.executedPlan).foreach(collectLimits.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val e = intercept[IllegalArgumentException](
+        RetrievalOps.indexQueryPrep(spark, dir, queries, "qid", "text"))
+      assert(e.getMessage.contains("BOUNDED eval/probe batch"), e.getMessage)
+      assert(e.getMessage.contains(s"more than $max rows"), e.getMessage)
+      // the batch reached the driver through a limit of max + 1, so the
+      // check ran on a bounded collect, not on the whole batch
+      eventually(timeout(Span(30, Seconds))) {
+        assert(collectLimits.contains(max + 1), collectLimits)
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   // -------------------------------------------------------------- UniMax

@@ -1001,7 +1001,9 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"the text column must prune out of every scan:\n$plan")
   }
 
-  test("flagship forecast: one shuffle on the group key, no cartesian") {
+  // the partial aggregate packs each series before the group-key exchange,
+  // the kernel reads a count-pinned round-robin exchange, and no cartesian
+  test("flagship forecast: packed map-side gather, REPARTITION_BY_NUM kernel input") {
     val df = graft.ops.TsForecastOp.forecastBy(
       events
         .groupBy(org.apache.spark.sql.functions.col("event_type").as("g"),
@@ -1012,15 +1014,49 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.queryExecution.executedPlan
     assert(!plan.toString.contains("CartesianProduct"),
       "per-series forecasting must never cross-join")
-    // r11: the gather exchange must carry an EXPLICIT partition count
-    // (REPARTITION_BY_NUM) — AQE's byte-based coalescing otherwise folds
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => strip(w.child)
+      case i: InputAdapter => strip(i.child)
+      case other => other
+    }
+    // the group-key exchange carries the PARTIAL native gather — one packed
+    // record per series and input partition — never the raw (g, ds, y) rows
+    val keyExchanges = plan.collect {
+      case s: ShuffleExchangeExec if (s.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("g")
+        case _ => false
+      }) => s
+    }
+    assert(keyExchanges.length == 1, s"expected one exchange keyed on g alone:\n$plan")
+    strip(keyExchanges.head.child) match {
+      case a: BaseAggregateExec =>
+        assert(a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial),
+          s"the key exchange must sit on a partial aggregate:\n$a")
+        assert(a.aggregateExpressions.exists(
+            _.aggregateFunction.isInstanceOf[graft.functions.SeriesGather]),
+          s"the partial aggregate must be the native series gather:\n$a")
+      case other => fail(s"raw rows cross the group-key exchange:\n$other")
+    }
+    // r11: the kernel must read from an exchange with an EXPLICIT partition
+    // count (REPARTITION_BY_NUM) — AQE's byte-based coalescing otherwise folds
     // the tiny gathered-series table to ONE partition and the whole
     // per-series kernel stage runs on a single core (measured: the AutoETS
-    // bench stage at 2.2 s wall ≈ its 2.3 s single-thread kernel CPU).
-    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-    assert(plan.collect {
-        case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_NUM => s
-      }.nonEmpty,
-      s"the series gather must pin its partition count against AQE coalescing:\n$plan")
+    // bench stage at 2.2 s wall ≈ its 2.3 s single-thread kernel CPU)
+    val kernel = plan.collect { case g: GenerateExec => g }
+    assert(kernel.length == 1, s"expected one kernel explode:\n$plan")
+    def exchangeBelow(p: SparkPlan): Option[ShuffleExchangeExec] = strip(p) match {
+      case s: ShuffleExchangeExec => Some(s)
+      case pr: ProjectExec => exchangeBelow(pr.child)
+      case _ => None
+    }
+    val kernelInput = exchangeBelow(kernel.head.child)
+    assert(kernelInput.exists(_.shuffleOrigin == REPARTITION_BY_NUM),
+      s"the kernel's input exchange must pin its partition count against AQE coalescing:\n$plan")
   }
 }
