@@ -123,7 +123,8 @@ object PlanDump {
         "strings, and only candidate IDs rejoin the strings for the " +
         "banded-Levenshtein verify. Strings never cross the gram " +
         "exchange; no nested-loop join exists in the plan (PlanGuardSpec " +
-        "pins both; the A/B vs the quadratic scan is GRAFT_PROBE=fuzzy)."),
+        "pins both; the A/B vs the quadratic scan was measured with the " +
+        "retired probe harness, last present at 65f6bcd)."),
       "pagerank_knn" -> ("NOTE: the canonical distributed PageRank in " +
         "SCALED-LONG arithmetic — rank mass is an integer in 1e-12 " +
         "units, every update is integer multiply/divide/sum, so the " +

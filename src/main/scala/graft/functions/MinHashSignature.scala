@@ -210,11 +210,6 @@ object MinHashSignature {
     }
     sig
   }
-
-  /** Probe access to the production fold (it is private[functions]). */
-  private[graft] def signatureCurrent(s: UTF8String, numHashes: Int,
-                                      shingleSize: Int): Array[Long] =
-    signature(s, numHashes, shingleSize)
 }
 
 /** Native LSH banding fused with the MinHash signature: emits the `bands`

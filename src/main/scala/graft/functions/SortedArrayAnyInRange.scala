@@ -17,7 +17,9 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * `g×` rows per duplicated window and collect_set-ed the expansion; the
   * starts carry the same information at 1/g the rows). The caller must
   * sort the array ascending (`sort_array`) — this expression assumes it
-  * and does not verify. Null elements are not supported. */
+  * and does not verify. Null elements never match: ascending `sort_array`
+  * puts them first, so when the array type admits nulls the search starts
+  * after the leading null run (arrays typed non-null skip that scan). */
 case class SortedArrayAnyInRange(first: Expression, second: Expression,
                                  third: Expression)
     extends TernaryExpression {
@@ -36,11 +38,15 @@ case class SortedArrayAnyInRange(first: Expression, second: Expression,
 
   override def prettyName: String = "sorted_array_any_in_range"
 
+  @transient private lazy val mayHaveNulls: Boolean =
+    first.dataType.asInstanceOf[ArrayType].containsNull
+
   override protected def nullSafeEval(arr: Any, loV: Any, hiV: Any): Any = {
     val a = arr.asInstanceOf[ArrayData]
     val loB = loV.asInstanceOf[Long]
     val hiB = hiV.asInstanceOf[Long]
     var lo = 0
+    if (mayHaveNulls) while (lo < a.numElements() && a.isNullAt(lo)) lo += 1
     var hi = a.numElements()
     while (lo < hi) { // lower bound: first idx with a(idx) >= loB
       val mid = (lo + hi) >>> 1
@@ -54,8 +60,12 @@ case class SortedArrayAnyInRange(first: Expression, second: Expression,
       val lo = ctx.freshName("lo")
       val hi = ctx.freshName("hi")
       val mid = ctx.freshName("mid")
+      val skipNulls =
+        if (mayHaveNulls) s"while ($lo < $a.numElements() && $a.isNullAt($lo)) { $lo++; }"
+        else ""
       s"""
          |int $lo = 0;
+         |$skipNulls
          |int $hi = $a.numElements();
          |while ($lo < $hi) {
          |  final int $mid = ($lo + $hi) >>> 1;

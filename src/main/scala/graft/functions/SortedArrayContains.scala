@@ -13,8 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * once per line per document, so a corpus that yields thousands of shared
   * lines turns the linear scan into lines × |boiler| work. The caller must
   * sort the array ascending (`sort_array`) — this expression assumes it and
-  * does not verify. Null elements are not supported (the boiler set is
-  * built from non-null hashes). */
+  * does not verify. Null elements never match: ascending `sort_array` puts
+  * them first, so when the array type admits nulls the search starts after
+  * the leading null run (the boiler set is built from non-null hashes and
+  * typed non-null, so production probes skip that scan). */
 case class SortedArrayContains(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -30,10 +32,14 @@ case class SortedArrayContains(left: Expression, right: Expression)
 
   override def prettyName: String = "sorted_array_contains"
 
+  @transient private lazy val mayHaveNulls: Boolean =
+    left.dataType.asInstanceOf[ArrayType].containsNull
+
   override protected def nullSafeEval(arr: Any, v: Any): Any = {
     val a = arr.asInstanceOf[ArrayData]
     val x = v.asInstanceOf[Long]
     var lo = 0
+    if (mayHaveNulls) while (lo < a.numElements() && a.isNullAt(lo)) lo += 1
     var hi = a.numElements() - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
@@ -51,8 +57,12 @@ case class SortedArrayContains(left: Expression, right: Expression)
       val hi = ctx.freshName("hi")
       val mid = ctx.freshName("mid")
       val m = ctx.freshName("m")
+      val skipNulls =
+        if (mayHaveNulls) s"while ($lo < $a.numElements() && $a.isNullAt($lo)) { $lo++; }"
+        else ""
       s"""
          |int $lo = 0;
+         |$skipNulls
          |int $hi = $a.numElements() - 1;
          |${ev.value} = false;
          |while ($lo <= $hi) {

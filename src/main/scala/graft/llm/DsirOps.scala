@@ -231,24 +231,4 @@ object DsirOps {
       .limit(k)
       .select(col(idCol), col("_key").as("select_key"), col("n_feats"))
   }
-
-  /** The SQL fragments the driver oracles replay. Exposed so the oracle
-    * strings live next to the op they verify (see SparkEntryV21). */
-  private[graft] def featureSqlCte(docsSql: String, textExpr: String,
-                                   numBuckets: Int, seed: Long,
-                                   prefix: String): String = {
-    val s0 = ((seed % P) + P) % P
-    // one row per feature occurrence: unigrams ++ bigrams, rolling-hashed
-    s"""${prefix}tk AS (SELECT *, list_filter(string_split_regex(lower(trim($textExpr)),
-       |    '[ \\t\\n\\r\\f]+'), x -> len(x) > 0) AS ${prefix}ts FROM ($docsSql)),
-       |${prefix}fs AS (SELECT *, unnest(${prefix}ts ||
-       |    list_transform(range(1, greatest(len(${prefix}ts), 1)),
-       |      i -> ${prefix}ts[i] || ' ' || ${prefix}ts[i + 1])) AS ${prefix}tok
-       |  FROM ${prefix}tk),
-       |${prefix}bk AS (SELECT *, list_reduce(list_prepend(CAST($s0 AS BIGINT),
-       |    list_transform(range(1, len(${prefix}tok) + 1),
-       |      i -> CAST(ord(${prefix}tok[i:i]) AS BIGINT))),
-       |    (a, c) -> (a * 131 + c) % $P) % $numBuckets AS ${prefix}bkt
-       |  FROM ${prefix}fs)""".stripMargin
-  }
 }

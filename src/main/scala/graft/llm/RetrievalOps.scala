@@ -413,7 +413,8 @@ object RetrievalOps {
     // per-entry cost is a broadcast probe + qid-fanout explode + a
     // (qid, doc) hash-aggregate exchange — measured ~3-5× the doc-grouped
     // scorer's per-entry cost (prunedCore 1.45 s vs docGroupedCore 0.49 s
-    // on the SAME prep at 22/64 bucket coverage, OptProbe plans11b), and
+    // on the SAME prep at 22/64 bucket coverage, measured with the retired
+    // probe harness, last present at `65f6bcd`), and
     // the docgroup layout is ~half the bytes per entry (no per-term
     // doc/dl repetition). Break-even is therefore around 1/8 coverage:
     // prune only when the batch is genuinely selective.

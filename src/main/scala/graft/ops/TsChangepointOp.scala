@@ -55,15 +55,20 @@ object TsChangepointOp {
         Series.fromMicros(col("_r._2"), dsType).as(dsCol))
   }
 
-  /** PELT changepoints per group: (group, changepoint_index, ds at index). */
+  /** PELT changepoints per group: (group, changepoint_index, ds at index).
+    * An unknown `costFn` or `minSize < 1` fails here, at call time, with an
+    * IllegalArgumentException (a zero minimum segment never ends the
+    * kernel's backtrack). */
   def peltBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
              costFn: String = "l2", minSize: Int = 2,
              penalty: Option[Double] = None): DataFrame = {
+    val cost = Changepoint.Cost.parse(costFn)
+    require(minSize >= 1, s"minSize must be >= 1, got $minSize")
     val dsType = df.schema(dsCol).dataType
     val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
       val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
       if (clean.exists(_.isNaN)) Seq.empty[(Int, Long)]
-      else Changepoint.pelt(clean, minSize, penalty, Changepoint.Cost.parse(costFn))
+      else Changepoint.pelt(clean, minSize, penalty, cost)
         .map(i => (i, ts(i))).toSeq
     })
     Series.gather(df, groupCol, dsCol, yCol)

@@ -341,12 +341,10 @@ object TsCvOp {
       case (acc, (f, sc)) => when(col("fold_id") === f,
         sc.map(lit(_)).getOrElse(lit(null).cast(DoubleType))).otherwise(acc)
     }
-    val full = out
+    out
       .select(col("fold_id"), col(groupCol), col(dsCol), col("yhat"), col("actual"),
         col("error"), col("abs_error"), col("yhat_lower"), col("yhat_upper"),
         col("model_name"), scoreCol.as("fold_metric_score"))
-    if (probeEnabled) lastStages = BacktestStages(perFold, pinned, out, full)
-    full
   }
 
   /** Fold-level metric computed from the COMPACT pinned rows: per
@@ -431,17 +429,6 @@ object TsCvOp {
       (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
     }
   }
-
-  /** Probe-only view of [[backtestAutoBy]]'s internal stages (the compact
-    * kernel output, its pin, the exploded rows, the scored result) so a
-    * bench harness can time each boundary. Captured ONLY when
-    * `-Dgraft.backtest.probe=1` (the ScaleProbe harness sets it): holding
-    * the pin-backed plans in a static field would otherwise keep each
-    * production call's checkpoint blocks referenced until the next call. */
-  private[graft] case class BacktestStages(perFold: DataFrame, pinned: DataFrame,
-                                           out: DataFrame, full: DataFrame)
-  private def probeEnabled: Boolean = sys.props.get("graft.backtest.probe").contains("1")
-  @volatile private[graft] var lastStages: BacktestStages = null
 
   /** ts_cv_split_by (ts_macros.cpp:1203 → _ts_cv_split_native): explicit
     * `trainingEndTimes` cutoffs; per fold, train = rows at/before the

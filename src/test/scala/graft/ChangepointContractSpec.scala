@@ -1,15 +1,27 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kernels.Changepoint
+import graft.ops.TsChangepointOp
 
 /** Port of test/sql/ts_changepoints.test: the BOCPD scalar contract — output
   * array shapes, constant-series behavior, GH#50 boundary conditions (first/
   * last observations never artificially flagged), minimum input length, and
-  * detection of a planted level shift.
+  * detection of a planted level shift. Plus the `peltBy` argument contract:
+  * bad arguments fail at call time, before any job runs.
   */
-class ChangepointContractSpec extends AnyFunSuite {
+class ChangepointContractSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .appName("graft-changepoint-contract")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   private val shift = Array(1.0, 1.0, 1.0, 1.0, 10.0, 10.0, 10.0, 10.0)
   private val flat = Array.fill(8)(5.0)
@@ -53,5 +65,21 @@ class ChangepointContractSpec extends AnyFunSuite {
     // a changepoint is flagged within 2 positions of the true break (30)
     assert(r.isChangepoint.zipWithIndex.exists { case (b, i) => b && math.abs(i - 30) <= 2 },
       r.isChangepoint.zipWithIndex.filter(_._1).map(_._2).mkString(","))
+  }
+
+  test("peltBy rejects an unknown cost and minSize < 1 at call time, before any action") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq((1, java.sql.Date.valueOf("2024-01-01"), 1.0)).toDF("g", "ds", "y")
+    // no action is ever run: each failure must come from the call itself
+    val badCost = intercept[IllegalArgumentException](
+      TsChangepointOp.peltBy(df, "g", "ds", "y", costFn = "l3"))
+    assert(badCost.getMessage.contains("Unknown cost function 'l3'"))
+    Seq(0, -1).foreach { m =>
+      val e = intercept[IllegalArgumentException](
+        TsChangepointOp.peltBy(df, "g", "ds", "y", minSize = m))
+      assert(e.getMessage.contains(s"minSize must be >= 1, got $m"))
+    }
+    TsChangepointOp.peltBy(df, "g", "ds", "y", costFn = "NORMAL", minSize = 1)
   }
 }

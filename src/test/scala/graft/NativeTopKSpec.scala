@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Direct edge-case specs for the native ANN kernels (TopKByScore,
-  * ChunkTopK, SortedArrayContains). IvfSpec/CurationOpsSpec pin end-to-end
+  * ChunkTopK, SortedArrayContains, SortedArrayAnyInRange). IvfSpec/CurationOpsSpec pin end-to-end
   * equivalence with brute force; these pin the selection semantics the
   * oracles depend on — (sim desc, vid asc) ties, null/NaN skipping, k
   * boundaries, cross-partition merge — at the expression level, so a
@@ -128,5 +129,54 @@ class NativeTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("bin") =!= col("lin"))
       .count()
     assert(mismatches == 0)
+  }
+
+  // small element range so probes hit values next to null slots (a null
+  // read as 0 would "contain" 0)
+  private val sortedProbeGen = for {
+    n <- Gen.choose(0, 60)
+    rows <- Gen.listOfN(n, for {
+      arr <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.frequency(
+        3 -> Gen.choose(-5L, 5L).map(java.lang.Long.valueOf),
+        1 -> Gen.const(null: java.lang.Long))))
+      x <- Gen.choose(-6L, 6L)
+      w <- Gen.choose(0L, 3L)
+    } yield (arr, x, x + w))
+  } yield rows
+
+  test("sorted-array probes skip null elements: agree with exists(e IS NOT NULL AND pred)") {
+    val sp = spark
+    import sp.implicits._
+    val prop = Prop.forAll(sortedProbeGen) { rows =>
+      // ascending sort_array puts the nulls first; the array type is
+      // containsNull = true, so the probes take their null-skipping path
+      val df = rows.toDF("raw", "x", "hi").repartition(2)
+        .withColumn("arr", sort_array(col("raw")))
+      val contains = B.column(graft.functions.SortedArrayContains(
+        B.expression(col("arr")), B.expression(col("x"))))
+      val inRange = B.column(graft.functions.SortedArrayAnyInRange(
+        B.expression(col("arr")), B.expression(col("x")), B.expression(col("hi"))))
+      // a def: each mode must plan afresh (a DataFrame caches its physical plan)
+      def probed = df.select(col("raw"), col("x"), col("hi"),
+        contains.as("c"), exists(col("arr"), e => e.isNotNull && e === col("x")).as("c_ref"),
+        inRange.as("r"), exists(col("arr"), e => e.isNotNull && e >= col("x") &&
+          e <= col("hi")).as("r_ref"))
+        .filter(!(col("c") <=> col("c_ref")) || !(col("r") <=> col("r_ref")))
+      // both evaluation paths: generated code, then the interpreted nullSafeEval
+      Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").forall { case (mode, ws) =>
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        try {
+          val bad = probed.collect()
+          bad.take(3).foreach(r => println(s"[sorted-array-nulls] $mode: $r"))
+          bad.isEmpty
+        } finally {
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+        }
+      }
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(r.passed, s"$r")
   }
 }
