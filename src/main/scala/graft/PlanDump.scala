@@ -118,13 +118,15 @@ object PlanDump {
         "the positional copies of its d*q+1 RAREST gram values under " +
         "the global (df, hash) order, so hot template grams never join) " +
         "keyed on the (gramHash, positionBand) PAIR (the band is " +
-        "simultaneously the position filter and a position salt), a " +
+        "simultaneously the position filter and a position salt), and a " +
         "bounded exploded-length-key pool for gram-unprunable short " +
-        "strings, and only candidate IDs rejoin the strings for the " +
-        "banded-Levenshtein verify. Strings never cross the gram " +
-        "exchange; no nested-loop join exists in the plan (PlanGuardSpec " +
-        "pins both; the A/B vs the quadratic scan was measured with the " +
-        "retired probe harness, last present at 65f6bcd)."),
+        "strings. The gram frequency is a window count over gh and the " +
+        "prefix a dense-rank window over id, both on the gram stream, " +
+        "which carries the string: the banded-Levenshtein verify runs " +
+        "inside the band join and nothing is joined back on id. No " +
+        "nested-loop join exists in the plan (PlanGuardSpec pins it; the " +
+        "A/B vs the quadratic scan was measured with the retired probe " +
+        "harness, last present at 65f6bcd)."),
       "pagerank_knn" -> ("NOTE: the canonical distributed PageRank in " +
         "SCALED-LONG arithmetic — rank mass is an integer in 1e-12 " +
         "units, every update is integer multiply/divide/sum, so the " +

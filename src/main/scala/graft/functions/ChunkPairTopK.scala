@@ -17,10 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * chunk payload (~320 KB at the 1024-vector cap) through the join/generate
   * row buffer — measured 51 GB of row copying for a 20k-node kNN graph at
   * 10× bench scale, dwarfing the arithmetic. Packing the probes per
-  * (centroid, probe-chunk) too turns the join output into
-  * |probeChunks| × |listChunks| rows per centroid — the heavy bytes cross
-  * the join once per CHUNK PAIR instead of once per probe (guide-§8 "move
-  * heavy bytes once" applied to both sides).
+  * (centroid, probe-chunk) too gives |probeChunks| × |listChunks| packed
+  * rows per centroid — the heavy bytes move once per CHUNK PAIR instead of
+  * once per probe (guide-§8 "move heavy bytes once" applied to both sides).
+  * The kNN graph builds each chunk pair as one group of a grid aggregate
+  * keyed on (centroid, probe chunk, list chunk), so no join is involved.
   *
   * Inside one evaluation the chunk payloads hoist ONCE into primitive
   * arrays (the per-candidate null/length screening is amortized over every

@@ -55,9 +55,12 @@ object Changepoint {
     }
   }
 
-  /** PELT segmentation; returns changepoint indices (segment starts). */
+  /** PELT segmentation; returns changepoint indices (segment starts).
+    * `minSize < 1` is rejected with an IllegalArgumentException: 0 never
+    * ends the backtrack (`cp(n) == n`) and a negative value indexes below 0. */
   def pelt(values: Array[Double], minSize: Int = 2, penalty: Option[Double] = None,
            cost: Cost = Cost.L2): Array[Int] = {
+    require(minSize >= 1, s"minSize must be >= 1, got $minSize")
     val n = values.length
     if (n < 2 * minSize) return Array.empty
     val pen = penalty.getOrElse(math.log(n.toDouble) * 2.0)

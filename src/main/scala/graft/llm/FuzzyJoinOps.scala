@@ -84,8 +84,9 @@ object FuzzyJoinOps {
 
     // --- branch A: positional q-gram candidates --------------------------
     // 0-based gram position i -> hash of substr(s, i+1, q); the sequence is
-    // guarded (it DESCENDS when len < q — the house pitfall).
-    val grams = slim.select(col("id"), col("len"),
+    // guarded (it DESCENDS when len < q — the house pitfall). The string
+    // rides on every gram row, so nothing is joined back on id below.
+    val grams = slim.select(col("id"), col("len"), col("s"),
       posexplode(
         when(col("len") >= q,
           transform(sequence(lit(0), col("len") - lit(q)),
@@ -93,8 +94,9 @@ object FuzzyJoinOps {
           .otherwise(array().cast("array<bigint>"))).as(Seq("pos", "gh")))
 
     // global canonical gram order: document frequency asc, hash asc —
-    // rarest values first, so hot grams fall out of every prefix
-    val gramDf = grams.groupBy("gh").agg(count(lit(1)).as("__df"))
+    // rarest values first, so hot grams fall out of every prefix. The
+    // frequency is a window count over gh, so the gram stream is read once.
+    val byGram = org.apache.spark.sql.expressions.Window.partitionBy("gh")
     // prefix = ALL positional copies of the d*q+1 rarest gram VALUES
     // (value-granularity keeps the repeated-gram case exact: the matched
     // copy's twins share its value, so they enter the prefix with it).
@@ -111,30 +113,36 @@ object FuzzyJoinOps {
     // stays.)
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("__df").asc, col("gh").asc)
-    val prefix = Pin(grams.join(gramDf, "gh")
+    val prefix = Pin(grams
+      .withColumn("__df", count(lit(1)).over(byGram))
       .withColumn("__vr", dense_rank().over(wRank))
       .filter(col("__vr") <= d * q + 1)
-      .join(slim.select(col("id"), col("s")), Seq("id"))
       .select(col("id"), col("len"), col("pos"), col("gh"), col("s"))).df
 
+    // each side aliases the gram hash: both read the one pinned relation,
+    // so an unaliased `gh` resolves to the same attribute on both sides
     val left = prefix.select(col("id").as("id1"), col("len").as("len1"),
       col("s").as("__s1"),
-      col("pos").as("p1"), col("gh"), (col("pos") / w).cast("int").as("band"))
+      col("pos").as("p1"), col("gh").as("gh1"), (col("pos") / w).cast("int").as("band"))
     // the right side explodes into its 3 adjacent bands so the position
     // filter rides the equi-key; a qualifying (p1, p2) pair matches on
     // exactly one emitted band (= p1's own band)
     val right = prefix.select(col("id").as("id2"), col("len").as("len2"),
       col("s").as("__s2"),
-      col("pos").as("p2"), col("gh"),
+      col("pos").as("p2"), col("gh").as("gh2"),
       explode(array((-1 to 1).map(delta => (col("pos") / w).cast("int") + delta): _*))
         .as("band"))
 
     // candidate generation + banded verify in ONE stage: the join's
     // residual filters prune by position/length, then the threshold
     // levenshtein verifies in place — only VERIFIED pairs (output-sized)
-    // reach the dedup exchange, never the candidate blowup
-    val pairsA = left.join(right,
-        left("gh") === right("gh") && left("band") === right("band") &&
+    // reach the dedup exchange, never the candidate blowup. The join is
+    // pinned to sort-merge: the pin's size estimate is the window plan's,
+    // small enough that Spark would otherwise broadcast one side and run
+    // the whole verify in the pin's few (AQE-coalesced) partitions —
+    // measured 2× slower at 10× bench scale, and unbounded at corpus scale.
+    val pairsA = left.hint("merge").join(right,
+        col("gh1") === col("gh2") && left("band") === right("band") &&
           col("id1") < col("id2") &&
           abs(col("p1") - col("p2")) <= d &&
           abs(col("len1") - col("len2")) <= d,

@@ -37,7 +37,7 @@ object SimilarityOps {
     * primitive-array state, no per-row boxing or encoder round trip. The
     * typed-Aggregator UDAF it replaces dominated the kNN-graph runtime
     * (~8x measured on the same join volume). */
-  private def topKAgg(vid: Column, sim: Column, k: Int): Column =
+  private[graft] def topKAgg(vid: Column, sim: Column, k: Int): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       graft.functions.TopKByScore(
         org.apache.spark.sql.GraftExpressionBridge.expression(vid),
@@ -329,7 +329,7 @@ object SimilarityOps {
   /** Pack the centroid table into a single array row for broadcast — the
     * per-row argmax then needs NO shuffle at all. Centroids are L2-normalized
     * at pack time (once, not per corpus row). */
-  private def packedCentroids(centroids: DataFrame): DataFrame = {
+  private[graft] def packedCentroids(centroids: DataFrame): DataFrame = {
     val norm = sqrt(aggregate(col("centroid"), lit(0.0), (acc, x) => acc + x * x))
     centroids
       .agg(collect_list(struct(col("centroid_id"),
@@ -349,18 +349,30 @@ object SimilarityOps {
     * explicitly up front — degenerate vectors stay out of both the index and
     * the Lloyd mean update, preserving the cosine-scoring contract. */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-                centroids: DataFrame): DataFrame = {
-    val scored = transform(col("_cents"), c =>
-      struct(dot(col("_cv"), c.getField("centroid")).as("sim"),
-        c.getField("centroid_id").as("cid")))
+                centroids: DataFrame): DataFrame =
     df.select(col(idCol).as("vid"), col(vecCol).cast(ArrayType(DoubleType)).as("_cv"))
       .filter(dot(col("_cv"), col("_cv")) > 0.0)
       .crossJoin(broadcast(packedCentroids(centroids)))
-      // struct ordering: sim first, then cid — larger cid wins exact ties
-      .withColumn("_best", array_max(filter(scored, s => !isnan(s.getField("sim")))))
+      .withColumn("_best", bestCentroid(col("_cv")))
       .filter(col("_best").isNotNull)
       .select(col("vid"), col("_cv"), col("_best.cid").as("centroid_id"))
-  }
+
+  /** The assignment argmax over the packed `_cents` column: the (sim, cid)
+    * struct of the largest dot against the pre-normalized centroids, null
+    * when every score is NaN. Struct ordering: sim first, then cid — the
+    * larger cid wins exact ties. */
+  private def bestCentroid(v: Column): Column =
+    array_max(filter(transform(col("_cents"), c =>
+      struct(dot(v, c.getField("centroid")).as("sim"),
+        c.getField("centroid_id").as("cid"))), s => !isnan(s.getField("sim"))))
+
+  /** The `nProbe` most cosine-similar centroids of `v` over the packed
+    * `_cents` column, as (sim, cid) structs in descending order; NaN scores
+    * (zero-norm or null vectors) drop, so such a vector probes nothing. */
+  private def probeCentroids(v: Column, nProbe: Int): Column =
+    slice(reverse(array_sort(filter(transform(col("_cents"), c =>
+      struct(cosine(v, c.getField("centroid")).as("sim"),
+        c.getField("centroid_id").as("cid"))), s => !isnan(s.getField("sim"))))), 1, nProbe)
 
   /** IVF-accelerated cosine top-k: probe the `nProbe` most-similar lists per
     * query and search only those inverted lists. With nProbe = nLists the
@@ -391,12 +403,8 @@ object SimilarityOps {
                                   nProbe: Int, centroids: DataFrame): DataFrame = {
     val q = queries.select(col(idCol).as("qid"),
       col(vecCol).cast(ArrayType(DoubleType)).as("_qv"))
-    val scoredQ = transform(col("_cents"), c =>
-      struct(cosine(col("_qv"), c.getField("centroid")).as("sim"),
-        c.getField("centroid_id").as("cid")))
     q.crossJoin(broadcast(packedCentroids(centroids)))
-      .withColumn("_probe",
-        slice(reverse(array_sort(filter(scoredQ, s => !isnan(s.getField("sim"))))), 1, nProbe))
+      .withColumn("_probe", probeCentroids(col("_qv"), nProbe))
       .select(col("qid"), col("_qv"), explode(col("_probe")).as("_pp"))
       .select(col("qid"), col("_qv"), col("_pp.cid").as("centroid_id"))
   }
@@ -412,7 +420,7 @@ object SimilarityOps {
   }
 
   /** [[graft.functions.ChunkPairTopK]] as a Column. */
-  private def chunkPairTopK(qids: Column, qvsFlat: Column, qlens: Column,
+  private[graft] def chunkPairTopK(qids: Column, qvsFlat: Column, qlens: Column,
                             ids: Column, norms: Column, vecsFlat: Column,
                             lens: Column, k: Int, excludeSelf: Boolean): Column = {
     val B = org.apache.spark.sql.GraftExpressionBridge
@@ -428,34 +436,29 @@ object SimilarityOps {
     * |probes|·chunksPerList rows, and [[graft.functions.ChunkTopK]] runs
     * the scoring loop over each packed chunk in place. The row-at-a-time
     * equi-join this replaces materialized one joined row PER CANDIDATE PAIR
-    * — |corpus|·nProbe·|list| rows each carrying two full embedding arrays;
-    * measured at 10× scale the row copying, not the arithmetic, dominated
-    * the kNN graph. Chunk results merge through the native bounded top-k
-    * aggregate. Scoring and selection semantics are bit-identical to the
-    * pair pipeline (ChunkTopK doc), so the exhaustive-probe oracle rows
-    * stay hash-exact. */
+    * — |corpus|·nProbe·|list| rows each carrying two full embedding arrays.
+    * Chunk results merge through the native bounded top-k aggregate.
+    * Scoring and selection semantics are bit-identical to the pair
+    * pipeline (ChunkTopK doc), so the exhaustive-probe oracle rows stay
+    * hash-exact.
+    *
+    * This is the BOUNDED query-batch path (ivfProbeLists / ivfProbeIndex:
+    * eval/probe sets by contract): probes stay unpacked, because packing
+    * them is pure fixed cost when |probes| is tiny. The corpus-as-queries
+    * kNN graph packs both sides in one grid aggregate instead
+    * ([[knnGraphWithCentroids]]). */
   private def probeJoin(assigned: DataFrame, probes: DataFrame, k: Int,
-                        vidType: DataType, excludeSelf: Boolean = false,
-                        packProbes: Boolean = true): DataFrame = {
-    val qidType = probes.schema("qid").dataType
-    // list histogram is ≤ nLists rows (bounded like the centroid table)
+                        vidType: DataType): DataFrame = {
+    // list histogram is ≤ nLists rows (bounded like the centroid table).
+    // Vectors pack FLATTENED + per-vector lengths (ChunkPairTopK doc). Null
+    // vectors drop BEFORE packing — their norm is null, so the scorer
+    // skipped them anyway, and flatten() would null the whole chunk.
     val hist = assigned.groupBy(col("centroid_id")).agg(count(lit(1)).as("_ln"))
-    // BOTH sides pack into bounded chunks, and the struct arrays split into
-    // parallel flat arrays HERE, on the aggregate output — never at the
-    // join output. With only the list side packed, the probe⋈chunk join
-    // materialized one row per (probe, chunk) each copying the whole
-    // ~320 KB chunk payload through the join/generate row buffer (51 GB of
-    // pure row copying for the 20k-node kNN graph at 10× bench scale,
-    // dwarfing the arithmetic). Chunk × chunk join output moves each heavy
-    // byte once per CHUNK PAIR. Vectors pack FLATTENED + per-vector lengths
-    // (ChunkPairTopK doc). Null vectors drop BEFORE packing — their norm is
-    // null, so the scorer skipped them anyway, and flatten() would null the
-    // whole chunk.
     val packed = assigned
       .filter(col("_cv").isNotNull)
       .withColumn("_vl", col("vid").cast(LongType))
       .join(broadcast(hist), Seq("centroid_id"))
-      .withColumn("_chunk", SampleOps.hashBucket(col("_vl"), 0xc4a11L) %
+      .withColumn("_chunk", SampleOps.hashBucket(col("_vl"), ListChunkSeed) %
         ceil(col("_ln").cast(DoubleType) / PackChunkSize).cast(LongType))
       .groupBy(col("centroid_id"), col("_chunk"))
       .agg(collect_list(struct(col("_vl").as("vid"),
@@ -464,54 +467,28 @@ object SimilarityOps {
       .select(col("centroid_id"), col("_pk.vid").as("_pids"),
         col("_pk.nrm").as("_pnrms"), flatten(col("_pk.vec")).as("_pflat"),
         transform(col("_pk.vec"), v => size(v)).as("_plens"))
-    // A BOUNDED query batch (ivfProbeLists / ivfProbeIndex: eval/probe sets
-    // by contract) skips the probe-side packing: two extra aggregations are
-    // pure fixed cost when |probes| is tiny, and the per-(probe, chunk)
-    // chunk-payload copies that packing exists to amortize are |probes|-
-    // proportional — negligible for a batch. The corpus-as-queries kNN
-    // graph keeps packProbes = true, where the copies were 51 GB.
-    if (!packProbes) {
-      return probes.join(packed, Seq("centroid_id"))
-        .select(col("qid"), explode(chunkTopK(col("qid").cast(LongType),
-          col("_qv"), col("_pids"), col("_pnrms"), col("_pflat"),
-          col("_plens"), k, excludeSelf)).as("_h"))
-        .select(col("qid"), col("_h.vid").as("vid"), col("_h.sim").as("sim"))
-        .groupBy(col("qid"))
-        .agg(topKAgg(col("vid"), col("sim"), k).as("_top"))
-        .select(col("qid"), explode(col("_top")).as("_t"))
-        .select(col("qid"), col("_t.vid").cast(vidType).as("vid"),
-          col("_t.sim").as("sim"))
-    }
-    val probeHist = probes.groupBy(col("centroid_id")).agg(count(lit(1)).as("_qn"))
-    val qpacked = probes
-      .filter(col("_qv").isNotNull)
-      .withColumn("_ql", col("qid").cast(LongType))
-      .join(broadcast(probeHist), Seq("centroid_id"))
-      .withColumn("_qchunk", SampleOps.hashBucket(col("_ql"), 0x9b0b5L) %
-        ceil(col("_qn").cast(DoubleType) / ProbeChunkSize).cast(LongType))
-      .groupBy(col("centroid_id"), col("_qchunk"))
-      .agg(collect_list(struct(col("_ql").as("qid"), col("_qv").as("qv"))).as("_qp"))
-      .select(col("centroid_id"), col("_qp.qid").as("_qids"),
-        flatten(col("_qp.qv")).as("_qflat"),
-        transform(col("_qp.qv"), v => size(v)).as("_qlens"))
-    qpacked.join(packed, Seq("centroid_id"))
-      .select(explode(chunkPairTopK(col("_qids"), col("_qflat"), col("_qlens"),
-        col("_pids"), col("_pnrms"), col("_pflat"), col("_plens"), k,
-        excludeSelf)).as("_h"))
-      .select(col("_h.qid").as("_qidL"), col("_h.vid").as("vid"), col("_h.sim").as("sim"))
-      .groupBy(col("_qidL"))
+    probes.join(packed, Seq("centroid_id"))
+      .select(col("qid"), explode(chunkTopK(col("qid").cast(LongType),
+        col("_qv"), col("_pids"), col("_pnrms"), col("_pflat"),
+        col("_plens"), k, excludeSelf = false)).as("_h"))
+      .select(col("qid"), col("_h.vid").as("vid"), col("_h.sim").as("sim"))
+      .groupBy(col("qid"))
       .agg(topKAgg(col("vid"), col("sim"), k).as("_top"))
-      .select(col("_qidL"), explode(col("_top")).as("_t"))
-      .select(col("_qidL").cast(qidType).as("qid"),
-        col("_t.vid").cast(vidType).as("vid"), col("_t.sim").as("sim"))
+      .select(col("qid"), explode(col("_top")).as("_t"))
+      .select(col("qid"), col("_t.vid").cast(vidType).as("vid"),
+        col("_t.sim").as("sim"))
   }
 
-  /** Max probes per packed probe chunk (see [[probeJoin]]). */
-  private val ProbeChunkSize = 256
+  /** Max probes per packed probe chunk of the kNN graph grid. */
+  private[graft] val ProbeChunkSize = 256
 
   /** Max vectors per packed inverted-list chunk: bounds the packed row size
     * (and therefore executor memory per row) regardless of list skew. */
-  private val PackChunkSize = 1024
+  private[graft] val PackChunkSize = 1024
+
+  /** hashBucket seeds of inverted-list and probe chunk membership. */
+  private[graft] val ListChunkSeed = 0xc4a11L
+  private[graft] val ProbeChunkSeed = 0x9b0b5L
 
   /** Probe pre-built inverted lists: `assigned` is ivfAssign's output
     * (vid, _cv, centroid_id) — e.g. the stored corpus bucketed by
@@ -520,7 +497,7 @@ object SimilarityOps {
                     k: Int, nProbe: Int, centroids: DataFrame,
                     vidType: DataType): DataFrame =
     probeJoin(assigned, probeSelection(queries, idCol, vecCol, nProbe, centroids),
-      k, vidType, packProbes = false)
+      k, vidType)
 
   /** Persist an IVF index as a centroid_id-PARTITIONED parquet layout:
     * `path/centroids` (nLists rows) + `path/lists/centroid_id=N/…`. This is
@@ -547,8 +524,7 @@ object SimilarityOps {
       .collect().map(_.get(0))
     val lists = spark.read.parquet(s"$path/lists")
       .where(col("centroid_id").isin(probedIds: _*))
-    probeJoin(lists, probes, k, queries.schema(idCol).dataType,
-      packProbes = false)
+    probeJoin(lists, probes, k, queries.schema(idCol).dataType)
   }
 
   /** Symmetric int8 quantization of an embedding column: per-vector scale
@@ -716,12 +692,86 @@ object SimilarityOps {
       ivfTrain(df, idCol, vecCol, nLists, iters), nProbe)
 
   /** [[knnGraph]] against a pre-trained centroid table (the production
-    * shape: centroids persisted once, graph refreshed incrementally). */
+    * shape: centroids persisted once, graph refreshed incrementally).
+    *
+    * Plan shape — the corpus is read twice and nothing is joined back:
+    *  1. ONE scoring projection against the broadcast packed centroids
+    *     yields each vector's assignment (the [[ivfAssign]] argmax; the
+    *     LIST role) and its `nProbe` probes (the [[probeSelection]] sort;
+    *     the PROBE role), exploded into one (centroid_id, side, id, vec)
+    *     role stream;
+    *  2. ONE histogram of list members `_ln` and probes `_qn` per list
+    *     (≤ nLists rows, broadcast back);
+    *  3. ONE grid aggregate keyed on (centroid_id, qchunk, lchunk): list
+    *     rows chunk by id hash into ⌈_ln/1024⌉ list chunks and probe rows
+    *     into ⌈_qn/256⌉ probe chunks; each list row is replicated to every
+    *     probe chunk of its list and each probe row to every list chunk,
+    *     so every group holds exactly one (probe chunk, list chunk) pair,
+    *     packed, and [[graft.functions.ChunkPairTopK]] scores it in place;
+    *  4. the per-chunk top-k merge per qid through the bounded top-k
+    *     aggregate.
+    * Under AQE Spark reuses no exchange over a cached relation, so every
+    * extra read of the input re-runs the centroid packing and scoring
+    * beneath it — hence one role stream feeding both the histogram and the
+    * grid. The graph is bit-identical to packing each side in its own
+    * aggregate and joining the packs on centroid_id (KnnGraphGridSpec
+    * keeps that form as the executable specification). Shuffle volume:
+    * each list row crosses the grid exchange once per probe chunk of its
+    * list and each probe row once per list chunk. */
   def knnGraphWithCentroids(df: DataFrame, idCol: String, vecCol: String,
-                            k: Int, centroids: DataFrame, nProbe: Int): DataFrame =
-    probeJoin(ivfAssign(df, idCol, vecCol, centroids),
-      probeSelection(df, idCol, vecCol, nProbe, centroids),
-      k, df.schema(idCol).dataType, excludeSelf = true)
+                            k: Int, centroids: DataFrame, nProbe: Int): DataFrame = {
+    val idType = df.schema(idCol).dataType
+    // null vectors neither assign (ivfAssign's dot > 0) nor probe (NaN-free
+    // scores only), so they leave before the scoring
+    val scored = df.select(col(idCol).cast(LongType).as("_id"),
+        col(vecCol).cast(ArrayType(DoubleType)).as("_cv"))
+      .filter(col("_cv").isNotNull)
+      .crossJoin(broadcast(packedCentroids(centroids)))
+      .select(col("_id"), col("_cv"), sqrt(dot(col("_cv"), col("_cv"))).as("_nrm"),
+        when(dot(col("_cv"), col("_cv")) > 0.0, bestCentroid(col("_cv")).getField("cid"))
+          .as("_home"),
+        probeCentroids(col("_cv"), nProbe).getField("cid").as("_probes"))
+    val roles = scored.select(col("_id"), col("_cv"), col("_nrm"),
+      explode(concat(
+        filter(array(struct(col("_home").as("centroid_id"), lit(0).as("side"))),
+          r => r.getField("centroid_id").isNotNull),
+        transform(col("_probes"), c => struct(c.as("centroid_id"), lit(1).as("side")))))
+        .as("_r"))
+      .select(col("_r.centroid_id").as("centroid_id"), col("_r.side").as("side"),
+        col("_id"), col("_cv"), col("_nrm"))
+    val isList = col("side") === 0
+    val hist = roles.groupBy(col("centroid_id"))
+      .agg(count(when(isList, 1)).as("_ln"), count(when(!isList, 1)).as("_qn"))
+      // a list nobody probes (or a probed list with no members) pairs nothing
+      .filter(col("_ln") > 0 && col("_qn") > 0)
+    val nListChunks = ceil(col("_ln").cast(DoubleType) / PackChunkSize).cast(LongType)
+    val nProbeChunks = ceil(col("_qn").cast(DoubleType) / ProbeChunkSize).cast(LongType)
+    val grid = roles.join(broadcast(hist), Seq("centroid_id"))
+      .withColumn("_own", when(isList,
+          SampleOps.hashBucket(col("_id"), ListChunkSeed) % nListChunks)
+        .otherwise(SampleOps.hashBucket(col("_id"), ProbeChunkSeed) % nProbeChunks))
+      .withColumn("_other", explode(sequence(lit(0L),
+        when(isList, nProbeChunks).otherwise(nListChunks) - 1L)))
+      .groupBy(col("centroid_id"),
+        when(isList, col("_other")).otherwise(col("_own")).as("_qchunk"),
+        when(isList, col("_own")).otherwise(col("_other")).as("_lchunk"))
+      .agg(
+        collect_list(when(!isList, struct(col("_id").as("qid"), col("_cv").as("qv"))))
+          .as("_qp"),
+        collect_list(when(isList, struct(col("_id").as("vid"), col("_nrm").as("nrm"),
+          col("_cv").as("vec")))).as("_pk"))
+    grid
+      .select(explode(chunkPairTopK(col("_qp.qid"), flatten(col("_qp.qv")),
+        transform(col("_qp.qv"), v => size(v)), col("_pk.vid"), col("_pk.nrm"),
+        flatten(col("_pk.vec")), transform(col("_pk.vec"), v => size(v)), k,
+        excludeSelf = true)).as("_h"))
+      .select(col("_h.qid").as("_qidL"), col("_h.vid").as("vid"), col("_h.sim").as("sim"))
+      .groupBy(col("_qidL"))
+      .agg(topKAgg(col("vid"), col("sim"), k).as("_top"))
+      .select(col("_qidL"), explode(col("_top")).as("_t"))
+      .select(col("_qidL").cast(idType).as("qid"),
+        col("_t.vid").cast(idType).as("vid"), col("_t.sim").as("sim"))
+  }
 
   // ---------------------------------------------------- similarity join
 

@@ -37,9 +37,13 @@ object TsChangepointOp {
 
   /** detect_changepoints_bayesian (changepoint.rs:360): legacy Bayesian API —
     * BOCPD with hazard λ = 1 / max(hazard_rate, 0.001), changepoint indices
-    * only. Output: (group, changepoint_index, ds at index). */
+    * only. Output: (group, changepoint_index, ds at index). As in the
+    * reference, a finite rate below 0.001 (zero and negative included) is
+    * clamped to 0.001, i.e. λ = 1000; a NaN or ±Inf rate fails here, at call
+    * time, with an IllegalArgumentException (NaN would give λ = NaN). */
   def bayesianBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                  hazardRate: Double = 0.004): DataFrame = {
+    require(java.lang.Double.isFinite(hazardRate), s"hazardRate must be finite, got $hazardRate")
     val dsType = df.schema(dsCol).dataType
     val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
       try {

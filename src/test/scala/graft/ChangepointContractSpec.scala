@@ -82,4 +82,32 @@ class ChangepointContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     TsChangepointOp.peltBy(df, "g", "ds", "y", costFn = "NORMAL", minSize = 1)
   }
+
+  test("pelt kernel rejects minSize < 1 when called directly") {
+    Seq(0, -1).foreach { m =>
+      val e = intercept[IllegalArgumentException](Changepoint.pelt(shift, minSize = m))
+      assert(e.getMessage.contains(s"minSize must be >= 1, got $m"))
+    }
+    assert(Changepoint.pelt(shift, minSize = 1).toSeq == Seq(4))
+  }
+
+  test("bayesianBy rejects a NaN or infinite hazardRate at call time; finite rates clamp at 0.001") {
+    val sp = spark
+    import sp.implicits._
+    val base = java.time.LocalDate.parse("2024-01-01")
+    val ys = Array.fill(20)(1.0) ++ Array.fill(20)(10.0)
+    val df = ys.indices.map(i => (1, java.sql.Date.valueOf(base.plusDays(i)), ys(i)))
+      .toDF("g", "ds", "y")
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { h =>
+      val e = intercept[IllegalArgumentException](
+        TsChangepointOp.bayesianBy(df, "g", "ds", "y", hazardRate = h))
+      assert(e.getMessage.contains(s"hazardRate must be finite, got $h"))
+    }
+    // the reference's max(h, 0.001): zero, negative and tiny rates all run
+    // as 0.001 (λ = 1000)
+    def run(h: Double) = TsChangepointOp.bayesianBy(df, "g", "ds", "y", hazardRate = h)
+      .orderBy("changepoint_index").collect().toSeq
+    val clamped = run(0.001)
+    Seq(0.0, -1.0, 1e-6).foreach(h => assert(run(h) == clamped, s"hazardRate $h"))
+  }
 }

@@ -97,6 +97,20 @@ class FuzzyJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (d <- Seq(1, 2)) assert(run(rows, d, 3) == brute(rows, d), s"d=$d")
   }
 
+  test("hot grams: a shared boilerplate prefix ranks last, and all-hot strings still pair") {
+    // every string but the last few starts with the same 12-char template,
+    // so its grams sit on nearly every row (the highest document
+    // frequencies) and fall out of each prefix; the all-template strings
+    // consist of nothing but hot grams
+    val tails = soup(90, 11).map { case (i, t) => (i, "order-12345-" + t) }
+    val hot = Seq((1000L, "order-12345-"), (1001L, "order-12345"), (1002L, "order-1234-"),
+      (1003L, "order-12345-order-12345-"), (1004L, "order-12345-order-12345"))
+    val rows = tails ++ hot
+    for (d <- Seq(1, 2); q <- Seq(2, 3)) {
+      assert(run(rows, d, q) == brute(rows, d), s"d=$d q=$q")
+    }
+  }
+
   test("two-table fuzzyJoin matches the cross brute force") {
     val sp = spark; import sp.implicits._
     val l = Seq((10L, "alpha beta"), (11L, "gamma delta"), (12L, "zzz"))

@@ -249,6 +249,14 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gplan.collect { case w: WindowExec => w }.isEmpty,
       "the graph top-k must reduce through the bounded-heap Aggregator")
     assert(!gplan.toString.contains("CartesianProduct"))
+    // one grid aggregate, no join of packed chunks: the only shuffles are
+    // the centroid packing, the (list, probe) histogram, the
+    // (centroid, qchunk, lchunk) grid and the per-qid top-k merge
+    assert(gplan.collect {
+      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }.isEmpty,
+      s"the chunk pairs must come from the grid aggregate, not a join:\n$gplan")
+    val gShuffles = gplan.collect { case s: ShuffleExchangeExec => s }
+    assert(gShuffles.length == 4, s"expected 4 shuffles, got ${gShuffles.length}:\n$gplan")
   }
 
   test("round-6 curation ops: quality filters are map-only; embeddings and LSH bands shuffle no text") {
@@ -687,6 +695,18 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       j.asInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]
         .leftKeys.length >= 2),
       "gram join must carry (gh, band) as a compound equi-key")
+    // the band join stays sort-merge where the pinned prefix's size
+    // estimate fits the default broadcast threshold: a broadcast would run
+    // the whole verify in the pin's few partitions
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    try {
+      val bplan = graft.llm.FuzzyJoinOps.fuzzySelfJoin(docs, "id", "s", 2)
+        .queryExecution.executedPlan
+      assert(bplan.collect {
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+      }.exists(_.leftKeys.length >= 2),
+        s"the (gh, band) join must stay sort-merge under the default threshold:\n$bplan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
   }
 
   test("asof join: zero join operators, one key exchange, one running window") {
