@@ -123,7 +123,11 @@ object PlanDump {
         "strings. The gram frequency is a window count over gh and the " +
         "prefix a dense-rank window over id, both on the gram stream, " +
         "which carries the string: the banded-Levenshtein verify runs " +
-        "inside the band join and nothing is joined back on id. No " +
+        "inside the band join and nothing is joined back on id. The " +
+        "windows run in the pinned prefix's own query (the Scan " +
+        "ExistingRDD leaves); they and both band-join sides read " +
+        "REPARTITION_BY_NUM exchanges, which AQE never coalesces onto one " +
+        "task (ops.CpuBound). No " +
         "nested-loop join exists in the plan (PlanGuardSpec pins it; the " +
         "A/B vs the quadratic scan was measured with the retired probe " +
         "harness, last present at 65f6bcd)."),

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.CpuBound
+
 /** Approximate string joins under an EDIT-DISTANCE bound — the record-
   * linkage / entity-resolution primitive ("which titles, names, URLs are
   * within k typos of each other?"), complementing the set-similarity
@@ -52,7 +54,18 @@ import org.apache.spark.sql.functions._
   * shuffling candidate-pair ids to a distinct + two verify joins — the
   * previous shape — moved far more bytes than the strings themselves.
   * Only verified, output-owed pairs reach the final dedup exchange. No
-  * cartesian or nested-loop join anywhere (PlanGuardSpec pins this). */
+  * cartesian or nested-loop join anywhere (PlanGuardSpec pins this).
+  *
+  * Parallelism: the gram-frequency window, the rank window and both sides
+  * of the band join read [[graft.ops.CpuBound]] exchanges
+  * (`repartition(n, keys)`, n = spark.sql.shuffle.partitions). Each takes
+  * the place of the exchange the window or join would have added anyway,
+  * so the plan keeps its exchange count, but AQE can no longer coalesce
+  * these few-MB, CPU-heavy stages (window sorts, candidate verification)
+  * onto one task. The trade-off: REPARTITION_BY_NUM exchanges also opt the
+  * band join out of AQE's skew-join split, so per-key fan-out stays
+  * bounded by the operator itself — the rarest-first prefix keeps hot grams
+  * out of the join, and the position band salts what remains. */
 object FuzzyJoinOps {
 
   /** Spark's 3-arg `levenshtein` semantics through the fast
@@ -105,7 +118,9 @@ object FuzzyJoinOps {
     // strings — measured at 10× bench scale the old shape materialized
     // 22.5M distinct candidate pairs (0.84% verify selectivity) and then
     // paid a distinct exchange plus TWO id-keyed joins over them. PINNED
-    // (lshNearPairs discipline) because both band-join sides read it.
+    // (lshNearPairs discipline) because both band-join sides read it. The
+    // pin is lazy: the first band-join map stage materializes it, so the
+    // rank window runs inside those tasks instead of in a job of its own.
     // (A groupBy(id)+collect_list array-expression variant of this
     // selection measured equal in isolation but 2× slower inside the
     // long-lived bench JVM — the object-hash aggregate falls back to
@@ -113,36 +128,43 @@ object FuzzyJoinOps {
     // stays.)
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("__df").asc, col("gh").asc)
-    val prefix = Pin(grams
+    val withDf = CpuBound.repartition(grams, col("gh"))
       .withColumn("__df", count(lit(1)).over(byGram))
+    val prefix = Pin(CpuBound.repartition(withDf, col("id"))
       .withColumn("__vr", dense_rank().over(wRank))
       .filter(col("__vr") <= d * q + 1)
-      .select(col("id"), col("len"), col("pos"), col("gh"), col("s"))).df
+      .select(col("id"), col("len"), col("pos"), col("gh"), col("s")), eager = false).df
 
-    // each side aliases the gram hash: both read the one pinned relation,
-    // so an unaliased `gh` resolves to the same attribute on both sides
-    val left = prefix.select(col("id").as("id1"), col("len").as("len1"),
-      col("s").as("__s1"),
-      col("pos").as("p1"), col("gh").as("gh1"), (col("pos") / w).cast("int").as("band"))
+    // each side aliases the gram hash and band: both read the one pinned
+    // relation, so an unaliased `gh` resolves to the same attribute on both
+    // sides. Each side is hash-partitioned on its join keys, in join-key
+    // order, so the join adds no exchange of its own.
+    val left = CpuBound.repartition(
+      prefix.select(col("id").as("id1"), col("len").as("len1"),
+        col("s").as("__s1"), col("pos").as("p1"), col("gh").as("gh1"),
+        (col("pos") / w).cast("int").as("band1")),
+      col("gh1"), col("band1"))
     // the right side explodes into its 3 adjacent bands so the position
     // filter rides the equi-key; a qualifying (p1, p2) pair matches on
     // exactly one emitted band (= p1's own band)
-    val right = prefix.select(col("id").as("id2"), col("len").as("len2"),
-      col("s").as("__s2"),
-      col("pos").as("p2"), col("gh").as("gh2"),
-      explode(array((-1 to 1).map(delta => (col("pos") / w).cast("int") + delta): _*))
-        .as("band"))
+    val right = CpuBound.repartition(
+      prefix.select(col("id").as("id2"), col("len").as("len2"),
+        col("s").as("__s2"), col("pos").as("p2"), col("gh").as("gh2"),
+        explode(array((-1 to 1).map(delta => (col("pos") / w).cast("int") + delta): _*))
+          .as("band2")),
+      col("gh2"), col("band2"))
 
     // candidate generation + banded verify in ONE stage: the join's
     // residual filters prune by position/length, then the threshold
     // levenshtein verifies in place — only VERIFIED pairs (output-sized)
     // reach the dedup exchange, never the candidate blowup. The join is
     // pinned to sort-merge: the pin's size estimate is the window plan's,
-    // small enough that Spark would otherwise broadcast one side and run
-    // the whole verify in the pin's few (AQE-coalesced) partitions —
-    // measured 2× slower at 10× bench scale, and unbounded at corpus scale.
+    // small enough that Spark would otherwise broadcast one side, building
+    // the whole prefix into every task's hash table — measured 2× slower at
+    // 10× bench scale (with the pin then on one partition), and unbounded at
+    // corpus scale.
     val pairsA = left.hint("merge").join(right,
-        col("gh1") === col("gh2") && left("band") === right("band") &&
+        col("gh1") === col("gh2") && col("band1") === col("band2") &&
           col("id1") < col("id2") &&
           abs(col("p1") - col("p2")) <= d &&
           abs(col("len1") - col("len2")) <= d,

@@ -501,7 +501,7 @@ object RetrievalOps {
     val dg = spark.read.parquet(s"$path/docgroup")
     val docIdType = dg.schema("doc").dataType
     requireIntegralId("doc", docIdType)
-    // parallelism floor for the scorer (the Series.gather lesson, scan
+    // parallelism floor for the scorer (graft.ops.CpuBound, scan
     // flavor): the scorer's cost is CPU per entry, not bytes, but split
     // packing sizes the scan by BYTES — a small index collapses to a few
     // splits and the whole scoring pass runs on a fraction of the cluster.
@@ -511,9 +511,10 @@ object RetrievalOps {
     // has thousands of splits and this is a no-op.
     val scan = dg.select(col("doc").as("_doc"),
       col("terms").as("_terms"), col("tfs").as("_tfs"))
-    val nPar = spark.sessionState.conf.numShufflePartitions
-    val scanP = if (scan.rdd.getNumPartitions < nPar) scan.repartition(nPar)
-                else scan
+    val scanP =
+      if (scan.rdd.getNumPartitions < graft.ops.CpuBound.partitions(spark))
+        graft.ops.CpuBound.repartition(scan)
+      else scan
     multiQueryScore(scanP, metaRows, qidField, docIdType, qidCol, "doc_id",
       k, k1, b)
   }

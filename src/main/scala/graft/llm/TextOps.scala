@@ -997,15 +997,19 @@ object TextOps {
     * substrate for the self-join ([[minHashLshPairs]]) and the cross-corpus
     * join ([[crossCorpusCandidates]]). bucket = xxhash64 of the band's
     * signature slice, seeded by the band index so identical slices in
-    * different bands never collide into one bucket. */
+    * different bands never collide into one bucket.
+    *
+    * The buckets are exploded straight from the expression, never from a
+    * named column: the optimizer guards an explode of an ATTRIBUTE with an
+    * inferred `size(_) > 0` filter, pushes that filter below the projection
+    * and so computes every doc's signature twice (an empty array explodes
+    * to no rows anyway). */
   private[graft] def bandedTable(df: DataFrame, idCol: String, textCol: String,
                                  numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
     val B = org.apache.spark.sql.GraftExpressionBridge
-    df.select(col(idCol), B.column(graft.functions.MinHashBandBuckets(
+    df.select(col(idCol), posexplode(B.column(graft.functions.MinHashBandBuckets(
         B.expression(coalesce(col(textCol), lit(""))), numHashes, bands,
-        shingleSize)).as("_bb"))
-      .filter(size(col("_bb")) > 0)
-      .select(col(idCol), posexplode(col("_bb")))
+        shingleSize))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 

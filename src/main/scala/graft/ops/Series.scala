@@ -67,23 +67,20 @@ object Series {
     * and input partition crosses the key exchange instead of every raw row.
     *
     * Partitioning: the gather output feeds PER-SERIES KERNELS (forecast
-    * optimizers, stats, changepoints) whose downstream cost is CPU per row,
-    * not bytes — exactly the case AQE's byte-based partition coalescing
-    * cannot see. The gathered table is small, so AQE may fold the key
-    * exchange onto one partition; the kernel therefore reads from a second,
-    * REPARTITION_BY_NUM exchange, which AQE never coalesces, with `n` from
-    * spark.sql.shuffle.partitions (the standard cluster-sized knob, never a
-    * local constant). A `repartition(n, g)` in that place does not work:
-    * EnsureRequirements drops it as redundant with the aggregate's own
-    * hash exchange, which is then coalescible again. The output is
-    * therefore NOT hash-partitioned on the group key: a consumer that joins
-    * or aggregates on the key pays its own exchange (no op in `ops/` does). */
+    * optimizers, stats, changepoints), a CPU-bound stage ([[CpuBound]]).
+    * The gathered table is small, so AQE may fold the key exchange onto one
+    * partition; the kernel therefore reads from a second, round-robin
+    * REPARTITION_BY_NUM exchange. A `repartition(n, g)` in that place does
+    * not work: EnsureRequirements drops it as redundant with the
+    * aggregate's own hash exchange, which is then coalescible again. The
+    * output is therefore NOT hash-partitioned on the group key: a consumer
+    * that joins or aggregates on the key pays its own exchange (no op in
+    * `ops/` does). */
   def gather(df: DataFrame, groupCol: String, dsCol: String, yCol: String): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.filter(col(dsCol).isNotNull)
+    val gathered = df.filter(col(dsCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(sortedSeries(dsCol, df.schema(dsCol).dataType, yCol).as("_s"))
-      .repartition(n)
+    CpuBound.repartition(gathered)
       .select(col(groupCol), col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
   }
 }

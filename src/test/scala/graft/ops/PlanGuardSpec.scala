@@ -176,6 +176,19 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       "no pinned (checkpointed) intermediate in the candidate path")
   }
 
+  test("minhash LSH: the band buckets are computed once per doc") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val plan = graft.llm.TextOps.minHashLshPairs(docs, "doc_id", "text")
+      .queryExecution.executedPlan
+    // the hottest expression of the op: a filter on its output that the
+    // optimizer pushes below the projection evaluates it a second time
+    val evals = plan.collect { case p => p.expressions.flatMap(_.collect {
+      case b: graft.functions.MinHashBandBuckets => b
+    }) }.flatten
+    assert(evals.length == 1,
+      s"expected one minhash_band_buckets evaluation, got ${evals.length}:\n$plan")
+  }
+
   test("dedup clusters: iterative label propagation never cross-joins") {
     val sp = spark
     import sp.implicits._
