@@ -93,6 +93,7 @@ object PlanDump {
       "similarity_join",
       // round-9: scaled-long PageRank over the kNN graph
       "pagerank_knn")
+    SparkEntry.requireKnown(names)
     val sb = new StringBuilder
     sb.append("# Physical plans (sf0.01, local[" + cpus + "], AQE on)\n\n")
     sb.append("Generated by `runMain graft.PlanDump` — re-run after any operator change.\n")
@@ -369,13 +370,11 @@ object PlanDump {
         "position array, and the rebuild filters positions in place with " +
         "a binary-search membership probe."))
     names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        val df = fn(spark, sfDir)
-        val formatted = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val note = notes.get(name).map(n => s"\n$n\n").getOrElse("")
-        sb.append(s"\n## $name\n$note\n```\n$formatted```\n")
-      }
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val formatted = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val note = notes.get(name).map(n => s"\n$n\n").getOrElse("")
+      sb.append(s"\n## $name\n$note\n```\n$formatted```\n")
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"[plandump] wrote ${names.size} plans to $outFile")

@@ -5,67 +5,44 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.functions.TsFunctions
 import graft.llm.{SimilarityOps, TextOps}
 import graft.ops.{TsForecastOp, TsPrep}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One part of the SparkEntry contract: its rows and their DuckDB twins, under
+  * the same keys, each map built with [[rows]]. [[SparkEntry]] merges the
+  * parts. */
+private[graft] trait EntryPart {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracleSql: Map[String, String]
+
+  def partName: String = getClass.getSimpleName.stripSuffix("$")
+
+  /** This part's map, refusing a key it repeats. */
+  protected final def rows[V](pairs: (String, V)*): Map[String, V] =
+    SparkEntry.distinctRows(partName, pairs: _*)
+}
+
+/** The query contract — see SURVEY.md §7.
   *
   * Every `queries` entry is an operator exercised on the driver's testdata;
   * `oracleSql` holds the equivalent ANSI SQL the driver runs in DuckDB on
   * the same parquet tables. Column names and rounding match on both sides
   * (floats rounded to 6 decimals — or 2 for large money sums — so that
   * cross-engine summation-order ulps don't flip the hash compare).
-  */
+  *
+  * The rows live in parts: this file's own rows and the `SparkEntryVn`
+  * objects. A new row goes into the part of its operator family, builds its
+  * inputs from [[SparkEntryFixtures]] and loads tables through
+  * [[Tables.table]]. The two maps are merged from [[parts]] once, and the
+  * merge is checked: a key that one part repeats or two parts define, or a
+  * row without its oracle twin (or a twin without its row), fails the first
+  * access to either map with an error that names it. */
 object SparkEntry {
 
-  /** Table loader — delegates to the shared [[Tables]] loader (the one
-    * owner of the events TIMESTAMP(NANOS) workaround; PlanGuardSpec reads
-    * through the same code path instead of a hand-copied conversion). */
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-
-  /** Exact order-independent sum: per-row round to fixed decimals, cast to
-    * DECIMAL, sum (exact), cast back to double. Per-row double arithmetic is
-    * bitwise-identical across engines; only multi-row float summation order
-    * varies — this removes it from the oracle compare.
-    *
-    * The round+cast is the fused native [[graft.functions.RoundedDecimal]]
-    * (value-identical; see its doc): one shortest-decimal parse per row
-    * instead of two, and a COMPACT decimal into the sum so the aggregate
-    * adds stay on the long fast path — measured 2.06 s → 0.86 s on
-    * q1_pricing_summary's five exact sums at sf0.1. */
-  private[graft] def roundedDec(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftExpressionBridge.column(
-      graft.functions.RoundedDecimal(
-        org.apache.spark.sql.GraftExpressionBridge.expression(c.cast(DoubleType)), 6, 28))
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(roundedDec(c)).cast(DoubleType)
-
-  /** Money sum rounded to 2 decimals in DECIMAL space: rounding a decimal is
-    * well-defined half-up in both engines, whereas rounding the equivalent
-    * double hits engine-specific halfway behavior (e.g. x.925 → .92 vs .93). */
-  private def exactSum2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    round(sum(roundedDec(c)), 2).cast(DoubleType)
-
-  /** Daily value series per event_type: (g, ds DATE, y). */
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  /** Sparser per-user purchase series (has day gaps): (g, ds DATE, y). */
-  private def purchaseSeries(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").filter(col("event_type") === "purchase")
-      .groupBy(col("user_id").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-  private val PurchaseCte =
-    s"WITH p AS (SELECT user_id AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)"
+  type Query = (SparkSession, String) => DataFrame
 
   // shared by the Scala-API row and its SQL-table-macro twin (byte-identical
   // expansion is the macro contract, so they share one oracle)
@@ -96,13 +73,80 @@ object SparkEntry {
       "g", "ds", "y", "SeasonalNaive", 7, "1d", Map("seasonal_period" -> "7"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queriesV1 ++ SparkEntryV2.queries ++ SparkEntryV3.queries ++ SparkEntryV4.queries ++ SparkEntryV5.queries ++ SparkEntryV6.queries ++ SparkEntryV7.queries ++ SparkEntryV8.queries ++ SparkEntryV9.queries ++ SparkEntryV10.queries ++ SparkEntryV11.queries ++ SparkEntryV12.queries ++ SparkEntryV13.queries ++ SparkEntryV14.queries ++ SparkEntryV15.queries ++ SparkEntryV16.queries ++ SparkEntryV17.queries ++ SparkEntryV18.queries ++ SparkEntryV19.queries ++ SparkEntryV20.queries ++ SparkEntryV21.queries ++ SparkEntryV22.queries ++ SparkEntryV23.queries ++ SparkEntryV24.queries ++ SparkEntryV25.queries ++ SparkEntryV26.queries ++ SparkEntryV27.queries ++ SparkEntryV28.queries ++ SparkEntryV29.queries ++ SparkEntryV30.queries ++ SparkEntryV31.queries ++ SparkEntryV32.queries ++ SparkEntryV33.queries ++ SparkEntryV34.queries ++ SparkEntryV35.queries ++ SparkEntryV36.queries ++ SparkEntryV37.queries ++ SparkEntryV38.queries ++ SparkEntryV39.queries ++ SparkEntryV40.queries ++ SparkEntryV41.queries ++ SparkEntryV42.queries
+  def queries: Map[String, Query] = registry._1
 
-  private def queriesV1: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = registry._2
+
+  /** Fails with an error naming them when any of `names` is not a row of
+    * [[queries]]: a tool given a misspelt or renamed row must not
+    * quietly run or dump less than it was asked for. */
+  private[graft] def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(queries.contains).toSeq.distinct.sorted
+    require(unknown.isEmpty, s"unknown SparkEntry queries: ${unknown.mkString(", ")}")
+  }
+
+  /** Every part of the contract as (name, rows, oracles), this file first. */
+  private def parts: Seq[(String, Map[String, Query], Map[String, String])] =
+    ("SparkEntry", queriesV1, oracleSqlV1) +: Seq[EntryPart](
+      SparkEntryV2, SparkEntryV3, SparkEntryV4, SparkEntryV5, SparkEntryV6,
+      SparkEntryV7, SparkEntryV8, SparkEntryV9, SparkEntryV10, SparkEntryV11,
+      SparkEntryV12, SparkEntryV13, SparkEntryV14, SparkEntryV15, SparkEntryV16,
+      SparkEntryV17, SparkEntryV18, SparkEntryV19, SparkEntryV20, SparkEntryV21,
+      SparkEntryV22, SparkEntryV23, SparkEntryV24, SparkEntryV25, SparkEntryV26,
+      SparkEntryV27, SparkEntryV28, SparkEntryV29, SparkEntryV30, SparkEntryV31,
+      SparkEntryV32, SparkEntryV33, SparkEntryV34, SparkEntryV35, SparkEntryV36,
+      SparkEntryV37, SparkEntryV38, SparkEntryV39, SparkEntryV40, SparkEntryV41,
+      SparkEntryV42
+    ).map(p => (p.partName, p.queries, p.oracleSql))
+
+  // A lazy val whose initializer throws is retried on the next access, so a
+  // broken contract fails every access, not just the first.
+  private lazy val registry: (Map[String, Query], Map[String, String]) = {
+    val ps = parts
+    val q = mergeParts("queries", ps.map(p => p._1 -> p._2))
+    val o = mergeParts("oracleSql", ps.map(p => p._1 -> p._3))
+    checkTwins(q.keySet, o.keySet)
+    (q, o)
+  }
+
+  /** One part's map that refuses a repeated key (a `Map(...)` literal
+    * would keep the later entry and silently drop the earlier row). */
+  private[graft] def distinctRows[V](part: String, pairs: (String, V)*): Map[String, V] = {
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    for ((k, _) <- pairs) if (!seen.add(k)) throw new IllegalStateException(
+      s"SparkEntry: key '$k' is defined twice in $part")
+    pairs.toMap
+  }
+
+  /** Union of the parts' maps that refuses a key defined by two parts (a
+    * plain `++` would keep the later row and silently drop the earlier one
+    * from the oracle gate). */
+  private[graft] def mergeParts[V](what: String, parts: Seq[(String, Map[String, V])]): Map[String, V] = {
+    val owner = scala.collection.mutable.HashMap.empty[String, String]
+    for ((part, m) <- parts; k <- m.keys) owner.get(k) match {
+      case Some(first) => throw new IllegalStateException(
+        s"SparkEntry: $what key '$k' is defined in both $first and $part")
+      case None => owner(k) = part
+    }
+    parts.foldLeft(Map.empty[String, V])(_ ++ _._2)
+  }
+
+  /** Every row has an oracle twin and every twin a row. */
+  private[graft] def checkTwins(queryKeys: Set[String], oracleKeys: Set[String]): Unit = {
+    val noOracle = (queryKeys -- oracleKeys).toSeq.sorted
+    val noQuery = (oracleKeys -- queryKeys).toSeq.sorted
+    if (noOracle.nonEmpty || noQuery.nonEmpty) throw new IllegalStateException(
+      "SparkEntry: queries and oracleSql differ — " +
+        s"rows without an oracle: [${noOracle.mkString(", ")}]; " +
+        s"oracles without a row: [${noQuery.mkString(", ")}]")
+  }
+
+  private def queriesV1: Map[String, Query] = distinctRows("SparkEntry",
     // ------------------------------------------------ relational shell
     "q1_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      table(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("2000-12-01").cast(TimestampType))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -119,13 +163,13 @@ object SparkEntry {
       // the small cust⋈ord keyset is the explicitly-broadcast build side —
       // lineitem is never eligible for an AQE broadcast and never shuffled
       // beyond its own groupBy key.
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, dir, "orders")
+      val cust = table(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+      val ord = table(s, dir, "orders")
         .filter(col("o_orderdate") < lit("1997-01-01").cast(TimestampType))
       val keyset = broadcast(cust)
         .join(ord, col("c_custkey") === col("o_custkey"))
         .select(col("o_orderkey"))
-      val liAgg = t(s, dir, "lineitem")
+      val liAgg = table(s, dir, "lineitem")
         .filter(col("l_shipdate") > lit("1997-01-01").cast(TimestampType))
         .groupBy(col("l_orderkey"))
         .agg(exactSum2(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
@@ -211,11 +255,11 @@ object SparkEntry {
         Map("window" -> "7")))),
     // ------------------------------------------------ LLM-pipeline operators
     "dedup_exact" -> ((s, dir) => {
-      TextOps.dedupExact(t(s, dir, "documents"), Seq("text"), "doc_id")
+      TextOps.dedupExact(table(s, dir, "documents"), Seq("text"), "doc_id")
         .select(col("doc_id"))
     }),
     "text_stats" -> ((s, dir) => {
-      TextOps.textStats(t(s, dir, "documents"), "text")
+      TextOps.textStats(table(s, dir, "documents"), "text")
         .select(col("doc_id"), col("n_chars"), col("n_tokens"),
           round(col("alpha_ratio"), 6).as("alpha_ratio"),
           round(col("digit_ratio"), 6).as("digit_ratio"),
@@ -223,28 +267,13 @@ object SparkEntry {
           round(col("mean_token_len"), 6).as("mean_token_len"))
     }),
     "ann_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       SimilarityOps.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10)
         .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
     }),
   )
 
-  /** yhat is pure per-row arithmetic on exact inputs → round 6; the CI bounds
-    * involve a cross-engine stddev (different summation algorithms) → round 4
-    * to keep ulp-level differences away from the rounding boundary. */
-  private def roundFc(df: DataFrame): DataFrame =
-    df.select(col("g"), col("forecast_step"), col("ds"),
-      round(col("yhat"), 6).as("yhat"),
-      round(col("yhat_lower"), 4).as("yhat_lower"),
-      round(col("yhat_upper"), 4).as("yhat_upper"),
-      col("model_name"))
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    oracleSqlV1 ++ SparkEntryV2.oracleSql ++ SparkEntryV3.oracleSql ++ SparkEntryV4.oracleSql ++ SparkEntryV5.oracleSql ++ SparkEntryV6.oracleSql ++ SparkEntryV7.oracleSql ++ SparkEntryV8.oracleSql ++ SparkEntryV9.oracleSql ++ SparkEntryV10.oracleSql ++ SparkEntryV11.oracleSql ++ SparkEntryV12.oracleSql ++ SparkEntryV13.oracleSql ++ SparkEntryV14.oracleSql ++ SparkEntryV15.oracleSql ++ SparkEntryV16.oracleSql ++ SparkEntryV17.oracleSql ++ SparkEntryV18.oracleSql ++ SparkEntryV19.oracleSql ++ SparkEntryV20.oracleSql ++ SparkEntryV21.oracleSql ++ SparkEntryV22.oracleSql ++ SparkEntryV23.oracleSql ++ SparkEntryV24.oracleSql ++ SparkEntryV25.oracleSql ++ SparkEntryV26.oracleSql ++ SparkEntryV27.oracleSql ++ SparkEntryV28.oracleSql ++ SparkEntryV29.oracleSql ++ SparkEntryV30.oracleSql ++ SparkEntryV31.oracleSql ++ SparkEntryV32.oracleSql ++ SparkEntryV33.oracleSql ++ SparkEntryV34.oracleSql ++ SparkEntryV35.oracleSql ++ SparkEntryV36.oracleSql ++ SparkEntryV37.oracleSql ++ SparkEntryV38.oracleSql ++ SparkEntryV39.oracleSql ++ SparkEntryV40.oracleSql ++ SparkEntryV41.oracleSql ++ SparkEntryV42.oracleSql
-
-  private def oracleSqlV1: Map[String, String] = Map(
+  private def oracleSqlV1: Map[String, String] = distinctRows("SparkEntry",
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
         | CAST(round(sum(CAST(round(l_quantity, 6) AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_qty,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
 import graft.kernels.{Imputation, SeasonalityExt}
 import graft.ops.{Series, TsChangepointOp, TsDecompositionOp, TsExogOp, TsForecastOp}
 
@@ -13,48 +14,11 @@ import graft.ops.{Series, TsChangepointOp, TsDecompositionOp, TsExogOp, TsForeca
   * detrend/exog paths (exact linear inputs make every fit reproduce the
   * construction), and cross-operator consistency oracles for the
   * explain/inspect introspection surface. */
-object SparkEntryV10 {
+object SparkEntryV10 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-
-  /** 60 order dates per priority, y = 0 for the first 30 and 100 after: a
-    * single variance-free step whose only defensible segmentation is one
-    * changepoint at position 30. */
-  private[graft] def stepSeries(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w) - 1)
-      .filter(col("_pos") < 60)
-      .select(col("g"), col("ds"),
-        when(col("_pos") < 30, 0.0).otherwise(100.0).as("y"))
-  }
-
-  private val StepCte =
-    """WITH d AS (
-      |  SELECT o_orderpriority AS g, CAST(o_orderdate AS DATE) AS ds
-      |  FROM orders GROUP BY 1, 2),
-      |p AS (SELECT g, ds, row_number() OVER (PARTITION BY g ORDER BY ds) - 1 AS pos
-      |      FROM d),
+  /** The DuckDB twin of [[SparkEntryFixtures.stepSeries]]. */
+  private val StepCte = BaseCte +
+    """,
       |step AS (SELECT g, ds, pos,
       |                CASE WHEN pos < 30 THEN 0.0 ELSE 100.0 END AS y
       |         FROM p WHERE pos < 60)""".stripMargin
@@ -68,19 +32,7 @@ object SparkEntryV10 {
       .select(col("g"), col("ds"), (lit(5.0) + lit(2.0) * col("_pos")).as("y"))
   }
 
-  /** Period-7 sinusoid, 70 samples per priority (shared with SparkEntryV9). */
-  private def sinusoid7(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w))
-      .filter(col("_pos") <= 70)
-      .select(col("g"), col("ds"),
-        (lit(10.0) + sin(col("_pos") * lit(2.0 * math.Pi / 7.0))).as("y"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // a variance-free step admits exactly one PELT changepoint: the segment
     // start at position 30 (any extra split costs a penalty for zero gain)
     "ts_changepoints_pelt_by" -> ((s, dir) =>
@@ -169,7 +121,7 @@ object SparkEntryV10 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_changepoints_pelt_by" -> (StepCte +
       """
         |SELECT g, CAST(30 AS INTEGER) AS changepoint_index, ds

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.ops.TsForecastOp
+import graft.SparkEntryFixtures._
 
 /** Eleventh batch: planted-construction oracles for the 20 optimizer-driven
   * forecast models (golden-section / Nelder-Mead parameter search has no
@@ -38,57 +36,13 @@ import graft.ops.TsForecastOp
   * the bench MASE table and the kernel specs; what the driver gate now proves
   * is the full gather→kernel→optimizer→CI→calendar-stamp→explode path against
   * a construction, not the implementation. */
-object SparkEntryV11 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  /** Seasonal offsets, Σ = 0 over the period. */
-  private val Svals = Seq(3.0, -1.0, 0.5, 2.0, -2.5, 1.5, -3.5)
-
-  /** One row per distinct (o_orderpriority, o_orderdate), positioned by date
-    * order — the same deterministic spine SparkEntryV10 plants on. */
-  private def plantedBase(s: SparkSession, dir: String, nPts: Int): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w) - 1)
-      .filter(col("_pos") < nPts)
-  }
-
-  private def plantedCst(s: SparkSession, dir: String): DataFrame =
-    plantedBase(s, dir, 60).select(col("g"), col("ds"), lit(42.5).as("y"))
+object SparkEntryV11 extends EntryPart {
 
   private def plantedLin(s: SparkSession, dir: String): DataFrame =
     plantedBase(s, dir, 60)
       .select(col("g"), col("ds"), (lit(5.0) + lit(2.0) * col("_pos")).as("y"))
 
-  private def plantedSea(s: SparkSession, dir: String): DataFrame =
-    plantedBase(s, dir, 63)
-      .select(col("g"), col("ds"),
-        (lit(20.0) + element_at(array(Svals.map(lit): _*),
-          (col("_pos") % 7).cast(IntegerType) + 1)).as("y"))
-
-  /** Same rounding contract as SparkEntry.roundFc: yhat 6 decimals, CI 4. */
-  private def roundFc(df: DataFrame): DataFrame =
-    df.select(col("g"), col("forecast_step"), col("ds"),
-      round(col("yhat"), 6).as("yhat"),
-      round(col("yhat_lower"), 4).as("yhat_lower"),
-      round(col("yhat_upper"), 4).as("yhat_upper"),
-      col("model_name"))
-
-  private def fcOn(planted: (SparkSession, String) => DataFrame, method: String,
-                   params: Map[String, String] = Map.empty): (SparkSession, String) => DataFrame =
-    (s, dir) => roundFc(
-      TsForecastOp.forecastBy(planted(s, dir), "g", "ds", "y", method, 7, "1d", params))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // constant plant: recursion fixed points
     "fc_ses_optimized" -> fcOn(plantedCst, "SESOptimized"),
     "fc_theta" -> fcOn(plantedCst, "Theta"),
@@ -116,40 +70,13 @@ object SparkEntryV11 {
 
   // ---------------------------------------------------------------- oracles
 
-  private val BaseCte =
-    """WITH d AS (
-      |  SELECT o_orderpriority AS g, CAST(o_orderdate AS DATE) AS ds
-      |  FROM orders GROUP BY 1, 2),
-      |p AS (SELECT g, ds, row_number() OVER (PARTITION BY g ORDER BY ds) - 1 AS pos
-      |      FROM d)""".stripMargin
-
-  private val CstCte = BaseCte +
-    ",\ns AS (SELECT g, ds, 42.5 AS y FROM p WHERE pos < 60)"
   private val LinCte = BaseCte +
     ",\ns AS (SELECT g, ds, 5.0 + 2.0 * pos AS y FROM p WHERE pos < 60)"
-  private val SeaCte = BaseCte +
-    ",\ns AS (SELECT g, ds, 20.0 + [3.0, -1.0, 0.5, 2.0, -2.5, 1.5, -3.5][(pos % 7) + 1] AS y" +
-    "\n       FROM p WHERE pos < 63)"
 
-  /** point ± 1.96·σ_pop·√step over the planted series, 7 steps. */
-  private def fcOracle(seriesCte: String, yhatExpr: String, modelName: String): String =
-    seriesCte +
-      s""",
-         |a AS (SELECT g, max(ds) AS last_ds, stddev_pop(y) AS sigma FROM s GROUP BY g)
-         |SELECT g, CAST(step AS INT) AS forecast_step, last_ds + CAST(step AS INT) AS ds,
-         | round($yhatExpr, 6) AS yhat,
-         | round(($yhatExpr) - 1.96 * sigma * sqrt(step), 4) AS yhat_lower,
-         | round(($yhatExpr) + 1.96 * sigma * sqrt(step), 4) AS yhat_upper,
-         | '$modelName' AS model_name
-         |FROM a, (SELECT unnest(range(1, 8)) AS step) st""".stripMargin
-
-  private val CstY = "42.5"
   // last pos = 59 → y(59 + step) = 5 + 2·(59 + step)
   private val LinY = "123.0 + 2.0 * step"
-  // n = 63 ≡ 0 (mod 7) → continuation index is (step − 1) mod 7
-  private val SeaY = "20.0 + [3.0, -1.0, 0.5, 2.0, -2.5, 1.5, -3.5][((step - 1) % 7) + 1]"
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "fc_ses_optimized" -> fcOracle(CstCte, CstY, "SESOptimized"),
     "fc_theta" -> fcOracle(CstCte, CstY, "Theta"),
     "fc_optimized_theta" -> fcOracle(CstCte, CstY, "OptimizedTheta"),

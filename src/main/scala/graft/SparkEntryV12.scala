@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.ops.{TsConformalOp, TsDecompositionOp}
 
 /** Twelfth batch: the remaining period-detection methods, the detrend family
@@ -22,30 +23,7 @@ import graft.ops.{TsConformalOp, TsDecompositionOp}
   *  - conformal evaluate on planted intervals with a known miss pattern:
   *    coverage/violation/width/Winkler are closed-form (conformal.rs:1159).
   */
-object SparkEntryV12 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  /** Deterministic per-group date spine from orders, positioned by date. */
-  private def plantedBase(s: SparkSession, dir: String, nPts: Int): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w) - 1)
-      .filter(col("_pos") < nPts)
-  }
-
-  /** 64 samples of 10 + sin(2π·(pos+1)/8) — 8 whole cycles per group. */
-  private def sinusoid8(s: SparkSession, dir: String): DataFrame =
-    plantedBase(s, dir, 64).select(col("g"), col("ds"),
-      (lit(10.0) + sin((col("_pos") + 1) * lit(2.0 * math.Pi / 8.0))).as("y"))
+object SparkEntryV12 extends EntryPart {
 
   private def quadratic(s: SparkSession, dir: String): DataFrame =
     plantedBase(s, dir, 48).select(col("g"), col("ds"),
@@ -55,7 +33,7 @@ object SparkEntryV12 {
     plantedBase(s, dir, 48).select(col("g"), col("ds"),
       (lit(5.0) + lit(2.0) * col("_pos")).as("y"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // the 9 detection methods without their own driver row (fft/acf/
     // autoperiod live in SparkEntryV3); one distinct row per group × method
     "ts_detect_periods_methods" -> ((s, dir) => {
@@ -92,7 +70,7 @@ object SparkEntryV12 {
     // the DuckDB brute-force top-k is an honest oracle for the whole
     // train→assign→probe→search pipeline
     "ann_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       graft.llm.SimilarityOps.ivfTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, nLists = 16, nProbe = 16)
         .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
@@ -102,7 +80,7 @@ object SparkEntryV12 {
     // identical IEEE expression, so the 4×-storage path is hash-checked
     "emb_quantize" -> ((s, dir) => {
       val q = graft.llm.SimilarityOps.quantizeEmbeddings(
-        t(s, dir, "embeddings").filter(col("vec_id") < 200), "embedding")
+        table(s, dir, "embeddings").filter(col("vec_id") < 200), "embedding")
       q.select(col("vec_id"), round(col("qvec_scale"), 6).as("qscale"),
           posexplode(col("qvec")))
         .select(col("vec_id"), col("qscale"), col("pos"),
@@ -112,7 +90,7 @@ object SparkEntryV12 {
     // probed exhaustively → same brute-force oracle as ann_ivf_topk: the
     // write→partition-pruned-read round trip is hash-checked end to end
     "ann_ivf_index_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       val idxDir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
       graft.llm.SimilarityOps.ivfWriteIndex(emb, "vec_id", "embedding", nLists = 16, idxDir)
       graft.llm.SimilarityOps.ivfProbeIndex(s, idxDir, emb.filter(col("vec_id") < 5),
@@ -124,7 +102,7 @@ object SparkEntryV12 {
     // replay the output payload byte-for-byte from the (ASCII) source text
     "mm_resize_images" -> ((s, dir) => {
       val media = graft.llm.MultimodalOps.demoMediaTable(
-        t(s, dir, "documents"), "doc_id", "text")
+        table(s, dir, "documents"), "doc_id", "text")
       graft.llm.MultimodalOps.resizeImages(media, "payload", 1, 1)
         .select(col("doc_id"), col("media_meta.width").as("out_w"),
           col("media_meta.height").as("out_h"),
@@ -162,7 +140,7 @@ object SparkEntryV12 {
       |      FROM pairs)
       |SELECT qid, vid, round(sim, 6) AS sim FROM r WHERE rk <= 10""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "mm_resize_images" ->
       """SELECT doc_id, CAST(1 AS INTEGER) AS out_w, CAST(1 AS INTEGER) AS out_h,
         | CAST(1 AS BIGINT) AS out_size,

@@ -5,8 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.kernels.{Conformal, Forecast}
-import graft.ops.{TsCvOp, TsDecompositionOp, TsForecastOp}
+import graft.ops.{TsCvOp, TsDecompositionOp}
 
 /** Thirteenth batch: the coverage sweep that closes round 3's spec-only
   * gaps — Auto* multi-seasonal models, the Laplace variants, classical
@@ -19,62 +21,9 @@ import graft.ops.{TsCvOp, TsDecompositionOp, TsForecastOp}
   * (EMA, AR(1), damped Holt, seasonal-memory, median) forecasts the
   * constant — the ensemble weighting cancels and all variants forecast
   * the construction (MultiSeasonal.scala:395-427). */
-object SparkEntryV13 {
+object SparkEntryV13 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-
-  // ------------------------------------------------------- planted series
-  private val Svals = Seq(3.0, -1.0, 0.5, 2.0, -2.5, 1.5, -3.5)
-
-  private def plantedBase(s: SparkSession, dir: String, nPts: Int): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w) - 1)
-      .filter(col("_pos") < nPts)
-  }
-
-  private def plantedCst(s: SparkSession, dir: String): DataFrame =
-    plantedBase(s, dir, 60).select(col("g"), col("ds"), lit(42.5).as("y"))
-
-  private def plantedSea(s: SparkSession, dir: String): DataFrame =
-    plantedBase(s, dir, 63)
-      .select(col("g"), col("ds"),
-        (lit(20.0) + element_at(array(Svals.map(lit): _*),
-          (col("_pos") % 7).cast(IntegerType) + 1)).as("y"))
-
-  private def roundFc(df: DataFrame): DataFrame =
-    df.select(col("g"), col("forecast_step"), col("ds"),
-      round(col("yhat"), 6).as("yhat"),
-      round(col("yhat_lower"), 4).as("yhat_lower"),
-      round(col("yhat_upper"), 4).as("yhat_upper"),
-      col("model_name"))
-
-  private def fcOn(planted: (SparkSession, String) => DataFrame, method: String,
-                   params: Map[String, String] = Map.empty): (SparkSession, String) => DataFrame =
-    (s, dir) => roundFc(
-      TsForecastOp.forecastBy(planted(s, dir), "g", "ds", "y", method, 7, "1d", params))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // Auto multi-seasonal variants: same kernels as MSTL/MFLES/TBATS with
     // auto passthrough naming (Forecast.scala model dispatch)
     "fc_automstl" -> fcOn(plantedSea, "AutoMSTL", Map("seasonal_periods" -> "7")),
@@ -145,7 +94,7 @@ object SparkEntryV13 {
     // single-series ts_forecast_exog (ts_macros.cpp:756-830) on the exact
     // plane construction SparkEntryV10 uses for the _by variant
     "ts_forecast_exog_single" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = table(s, dir, "events")
         .groupBy(col("ts").cast(DateType).as("ds"))
         .agg(exactSum(col("value")).as("_v"))
       val hist = daily
@@ -176,7 +125,7 @@ object SparkEntryV13 {
     // triple to its minimum id — transitively, so the oracle holds even if
     // LSH banding misses one of the three edges
     "dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.filter(col("doc_id") < 15)
       val tripled = docs
         .unionByName(aug.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
@@ -187,7 +136,7 @@ object SparkEntryV13 {
       graft.llm.TextOps.dedupClusters(pairs)
     }),
     "dedup_keep_canonical" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.filter(col("doc_id") < 15)
       val tripled = docs
         .unionByName(aug.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
@@ -201,33 +150,6 @@ object SparkEntryV13 {
   )
 
   // ---------------------------------------------------------------- oracles
-
-  private val BaseCte =
-    """WITH d AS (
-      |  SELECT o_orderpriority AS g, CAST(o_orderdate AS DATE) AS ds
-      |  FROM orders GROUP BY 1, 2),
-      |p AS (SELECT g, ds, row_number() OVER (PARTITION BY g ORDER BY ds) - 1 AS pos
-      |      FROM d)""".stripMargin
-
-  private val CstCte = BaseCte +
-    ",\ns AS (SELECT g, ds, 42.5 AS y FROM p WHERE pos < 60)"
-  private val SeaCte = BaseCte +
-    ",\ns AS (SELECT g, ds, 20.0 + [3.0, -1.0, 0.5, 2.0, -2.5, 1.5, -3.5][(pos % 7) + 1] AS y" +
-    "\n       FROM p WHERE pos < 63)"
-
-  private def fcOracle(seriesCte: String, yhatExpr: String, modelName: String): String =
-    seriesCte +
-      s""",
-         |a AS (SELECT g, max(ds) AS last_ds, stddev_pop(y) AS sigma FROM s GROUP BY g)
-         |SELECT g, CAST(step AS INT) AS forecast_step, last_ds + CAST(step AS INT) AS ds,
-         | round($yhatExpr, 6) AS yhat,
-         | round(($yhatExpr) - 1.96 * sigma * sqrt(step), 4) AS yhat_lower,
-         | round(($yhatExpr) + 1.96 * sigma * sqrt(step), 4) AS yhat_upper,
-         | '$modelName' AS model_name
-         |FROM a, (SELECT unnest(range(1, 8)) AS step) st""".stripMargin
-
-  private val CstY = "42.5"
-  private val SeaY = "20.0 + [3.0, -1.0, 0.5, 2.0, -2.5, 1.5, -3.5][((step - 1) % 7) + 1]"
 
   /** Tripled corpus + per-doc sorted distinct 5-gram shingle set (the same
     * normalization as SparkEntryV2.DedupShingleEqualitySql, on the
@@ -261,7 +183,7 @@ object SparkEntryV13 {
       |FROM o JOIN lv ON o.g = lv.g AND o.step = lv.step
       |GROUP BY o.g, o.step)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "fc_automstl" -> fcOracle(SeaCte, SeaY, "AutoMSTL"),
     "fc_automfles" -> fcOracle(CstCte, CstY, "AutoMFLES"),
     "fc_autotbats" -> fcOracle(SeaCte, SeaY, "AutoTBATS"),

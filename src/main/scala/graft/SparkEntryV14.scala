@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables.table
 import graft.llm.{SampleOps, TextOps}
 
 /** Fourteenth batch: the training-data curation surface — deterministic
@@ -14,12 +15,7 @@ import graft.llm.{SampleOps, TextOps}
   * shuffle); the sampling oracles replay the xorshift-multiply mixer in
   * BIGINT SQL exactly (every intermediate < 2^47 — same device as the
   * bootstrap RNG, see SampleOps.hashBucket). */
-object SparkEntryV14 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV14 extends EntryPart {
 
   private val Seed = 42L
   private val P = SampleOps.P
@@ -39,52 +35,52 @@ object SparkEntryV14 {
     "concat(text, ' contact user', CAST(doc_id AS VARCHAR), '@mail.example.com via " +
       "https://ex.org/p/', CAST(doc_id AS VARCHAR), ' acct 123456789 ok')"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "sample_bernoulli" -> ((s, dir) =>
-      SampleOps.sampleBernoulli(t(s, dir, "documents"), "doc_id", 0.25, Seed)
+      SampleOps.sampleBernoulli(table(s, dir, "documents"), "doc_id", 0.25, Seed)
         .select(col("doc_id"), col("lang"))),
     "sample_split" -> ((s, dir) =>
-      SampleOps.assignSplit(t(s, dir, "documents"), "doc_id",
+      SampleOps.assignSplit(table(s, dir, "documents"), "doc_id",
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), Seed)
         .select(col("doc_id"), col("split"))),
     "sample_stratified" -> ((s, dir) =>
-      SampleOps.sampleStratified(t(s, dir, "documents"), "doc_id", "lang",
+      SampleOps.sampleStratified(table(s, dir, "documents"), "doc_id", "lang",
         Map("en" -> 0.5, "zh" -> 0.05), defaultRate = 0.2, seed = Seed)
         .select(col("doc_id"), col("lang"))),
     "text_normalize" -> ((s, dir) =>
       TextOps.textNormalize(
-        t(s, dir, "documents").withColumn("text", messy(col("text"))),
+        table(s, dir, "documents").withColumn("text", messy(col("text"))),
         "text")
         .select(col("doc_id"), col("text_norm"))),
     "pii_scrub" -> ((s, dir) =>
       TextOps.piiScrub(
-        t(s, dir, "documents").withColumn("text", withPii(col("doc_id"), col("text"))),
+        table(s, dir, "documents").withColumn("text", withPii(col("doc_id"), col("text"))),
         "text")
         .select(col("doc_id"), col("text_scrubbed"))),
     "doc_chunks" -> ((s, dir) =>
-      TextOps.chunkByTokens(t(s, dir, "documents"), "doc_id", "text",
+      TextOps.chunkByTokens(table(s, dir, "documents"), "doc_id", "text",
         maxTokens = 32, overlap = 8)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"), col("chunk_tokens"))),
     "pack_sequences" -> ((s, dir) =>
       TextOps.packSequences(
-        TextOps.chunkByTokens(t(s, dir, "documents"), "doc_id", "text",
+        TextOps.chunkByTokens(table(s, dir, "documents"), "doc_id", "text",
           maxTokens = 32, overlap = 8),
         "doc_id", "chunk_id", "chunk_tokens", budget = 256, nBuckets = 8)
         .select(col("doc_id"), col("chunk_id"), col("pack_id"))),
     "decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       TextOps.contaminatedIds(docs, docs.filter(col("doc_id") % 50 === 0),
         "doc_id", "text", n = 13)
     }),
     "text_repetition" -> ((s, dir) =>
-      TextOps.repetitionStats(t(s, dir, "documents"), "text")
+      TextOps.repetitionStats(table(s, dir, "documents"), "text")
         .select(col("doc_id"), col("dup_token_frac"),
           col("dup_2gram_frac"), col("dup_3gram_frac"))),
   )
 
   def oracleSql: Map[String, String] = {
     val (hashCtes, bucket) = SampleOps.hashBucketSqlCtes("documents", "doc_id", Seed)
-    Map(
+    rows(
       "sample_bernoulli" ->
         s"""WITH $hashCtes
            |SELECT doc_id, lang FROM _h3 WHERE $bucket < ${SampleOps.rateThreshold(0.25)}""".stripMargin,

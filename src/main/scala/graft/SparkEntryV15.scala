@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
+import graft.Tables.table
 import graft.llm.{DomainOps, SampleOps}
 
 /** Fifteenth batch: domain-level curation — URL host extraction, blocklist
@@ -16,12 +17,7 @@ import graft.llm.{DomainOps, SampleOps}
   * TRANSFORM, not the plant. The four URL shapes cycle scheme+www, userinfo
   * +port, bare host, and protocol-relative forms to exercise the whole
   * authority grammar. */
-object SparkEntryV15 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV15 extends EntryPart {
 
   private val Seed = 7L
 
@@ -46,17 +42,17 @@ object SparkEntryV15 {
        |  regexp_replace($urlExpr, '${DomainOps.SchemePrefixPattern}', ''),
        |  '${DomainOps.HostPattern}', 1)), '^www\\.', ''), '')""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "domain_extract" -> ((s, dir) =>
       DomainOps.extractDomain(
-        t(s, dir, "documents").withColumn("url", urlOf(col("doc_id"), col("source"))),
+        table(s, dir, "documents").withColumn("url", urlOf(col("doc_id"), col("source"))),
         "url")
         .select(col("doc_id"), col("domain"))),
     "domain_filter_block" -> ((s, dir) => {
       val sp = s
       import sp.implicits._
       val docs = DomainOps.extractDomain(
-        t(s, dir, "documents").withColumn("url", urlOf(col("doc_id"), col("source"))),
+        table(s, dir, "documents").withColumn("url", urlOf(col("doc_id"), col("source"))),
         "url")
       val list = Seq("example.com", "src1.example.org").toDF("blocked")
       DomainOps.filterByDomainList(docs, "doc_id", "domain", list, "block")
@@ -64,7 +60,7 @@ object SparkEntryV15 {
     }),
     "domain_cap" -> ((s, dir) =>
       DomainOps.capPerDomain(
-        t(s, dir, "documents")
+        table(s, dir, "documents")
           .withColumn("domain", concat(col("source"), lit(".example.com"))),
         "doc_id", "domain", cap = 10, seed = Seed)
         .select(col("doc_id"), col("domain"))),
@@ -72,7 +68,7 @@ object SparkEntryV15 {
 
   def oracleSql: Map[String, String] = {
     val (capCtes, capBucket) = SampleOps.hashBucketSqlCtes("base", "doc_id", Seed)
-    Map(
+    rows(
       "domain_extract" ->
         s"""SELECT doc_id, ${domainSql(UrlSql)} AS domain FROM documents""",
       "domain_filter_block" ->

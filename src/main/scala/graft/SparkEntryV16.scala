@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.{MixOps, SampleOps, SimilarityOps, TextOps}
 
 /** Sixteenth batch: semantic curation + corpus assembly — SemDeDup-style
@@ -19,12 +20,7 @@ import graft.llm.{MixOps, SampleOps, SimilarityOps, TextOps}
   * ranking with self excluded. Boilerplate/token/mix oracles replay the
   * full pipeline in SQL (line counts, token histogram, hash-priority
   * prefix sums) rather than asserting the plant. */
-object SparkEntryV16 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV16 extends EntryPart {
 
   private val NLists = 8
   private val MixSeed = 11L
@@ -35,7 +31,7 @@ object SparkEntryV16 {
   /** Embeddings plus identical copies of the first 25 vectors (ids offset
     * by 1e6) — the planted semantic duplicates. */
   private def augEmb(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val emb = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     emb.unionByName(emb.filter(col("vec_id") < 25)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding")))
   }
@@ -49,14 +45,14 @@ object SparkEntryV16 {
     * every document, one promo line in 21 docs (> maxDocs → stripped) and
     * one in exactly 10 docs (= maxDocs → kept). */
   private def augDocs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").withColumn("text_aug",
+    table(s, dir, "documents").withColumn("text_aug",
       concat(lit("NAV MENU\n"), col("text"),
         when(col("doc_id") < 21, lit("\nPROMO ALPHA"))
           .when(col("doc_id") >= 21 && col("doc_id") < 31, lit("\nPROMO BETA"))
           .otherwise(lit("")),
         lit("\nCOPYRIGHT 2026 EXAMPLE CORP")))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "semdedup_pairs" -> ((s, dir) => {
       val aug = augEmb(s, dir)
       SimilarityOps.semDedupPairs(aug, "vec_id", "embedding",
@@ -71,7 +67,7 @@ object SparkEntryV16 {
     }),
     "knn_graph" -> ((s, dir) =>
       // exhaustive probing (nProbe = nLists) is brute force by construction
-      SimilarityOps.knnGraph(t(s, dir, "embeddings"), "vec_id", "embedding",
+      SimilarityOps.knnGraph(table(s, dir, "embeddings"), "vec_id", "embedding",
           k = 5, nLists = NLists, nProbe = NLists)
         .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))),
     "boilerplate_strip" -> ((s, dir) =>
@@ -80,13 +76,13 @@ object SparkEntryV16 {
         .select(col("doc_id"), col("text_clean"),
           col("text_clean_lines_removed").as("lines_removed"))),
     "top_tokens" -> ((s, dir) =>
-      TextOps.topTokens(t(s, dir, "documents"), "text", k = 50)),
+      TextOps.topTokens(table(s, dir, "documents"), "text", k = 50)),
     "mix_token_budget" -> ((s, dir) =>
-      MixOps.selectPerDomainBudget(t(s, dir, "documents"), "doc_id", "source",
+      MixOps.selectPerDomainBudget(table(s, dir, "documents"), "doc_id", "source",
           "n_chars", MixBudgets, MixSeed)
         .select(col("doc_id"), col("source"), col("n_chars"))),
     "select_token_budget" -> ((s, dir) =>
-      MixOps.selectToTokenBudget(t(s, dir, "documents"), "doc_id", "n_chars",
+      MixOps.selectToTokenBudget(table(s, dir, "documents"), "doc_id", "n_chars",
           budget = 50000L, seed = GlobalSeed)
         .select(col("doc_id"), col("source"), col("n_chars"))),
   )
@@ -159,7 +155,7 @@ object SparkEntryV16 {
        |SELECT doc_id, source, n_chars FROM cum WHERE _cum <= _budget""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "semdedup_pairs" -> (SemDedupPairsSql +
       """SELECT id_a, id_b, round(sim, 4) AS sim FROM pairs WHERE sim >= 0.9999""".stripMargin),
     "semdedup_keep" -> (SemDedupPairsSql +

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
+
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 
 /** Seventeenth batch: SQL-string table-macro twins for the round-6 TVF
   * surface. Each row reaches an ALREADY-ORACLE-CHECKED plan through
@@ -12,40 +13,7 @@ import org.apache.spark.sql.expressions.Window
   * names (cv family, peaks, fill-forward, the `anofox_fcst_` alias layer,
   * ts_macros.cpp:2131-2196) is therefore a hash mismatch, not a smoke-test
   * miss. */
-object SparkEntryV17 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column) =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private def purchaseSeries(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").filter(col("event_type") === "purchase")
-      .groupBy(col("user_id").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  /** Planted spike series (SparkEntryV9's construction, shared oracle). */
-  private def spikeSeries(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w) - 1)
-      .filter(col("_pos") < 64)
-      .select(col("g"), col("ds"),
-        when(col("_pos") % 4 === 1, 5.0).otherwise(0.0).as("y"))
-  }
+object SparkEntryV17 extends EntryPart {
 
   /** Planted cross-document span: appended to the first ten documents, so
     * doc 0 keeps it (first occurrence) and docs 1-9 lose exactly these
@@ -54,15 +22,15 @@ object SparkEntryV17 {
   private val Plant =
     "graftplant alpha bravo charlie delta echo foxtrot golf hotel"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "dedup_spans" -> ((s, dir) => {
-      val aug = t(s, dir, "documents").withColumn("text_aug",
+      val aug = table(s, dir, "documents").withColumn("text_aug",
         when(col("doc_id") < 10, concat(col("text"), lit(" " + Plant)))
           .otherwise(col("text")))
       graft.llm.TextOps.removeDuplicatedSpans(aug, "doc_id", "text_aug", gramLen = 8)
     }),
     "lm_unigram_score" -> ((s, dir) =>
-      graft.llm.TextOps.lmPerplexity(t(s, dir, "documents"), "doc_id", "text",
+      graft.llm.TextOps.lmPerplexity(table(s, dir, "documents"), "doc_id", "text",
           vocabSize = 256, alpha = 0.5)
         .select(col("doc_id"), col("n_tokens"), col("sum_logp"))),
     "sql_macro_cv_split_by" -> ((s, dir) => {
@@ -160,7 +128,7 @@ object SparkEntryV17 {
       |       coalesce(a.sum_logp, 0.0) AS sum_logp
       |FROM tk k LEFT JOIN agg a USING (doc_id)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "dedup_spans" -> DedupSpansSql,
     "lm_unigram_score" -> LmScoreSql,
     "sql_macro_cv_split_by" -> SparkEntryV4.oracleSql("ts_cv_split_by"),

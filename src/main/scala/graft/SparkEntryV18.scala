@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.llm.{DomainOps, MixOps, SampleOps, TextOps}
 
 /** Eighteenth batch: round-6 curation additions — cross-corpus dedup (the
@@ -11,33 +13,25 @@ import graft.llm.{DomainOps, MixOps, SampleOps, TextOps}
   * corpus), C4- and Gopher-style heuristic quality filters (Raffel et al.
   * 2020 §2.2; Rae et al. 2021 Table A1 — public cleaning rules), and the
   * deterministic training-order shard (reproducible corpus permutation). */
-object SparkEntryV18 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV18 extends EntryPart {
 
   // planted augmentations exercising every signal branch on the synthetic
   // word-soup corpus (which natively has no punctuation or line structure)
   private val PlantLorem =
     "\nLorem ipsum dolor sit amet. Second sentence here. Third sentence here."
-  private val PlantGood =
-    "\nThis line ends well. Another full sentence! A third one?\nAnd a quoted line.\""
   private val PlantBrace =
     "\nvar f = function() { return 1; }. Yes. Done."
-  private val PlantStops = " with the of and that be to have"
   private val PlantBullets =
     "\n- bullet one…\n- bullet two...\n* bullet three"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // incoming = fresh docs (id ≥ 400) ∪ relabeled copies of ref docs < 20;
     // reference = docs < 400. threshold 1.0 ⇒ kept ⇔ no ref doc has the
     // SAME 5-shingle set (LSH candidates are complete for identical sets —
     // identical signatures collide in every band; verification removes all
     // hash-collision false positives)
     "dedup_against_corpus" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = docs.filter(col("doc_id") < 400)
       val incoming = docs.filter(col("doc_id") >= 400).unionByName(
         docs.filter(col("doc_id") < 20)
@@ -47,7 +41,7 @@ object SparkEntryV18 {
         .select(col("doc_id"))
     }),
     "quality_c4" -> ((s, dir) => {
-      val aug = t(s, dir, "documents").withColumn("text_aug",
+      val aug = table(s, dir, "documents").withColumn("text_aug",
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(PlantLorem)))
           .when(col("doc_id") % 5 === 0, concat(col("text"), lit(PlantGood)))
           .when(col("doc_id") % 11 === 0, concat(col("text"), lit(PlantBrace)))
@@ -59,7 +53,7 @@ object SparkEntryV18 {
           col("c4_keep"))
     }),
     "quality_gopher" -> ((s, dir) => {
-      val aug = t(s, dir, "documents").withColumn("text_aug",
+      val aug = table(s, dir, "documents").withColumn("text_aug",
         when(col("doc_id") % 4 === 0,
           concat(col("text"), lit(" "), col("text"), lit(" "), col("text"), lit(PlantStops)))
           .when(col("doc_id") % 9 === 0, concat(col("text"), lit(PlantBullets)))
@@ -74,17 +68,17 @@ object SparkEntryV18 {
           col("stopword_hits"), col("gopher_keep"))
     }),
     "shard_deterministic" -> ((s, dir) =>
-      MixOps.deterministicShard(t(s, dir, "documents"), "doc_id",
+      MixOps.deterministicShard(table(s, dir, "documents"), "doc_id",
           nShards = 8, seed = 42)
         .select(col("doc_id"), col("shard_id"), col("shard_pos"))),
     "text_hash_embed" -> ((s, dir) =>
-      TextOps.hashEmbed(t(s, dir, "documents").select(col("doc_id"), col("text")),
+      TextOps.hashEmbed(table(s, dir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text", dim = 16, seed = 7)
         .select(col("doc_id"), posexplode(col("embedding")))
         .select(col("doc_id"), col("pos"), round(col("col"), 6).as("v"))),
     "url_canonicalize" -> ((s, dir) =>
       DomainOps.canonicalizeUrl(
-          t(s, dir, "documents").withColumn("url", urlOf(col("doc_id"), col("source"))),
+          table(s, dir, "documents").withColumn("url", urlOf(col("doc_id"), col("source"))),
           "url")
         .select(col("doc_id"), col("url_canonical"))),
     // the disk round trip of the same scenario: index written once per
@@ -92,7 +86,7 @@ object SparkEntryV18 {
     // layout — same oracle as dedup_against_corpus, so a serialization bug
     // anywhere in the banded/shingle/meta layout is a hash mismatch
     "dedup_against_index" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val ref = docs.filter(col("doc_id") < 400)
       val incoming = docs.filter(col("doc_id") >= 400).unionByName(
         docs.filter(col("doc_id") < 20)
@@ -104,11 +98,11 @@ object SparkEntryV18 {
         .select(col("doc_id"))
     }),
     "sample_temperature" -> ((s, dir) =>
-      SampleOps.temperatureSample(t(s, dir, "documents"), "doc_id", "source",
+      SampleOps.temperatureSample(table(s, dir, "documents"), "doc_id", "source",
           targetTotal = 200, tau = 2.0, seed = 5)
         .select(col("doc_id"), col("source"))),
     "lm_bigram_score" -> ((s, dir) =>
-      TextOps.bigramPerplexity(t(s, dir, "documents"), "doc_id", "text",
+      TextOps.bigramPerplexity(table(s, dir, "documents"), "doc_id", "text",
           vocabSize = 256, bigramVocabSize = 512, alpha = 0.5, lambda = 0.75)
         .select(col("doc_id"), col("n_tokens"), col("sum_logp"))),
     // corpus = docs with id % 3 != 0, benchmark = docs with id % 50 == 0:
@@ -116,7 +110,7 @@ object SparkEntryV18 {
     // (ratio 1.0), the others only via natural duplicate grams — both
     // report branches exercised
     "contamination_report" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       TextOps.contaminationReport(
           docs.filter(col("doc_id") % 3 =!= 0),
           docs.filter(col("doc_id") % 50 === 0)
@@ -415,7 +409,7 @@ object SparkEntryV18 {
        |WHERE $bucket < thresh""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "dedup_against_index" -> DedupAgainstSql,
     "sample_temperature" -> TemperatureSampleSql,
     "lm_bigram_score" -> BigramScoreSql,

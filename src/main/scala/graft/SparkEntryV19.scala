@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.llm.{ClassifierOps, TextOps}
 
 /** Nineteenth batch: the hashed Naive-Bayes quality classifier (the
@@ -11,22 +13,15 @@ import graft.llm.{ClassifierOps, TextOps}
   * decontamination (max n-gram-set Jaccard vs the benchmark set), and
   * HTML/markup stripping (the extraction pass that precedes every
   * text-level curation op). */
-object SparkEntryV19 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV19 extends EntryPart {
 
   // ---- classifier fixtures: planted class-marker tokens on the word-soup
   // corpus (label = doc_id parity; train on doc_id < 500, score everything)
   private val PlantPos = " excellentmarker insightful prose"
   private val PlantNeg = " spamflag clickbait junk"
-  private[graft] val NbBuckets = 64
-  private[graft] val NbSeed = 9L
 
   private[graft] def nbAug(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
+    table(s, dir, "documents").select(col("doc_id"),
       when(col("doc_id") % 2 === 0, concat(col("text"), lit(PlantPos)))
         .otherwise(concat(col("text"), lit(PlantNeg))).as("text_aug"),
       (col("doc_id") % 2 === 0).as("label"))
@@ -35,7 +30,7 @@ object SparkEntryV19 {
   // the %40 docs (jaccard 1.0) + first-half truncations of the %30 docs
   // (partial overlap) — both report branches exercised at n = 5
   private def jcBench(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val toks = split(trim(col("text")), "[ \\t\\n\\r\\f]+")
     // offsets must keep the two bench slices DISJOINT at every scale
     // (doc_id+5000 vs doc_id+9000 collided at sf0.1's 5000 docs: gid 9000
@@ -61,7 +56,7 @@ object SparkEntryV19 {
         concat(text, lit(" &lt;tag&gt; &quot;q&quot; &#39;s&#39; a&nbsp;b")))
       .otherwise(text)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "classifier_nb_train" -> ((s, dir) =>
       ClassifierOps.nbTrain(nbAug(s, dir).filter(col("doc_id") < 500),
           "text_aug", "label", numBuckets = NbBuckets, alpha = 0.5, seed = NbSeed)
@@ -88,29 +83,19 @@ object SparkEntryV19 {
     }),
     "decontaminate_jaccard" -> ((s, dir) =>
       TextOps.jaccardContamination(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
+          table(s, dir, "documents").select(col("doc_id"), col("text")),
           jcBench(s, dir), "doc_id", "bench_id", "text", n = 5, threshold = 0.5)
         .select(col("doc_id"), col("n_grams"),
           round(col("max_jaccard"), 6).as("max_jaccard"), col("jaccard_keep"))),
     "html_strip" -> ((s, dir) =>
       TextOps.htmlStrip(
-          t(s, dir, "documents")
+          table(s, dir, "documents")
             .withColumn("text_html", htmlAug(col("doc_id"), col("text"))),
           "text_html", out = "text_plain")
         .select(col("doc_id"), col("text_plain"))),
   )
 
   // ------------------------------------------------------------- oracles
-
-  /** Tokens → seeded poly-hash mod P → bucket CTEs shared by both
-    * classifier oracles; `from` supplies (doc_id, t, y). */
-  private def nbBucketSql(from: String): String =
-    s"""SELECT doc_id, y, list_reduce(list_prepend(CAST($NbSeed AS BIGINT),
-       |    list_transform(range(1, len(tok) + 1), i -> CAST(ord(tok[i:i]) AS BIGINT))),
-       |    (a, c) -> (a * 131 + c) % 2147483647) % $NbBuckets AS bucket
-       |  FROM (SELECT doc_id, y, unnest(list_filter(
-       |      string_split_regex(lower(trim(t)), '[ \\t\\n\\r\\f]+'), x -> len(x) > 0)) AS tok
-       |    FROM $from)""".stripMargin
 
   private val NbAugSql =
     s"""SELECT doc_id,
@@ -234,7 +219,7 @@ object SparkEntryV19 {
       |$HtmlStripCtes
       |SELECT doc_id, t AS text_plain FROM stripped""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "classifier_nb_train" -> NbTrainSql,
     "classifier_nb_score" -> NbScoreSql,
     "classifier_nb_broadcast" -> NbScoreSql,

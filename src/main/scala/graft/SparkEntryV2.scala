@@ -5,35 +5,17 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.kernels.Conformal
 import graft.llm.TextOps
-import graft.ops.{Hierarchy, Series, TsChangepointOp, TsCvOp, TsForecastOp, TsStatsOp}
+import graft.ops.{Hierarchy, TsCvOp, TsForecastOp, TsStatsOp}
 
 /** Second batch of driver queries: stats/quality, CV/backtest, hierarchy,
   * conformal, changepoints, language-ID, and rows-only model-coverage runs.
   * Same exactness rules as SparkEntry (decimal-exact sums, round 6 / CI 4).
   */
-object SparkEntryV2 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
+object SparkEntryV2 extends EntryPart {
 
   /** SeasonalNaive backtest with the given fold metric, rounded for the
     * cross-engine hash compare (one row builder per supported metric). */
@@ -133,15 +115,7 @@ object SparkEntryV2 {
        |FROM sh a JOIN sh b ON a.ss = b.ss AND a.doc_id < b.doc_id
        |WHERE len(a.ss) > 0""".stripMargin
 
-  /** Same rounding contract as SparkEntry.roundFc: yhat 6 decimals, CI 4. */
-  private def roundFc(df: DataFrame): DataFrame =
-    df.select(col("g"), col("forecast_step"), col("ds"),
-      round(col("yhat"), 6).as("yhat"),
-      round(col("yhat_lower"), 4).as("yhat_lower"),
-      round(col("yhat_upper"), 4).as("yhat_upper"),
-      col("model_name"))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // ------------------------------------------------ statistics
     "ts_stats_by" -> ((s, dir) => {
       TsStatsOp.statsBy(dailyEvents(s, dir), "g", "ds", "y", "1d")
@@ -227,7 +201,7 @@ object SparkEntryV2 {
     }),
     // ------------------------------------------------ hierarchy
     "ts_aggregate_hierarchy" -> ((s, dir) => {
-      val h = t(s, dir, "events").select(
+      val h = table(s, dir, "events").select(
         col("event_type").as("id1"),
         (col("user_id") % 10).cast(StringType).as("id2"),
         col("ts").cast(DateType).as("ds"),
@@ -237,7 +211,7 @@ object SparkEntryV2 {
     }),
     "ts_combine_split_keys" -> ((s, dir) => {
       val combined = Hierarchy.combineKeys(
-        t(s, dir, "events").select(col("event_type").as("id1"),
+        table(s, dir, "events").select(col("event_type").as("id1"),
           (col("user_id") % 10).cast(StringType).as("id2"),
           col("ts").cast(DateType).as("ds"), round(col("value"), 6).as("v")),
         "ds", "v", Seq("id1", "id2"))
@@ -256,7 +230,7 @@ object SparkEntryV2 {
     }),
     // ------------------------------------------------ text / language
     "lang_id" -> ((s, dir) =>
-      TextOps.languageId(t(s, dir, "documents"), "text")
+      TextOps.languageId(table(s, dir, "documents"), "text")
         .select(col("doc_id"), col("lang_pred"))),
     // ------------------------------------------------ near-dup detection via
     // planted exact duplicates: a relabeled copy of the first 20 docs joins
@@ -267,7 +241,7 @@ object SparkEntryV2 {
     // shingle-set-equality oracle in both directions, even though the hash
     // values themselves have no SQL equivalent.
     "dedup_minhash_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.unionByName(docs.filter(col("doc_id") < 20)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       TextOps.jaccardVerify(TextOps.minHashLshPairs(aug, "doc_id", "text"),
@@ -275,7 +249,7 @@ object SparkEntryV2 {
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
     }),
     "dedup_simhash" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.unionByName(docs.filter(col("doc_id") < 20)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       val sig = TextOps.simHash(aug, "text")
@@ -291,7 +265,7 @@ object SparkEntryV2 {
       // bucket with cosine exactly 1.0; the real synthetic embeddings are
       // near-orthogonal (all 500 distinct), so the 0.9999 floor keeps only
       // the planted pairs
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      val emb = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val aug = emb.unionByName(emb.filter(col("vec_id") < 25)
         .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding")))
       graft.llm.SimilarityOps.lshNearPairs(aug, "vec_id", "embedding",
@@ -317,7 +291,7 @@ object SparkEntryV2 {
     // moved to SparkEntryV10: planted-step oracles)
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_stats_by" -> (SeriesCte +
       """, base AS (
         |  SELECT g, count(*) AS length, CAST(0 AS BIGINT) AS n_nulls,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.BpeOps
 
 /** Twentieth batch: BPE subword tokenizer training + encoding (Sennrich et
@@ -10,20 +11,15 @@ import graft.llm.BpeOps
   * ENTIRE train loop in SQL: the word-frequency table, k argmax-merge
   * stages (greedy merge = literal string replace on the sentinel-wrapped
   * symbol state — see BpeOps), and the final per-document encode. */
-object SparkEntryV20 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV20 extends EntryPart {
 
   private val K = 6 // merges trained/replayed by the driver rows
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "bpe_train" -> ((s, dir) =>
-      BpeOps.mergesToDf(s, BpeOps.bpeTrain(t(s, dir, "documents"), "text", K))),
+      BpeOps.mergesToDf(s, BpeOps.bpeTrain(table(s, dir, "documents"), "text", K))),
     "bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       BpeOps.bpeEncode(docs, "text", BpeOps.bpeTrain(docs, "text", K))
         .select(col("doc_id"), col("bpe_tokens_count"),
           array_join(col("bpe_tokens"), " ").as("bpe_joined"))
@@ -101,7 +97,7 @@ object SparkEntryV20 {
        |FROM enc""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "bpe_train" -> bpeTrainSql,
     "bpe_encode" -> bpeEncodeSql,
   )

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.llm.{DsirOps, MixOps, RetrievalOps, SampleOps}
 
 /** Twenty-first batch: target-aware data selection and lexical retrieval —
@@ -12,16 +14,10 @@ import graft.llm.{DsirOps, MixOps, RetrievalOps, SampleOps}
   * the full computation in SQL: the rolling-hash n-gram featurization, the
   * smoothed log-ratio model, the Gumbel top-k draw, the BM25 formula, and
   * the waterfilling closed form. */
-object SparkEntryV21 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV21 extends EntryPart {
 
   private val P = 2147483647L
   private val NB = 4096          // DSIR feature buckets
-  private val DsirSeed = 3L
   private val NoiseSeed = 11L
   private val Alpha = 0.5
   private val SelK = 100
@@ -30,25 +26,25 @@ object SparkEntryV21 {
   private val UniEpochs = 0.5
   private val UniSeed = 9L
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // target = every 10th doc (a "curated exemplar set" drawn from the same
     // distribution); raw = the full corpus
     "dsir_weights" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       DsirOps.dsirWeights(docs, docs.filter(col("doc_id") % 10 === 0),
           "doc_id", "text", numBuckets = NB, seed = DsirSeed, alpha = Alpha)
         .select(col("doc_id"), col("n_feats"),
           (round(col("logw"), 6) + lit(0.0)).as("logw"))
     }),
     "dsir_select" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       DsirOps.dsirSelect(docs, docs.filter(col("doc_id") % 10 === 0),
         "doc_id", "text", k = SelK, numBuckets = NB, seed = DsirSeed,
         alpha = Alpha, noiseSeed = NoiseSeed)
     }),
     // queries = every 100th doc retrieved against the full corpus
     "bm25_topk" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       RetrievalOps.bm25TopK(docs, "doc_id", "text",
         docs.filter(col("doc_id") % 100 === 0)
           .select(col("doc_id").as("qid"), col("text")),
@@ -58,7 +54,7 @@ object SparkEntryV21 {
     // (term-bucket partitioned), queried back with static partition
     // pruning — shares bm25_topk's oracle byte-for-byte
     "bm25_index_topk" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       val idxDir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
       RetrievalOps.bm25BuildIndex(docs, "doc_id", "text", idxDir, nTermBuckets = 64)
       RetrievalOps.bm25QueryIndex(s, idxDir,
@@ -70,7 +66,7 @@ object SparkEntryV21 {
     // shares dsir_weights' oracle byte-for-byte, so a serialization bug in
     // the ratios/unseen/meta layout is a hash mismatch
     "dsir_model_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       val model = DsirOps.fitModel(docs, docs.filter(col("doc_id") % 10 === 0),
         "text", numBuckets = NB, seed = DsirSeed, alpha = Alpha)
       val mdlDir = java.nio.file.Files.createTempDirectory("graft_dsir_mdl").toString
@@ -83,7 +79,7 @@ object SparkEntryV21 {
     // in-row sum) on the same corpus — shares dsir_weights' oracle; the
     // in-row left-to-right sum lands on the same 6-decimal grid
     "dsir_broadcast_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       val model = DsirOps.fitModel(docs, docs.filter(col("doc_id") % 10 === 0),
         "text", numBuckets = NB, seed = DsirSeed, alpha = Alpha)
       DsirOps.scoreWithBroadcastModel(docs, "text", model)
@@ -91,10 +87,10 @@ object SparkEntryV21 {
           (round(col("logw"), 6) + lit(0.0)).as("logw"))
     }),
     "unimax_allocations" -> ((s, dir) =>
-      MixOps.unimaxAllocations(t(s, dir, "documents"), "lang", "n_chars",
+      MixOps.unimaxAllocations(table(s, dir, "documents"), "lang", "n_chars",
         UniBudget, UniEpochs)),
     "unimax_select" -> ((s, dir) =>
-      MixOps.unimaxSelect(t(s, dir, "documents"), "doc_id", "lang", "n_chars",
+      MixOps.unimaxSelect(table(s, dir, "documents"), "doc_id", "lang", "n_chars",
           UniBudget, UniEpochs, UniSeed)
         .select(col("doc_id"), col("lang"), col("n_chars"))),
   )
@@ -222,7 +218,7 @@ object SparkEntryV21 {
        |SELECT doc_id, lang, n_chars FROM cum WHERE c <= budget""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "dsir_weights" -> dsirWeightsSql,
     "dsir_model_score" -> dsirWeightsSql,
     "dsir_broadcast_score" -> dsirWeightsSql,

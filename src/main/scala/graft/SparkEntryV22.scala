@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.{QuantileOps, SampleOps}
 
 /** Twenty-second batch: exact score-quantile selection — "keep the top X%
@@ -10,23 +11,18 @@ import graft.llm.{QuantileOps, SampleOps}
   * quality gate. The Spark plan is the two-phase sortable-bits histogram
   * (QuantileOps); the oracle is the corpus-wide window rank the plan
   * deliberately avoids. */
-object SparkEntryV22 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV22 extends EntryPart {
 
   private val P = 2147483647L
   private val ScoreSeed = 5L
   private val Frac = 0.3
   private val TopK = 150L
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // continuous scores (a seeded-hash pseudo-signal in [-0.5, 0.5), all
     // distinct): the general-double path, boundary inside one bit-bucket
     "top_fraction_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").withColumn("score",
+      val docs = table(s, dir, "documents").withColumn("score",
         SampleOps.hashBucket(col("doc_id"), ScoreSeed).cast("double") / lit(P.toDouble)
           - lit(0.5))
       QuantileOps.filterTopFraction(docs, "doc_id", "score", Frac)
@@ -35,17 +31,17 @@ object SparkEntryV22 {
     // heavily tied integer scores: the cutoff lands inside a tie mass and
     // resolves by the id tiebreak
     "top_k_chars" -> ((s, dir) =>
-      QuantileOps.selectTopK(t(s, dir, "documents"), "doc_id", "n_chars", TopK)
+      QuantileOps.selectTopK(table(s, dir, "documents"), "doc_id", "n_chars", TopK)
         .select(col("doc_id"), col("n_chars"))),
     // lowest-k path (keep the WORST scores — e.g. a contamination triage)
     "bottom_k_chars" -> ((s, dir) =>
-      QuantileOps.selectTopK(t(s, dir, "documents"), "doc_id", "n_chars", TopK,
+      QuantileOps.selectTopK(table(s, dir, "documents"), "doc_id", "n_chars", TopK,
           highest = false)
         .select(col("doc_id"), col("n_chars"))),
     // exact global rank without a single-partition window (bounded
     // per-bucket sorts + broadcast offsets)
     "exact_rank_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").withColumn("score",
+      val docs = table(s, dir, "documents").withColumn("score",
         SampleOps.hashBucket(col("doc_id"), ScoreSeed).cast("double") / lit(P.toDouble)
           - lit(0.5))
       QuantileOps.withExactRank(docs, "doc_id", "score")
@@ -53,13 +49,13 @@ object SparkEntryV22 {
     }),
     // CCNet-style tercile split over a tied integer signal
     "quantile_buckets_chars" -> ((s, dir) =>
-      QuantileOps.quantileBuckets(t(s, dir, "documents"), "doc_id", "n_chars", 3)
+      QuantileOps.quantileBuckets(table(s, dir, "documents"), "doc_id", "n_chars", 3)
         .select(col("doc_id"), col("n_chars"), col("bucket"))),
   )
 
   def oracleSql: Map[String, String] = {
     val (ctes, bucket) = SampleOps.hashBucketSqlCtes("documents", "doc_id", ScoreSeed)
-    Map(
+    rows(
       "top_fraction_score" ->
         s"""WITH $ctes,
            |sc AS (SELECT doc_id,

@@ -3,34 +3,30 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.ReportOps
 
 /** Twenty-third batch: corpus accounting — the C4-style token blocklist
   * filter and the per-stratum data-card report. */
-object SparkEntryV23 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/$name.parquet")
-  }
+object SparkEntryV23 extends EntryPart {
 
   private val Blocked = Seq("slow", "batch")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "blocklist_flag" -> ((s, dir) => {
       import s.implicits._
-      ReportOps.blocklistFilter(t(s, dir, "documents"), "doc_id", "text",
+      ReportOps.blocklistFilter(table(s, dir, "documents"), "doc_id", "text",
           Blocked.toDF("term"), mode = "flag")
         .select(col("doc_id"), col("has_blocked"))
     }),
     "blocklist_filter" -> ((s, dir) => {
       import s.implicits._
-      ReportOps.blocklistFilter(t(s, dir, "documents"), "doc_id", "text",
+      ReportOps.blocklistFilter(table(s, dir, "documents"), "doc_id", "text",
           Blocked.toDF("term"), mode = "block")
         .select(col("doc_id"))
     }),
     "corpus_report" -> ((s, dir) =>
-      ReportOps.corpusReport(t(s, dir, "documents"), "text", "source")),
+      ReportOps.corpusReport(table(s, dir, "documents"), "text", "source")),
   )
 
   private val blockedList = Blocked.map(t => s"'$t'").mkString(", ")
@@ -41,7 +37,7 @@ object SparkEntryV23 {
        |      '[ \\t\\n\\r\\f]+'), x -> len(x) > 0)) AS tok FROM documents)
        |  WHERE tok IN ($blockedList))""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "blocklist_flag" ->
       s"""WITH $HitIdsSql
          |SELECT d.doc_id, (h.doc_id IS NOT NULL) AS has_blocked

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.agg.Aggregators
 import graft.llm.{BpeOps, ClassifierOps, TextOps}
 
@@ -31,31 +33,14 @@ import graft.llm.{BpeOps, ClassifierOps, TextOps}
   *    via the registered SQL UDAFs (the ts_stats_agg_sql route), sharing
   *    the corresponding `_by` oracles.
   */
-object SparkEntryV24 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  /** Daily series with TIMESTAMP ds (the aggregate-API input shape). */
-  private def dailyEventsTs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), date_trunc("day", col("ts")).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
+object SparkEntryV24 extends EntryPart {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "bigram_broadcast_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       val model = TextOps.trainBigramLm(docs, "text",
         vocabSize = 256, bigramVocabSize = 512, alpha = 0.5, lambda = 0.75)
       val mdlDir = tmp("graft_bigram_lm")
@@ -64,7 +49,7 @@ object SparkEntryV24 {
         .select(col("doc_id"), col("n_tokens"), col("sum_logp"))
     }),
     "lm_model_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       val mdlDir = tmp("graft_unigram_lm")
       TextOps.writeUnigramLm(
         TextOps.trainUnigramLm(docs, "text", vocabSize = 256, alpha = 0.5), mdlDir)
@@ -76,9 +61,8 @@ object SparkEntryV24 {
       val mdlDir = tmp("graft_nb_mdl")
       ClassifierOps.writeNbModel(
         ClassifierOps.nbTrain(aug.filter(col("doc_id") < 500), "text_aug", "label",
-          numBuckets = SparkEntryV19.NbBuckets, alpha = 0.5,
-          seed = SparkEntryV19.NbSeed),
-        SparkEntryV19.NbBuckets, SparkEntryV19.NbSeed, mdlDir)
+          numBuckets = NbBuckets, alpha = 0.5, seed = NbSeed),
+        NbBuckets, NbSeed, mdlDir)
       val loaded = ClassifierOps.loadNbModel(s, mdlDir)
       ClassifierOps.nbScore(aug, "doc_id", "text_aug", loaded.model,
           loaded.numBuckets, loaded.seed)
@@ -86,11 +70,11 @@ object SparkEntryV24 {
           round(col("nb_score"), 6).as("nb_score"), col("nb_pred"))
     }),
     "bpe_train_fast" -> ((s, dir) =>
-      BpeOps.mergesToDf(s, BpeOps.bpeTrainLocal(t(s, dir, "documents"), "text", 6))),
+      BpeOps.mergesToDf(s, BpeOps.bpeTrainLocal(table(s, dir, "documents"), "text", 6))),
     // the production path end to end: driver-side training + the rank-map
     // native encoder, against the SQL replay of the stacked-replace form
     "bpe_encode_fast" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       BpeOps.bpeEncodeFast(docs, "text", BpeOps.bpeTrainLocal(docs, "text", 6))
         .select(col("doc_id"), col("bpe_tokens_count"),
           array_join(col("bpe_tokens"), " ").as("bpe_joined"))
@@ -123,7 +107,7 @@ object SparkEntryV24 {
     }),
     "ts_changepoints_agg_sql" -> ((s, dir) => {
       Aggregators.registerAll(s)
-      val step = SparkEntryV10.stepSeries(s, dir)
+      val step = stepSeries(s, dir)
       step.select(col("g"), col("ds").cast(TimestampType).as("ds"), col("y"))
         .createOrReplaceTempView("_v24_step")
       val flags = s.sql(
@@ -139,7 +123,7 @@ object SparkEntryV24 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "bigram_broadcast_score" -> SparkEntryV18.oracleSql("lm_bigram_score"),
     "lm_model_score" -> SparkEntryV17.oracleSql("lm_unigram_score"),
     "nb_model_score" -> SparkEntryV19.oracleSql("classifier_nb_score"),

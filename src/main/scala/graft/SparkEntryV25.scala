@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.kernels.Features
 
 /** Twenty-fifth batch: the last reference scalar/catalog SQL names (round-8
@@ -17,14 +18,11 @@ import graft.kernels.Features
   * one replayable double (trend strength) recomputed in the oracle from its
   * documented formula — the SparkEntryV9 discipline.
   */
-object SparkEntryV25 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV25 extends EntryPart {
 
   /** Five stable group keys (order priorities exist at every SF). */
   private def withGroups(s: SparkSession, dir: String, view: String): Unit =
-    t(s, dir, "orders").select(col("o_orderpriority").as("g"))
+    table(s, dir, "orders").select(col("o_orderpriority").as("g"))
       .distinct().createOrReplaceTempView(view)
 
   private def registered(s: SparkSession): SparkSession = {
@@ -39,7 +37,7 @@ object SparkEntryV25 {
   private val Growing70 =
     "transform(sequence(1, 70), i -> (1.0 + i / 20.0) * sin(i * (2 * pi() / 7)))"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // primary period + trend strength through the 1-arg scalar; theory gives
     // period 7 on a pure period-7 sinusoid, trend replayed from the formula
     "sql_scalar_analyze_seasonality" -> ((s, dir) => {
@@ -114,7 +112,7 @@ object SparkEntryV25 {
   private val GroupsCte =
     "WITH d AS (SELECT DISTINCT o_orderpriority AS g FROM orders)"
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     // trend_strength replays the documented R²-of-linear-fit formula over
     // the same planted values (SeasonalityExt.analyze; SparkEntryV9 pattern)
     "sql_scalar_analyze_seasonality" -> (GroupsCte +

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.llm.{ClassifierOps, DsirOps, TextOps}
 import graft.streaming.IngestPipeline
 
@@ -34,26 +36,17 @@ import graft.streaming.IngestPipeline
   * scores they would cut on are emitted as output columns, so every trained
   * stage's values are still hash-gated through the composition.
   */
-object SparkEntryV26 {
+object SparkEntryV26 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-
-  private val PlantGood =
-    "\nThis line ends well. Another full sentence! A third one?\nAnd a quoted line.\""
-  private val PlantStops = " with the of and that be to have"
   private val HtmlPre = "<div class=\"a\">"
   private val HtmlPost =
     "</div>\n<script type=\"text/javascript\">var x = 1 < 2;</script>"
 
-  private val NbBuckets = 64
-  private val NbSeed = 9L
   private val DsirBuckets = 4096
-  private val DsirSeed = 3L
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "curate_pipeline_e2e" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"),
+      val base = table(s, dir, "documents").select(col("doc_id"),
         when(col("doc_id") % 2 === 0,
           concat(col("text"), lit(PlantGood), lit(PlantStops)))
           .otherwise(col("text")).as("t0"))
@@ -93,15 +86,6 @@ object SparkEntryV26 {
   private def sqlLit(s: String): String =
     "'" + s.replace("\n", "' || chr(10) || '") + "'"
 
-  /** NB feature buckets of a `(doc_id, y, t)` relation (the V19 replay). */
-  private def nbBucketSql(from: String): String =
-    s"""SELECT doc_id, y, list_reduce(list_prepend(CAST($NbSeed AS BIGINT),
-       |    list_transform(range(1, len(tok) + 1), i -> CAST(ord(tok[i:i]) AS BIGINT))),
-       |    (a, c) -> (a * 131 + c) % 2147483647) % $NbBuckets AS bucket
-       |  FROM (SELECT doc_id, y, unnest(list_filter(
-       |      string_split_regex(lower(trim(t)), '[ \\t\\n\\r\\f]+'), x -> len(x) > 0)) AS tok
-       |    FROM $from)""".stripMargin
-
   /** DSIR unigram+bigram hashed features of a `(doc_id, text)` relation
     * (the V21 replay). */
   private def featCte(from: String, p: String): String =
@@ -116,7 +100,7 @@ object SparkEntryV26 {
        |    (a, c) -> (a * 131 + c) % 2147483647) % $DsirBuckets AS ${p}bkt
        |  FROM ${p}fs WHERE ${p}tok IS NOT NULL)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "curate_pipeline_e2e" -> {
       val good = sqlLit(PlantGood + PlantStops)
       val pre = sqlLit(HtmlPre)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.BloomOps
 
 /** Twenty-seventh batch (round 9): the Bloom-filter cross-corpus
@@ -27,10 +28,7 @@ import graft.llm.BloomOps
   * rolling-hash fold DuckDB replays via `list_reduce`); production gates
   * fingerprint with `xxhash64` — the position machinery under test is
   * fingerprint-agnostic. */
-object SparkEntryV27 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV27 extends EntryPart {
 
   private val MBits = 1L << 20
   private val K = 4
@@ -39,13 +37,13 @@ object SparkEntryV27 {
 
   /** originals ∪ copies of doc_id < 25, with the replayable fingerprint. */
   private def incomingWithFp(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     docs.unionByName(docs.filter(col("doc_id") < 25)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       .withColumn("fp", BloomOps.replayableFingerprint(col("text"), FpSeed))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "dedup_bloom_gate" -> ((s, dir) => {
       val inc = incomingWithFp(s, dir)
       val model = BloomOps.buildBloom(inc.filter(col("doc_id") < 1000000L),
@@ -81,7 +79,7 @@ object SparkEntryV27 {
        |GROUP BY 1""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "dedup_bloom_gate" -> gateOracle,
     // the disk round trip is byte-identical scoring — one oracle
     "bloom_model_score" -> gateOracle

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.ReportOps
 
 /** Twenty-eighth batch (round 9): corpus snapshot diffing — the
@@ -17,15 +18,12 @@ import graft.llm.ReportOps
   * four-status reconciliation rollup. The oracle replays the construction
   * and classifies by direct text comparison — equivalent to the Spark
   * side's (nullness, xxhash64) compare up to 64-bit collisions. */
-object SparkEntryV28 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV28 extends EntryPart {
 
   private val Marker = " CHANGED-MARKER"
 
   private def oldNew(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val newC = docs.filter(col("doc_id") % 10 =!= 7)
       .select(col("doc_id"),
         when(col("doc_id") % 10 === 3, concat(col("text"), lit(Marker)))
@@ -35,7 +33,7 @@ object SparkEntryV28 {
     (docs, newC)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "corpus_diff" -> ((s, dir) => {
       val (o, n) = oldNew(s, dir)
       ReportOps.corpusDiff(o, n, "doc_id", "text")
@@ -62,7 +60,7 @@ object SparkEntryV28 {
        |         ELSE 'changed' END AS status
        |  FROM oldc o FULL OUTER JOIN newc n ON o.doc_id = n.doc_id)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "corpus_diff" ->
       s"""$DiffCtes
          |SELECT doc_id, status FROM j WHERE status <> 'unchanged'""".stripMargin,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.PqOps
 
 /** Twenty-ninth batch (round 9): product-quantization ANN (Jégou et al.
@@ -25,10 +26,7 @@ import graft.llm.PqOps
   *  - `ann_pq_index_topk` — the persisted steady state (encode once,
   *    write codes + versioned codebooks, load, score) sharing the same
   *    oracle. */
-object SparkEntryV29 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV29 extends EntryPart {
 
   private val M = 4
   private val SubDim = 16
@@ -36,12 +34,12 @@ object SparkEntryV29 {
   private val K = 10
 
   private def corpus(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
 
   private def model(s: SparkSession, dir: String): PqOps.PqModel =
     PqOps.pqTrain(corpus(s, dir), "vec_id", "embedding", M, NCodes, iters = 0)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "ann_pq_codes" -> ((s, dir) => {
       PqOps.pqEncode(corpus(s, dir), model(s, dir), "embedding")
         .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
@@ -113,7 +111,7 @@ object SparkEntryV29 {
        |  FROM adc)
        |SELECT qid, vid, score FROM r WHERE rk <= $K""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ann_pq_codes" ->
       s"""$EncodeCtes
          |SELECT vid AS vec_id, sub, code FROM enc""".stripMargin,

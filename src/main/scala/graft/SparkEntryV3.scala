@@ -1,68 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
 import graft.ops.{TsDecompositionOp, TsFeaturesOp, TsForecastOp, TsPrep}
 
 /** Third batch: decomposition/detrend/periods/peaks, features, the remaining
   * model zoo (ARIMA/AutoARIMA, MSTL/MFLES/TBATS, Laplace, intermittent
   * variants), and fill-forward. */
-object SparkEntryV3 {
+object SparkEntryV3 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private def purchaseSeries(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").filter(col("event_type") === "purchase")
-      .groupBy(col("user_id").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-  private val PurchaseCte =
-    s"WITH p AS (SELECT user_id AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)"
-
-  /** Same rounding contract as SparkEntry.roundFc: yhat 6 decimals, CI 4. */
-  private def roundFc(df: DataFrame): DataFrame =
-    df.select(col("g"), col("forecast_step"), col("ds"),
-      round(col("yhat"), 6).as("yhat"),
-      round(col("yhat_lower"), 4).as("yhat_lower"),
-      round(col("yhat_upper"), 4).as("yhat_upper"),
-      col("model_name"))
-
-  /** Planted pure sinusoid of period 8 (64 points per group, one per distinct
-    * order date): a correct period detector must report 8 — the oracle is the
-    * construction, not the implementation. 64 samples put frequency 1/8 on an
-    * exact DFT bin. */
-  private def plantedSeries(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w))
-      .filter(col("_pos") <= 64)
-      .select(col("g"), col("ds"),
-        (lit(10.0) + sin(col("_pos") * lit(2.0 * math.Pi / 8.0))).as("y"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // ------------------------------------------------ detrend (oracle: linear)
     "ts_detrend_linear_by" -> ((s, dir) =>
       TsDecompositionOp.detrendBy(dailyEvents(s, dir), "g", "ds", "y", "linear")
@@ -80,15 +30,15 @@ object SparkEntryV3 {
     // period detectors run on the planted period-8 sinusoid: expected output
     // is known from the construction (theory), so the oracle is honest
     "ts_detect_periods_fft_by" -> ((s, dir) =>
-      TsDecompositionOp.detectPeriodsBy(plantedSeries(s, dir), "g", "ds", "y", "fft",
+      TsDecompositionOp.detectPeriodsBy(sinusoid8(s, dir), "g", "ds", "y", "fft",
         minConfidence = Some(0.0))
         .select(col("g"), col("primary_period"), col("method")).distinct()),
     "ts_detect_periods_acf_by" -> ((s, dir) =>
-      TsDecompositionOp.detectPeriodsBy(plantedSeries(s, dir), "g", "ds", "y", "acf",
+      TsDecompositionOp.detectPeriodsBy(sinusoid8(s, dir), "g", "ds", "y", "acf",
         minConfidence = Some(0.0))
         .select(col("g"), col("primary_period"), col("method")).distinct()),
     "ts_detect_periods_autoperiod_by" -> ((s, dir) =>
-      TsDecompositionOp.detectPeriodsBy(plantedSeries(s, dir), "g", "ds", "y", "autoperiod",
+      TsDecompositionOp.detectPeriodsBy(sinusoid8(s, dir), "g", "ds", "y", "autoperiod",
         minConfidence = Some(0.0))
         .select(col("g"), col("primary_period"), col("method")).distinct()),
     // (ts_detect_peaks_by / ts_analyze_peak_timing_by moved to SparkEntryV9:
@@ -548,7 +498,7 @@ JOIN ro ON b.g = ro.g
 JOIN ro2 ON b.g = ro2.g
 JOIN st ON b.g = st.g"""
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_features_full_by" -> FeaturesFullOracleSql,
     // MSTL reconstruction invariant: the decomposition must sum back to y
     "ts_mstl_decomposition_by" -> (SeriesCte +

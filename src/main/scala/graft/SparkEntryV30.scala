@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
+
 /** Thirtieth batch (round 9): cross-document paragraph dedup (the Dolma
   * pipeline's paragraph-granularity exact dedup — keep the FIRST
   * occurrence of every duplicated paragraph, remove later occurrences
@@ -14,14 +16,11 @@ import org.apache.spark.sql.functions._
   * dedup too and the oracle replays them identically (it groups by the
   * paragraph TEXT — the Spark side groups by xxhash64 of it, identical up
   * to 64-bit collisions). */
-object SparkEntryV30 {
+object SparkEntryV30 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "dedup_paragraphs" -> ((s, dir) => {
-      val aug = t(s, dir, "documents").select(col("doc_id"),
+      val aug = table(s, dir, "documents").select(col("doc_id"),
         concat(col("text"), lit("\nshared paragraph "),
           (col("doc_id") % 7).cast("string")).as("text_aug"))
       graft.llm.TextOps.dedupParagraphs(aug, "doc_id", "text_aug")
@@ -33,7 +32,7 @@ object SparkEntryV30 {
     // Natural near-dup images (hash-close payloads) pair too; the oracle
     // replays the full grid/hash/banding/verify chain bit-for-bit.
     "mm_phash_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.unionByName(docs.filter(col("doc_id") < 15)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"),
           concat(lit("Z"), expr("substring(text, 2)")).as("text")))
@@ -43,7 +42,7 @@ object SparkEntryV30 {
     })
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "dedup_paragraphs" ->
       s"""WITH aug AS (
          |  SELECT doc_id,

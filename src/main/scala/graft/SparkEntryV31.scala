@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables.table
+
 /** Thirty-first batch (round 9): the frequent-items sketch path for
   * corpus-wide top-k tokens ([[graft.llm.TextOps.topTokensSketch]] /
   * [[graft.functions.SpaceSavingTopK]]).
@@ -15,21 +17,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SpaceSavingSpec, where hash-exactness is the wrong gate by
   * construction (sketch estimates are partition-layout dependent; the
   * error BOUND is the invariant). */
-object SparkEntryV31 {
+object SparkEntryV31 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "top_tokens_sketch" -> ((s, dir) =>
-      graft.llm.TextOps.topTokensSketch(t(s, dir, "documents"), "text",
+      graft.llm.TextOps.topTokensSketch(table(s, dir, "documents"), "text",
         k = 50, capacity = 4096)),
     "top_tokens_sketch_by" -> ((s, dir) =>
-      graft.llm.TextOps.topTokensSketchBy(t(s, dir, "documents"), "source",
+      graft.llm.TextOps.topTokensSketchBy(table(s, dir, "documents"), "source",
         "text", k = 10, capacity = 4096))
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "top_tokens_sketch" ->
       """WITH toks AS (
         |  SELECT unnest(list_filter(

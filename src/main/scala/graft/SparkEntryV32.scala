@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
+
 /** Thirty-second batch (round 9): the mergeable quantile-sketch path for
   * corpus score distributions ([[graft.llm.QuantileOps.scoreQuantilesSketch]]
   * / [[graft.functions.KllQuantileSketch]]).
@@ -18,18 +20,15 @@ import org.apache.spark.sql.functions._
   * (sketch estimates are partition-layout dependent; the error BOUND is
   * the invariant). The score is a deterministic arithmetic blend of
   * `n_chars` and `doc_id` so both engines compute bit-identical doubles. */
-object SparkEntryV32 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV32 extends EntryPart {
 
   private val Qs = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
 
   private def scored(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").withColumn("score",
+    table(s, dir, "documents").withColumn("score",
       col("n_chars") * lit(1.0) + pmod(col("doc_id"), lit(97)) * lit(0.001))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "score_quantiles_sketch" -> ((s, dir) =>
       graft.llm.QuantileOps.scoreQuantilesSketch(scored(s, dir), "score",
         Qs, capacity = 16384)),
@@ -76,7 +75,7 @@ object SparkEntryV32 {
       |FROM r, qs
       |WHERE rn = GREATEST(1, CAST(ceil(q * n) AS BIGINT))""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "score_quantiles_persisted" -> QuantilesSql,
     "score_percentile_from_sketch" ->
       """WITH s AS (

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.{SampleOps, SimilarityOps, TextOps}
 
 /** Thirty-third batch (round 9): the training-SET construction ops —
@@ -23,10 +24,7 @@ import graft.llm.{SampleOps, SimilarityOps, TextOps}
   *    (the semdedup asg CTE) feeding the temperature-rate pipeline (the
   *    sample_temperature CTEs) keyed on centroid_id instead of a
   *    metadata stratum. */
-object SparkEntryV33 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV33 extends EntryPart {
 
   private val NLists = 8
   private val SplitSeed = 23L
@@ -34,14 +32,14 @@ object SparkEntryV33 {
 
   /** The planted-triple corpus shared with dedup_clusters (V13). */
   private def tripled(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val aug = docs.filter(col("doc_id") < 15)
     docs
       .unionByName(aug.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       .unionByName(aug.select((col("doc_id") + lit(2000000L)).as("doc_id"), col("text")))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "split_leakage_safe" -> ((s, dir) => {
       val docs = tripled(s, dir)
       val pairs = TextOps.jaccardVerify(
@@ -52,7 +50,7 @@ object SparkEntryV33 {
         .select(col("doc_id"), col("split"))
     }),
     "mine_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
       val positives = queries.select(col("vec_id").as("qid"),
         (col("vec_id") + lit(1L)).as("vid"))
@@ -61,7 +59,7 @@ object SparkEntryV33 {
         .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
     }),
     "cluster_balanced_sample" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       val cents = SimilarityOps.ivfTrain(emb, "vec_id", "embedding",
         NLists, iters = 0)
       SimilarityOps.clusterBalancedSample(emb, "vec_id", "embedding",
@@ -145,7 +143,7 @@ object SparkEntryV33 {
        |WHERE $bucket < thresh""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "split_leakage_safe" -> SplitLeakageSql,
     "mine_hard_negatives" -> HardNegativesSql,
     "cluster_balanced_sample" -> ClusterBalancedSql

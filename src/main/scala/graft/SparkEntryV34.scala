@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.ops.{AsofJoinOp, SessionOps}
 
 /** Thirty-fourth batch (round 9): event-timeline operators — the point-in-
@@ -21,10 +22,7 @@ import graft.ops.{AsofJoinOp, SessionOps}
   *    stats row aggregates the per-event labels — on the Spark side that
   *    path runs through the native merging `session_window` aggregation,
   *    pinned equivalent in EventOpsSpec. */
-object SparkEntryV34 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV34 extends EntryPart {
 
   private val GapUs: Long = 6L * 3600 * 1000000 // 6 hours
   private val TolUs: Long = 12L * 3600 * 1000000 // 12 hours
@@ -32,12 +30,9 @@ object SparkEntryV34 {
   // the case that distinguishes gate-before-pick from pick-then-gate
   private val NearTolUs: Long = 2L * 3600 * 1000000 // 2 hours
 
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast("double")
-
   /** Unique-(g, ts_us) per-user series for one event type. */
   private def side(s: SparkSession, dir: String, eventType: String): DataFrame =
-    t(s, dir, "events").filter(col("event_type") === eventType)
+    table(s, dir, "events").filter(col("event_type") === eventType)
       .groupBy(col("user_id").as("g"),
         unix_micros(col("ts").cast("timestamp")).as("ts_us"))
       .agg(exactSum(col("value")).as("y"))
@@ -52,7 +47,7 @@ object SparkEntryV34 {
         col("right_ts_us").as("click_us"), round(col("right_cy"), 6).as("click_y"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "ts_asof_join" -> ((s, dir) => asofRow(s, dir, "backward", None)),
     "ts_asof_join_fwd" -> ((s, dir) => asofRow(s, dir, "forward", None)),
     "ts_asof_join_tol" -> ((s, dir) => asofRow(s, dir, "backward", Some(TolUs))),
@@ -60,17 +55,14 @@ object SparkEntryV34 {
     "ts_asof_join_near_tol" -> ((s, dir) =>
       asofRow(s, dir, "nearest", Some(NearTolUs))),
     "sessionize" -> ((s, dir) =>
-      SessionOps.sessionize(t(s, dir, "events"), Seq("user_id"), "ts", GapUs)
+      SessionOps.sessionize(table(s, dir, "events"), Seq("user_id"), "ts", GapUs)
         .select(col("event_id"), col("user_id"), col("session_idx"))),
     "session_stats" -> ((s, dir) =>
-      SessionOps.sessionStats(t(s, dir, "events"), Seq("user_id"), "ts", GapUs,
+      SessionOps.sessionStats(table(s, dir, "events"), Seq("user_id"), "ts", GapUs,
           Some("value"))
         .select(col("user_id"), col("session_start_us"), col("session_last_us"),
           col("n_events"), col("duration_us"), round(col("y_sum"), 6).as("y_sum")))
   )
-
-  private val ExactSumY =
-    "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
 
   private def sideCte(eventType: String, name: String): String =
     s"""$name AS (
@@ -157,7 +149,7 @@ object SparkEntryV34 {
        |             ELSE fy END, 6) AS click_y
        |FROM bw JOIN fw ON bw.g = fw.g AND bw.ts_us = fw.ts_us""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_asof_join_near_tol" -> NearTolSql,
     "ts_asof_join" -> asofSql(">=", None),
     "ts_asof_join_near" -> NearSql,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.{CardinalityOps, SampleOps}
 
 /** Thirty-fifth batch (round 9): HyperLogLog distinct-cardinality sketches.
@@ -19,10 +20,7 @@ import graft.llm.{CardinalityOps, SampleOps}
   * sketches per (event_type, user-shard) and merges — by the max-merge
   * identity the result is register-identical to the single pass, so it
   * shares the whole-corpus oracle verbatim. */
-object SparkEntryV35 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV35 extends EntryPart {
 
   private val Seed = 31L
   private val P2 = 8 // m = 256
@@ -30,7 +28,7 @@ object SparkEntryV35 {
 
   /** (g, ent): event_type and the user-day entity id. */
   private def entities(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(
+    table(s, dir, "events").select(
       col("event_type").as("g"),
       (col("user_id") * lit(1000000L) +
         datediff(col("ts").cast("date"), lit("1970-01-01"))).as("ent"))
@@ -39,7 +37,7 @@ object SparkEntryV35 {
     df.select(col("g"), col("v_zero"), col("s_scaled"),
       round(col("est"), 6).as("est"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "hll_user_days_by_type" -> ((s, dir) =>
       outCols(CardinalityOps.hllCountByPrehashed(
         entities(s, dir), Seq("g"),
@@ -75,7 +73,7 @@ object SparkEntryV35 {
        |SELECT g, v_zero, s_scaled, round($est, 6) AS est FROM agg""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "hll_user_days_by_type" -> HllSql,
     // merge-of-shards is register-identical to the single pass, so the
     // whole-corpus replay IS its oracle

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.SampleOps
 
 /** Thirty-sixth batch (round 9): weighted k-sampling without replacement
@@ -15,24 +16,21 @@ import graft.llm.SampleOps
   * TopKByScore aggregate and the SQL row_number agree row-for-row. The
   * `_by` row takes an independent per-language quota in the same single
   * aggregation. */
-object SparkEntryV36 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV36 extends EntryPart {
 
   private val SeedK = 37L
   private val SeedBy = 41L
   private val K = 100
   private val KBy = 20
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "sample_weighted_k" -> ((s, dir) =>
       SampleOps.weightedSampleK(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
+        table(s, dir, "documents").select(col("doc_id"), col("n_chars")),
         "doc_id", "n_chars", K, SeedK)),
     "sample_weighted_k_by" -> ((s, dir) =>
       SampleOps.weightedSampleK(
-        t(s, dir, "documents").select(col("lang"), col("doc_id"), col("n_chars")),
+        table(s, dir, "documents").select(col("lang"), col("doc_id"), col("n_chars")),
         "doc_id", "n_chars", KBy, SeedBy, Seq("lang")))
   )
 
@@ -47,7 +45,7 @@ object SparkEntryV36 {
     (hashCtes, score)
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "sample_weighted_k" -> {
       val (ctes, score) = keyedCtes(SeedK, withLang = false)
       s"""WITH $ctes,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.FuzzyJoinOps
 
 /** Thirty-seventh batch (round 9): the edit-distance fuzzy join.
@@ -14,16 +15,13 @@ import graft.llm.FuzzyJoinOps
   * scan (length-banded brute force over every pair) — blocking filters
   * are necessary conditions, so the plans must agree pair-for-pair, and
   * the distance is an integer both engines compute identically. */
-object SparkEntryV37 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV37 extends EntryPart {
 
   private val D = 2
   private val Prefix = 24
 
   private def fixture(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "documents")
+    val b = table(s, dir, "documents")
       .select(col("doc_id").as("id"), substring(col("text"), 1, Prefix).as("s"))
     b.unionByName(b.filter(col("id") < 40).select(
         (col("id") + lit(1000000L)).as("id"),
@@ -33,13 +31,13 @@ object SparkEntryV37 {
         concat(lit("QZ"), expr("substring(s, 3, 2147483647)")).as("s")))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "fuzzy_join_pairs" -> ((s, dir) =>
       FuzzyJoinOps.fuzzySelfJoin(fixture(s, dir), "id", "s", D)
         .select(col("id1"), col("id2"), col("dist").cast("long").as("dist")))
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "fuzzy_join_pairs" ->
       s"""WITH b AS (SELECT doc_id AS id, substr(text, 1, $Prefix) AS s
          |           FROM documents),

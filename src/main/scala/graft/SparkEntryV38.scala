@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.ops.CohortOps
 
 /** Thirty-eighth batch (round 9): event-analytics rollups — the ordered
@@ -15,26 +16,23 @@ import graft.ops.CohortOps
   * anchored contract with one), all in epoch-micros integers. Retention
   * replays distinct entity-days → per-entity min day → (cohort, offset)
   * counts. */
-object SparkEntryV38 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV38 extends EntryPart {
 
   private val Steps = Seq("view", "click", "purchase")
   private val WindowUs = 7L * 86400L * 1000000L // 7 days
   private val MaxOffset = 30
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "funnel_users" -> ((s, dir) =>
-      CohortOps.funnel(t(s, dir, "events"), Seq("user_id"), "ts",
+      CohortOps.funnel(table(s, dir, "events"), Seq("user_id"), "ts",
           "event_type", Steps, Some(WindowUs))
         .select(col("user_id"), col("t1"), col("t2"), col("t3"),
           col("steps_completed"))),
     "funnel_counts" -> ((s, dir) =>
-      CohortOps.funnelCounts(t(s, dir, "events"), Seq("user_id"), "ts",
+      CohortOps.funnelCounts(table(s, dir, "events"), Seq("user_id"), "ts",
         "event_type", Steps, Some(WindowUs))),
     "retention_cohorts" -> ((s, dir) =>
-      CohortOps.retention(t(s, dir, "events"), Seq("user_id"), "ts", MaxOffset))
+      CohortOps.retention(table(s, dir, "events"), Seq("user_id"), "ts", MaxOffset))
   )
 
   private val FunnelCtes =
@@ -55,7 +53,7 @@ object SparkEntryV38 {
        |          AS BIGINT) AS steps_completed
        |      FROM s1 LEFT JOIN s2 ON s1.g = s2.g LEFT JOIN s3 ON s1.g = s3.g)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "funnel_users" ->
       s"""$FunnelCtes
          |SELECT g AS user_id, t1, t2, t3, steps_completed FROM f""".stripMargin,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.{CardinalityOps, FuzzyJoinOps, SampleOps, TextOps}
 
 /** Thirty-ninth batch (round 9): sketch set-algebra and the fuzzy-dedup
@@ -21,17 +22,14 @@ import graft.llm.{CardinalityOps, FuzzyJoinOps, SampleOps, TextOps}
   *    mapped to its component-minimum canonical. The oracle computes the
   *    same components with a recursive reachability CTE over the
   *    brute-force pair set. */
-object SparkEntryV39 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV39 extends EntryPart {
 
   private val Seed = 31L
   private val P2 = 8
   private val Bits = 31
 
   private def entities(s: SparkSession, dir: String, et: String): DataFrame =
-    t(s, dir, "events").filter(col("event_type") === et).select(
+    table(s, dir, "events").filter(col("event_type") === et).select(
       (col("user_id") * lit(1000000L) +
         datediff(col("ts").cast("date"), lit("1970-01-01"))).as("ent"))
 
@@ -41,7 +39,7 @@ object SparkEntryV39 {
 
   /** V37's fuzzy fixture: 24-char prefixes + planted typo copies. */
   private def fuzzyFixture(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "documents")
+    val b = table(s, dir, "documents")
       .select(col("doc_id").as("id"), substring(col("text"), 1, 24).as("s"))
     b.unionByName(b.filter(col("id") < 40).select(
         (col("id") + lit(1000000L)).as("id"),
@@ -51,7 +49,7 @@ object SparkEntryV39 {
         concat(lit("QZ"), expr("substring(s, 3, 2147483647)")).as("s")))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "hll_overlap" -> ((s, dir) =>
       CardinalityOps.overlapEstimate(
           sketch(s, dir, "click"), sketch(s, dir, "view"), Seq.empty, P2, Bits)
@@ -139,7 +137,7 @@ object SparkEntryV39 {
        |  SELECT reach.id, e.bb FROM reach JOIN edges e ON reach.r = e.a)
        |SELECT id, min(r) AS canonical_id FROM reach GROUP BY id""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "hll_overlap" -> OverlapSql,
     "fuzzy_dedup_canonical" -> FuzzyClustersSql
   )

@@ -5,38 +5,18 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.agg.Aggregators
-import graft.kernels.{Conformal, Imputation, SeasonalityExt}
-import graft.ops.{Series, TsCvOp, TsExogOp, TsForecastOp}
+import graft.kernels.Conformal
+import graft.ops.{TsCvOp, TsForecastOp}
 
 /** Fourth batch: aggregate-function API, introspection, exogenous
   * forecasting, explicit-cutoff CV splits + hydrate, extended seasonality
   * analysis, bootstrap intervals. */
-object SparkEntryV4 {
+object SparkEntryV4 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  /** Daily series with TIMESTAMP ds (for the aggregate API). */
-  private def dailyEventsTs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), date_trunc("day", col("ts")).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // ------------------------------------------------ aggregate API (SQL UDAF)
     "ts_forecast_agg_sql" -> ((s, dir) => {
       Aggregators.registerAll(s)
@@ -124,7 +104,7 @@ object SparkEntryV4 {
     // byte-arithmetic fields, which DuckDB can replay exactly on ASCII text
     "mm_decode_images" -> ((s, dir) => {
       val media = graft.llm.MultimodalOps.demoMediaTable(
-        t(s, dir, "documents"), "doc_id", "text")
+        table(s, dir, "documents"), "doc_id", "text")
       graft.llm.MultimodalOps.decodeImages(media, "payload")
         .select(col("doc_id"),
           round(col("mean_luma"), 6).as("mean_luma"),
@@ -136,7 +116,7 @@ object SparkEntryV4 {
       // arithmetic (MultimodalOps.StubCodec.embed), so the whole pipeline
       // replays exactly in the DuckDB oracle.
       val media = graft.llm.MultimodalOps.demoMediaTable(
-        t(s, dir, "documents"), "doc_id", "text")
+        table(s, dir, "documents"), "doc_id", "text")
       val emb = graft.llm.MultimodalOps.extractEmbeddings(media, "payload", dim = 32)
       graft.llm.SimilarityOps.bruteForceTopK(
           emb, emb.filter(col("doc_id") < 5), "doc_id", "embedding", 3)
@@ -144,7 +124,7 @@ object SparkEntryV4 {
     }),
     "mm_frame_sampling" -> ((s, dir) => {
       val media = graft.llm.MultimodalOps.demoMediaTable(
-          t(s, dir, "documents"), "doc_id", "text")
+          table(s, dir, "documents"), "doc_id", "text")
         .withColumn("duration_ms", (length(col("payload")) * 10).cast(LongType))
       graft.llm.MultimodalOps.sampleFrameOffsets(media, "duration_ms", 4)
         .select(col("doc_id"), col("frame_offset_ms"))
@@ -171,12 +151,7 @@ object SparkEntryV4 {
     }),
   )
 
-  /** Oracle SQL for the batch (explicit-cutoff CV is relational). */
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     // StubCodec byte arithmetic replayed on ASCII text: payload bytes are the
     // character codes, so mean_luma = (sum(code) / len) / 255 exactly (same
     // IEEE double division order as StubCodec.decodeImage).

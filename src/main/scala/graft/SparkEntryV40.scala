@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.ops.IntervalJoinOp
 
 /** Fortieth batch (round 9): the interval-overlap join — attribution
@@ -12,17 +13,14 @@ import graft.ops.IntervalJoinOp
   * plain inequality join — the bucketed equi-join plan must return
   * exactly the containment pairs (closed bounds, epoch-micros
   * integers). */
-object SparkEntryV40 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV40 extends EntryPart {
 
   private val WindowUs = 2L * 3600 * 1000000
   private val BucketUs = 1L * 3600 * 1000000
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "interval_join_attrib" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = table(s, dir, "events")
       val points = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("g"),
           unix_micros(col("ts").cast("timestamp")).as("t"),
@@ -37,7 +35,7 @@ object SparkEntryV40 {
     })
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "interval_join_attrib" ->
       s"""WITH iv AS (
          |  SELECT user_id AS g, epoch_us(CAST(ts AS TIMESTAMP)) AS s,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
 import graft.llm.{FrequencyOps, QuantileOps, RetrievalOps, SampleOps, SimilarityOps}
 
 /** Forty-first batch (round 9): hybrid lexical+dense retrieval fused by
@@ -17,10 +18,7 @@ import graft.llm.{FrequencyOps, QuantileOps, RetrievalOps, SampleOps, Similarity
   * IEEE addition, the 6-decimal rounding, and the (score desc, id asc)
   * final rank — so a drift in either list's membership, either rank
   * convention, or the fusion order is a hash mismatch. */
-object SparkEntryV41 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+object SparkEntryV41 extends EntryPart {
 
   private val K = 10
   private val KCand = 25
@@ -36,12 +34,12 @@ object SparkEntryV41 {
   private val ContainSuffix =
     " graftwrap boilerplate chatter appended around the quoted document body"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // corpus = the docs that have an embedding (1:1 at sf0.01, 2000-of-5000
     // at sf0.1 — the oracle joins identically); queries = every 100th
     "hybrid_rrf_topk" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val emb = t(s, dir, "embeddings")
+      val docs = table(s, dir, "documents")
+      val emb = table(s, dir, "embeddings")
       val corpus = docs.join(emb, docs("doc_id") === emb("vec_id"))
         .select(docs("doc_id"), col("text"), col("embedding"))
       val qs = corpus.filter(col("doc_id") % 100 === 0)
@@ -51,15 +49,15 @@ object SparkEntryV41 {
     }),
     // per-language doc-length percentile — the per-dump calibration shape
     "score_percentile_by_group" -> ((s, dir) =>
-      QuantileOps.percentileByGroup(t(s, dir, "documents"), "lang",
+      QuantileOps.percentileByGroup(table(s, dir, "documents"), "lang",
         "doc_id", "n_chars")),
     // the composed gate: each language's longest-30% documents
     "top_fraction_by_group" -> ((s, dir) =>
-      QuantileOps.filterTopFractionByGroup(t(s, dir, "documents"), "lang",
+      QuantileOps.filterTopFractionByGroup(table(s, dir, "documents"), "lang",
         "doc_id", "n_chars", frac = 0.3)),
     // MMR rerank of brute-force ANN candidates (diversity after retrieval)
     "mmr_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       val cands = SimilarityOps.bruteForceTopK(emb,
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", MmrCand)
       SimilarityOps.mmrRerank(cands, emb, "qid", "vid", "sim",
@@ -67,7 +65,7 @@ object SparkEntryV41 {
     }),
     // Count-Min token-frequency estimates for doc 0's vocabulary
     "cm_token_freq" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       FrequencyOps.cmEstimate(
         FrequencyOps.cmSketch(docs, "text", CmD, CmW, CmHashSeed, CmMixSeed),
         cmProbes(docs), "term", CmD, CmW, CmHashSeed, CmMixSeed)
@@ -75,7 +73,7 @@ object SparkEntryV41 {
     // per-shard sketches merged (the linearity identity) — the merged
     // counters are identical to the single pass, so it shares the oracle
     "cm_merge_shards" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
         .withColumn("shard", pmod(col("doc_id"), lit(4)))
       val shards = FrequencyOps.cmSketch(docs, "text", CmD, CmW,
         CmHashSeed, CmMixSeed, groupCols = Seq("shard"))
@@ -86,7 +84,7 @@ object SparkEntryV41 {
     // read back, merged — shares the whole-corpus oracle byte-for-byte,
     // so a serialization bug in the counter layout is a hash mismatch
     "cm_model_freq" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
         .withColumn("shard", pmod(col("doc_id"), lit(4)))
       val shards = FrequencyOps.cmSketch(docs, "text", CmD, CmW,
         CmHashSeed, CmMixSeed, groupCols = Seq("shard"))
@@ -100,7 +98,7 @@ object SparkEntryV41 {
     // in boilerplate at id+1e6) clear the gate at containment 1.0 while
     // their Jaccard is well under it; adjacent-doc negative pairs drop
     "containment_verify" -> ((s, dir) => {
-      val corpus = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val corpus = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = corpus.unionByName(corpus.filter(col("doc_id") < 10)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"),
           concat(col("text"), lit(ContainSuffix)).as("text")))
@@ -115,14 +113,14 @@ object SparkEntryV41 {
     // PageRank centrality over the exhaustive kNN graph — scaled-long
     // integer arithmetic, so all 10 iterations replay bit-exactly
     "pagerank_knn" -> ((s, dir) => {
-      val edges = SimilarityOps.knnGraph(t(s, dir, "embeddings"), "vec_id",
+      val edges = SimilarityOps.knnGraph(table(s, dir, "embeddings"), "vec_id",
         "embedding", k = 5, nLists = 8, nProbe = 8)
       graft.ops.GraphOps.pageRank(edges, "qid", "vid", iters = PrIters)
     }),
     // cross-corpus similarity join: even-id vs odd-id embedding halves,
     // zero-iteration IVF candidates, rounded-threshold pairs
     "similarity_join" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = table(s, dir, "embeddings")
       val a = emb.filter(col("vec_id") % 2 === 0)
       val b = emb.filter(col("vec_id") % 2 === 1)
       val cents = SimilarityOps.ivfTrain(a, "vec_id", "embedding",
@@ -134,19 +132,19 @@ object SparkEntryV41 {
     // docs scrub to empty and any doc sharing a verbatim 13-gram loses
     // exactly that window — the oracle replays the rebuild token-by-token
     "decontaminate_spans" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       graft.llm.TextOps.decontaminateSpans(docs,
         docs.filter(col("doc_id") % 50 === 0), "doc_id", "text", "text", n = 13)
     }),
     // TF-IDF keywords with CM-approximated document frequencies — the
     // vocabulary-free salience op, every counter replayed exactly
     "tfidf_keywords" -> ((s, dir) =>
-      FrequencyOps.tfidfKeywords(t(s, dir, "documents"), "doc_id", "text",
+      FrequencyOps.tfidfKeywords(table(s, dir, "documents"), "doc_id", "text",
         k = 5, CmD, CmW, CmHashSeed, CmMixSeed)),
     // Morton values for the 2-d (price, quantity) layout — the write-side
     // data-skipping clustering, gated on its exact bit arithmetic
     "zorder_values" -> ((s, dir) =>
-      graft.ops.LayoutOps.zorderValue(t(s, dir, "lineitem"),
+      graft.ops.LayoutOps.zorderValue(table(s, dir, "lineitem"),
           Seq("l_extendedprice", "l_quantity"), bits = ZBits)
         .select(col("l_orderkey"), col("l_linenumber"), col("zvalue"))),
   )
@@ -461,7 +459,7 @@ object SparkEntryV41 {
        |SELECT * FROM c
        |WHERE greatest(containment_a_in_b, containment_b_in_a) >= 0.9""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "containment_verify" -> ContainmentSql,
     "pagerank_knn" -> PageRankSql,
     "similarity_join" -> SimilarityJoinSql,

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.agg.Aggregators
 import graft.llm.PqOps
 
@@ -30,20 +31,7 @@ import graft.llm.PqOps
   *    top-10. Exhaustive probe (nProbe = nLists) so the oracle replays
   *    the full chain: zero-iteration codebook, ADC candidate cut, exact
   *    cosine re-rank on the rounded grid with vid tiebreak. */
-object SparkEntryV42 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-
-  // ---------------------------------------------- dynamic agg field names
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast("double")
-
-  private def dailyEventsTs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), date_trunc("day", col("ts")).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
+object SparkEntryV42 extends EntryPart {
 
   // ---------------------------------------------- sink-bearing PageRank
 
@@ -51,7 +39,7 @@ object SparkEntryV42 {
   private val DstMod = 1000L
 
   private def sinkEdges(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    table(s, dir, "documents")
       .filter(pmod(col("doc_id"), lit(3L)) =!= 0L)
       .select(col("doc_id").as("s"),
         pmod(col("doc_id") * lit(131L) + lit(7L), lit(DstMod)).as("d"))
@@ -66,9 +54,9 @@ object SparkEntryV42 {
   private val NLists = 8
 
   private def corpus(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "ts_forecast_agg_dynfields" -> ((s, dir) => {
       val pts = Encoders.product[Aggregators.TsPoint]
       s.udf.register("fc_agg_95", udaf(new Aggregators.ForecastAggDynamic(
@@ -100,7 +88,7 @@ object SparkEntryV42 {
     // docs carry DISTINCT deterministic scores so the winner is data-driven,
     // not structurally the min id
     "dedup_keep_best" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       val aug = docs.filter(col("doc_id") < 15)
       val tri = docs
         .unionByName(aug.select((col("doc_id") + lit(1000000L)).as("doc_id"),
@@ -141,14 +129,14 @@ object SparkEntryV42 {
     // greedy min/max rule — the full chunk table gates the whole chain
     "cdc_chunks" -> ((s, dir) =>
       graft.llm.TextOps.chunkContentDefined(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
+        table(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", window = CdcW, avgBits = CdcBits,
         minLen = CdcMin, maxLen = CdcMax, seed = CdcSeed)),
     // cross-document shared content at sub-document granularity: replicas
     // of doc_id < 10 carry a PREFIX insertion, so fixed windows all shift
     // but CDC chunks downstream of the first boundary still collide
     "cdc_shared_chunks" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.filter(col("doc_id") < 10)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"),
           concat(lit("zz "), col("text")).as("text"))
@@ -159,14 +147,14 @@ object SparkEntryV42 {
     // trigram stupid-backoff LM at oracle-replayable caps (the bigram
     // row's discipline one context order up)
     "lm_trigram_score" -> ((s, dir) =>
-      graft.llm.TextOps.trigramPerplexity(t(s, dir, "documents"),
+      graft.llm.TextOps.trigramPerplexity(table(s, dir, "documents"),
           "doc_id", "text", vocabSize = 256, bigramVocabSize = 512,
           trigramVocabSize = 1024, alpha = 0.5, backoff = 0.4)
         .select(col("doc_id"), col("n_tokens"), col("sum_logp"))),
     // the disk round trip: fit once, persist all four tables + meta,
     // load, score — shares lm_trigram_score's oracle byte-for-byte
     "trigram_model_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = table(s, dir, "documents")
       val model = graft.llm.TextOps.trainTrigramLm(docs, "text",
         vocabSize = 256, bigramVocabSize = 512, trigramVocabSize = 1024,
         alpha = 0.5, backoff = 0.4)
@@ -434,7 +422,7 @@ object SparkEntryV42 {
       |       coalesce(a.sum_logp, 0.0) AS sum_logp
       |FROM tk k LEFT JOIN agg a USING (doc_id)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_forecast_agg_dynfields" -> DynFieldsSql,
     "dedup_keep_best" -> KeepBestSql,
     "decontaminate_semantic" -> SemDeconSql,

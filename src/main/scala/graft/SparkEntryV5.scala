@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.functions.TsFunctions
 import graft.llm.TextOps
 import graft.ops.TsPrep
@@ -12,39 +13,9 @@ import graft.ops.TsPrep
 /** Fifth batch: the remaining metric suite with oracles, mark/fill-unknown,
   * token counting + quality scoring, and the SQL-registered function
   * surface. */
-object SparkEntryV5 {
+object SparkEntryV5 extends EntryPart {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-
-  /** Per-group (actual, lag-1 pred) arrays for the metric UDFs. */
-  private def metricInput(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    dailyEvents(s, dir).withColumn("pred", lag(col("y"), 1).over(w))
-      .groupBy(col("g"))
-      .agg(sort_array(collect_list(struct(col("ds"),
-        coalesce(col("y"), lit(Double.NaN)).as("a"),
-        coalesce(col("pred"), lit(Double.NaN)).as("p")))).as("_s"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "ts_mape_by" -> ((s, dir) => metricInput(s, dir)
       .select(col("g"), round(TsFunctions.tsMape(col("_s.a"), col("_s.p")), 6).as("mape"))),
     "ts_smape_by" -> ((s, dir) => metricInput(s, dir)
@@ -94,10 +65,10 @@ object SparkEntryV5 {
           .select(col("g"), col("ds"), round(col("y"), 6).as("y")),
         "g", "ds", "y", "2024-01-20 00:00:00", "last_value")),
     "text_token_count" -> ((s, dir) =>
-      TextOps.tokenCount(t(s, dir, "documents"), "text")
+      TextOps.tokenCount(table(s, dir, "documents"), "text")
         .select(col("doc_id"), col("n_tokens_bpe"))),
     "text_quality_score" -> ((s, dir) =>
-      TextOps.qualityScore(t(s, dir, "documents"), "text")
+      TextOps.qualityScore(table(s, dir, "documents"), "text")
         .select(col("doc_id"), col("quality_score"))),
     "ts_validate_timestamps_by" -> ((s, dir) => {
       val expected = (1 to 30).map(d =>
@@ -113,15 +84,7 @@ object SparkEntryV5 {
     // estimate is the documented closed-form formula
     "sql_function_surface" -> ((s, dir) => {
       graft.sql.Register.registerAll(s)
-      val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-        .agg(count(lit(1)).as("_n"))
-        .withColumn("_pos", row_number().over(w))
-        .filter(col("_pos") <= 64)
-        .select(col("g"), col("ds"),
-          (lit(10.0) + sin(col("_pos") * lit(2.0 * math.Pi / 8.0))).as("y"))
-        .createOrReplaceTempView("_sql_surface")
+      sinusoid8(s, dir).createOrReplaceTempView("_sql_surface")
       s.sql("""SELECT g,
               |  ts_mae(arr, arr) AS self_mae,
               |  ts_detect_periods(arr, 'acf') AS acf_period,
@@ -133,7 +96,7 @@ object SparkEntryV5 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     // planted-sinusoid surface: expected values derived from construction +
     // the documented memory formula (kernels/..., TsCvOp.estimateBacktestMemory)
     "sql_function_surface" ->

@@ -4,29 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.llm.TextOps
 import graft.ops.{Hierarchy, TsPrep, TsStatsOp}
 
 /** Sixth batch: calendar-frequency gap filling (the month-arithmetic path,
   * oracle-checked), separator validation, Jaccard near-dup verification, and
   * the data-quality rollup. */
-object SparkEntryV6 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
+object SparkEntryV6 extends EntryPart {
 
   /** Monthly revenue per order priority with months 3/4 removed → calendar
     * gaps for the monthly fill path. */
   private def monthlySeries(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .filter(!month(col("o_orderdate")).isin(3, 4))
       .groupBy(col("o_orderpriority").as("g"),
         date_trunc("month", col("o_orderdate")).cast(DateType).as("ds"))
@@ -39,18 +30,13 @@ object SparkEntryV6 {
       |         CAST(sum(CAST(round(o_totalprice, 6) AS DECIMAL(28,6))) AS DOUBLE) AS y
       |  FROM orders WHERE month(o_orderdate) NOT IN (3, 4) GROUP BY 1, 2)""".stripMargin
 
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     "ts_fill_gaps_monthly_by" -> ((s, dir) =>
       TsPrep.fillGapsBy(monthlySeries(s, dir), "g", "ds", "y", "1mo")
         .select(col("g"), col("ds"), round(col("y"), 4).as("y"))),
     "ts_validate_separator" -> ((s, dir) =>
       Hierarchy.validateSeparator(
-        t(s, dir, "events").select(col("event_type").as("id1"),
+        table(s, dir, "events").select(col("event_type").as("id1"),
           col("user_id").cast(StringType).as("id2")),
         Seq("id1", "id2"))
         // scalar projection (conflicting_values is an array — driver-sort-unsafe)
@@ -66,7 +52,7 @@ object SparkEntryV6 {
     // PPJoin prefix shrinks from n/2 to n/5 and the length/positional
     // filters actually bite (the realistic dedup operating point)
     "dedup_jaccard_exact" -> ((s, dir) =>
-      TextOps.exactJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
+      TextOps.exactJaccardPairs(table(s, dir, "documents"), "doc_id", "text",
         shingleSize = 5, threshold = 0.8)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))),
     // LSH candidates verified by exact shingle Jaccard, on the planted
@@ -75,7 +61,7 @@ object SparkEntryV6 {
     // every unequal candidate, so the aggregate provably equals the
     // set-equality relation's aggregate.
     "dedup_jaccard_verify" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val aug = docs.unionByName(docs.filter(col("doc_id") < 20)
         .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       val pairs = TextOps.minHashLshPairs(aug, "doc_id", "text", bands = 32)
@@ -85,7 +71,7 @@ object SparkEntryV6 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     // inverted-index exact Jaccard: pairs sharing no shingle cannot clear the
     // threshold, so the shingle join enumerates every qualifying pair
     "dedup_jaccard_exact" ->

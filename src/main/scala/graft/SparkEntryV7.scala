@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
+import graft.Tables.table
 import graft.functions.TsFunctions
 import graft.kernels.Metrics
 import graft.ops.{TsForecastOp, TsPrep}
@@ -15,27 +17,7 @@ import graft.ops.{TsForecastOp, TsPrep}
   * mean_interval_width), quarterly/yearly calendar gap filling, and the
   * INTEGER/BIGINT date-column type-preservation contract
   * (reference ts_type_preservation.test). */
-object SparkEntryV7 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
+object SparkEntryV7 extends EntryPart {
 
   /** Daily series with zeros planted at both edges (days 1-5 and 28+). */
   private def edgeZeroSeries(s: SparkSession, dir: String): DataFrame =
@@ -52,19 +34,9 @@ object SparkEntryV7 {
       |  max(CASE WHEN y <> 0 AND y IS NOT NULL THEN ds END) OVER (PARTITION BY g) AS lnz
       |  FROM z)""".stripMargin
 
-  /** Per-group (actual, lag-1 pred) arrays, date-ordered (metric input). */
-  private def metricInput(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    dailyEvents(s, dir).withColumn("pred", lag(col("y"), 1).over(w))
-      .groupBy(col("g"))
-      .agg(sort_array(collect_list(struct(col("ds"),
-        coalesce(col("y"), lit(Double.NaN)).as("a"),
-        coalesce(col("pred"), lit(Double.NaN)).as("p")))).as("_s"))
-  }
-
   /** Quarterly revenue per order priority with Q2 removed → calendar gaps. */
   private def quarterlySeries(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .filter(!month(col("o_orderdate")).isin(4, 5, 6))
       .groupBy(col("o_orderpriority").as("g"),
         date_trunc("quarter", col("o_orderdate")).cast(DateType).as("ds"))
@@ -72,13 +44,13 @@ object SparkEntryV7 {
 
   /** Yearly revenue per order priority with 1997 removed → a 2-year gap. */
   private def yearlySeries(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .filter(year(col("o_orderdate")) =!= 1997)
       .groupBy(col("o_orderpriority").as("g"),
         date_trunc("year", col("o_orderdate")).cast(DateType).as("ds"))
       .agg(exactSum(col("o_totalprice")).as("y"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // ------------------------------------------------ zero trimming
     "ts_drop_leading_zeros_by" -> ((s, dir) =>
       TsPrep.dropLeadingZerosBy(edgeZeroSeries(s, dir), "g", "ds", "y")),
@@ -179,7 +151,7 @@ object SparkEntryV7 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_drop_leading_zeros_by" -> (EdgeZeroCte +
       """
         |SELECT g, ds, y FROM w WHERE ds >= fnz""".stripMargin),

@@ -3,36 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
 import graft.kernels.Features
-import graft.ops.{TsChangepointOp, TsConformalOp, TsCvOp, TsFeaturesOp}
+import graft.ops.{TsConformalOp, TsCvOp, TsFeaturesOp}
 
 /** Eighth batch: the conformal macro layer (ts_conformal_by / _calibrate /
   * _apply_by / ts_interval_width_by), the index-only CV split, Bayesian
   * changepoints, features config plumbing (template / from_json / from_csv),
   * and the SQL-registered inspect/explain scalars. */
-object SparkEntryV8 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
+object SparkEntryV8 extends EntryPart {
 
   /** Backtest-shaped input: actual = y, forecast = lag-1 naive. */
   private def backtestLike(s: SparkSession, dir: String): DataFrame = {
@@ -57,7 +37,7 @@ object SparkEntryV8 {
       |      * (max(lv.idx) - floor(max(lv.idx))) AS q
       |  FROM o JOIN lv ON o.g = lv.g GROUP BY o.g)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // ------------------------------------------------ conformal macro layer
     "ts_conformal_by" -> ((s, dir) =>
       TsConformalOp.conformalBy(backtestLike(s, dir), "g", "y", "fc", "fc",
@@ -123,7 +103,7 @@ object SparkEntryV8 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_conformal_by" -> (ScoreCte +
       """
         |SELECT w.g, round(w.fc, 6) AS point,

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
+import graft.SparkEntryFixtures._
 import graft.kernels.{Conformal, Imputation, SeasonalityExt}
 import graft.ops.{Series, TsDecompositionOp}
 
@@ -12,41 +12,7 @@ import graft.ops.{Series, TsDecompositionOp}
   * analysis surface, the instantaneous-period length contract, and a
   * degenerate-residual bootstrap whose intervals are deterministic
   * regardless of the resampling path. */
-object SparkEntryV9 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  private def exactSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(round(c, 6).cast(DecimalType(28, 6))).cast(DoubleType)
-
-  private def dailyEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type").as("g"), col("ts").cast(DateType).as("ds"))
-      .agg(exactSum(col("value")).as("y"))
-
-  private val ExactSumY = "CAST(sum(CAST(round(value, 6) AS DECIMAL(28,6))) AS DOUBLE)"
-  private val SeriesCte =
-    s"WITH s AS (SELECT event_type AS g, CAST(ts AS DATE) AS ds, $ExactSumY AS y FROM events GROUP BY 1, 2)"
-
-  /** 64 order dates per priority with a [0, 5, 0, 0] spike pattern: peaks
-    * sit at 0-based positions 1, 5, …, 61 with value 5 and (because no
-    * strictly-higher terrain exists) prominence 5 — all from construction. */
-  private def spikeSeries(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w) - 1)
-      .filter(col("_pos") < 64)
-      .select(col("g"), col("ds"),
-        when(col("_pos") % 4 === 1, 5.0).otherwise(0.0).as("y"))
-  }
+object SparkEntryV9 extends EntryPart {
 
   private val SpikeCte =
     """WITH d AS (
@@ -58,19 +24,7 @@ object SparkEntryV9 {
       |                 CASE WHEN pos % 4 = 1 THEN 5.0 ELSE 0.0 END AS y
       |          FROM p WHERE pos < 64)""".stripMargin
 
-  /** Period-7 sinusoid, 70 samples (10 full cycles) per priority. */
-  private def sinusoid7(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("g")).orderBy(col("ds"))
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"), col("o_orderdate").cast(DateType).as("ds"))
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_pos", row_number().over(w))
-      .filter(col("_pos") <= 70)
-      .select(col("g"), col("ds"),
-        (lit(10.0) + sin(col("_pos") * lit(2.0 * math.Pi / 7.0))).as("y"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = rows(
     // planted spikes: every peak index/value/prominence follows from the input
     "ts_detect_peaks_by" -> ((s, dir) =>
       TsDecompositionOp.detectPeaksBy(spikeSeries(s, dir), "g", "ds", "y")
@@ -143,7 +97,7 @@ object SparkEntryV9 {
     }),
   )
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = rows(
     "ts_detect_peaks_by" -> (SpikeCte +
       """
         |SELECT g, CAST(pos AS INTEGER) AS peak_index, ds,

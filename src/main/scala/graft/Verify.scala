@@ -8,6 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names for fast local iteration
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    only.foreach(SparkEntry.requireKnown)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

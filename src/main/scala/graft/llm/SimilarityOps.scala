@@ -328,10 +328,15 @@ object SimilarityOps {
 
   /** Pack the centroid table into a single array row for broadcast — the
     * per-row argmax then needs NO shuffle at all. Centroids are L2-normalized
-    * at pack time (once, not per corpus row). */
+    * at pack time (once, not per corpus row). A zero centroid (an all-zero
+    * seed vector) has no direction, so it is left out of the pack: it
+    * neither wins a row nor is probed, and assignment and probing keep
+    * seeing the same lists (nProbe = nLists stays exact). In `ivfTrain` such
+    * a list stays empty and keeps its zero centroid. */
   private[graft] def packedCentroids(centroids: DataFrame): DataFrame = {
     val norm = sqrt(aggregate(col("centroid"), lit(0.0), (acc, x) => acc + x * x))
     centroids
+      .filter(norm > 0.0)
       .agg(collect_list(struct(col("centroid_id"),
         transform(col("centroid"), x => x / norm).as("centroid"))).as("_cents"))
   }
@@ -343,9 +348,9 @@ object SimilarityOps {
     * row, argmax_c cos(v, c) = argmax_c v·ĉ (the 1/‖v‖ factor is a positive
     * per-row constant), so neither the row norm nor the centroid norms are
     * recomputed per (row, centroid) pair — 3× fewer array passes on the
-    * corpus×nLists hot path. Zero-norm centroids score NaN and are filtered
-    * exactly as under cosine; zero-norm ROWS would score a finite 0.0 under
-    * the dot (where cosine gave NaN and dropped them), so they are filtered
+    * corpus×nLists hot path. Zero-norm centroids are not in the pack (see
+    * [[packedCentroids]]). Zero-norm ROWS would score a finite 0.0 under the
+    * dot (where cosine gave NaN and dropped them), so they are filtered
     * explicitly up front — degenerate vectors stay out of both the index and
     * the Lloyd mean update, preserving the cosine-scoring contract. */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,

@@ -284,11 +284,15 @@ object TsCvOp {
     // ~horizon× smaller than the exploded output. The pinned payload is
     // slim: the sort key `t` (micros) was only needed for ordering inside
     // `_s`; the output reads v/nu/d alone.
+    // The explode takes the UDF call itself, not a named column holding it:
+    // for an attribute input Spark infers `size(c) > 0 AND isnotnull(c)`
+    // and pushes it below the projection with the call substituted, which
+    // would run the kernel up to three times per group.
     val perFold = gathered
-      .withColumn("_pf", fcAllUdf(col("_s.v"), col("_s.nu"),
-        size(filter(col("_s"), e => e.getField("t").isNull)).cast(LongType),
-        col("_n"), init))
-      .withColumn("_f", explode(col("_pf")))
+      .select(col(groupCol), col("_s"),
+        explode(fcAllUdf(col("_s.v"), col("_s.nu"),
+          size(filter(col("_s"), e => e.getField("t").isNull)).cast(LongType),
+          col("_n"), init)).as("_f"))
       .select(col("_f.fold_id").as("fold_id"), col(groupCol),
         slice(col("_s"), (col("_f.test_start") + 1).cast(IntegerType),
           (col("_f.test_end") - col("_f.test_start") + 1).cast(IntegerType))

@@ -124,6 +124,49 @@ class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clean == dirty, "the zero vector must not skew the Lloyd means")
   }
 
+  test("a zero seed centroid is left out of the pack: ivfTrain and the kNN graph run, not fail") {
+    val s = spark
+    import s.implicits._
+    val packed = SimilarityOps.packedCentroids(
+      Seq((1, Seq(0.0, 0.0)), (2, Seq(3.0, 4.0))).toDF("centroid_id", "centroid"))
+      .select(explode(col("_cents")).as("c"))
+      .collect().map(r => r.getStruct(0)).map(c => c.getInt(0) -> c.getSeq[Double](1)).toMap
+    assert(packed == Map(2 -> Seq(0.6, 0.8)))
+    // vector 0 is all zeros, and ivfTrain seeds with the first nLists ids, so
+    // centroid 1 starts as the zero vector (an ANSI divide by zero before)
+    val corpus = clustered.filter(col("vec_id") =!= 0L).unionByName(
+      Seq((0L, Array.fill(8)(0.0f))).toDF("vec_id", "embedding"))
+    val centroids = SimilarityOps.ivfTrain(corpus, "vec_id", "embedding", nLists = 4)
+    assert(centroids.count() == 4)
+    val graph = SimilarityOps.knnGraph(corpus, "vec_id", "embedding", k = 5,
+      nLists = 4, nProbe = 4)
+      .select(col("qid").cast("long"), col("vid").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(!graph.exists { case (q, v) => q == 0L || v == 0L },
+      "the zero vector has no direction: it neither queries nor is found")
+    val perQuery = graph.groupBy(_._1).map { case (q, es) => q -> es.length }
+    assert(perQuery.keySet == (1L until 80L).toSet && perQuery.values.forall(_ == 5),
+      s"every other vector keeps its k = 5 neighbours: $perQuery")
+  }
+
+  test("a zero centroid wins no row: exhaustive probing still equals brute force") {
+    val s = spark
+    import s.implicits._
+    // vector 500 has a negative dot with every non-zero centroid, so a zero
+    // centroid scoring 0 would take it into a list that no query probes
+    val corpus = clustered.unionByName(
+      Seq((500L, Array.fill(8)(-1.0f))).toDF("vec_id", "embedding"))
+    val centroids = ((1, Seq.fill(8)(0.0)) +: (0 until 4).map { c =>
+      (c + 2, Seq.tabulate(8)(d => if (d == 2 * c || d == 2 * c + 1) 10.0 else 0.0))
+    }).toDF("centroid_id", "centroid")
+    val queries = corpus.filter(col("vec_id") < 8 || col("vec_id") === 500L)
+    val brute = resultSet(SimilarityOps.bruteForceTopK(corpus, queries, "vec_id", "embedding", 5))
+    val ivf = resultSet(SimilarityOps.ivfProbe(corpus, queries, "vec_id", "embedding",
+      k = 5, nProbe = 5, centroids = centroids))
+    assert(brute.contains((500L, 500L)))
+    assert(ivf == brute)
+  }
+
   test("persisted index: probe-from-disk equals in-memory probe AND the scan is partition-pruned") {
     val corpus = clustered
     val queries = corpus.filter(col("vec_id") < 8)

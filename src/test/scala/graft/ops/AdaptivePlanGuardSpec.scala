@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
@@ -177,16 +178,32 @@ class AdaptivePlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("BroadcastNestedLoopJoin", "Cross", 0)), render(plans))
   }
 
+  /** 3 daily series of 120 points. */
+  private def backtestSeries = spark.range(120).crossJoin(spark.range(3).select(col("id").as("g")))
+    .select(col("g"), date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("ds"),
+      ((col("id") % 7) + col("g")).cast("double").as("y"))
+
   test("backtest: no join reads the pinned kernel output") {
-    val series = spark.range(120).crossJoin(spark.range(3).select(col("id").as("g")))
-      .select(col("g"), date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("ds"),
-        ((col("id") % 7) + col("g")).cast("double").as("y"))
     val plans = finalPlans {
-      graft.ops.TsCvOp.backtestAutoBy(series, "g", "ds", "y", 7, 3, "1d",
+      graft.ops.TsCvOp.backtestAutoBy(backtestSeries, "g", "ds", "y", 7, 3, "1d",
         Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse").collect()
     }
     assert(plans.flatMap(nodes).exists(_.isInstanceOf[RDDScanExec]),
       s"the backtest must read its pinned kernel output:\n${render(plans)}")
     assert(joinsOverPins(plans).isEmpty, render(plans))
+  }
+
+  test("backtest: the forecast kernel runs in one operator") {
+    val plans = finalPlans {
+      graft.ops.TsCvOp.backtestAutoBy(backtestSeries, "g", "ds", "y", 7, 3, "1d",
+        Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse").collect()
+    }
+    // an explode of a named column would let Spark infer `size(c) > 0 AND
+    // isnotnull(c)` and push it below the projection with the UDF call
+    // substituted: the kernel would then sit in a Filter and a Project too
+    val kernelOps = plans.flatMap(nodes).filter(
+      _.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))).distinct
+    assert(kernelOps.length == 1,
+      s"the forecast UDF must be evaluated by exactly one operator:\n${render(plans)}")
   }
 }
