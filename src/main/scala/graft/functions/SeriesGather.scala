@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.TernaryLike
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
@@ -36,32 +36,64 @@ final class SeriesBuffer(var size: Int, var ts: Array[Long], var vs: Array[Doubl
     System.arraycopy(o.nu, 0, nu, size, o.size)
     size += o.size
   }
+
+  /** Append a packed record's parallel arrays (equal lengths, no nulls). */
+  def appendPacked(t: ArrayData, v: ArrayData, n: ArrayData): Unit = {
+    val m = t.numElements()
+    ensure(size + m)
+    var i = 0
+    while (i < m) {
+      ts(size + i) = t.getLong(i); vs(size + i) = v.getDouble(i); nu(size + i) = n.getBoolean(i)
+      i += 1
+    }
+    size += m
+  }
+
+  /** The first `size` elements as a `(t, v, nu)` row of primitive arrays. */
+  def toRow: InternalRow = InternalRow(
+    UnsafeArrayData.fromPrimitiveArray(ts, Platform.LONG_ARRAY_OFFSET, size, 8),
+    UnsafeArrayData.fromPrimitiveArray(vs, Platform.DOUBLE_ARRAY_OFFSET, size, 8),
+    UnsafeArrayData.fromPrimitiveArray(nu, Platform.BOOLEAN_ARRAY_OFFSET, size, 1))
 }
 
-/** Native series gather: per group, the rows' `(t, v, nu)` triples sorted by
-  * `(t, v, nu)` and returned as three parallel arrays,
-  * `struct<t: array<bigint>, v: array<double>, nu: array<boolean>>`.
+object SeriesBuffer {
+  def empty(): SeriesBuffer =
+    new SeriesBuffer(0, new Array[Long](16), new Array[Double](16), new Array[Boolean](16))
+
+  /** `struct<t, v, nu>` of non-null primitive arrays: a packed record and a
+    * gathered series alike. */
+  val fields: Seq[StructField] = Seq(
+    StructField("t", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("nu", ArrayType(BooleanType, containsNull = false), nullable = false))
+}
+
+/** Native series gather: per group, the `(t, v, nu)` triples of its packed
+  * records ([[SeriesPack]]) sorted by `(t, v, nu)` and returned as three
+  * parallel arrays, `struct<t: array<bigint>, v: array<double>,
+  * nu: array<boolean>>`.
   *
   * This is the reference's `LIST(value ORDER BY date)` (ts_macros.cpp:37-42)
-  * and replaces `sort_array(collect_list(struct(t, v, nu)))`, whose partial
-  * buffers are arrays of generic struct rows and whose map-side partials
-  * were sorted on a boxed struct comparator. Here a partial is three
-  * growable primitive arrays, serialized as `n, t[n], v[n], nu bits`, so the
-  * map-side aggregate packs a series' rows in one input partition into ONE
-  * record before the group-key exchange instead of shuffling every raw row.
-  * The saving needs input locality: a series spread over P input
-  * partitions still crosses the exchange as up to P records.
+  * and replaces `sort_array(collect_list(struct(t, v, nu)))`, whose buffers
+  * were arrays of generic struct rows sorted on a boxed struct comparator.
+  * Its inputs are the three arrays of a packed record, not single rows: the
+  * packer has already folded each input partition's rows of a series into
+  * one record, without the sort Spark's object hash aggregate falls back to
+  * past 128 keys per task, so no raw row reaches this aggregate or a sorter
+  * ([[graft.ops.Series.gather]]). A buffer is three growable primitive
+  * arrays, serialized as `n, t[n], v[n], nu bits`; `update` and `merge` both
+  * append in arrival order.
   *
   * Order is Spark's `sort_array` order on the struct, element for element:
   * `t` ascending, then `v` with -0.0 == 0.0 and NaN largest, then
   * `nu` false first; the sort is stable on arrival order, so the only
   * elements whose relative order can differ from the replaced form are a
   * +0.0 and a -0.0 with the same `t` and `nu` — a tie that form left to
-  * shuffle arrival order too. A row with a null `t` has no place in time
-  * order and is skipped (callers drop null-ds rows before gathering); a null
-  * `v` reads as NaN and a null `nu` as true. An empty group yields three
-  * empty arrays, as `collect_list` does. The replaced form is kept as the
-  * executable specification in the test tree (SeriesGatherSpec). */
+  * shuffle arrival order too. Null handling is the packer's: a row with a
+  * null `t` has no place in time order and is skipped, a null `v` reads as
+  * NaN and a null `nu` as true. An empty group yields three empty arrays, as
+  * `collect_list` does. The replaced form is kept as the executable
+  * specification in the test tree (SeriesGatherSpec). */
 case class SeriesGather(t: Expression, v: Expression, nu: Expression,
                         mutableAggBufferOffset: Int = 0,
                         inputAggBufferOffset: Int = 0)
@@ -72,24 +104,20 @@ case class SeriesGather(t: Expression, v: Expression, nu: Expression,
   override def third: Expression = nu
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val want = Seq(LongType, DoubleType, BooleanType)
+    val want = SeriesBuffer.fields.map(_.dataType)
     val got = Seq(t, v, nu).map(_.dataType)
     if (got == want) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (bigint, double, boolean) inputs, got ${got.map(_.sql).mkString(", ")}")
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects the packed " +
+      s"(${want.map(_.sql).mkString(", ")}) arrays of series_pack, got ${got.map(_.sql).mkString(", ")}")
   }
 
-  override def createAggregationBuffer(): SeriesBuffer =
-    new SeriesBuffer(0, new Array[Long](16), new Array[Double](16), new Array[Boolean](16))
+  override def createAggregationBuffer(): SeriesBuffer = SeriesBuffer.empty()
 
   override def update(b: SeriesBuffer, input: InternalRow): SeriesBuffer = {
     val tv = t.eval(input)
     if (tv != null) {
-      val vv = v.eval(input)
-      val nv = nu.eval(input)
-      b.append(tv.asInstanceOf[Long],
-        if (vv == null) Double.NaN else vv.asInstanceOf[Double],
-        nv == null || nv.asInstanceOf[Boolean])
+      b.appendPacked(tv.asInstanceOf[ArrayData], v.eval(input).asInstanceOf[ArrayData],
+        nu.eval(input).asInstanceOf[ArrayData])
     }
     b
   }
@@ -127,10 +155,7 @@ case class SeriesGather(t: Expression, v: Expression, nu: Expression,
 
   override def eval(b: SeriesBuffer): Any = {
     sortInPlace(b)
-    InternalRow(
-      UnsafeArrayData.fromPrimitiveArray(b.ts, Platform.LONG_ARRAY_OFFSET, b.size, 8),
-      UnsafeArrayData.fromPrimitiveArray(b.vs, Platform.DOUBLE_ARRAY_OFFSET, b.size, 8),
-      UnsafeArrayData.fromPrimitiveArray(b.nu, Platform.BOOLEAN_ARRAY_OFFSET, b.size, 1))
+    b.toRow
   }
 
   override def serialize(b: SeriesBuffer): Array[Byte] = {
@@ -167,10 +192,7 @@ case class SeriesGather(t: Expression, v: Expression, nu: Expression,
     b
   }
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("t", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
-    StructField("nu", ArrayType(BooleanType, containsNull = false), nullable = false)))
+  override def dataType: DataType = StructType(SeriesBuffer.fields)
 
   override def nullable: Boolean = false
 

@@ -455,9 +455,9 @@ object TextOps {
     val oov = lm.filter(col("token").isNull)
       .select(col("logp").as("_oov"))
     val vocab = lm.filter(col("token").isNotNull).select(col("token"), col("logp"))
-    val base = df.select(col(idCol), col(textCol)).withColumn("_toks", toks)
-    val perDoc = base
-      .select(col(idCol), explode(col("_toks")).as("token"))
+    val base = df.select(col(idCol))
+    val perDoc = df
+      .select(col(idCol), explode(toks).as("token"))
       .join(broadcast(vocab), Seq("token"), "left")
       .crossJoin(broadcast(oov))
       .withColumn("_lp", coalesce(col("logp"), col("_oov")))
@@ -465,7 +465,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_tokens"),
         sum(graft.functions.RoundedDecimal.column(col("_lp")))
           .cast(DoubleType).as("sum_logp"))
-    base.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+    base.join(perDoc, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("sum_logp"), lit(0.0)).as("sum_logp"))
@@ -617,7 +617,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_tokens"),
         sum(graft.functions.RoundedDecimal.column(col("_lp")))
           .cast(DoubleType).as("sum_logp"))
-    base.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+    base.join(perDoc, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("sum_logp"), lit(0.0)).as("sum_logp"))
@@ -859,7 +859,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_tokens"),
         sum(graft.functions.RoundedDecimal.column(col("_lp")))
           .cast(DoubleType).as("sum_logp"))
-    base.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+    base.join(perDoc, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("sum_logp"), lit(0.0)).as("sum_logp"))
@@ -1339,9 +1339,10 @@ object TextOps {
     * shuffle; the scale-safe choice when exact results are required. */
   def exactJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleSize: Int = 5, threshold: Double = 0.8): DataFrame = {
+    // explode straight from the expression (see bandedTable); a doc with no
+    // shingle yields no row here and so never reaches the verify joins on sh
     val sh = df.select(col(idCol), shingles(col(textCol), shingleSize).as("_sh"))
-      .filter(size(col("_sh")) > 0)
-    val ex = sh.select(col(idCol), explode(col("_sh")).as("_s"))
+    val ex = df.select(col(idCol), explode(shingles(col(textCol), shingleSize)).as("_s"))
     val dfreq = ex.groupBy(col("_s")).agg(count(lit(1)).as("_df"))
     // canonical global order = (document frequency, shingle); struct sort
     // gives each document its shingles rarest-first
@@ -2105,22 +2106,23 @@ object TextOps {
     require(n > 0, s"n-gram size must be positive, got $n")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    // (id, per-doc distinct gram set + its size) — all map-side, built by
-    // the native one-pass WordGrams expression (distinct mode); short docs
-    // carry an empty set and drop out at the explode below
-    def gramSets(df: DataFrame, id: Column): DataFrame =
-      df.select(id.as("_gid"),
-          wordGramsCol(col(textCol), n, distinct = true).as("_grams"))
-        .withColumn("_ng", size(col("_grams")).cast(LongType))
-    val corpusGrams = gramSets(corpus, col(corpusIdCol))
+    // (id, per-doc distinct gram-set size, one row per gram) — all
+    // map-side, built by the native one-pass WordGrams expression (distinct
+    // mode). The explode is OUTER: the optimizer guards a plain explode of
+    // the named `_grams` with an inferred `size(_grams) > 0` filter pushed
+    // below the projection, which would build every doc's grams twice. A
+    // short doc's empty set gives one null gram row, dropped here.
+    def gramRows(df: DataFrame, id: Column): DataFrame =
+      df.select(id.as("_gid"), wordGramsCol(col(textCol), n, distinct = true).as("_grams"))
+        .select(col("_gid"), size(col("_grams")).cast(LongType).as("_ng"),
+          explode_outer(col("_grams")).as("_gram"))
+        .filter(col("_gram").isNotNull)
+    val corpusGrams = gramRows(corpus, col(corpusIdCol))
       .select(col("_gid").as("_cid"), col("_ng").as("_na"),
-        explode(col("_grams")).as("_gram"))
-      .select(col("_cid"), col("_na"), xxhash64(col("_gram")).as("_gh"), col("_gram"))
-    val benchGrams = gramSets(benchmarks, col(benchIdCol))
+        xxhash64(col("_gram")).as("_gh"), col("_gram"))
+    val benchGrams = gramRows(benchmarks, col(benchIdCol))
       .select(col("_gid").as("_bid"), col("_ng").as("_nb"),
-        explode(col("_grams")).as("_gram"))
-      .select(col("_bid"), col("_nb"), xxhash64(col("_gram")).as("_gh"),
-        col("_gram").as("_bgram"))
+        xxhash64(col("_gram")).as("_gh"), col("_gram").as("_bgram"))
     // LEFT join so every corpus doc's gram rows survive: unmatched grams
     // land in a (_cid, NULL) group that contributes only the doc's gram-set
     // size — the expensive map-side pass (tokenize, gram windows,

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.kernels.Forecast
-import graft.types.Frequency
 
 /** Cross-validation / backtesting operators.
   *
@@ -112,7 +111,6 @@ object TsCvOp {
   def cvForecastBy(folds: DataFrame, groupCol: String, dsCol: String, yCol: String,
                    method: String, params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, 1, params)
-    val dsType = folds.schema(dsCol).dataType
 
     val train = folds.filter(col("split") === "train")
     val test = folds.filter(col("split") === "test")
@@ -120,13 +118,10 @@ object TsCvOp {
     val testCounts = test.groupBy(col("fold_id"), col(groupCol))
       .agg(count(lit(1)).cast(IntegerType).as("_h"))
 
-    // no explicit repartition here (unlike Series.gather): the join with
-    // testCounts needs the (fold_id, g) hash partitioning the aggregate
+    // no round-robin exchange here (unlike Series.gather): the join with
+    // testCounts needs the (fold_id, g) hash partitioning the gather
     // already has, and a round-robin exchange would add a second one
-    val gathered = train
-      .filter(col(dsCol).isNotNull)
-      .groupBy(col("fold_id"), col(groupCol))
-      .agg(Series.sortedSeries(dsCol, dsType, yCol).as("_s"))
+    val gathered = Series.gatherBy(train, Seq("fold_id", groupCol), dsCol, yCol)
       .join(testCounts, Seq("fold_id", groupCol))
 
     val fcUdf = udf((vs: Array[Double], nu: Array[Boolean], h: Int) => {

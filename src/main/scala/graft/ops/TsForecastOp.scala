@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.kernels.Forecast
 import graft.types.Frequency
@@ -11,9 +10,9 @@ import graft.types.Frequency
   *
   * Reference lifecycle (ts_macros.cpp:575-602 → _ts_forecast_scalar →
   * Rust forecast): GROUP BY gather → per-group kernel → unnest. Spark shape:
-  * [[Series.gather]] (native map-side partial aggregate → group-key exchange
-  * → final aggregate → round-robin exchange with an explicit partition
-  * count) → kernel UDF per group over primitive `Array[Long]/Array[Double]/
+  * [[Series.gather]] (map-side packer → group-key exchange → merge
+  * aggregate → round-robin exchange with an explicit partition count) →
+  * kernel UDF per group over primitive `Array[Long]/Array[Double]/
   * Array[Boolean]` inputs (no per-element boxing) → explode. One kernel
   * invocation per series; parallelism scales with the number of series
   * across executors. The output is not hash-partitioned on the group key.
@@ -120,10 +119,7 @@ object TsForecastOp {
   def forecastSingle(df: DataFrame, dsCol: String, yCol: String, method: String,
                      horizon: Int, params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, horizon, params)
-    val dsType = df.schema(dsCol).dataType
-    val gathered = df
-      .filter(col(dsCol).isNotNull)
-      .agg(Series.sortedSeries(dsCol, dsType, yCol).as("_s"))
+    val gathered = Series.gatherBy(df, Nil, dsCol, yCol)
       .select(col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
 
     val fc = udf((vs: Array[Double], nu: Array[Boolean]) => {

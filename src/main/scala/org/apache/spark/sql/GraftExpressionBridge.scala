@@ -1,10 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * standard mechanism for libraries that ship native Catalyst expressions
-  * (the public API deliberately hides Expression since Spark Connect). */
+  * (the public API deliberately hides Expression since Spark Connect) — and
+  * into the running task's `private[spark]` memory manager, through which a
+  * native expression that buffers rows takes execution memory. */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -17,4 +21,7 @@ object GraftExpressionBridge {
     * silently type as VOID. This runs the converter up front. */
   def resolvedExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** The running task's memory manager, for a `MemoryConsumer`. */
+  def taskMemoryManager(ctx: TaskContext): TaskMemoryManager = ctx.taskMemoryManager()
 }

@@ -10,13 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{SeriesBuffer, SeriesGather}
 import graft.ops.Series
 
-/** Parity of the native series gather ([[SeriesGather]] behind
-  * `Series.gather`) with the form it replaced,
+/** Parity of the native series gather (the [[graft.functions.SeriesPack]]
+  * packer and the [[SeriesGather]] merge behind `Series.gather`) with the
+  * form it replaced,
   * `sort_array(collect_list(struct(t, v, nu)))`, kept here as the executable
   * specification. Element-for-element equality of `_ts/_vs/_nu` on
   * generated groups with duplicate timestamps, null/NaN/±Inf y, single-point
-  * and all-null groups, null-ds rows, and groups split across many input
-  * partitions; plus a 100k-point group and the buffer's serialized form.
+  * and all-null groups, null-ds rows, a null group key, and groups split
+  * across many input partitions; plus a 100k-point group, the buffer's
+  * serialized form, the map stage's sort fallback and DATE round trips in a
+  * non-UTC session.
   * The one tie neither form orders — a +0.0 and a -0.0 at the same
   * timestamp — is compared as a multiset. */
 class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -86,9 +89,14 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dsGen: Gen[Option[Int]] =
     Gen.frequency(9 -> Gen.choose(-3, 25).map(Some(_)), 1 -> Gen.const(None))
 
+  // ~10% null group keys: null is a group of its own, as in groupBy
+  private val gGen: Gen[Option[Int]] =
+    Gen.frequency(9 -> Gen.choose(0, 7).map(Some(_)), 1 -> Gen.const(None))
+
+  // rows come in generated order, so every group arrives out of time order
   private val caseGen = for {
     n <- Gen.choose(0, 250)
-    rows <- Gen.listOfN(n, for { g <- Gen.choose(0, 7); ds <- dsGen; y <- yGen } yield (g, ds, y))
+    rows <- Gen.listOfN(n, for { g <- gGen; ds <- dsGen; y <- yGen } yield (g, ds, y))
     parts <- Gen.choose(1, 8)
   } yield (rows, parts)
 
@@ -175,6 +183,79 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("series_gather"), e.getMessage)
   }
 
+  test("the gather's map stage never falls back to a sort, past 128 series per input partition") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val sp = spark
+    import sp.implicits._
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      // 1,000 series of 6 points, round-robined over 2 input partitions:
+      // every input partition holds all 1,000 series, far past the object
+      // hash aggregate's 128-key sort fallback
+      val df = (0 until 6000).map(i => (i % 1000, i / 1000, (i % 13).toDouble))
+        .toDF("g", "ds", "y").repartition(2)
+      val gathered = Series.gather(df, "g", "ds", "y")
+      // collect runs this plan; count() would plan and run another
+      assert(gathered.collect().length == 1000)
+      val plan = gathered.queryExecution.executedPlan
+      // the map stage of the group-key exchange: everything under it down
+      // to the input exchange
+      def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: Exchange => Nil
+        case other => other +: other.children.flatMap(stage)
+      }
+      val keyExchange = plan.collect {
+        case s: ShuffleExchangeExec if (s.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("g")
+          case _ => false
+        }) => s
+      }
+      assert(keyExchange.length == 1, s"one exchange keyed on g:\n$plan")
+      val fellBack = stage(keyExchange.head.child).collect { case a: BaseAggregateExec =>
+        a.nodeName -> a.metrics.get("numTasksFallBacked").map(_.value).getOrElse(0L)
+      }
+      assert(fellBack.forall(_._2 == 0L),
+        s"map-side aggregates fell back to a sort: $fellBack\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("DATE ds round-trips through a forecast and a gap-fill across a DST change, in any session zone") {
+    val sp = spark
+    import sp.implicits._
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    // New York leaves daylight time on 2024-11-03: a local midnight plus 24
+    // hours is 23:00 of the same day from then on
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val start = java.time.LocalDate.of(2024, 10, 6)
+      val days = (0 until 35).map(start.plusDays(_)) // to 2024-11-09
+      // the forecast's history ends 2024-11-01, so its horizon crosses the change
+      val df = days.take(27).zipWithIndex
+        .map { case (d, i) => ("a", java.sql.Date.valueOf(d), (i % 7).toDouble) }
+        .toDF("g", "ds", "y")
+      val back = Series.gather(df, "g", "ds", "y")
+        .select(explode(col("_ts")).as("t"))
+        .select(Series.fromMicros(col("t"), DateType).as("ds"))
+        .as[java.sql.Date].collect().map(_.toLocalDate).toSeq
+      assert(back == days.take(27), s"gathered ds: $back")
+      val fc = graft.ops.TsForecastOp.forecastBy(df, "g", "ds", "y", "SeasonalNaive", 14, "1d",
+        Map("seasonal_period" -> "7"))
+        .orderBy("forecast_step").select(col("ds")).as[java.sql.Date].collect().map(_.toLocalDate).toSeq
+      assert(fc == (1 to 14).map(k => days(26).plusDays(k)), s"forecast ds: $fc")
+      // a gap from 2024-11-01 to 2024-11-06 across the change
+      val gappy = days.filter(d => d.isBefore(java.time.LocalDate.of(2024, 11, 2)) ||
+        d.isAfter(java.time.LocalDate.of(2024, 11, 5)))
+      val filled = graft.ops.TsPrep.fillGapsBy(
+        gappy.map(d => ("a", java.sql.Date.valueOf(d), 1.0)).toDF("g", "ds", "y"), "g", "ds", "y", "1d")
+        .select(col("ds")).as[java.sql.Date].collect().map(_.toLocalDate).sorted.toSeq
+      assert(filled == days, s"gap-filled ds: $filled")
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
   test("the single-series forecast gathers through the same aggregate") {
     val sp = spark
     import sp.implicits._
@@ -184,5 +265,54 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
       Map("seasonal_period" -> "7")).collect()
     assert(out.length == 1)
     assert(out(0).getSeq[Double](0) == (40 until 47).map(i => (i % 7).toDouble))
+  }
+}
+
+/** The packer's flush path: in a session whose execution memory is a few
+  * MB, a task's packer is refused a grant, emits what it holds and starts
+  * again, so one series crosses the exchange as several packed records; the
+  * gather still equals the reference form. */
+class SeriesPackFlushSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[1]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // about 5 MB of unified memory in total
+      .config("spark.testing.memory", (8L << 20).toString)
+      .config("spark.testing.reservedMemory", "0")
+      .appName("graft-series-pack-flush")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  test("a refused grant flushes the packer; the gather is unchanged") {
+    // 300 series x 2,000 points in ONE input partition: ~10 MB of buffers
+    val df = spark.range(0, 600000, 1, 1)
+      .select((col("id") % 300).as("g"), (col("id") / 300).cast(IntegerType).as("ds"),
+        when(col("id") % 101 === 0, lit(null)).otherwise((col("id") % 17).cast(DoubleType)).as("y"))
+    val packed = Series.pack(df, Seq("g"), "ds", "y").groupBy("g").count()
+    val perKey = packed.agg(min(col("count")), max(col("count"))).head()
+    assert(packed.count() == 300)
+    assert(perKey.getLong(1) > 1L, s"no flush: one packed record per series ($perKey)")
+    val got = Series.gather(df, "g", "ds", "y")
+      .select(col("g"), col("_ts"), col("_vs"), col("_nu"))
+    // each series has one point per ds, so time order is ds order
+    val want = (0L until 300L).map { g =>
+      val ids = (0L until 2000L).map(k => g + 300 * k)
+      (g, ids.map(_ / 300), ids.map(id => if (id % 101 == 0) Double.NaN else (id % 17).toDouble)
+        .map(java.lang.Double.doubleToLongBits), ids.map(_ % 101 == 0))
+    }
+    val bits = got.collect().map { r =>
+      (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2).map(java.lang.Double.doubleToLongBits),
+        r.getSeq[Boolean](3))
+    }.sortBy(_._1).toSeq
+    assert(bits == want)
   }
 }

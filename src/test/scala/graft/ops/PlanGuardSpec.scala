@@ -1047,7 +1047,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.queryExecution.executedPlan
     assert(!plan.toString.contains("CartesianProduct"),
       "per-series forecasting must never cross-join")
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec,
       SparkPlan, WholeStageCodegenExec}
@@ -1058,8 +1058,10 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       case i: InputAdapter => strip(i.child)
       case other => other
     }
-    // the group-key exchange carries the PARTIAL native gather — one packed
-    // record per series and input partition — never the raw (g, ds, y) rows
+    // the group-key exchange carries the PACKED records of the map-side
+    // packer — one per series and input partition — never the raw
+    // (g, ds, y) rows, and the map stage holds no aggregate that could fall
+    // back to a sort
     val keyExchanges = plan.collect {
       case s: ShuffleExchangeExec if (s.outputPartitioning match {
         case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("g")
@@ -1068,20 +1070,27 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(keyExchanges.length == 1, s"expected one exchange keyed on g alone:\n$plan")
     strip(keyExchanges.head.child) match {
-      case a: BaseAggregateExec =>
-        assert(a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial),
-          s"the key exchange must sit on a partial aggregate:\n$a")
-        assert(a.aggregateExpressions.exists(
-            _.aggregateFunction.isInstanceOf[graft.functions.SeriesGather]),
-          s"the partial aggregate must be the native series gather:\n$a")
+      case g: GenerateExec =>
+        assert(g.generator.isInstanceOf[graft.functions.SeriesPack],
+          s"the key exchange must sit on the series packer:\n$g")
       case other => fail(s"raw rows cross the group-key exchange:\n$other")
     }
+    val merges = plan.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(
+        _.aggregateFunction.isInstanceOf[graft.functions.SeriesGather]) => a
+    }
+    assert(merges.map(_.aggregateExpressions.head.mode).toSet == Set(Partial, Final) &&
+      merges.exists(m => m.aggregateExpressions.head.mode == Partial &&
+        (strip(m.child) eq keyExchanges.head)),
+      s"the merge aggregate runs entirely above the key exchange:\n$plan")
     // r11: the kernel must read from an exchange with an EXPLICIT partition
     // count (REPARTITION_BY_NUM) — AQE's byte-based coalescing otherwise folds
     // the tiny gathered-series table to ONE partition and the whole
     // per-series kernel stage runs on a single core (measured: the AutoETS
     // bench stage at 2.2 s wall ≈ its 2.3 s single-thread kernel CPU)
-    val kernel = plan.collect { case g: GenerateExec => g }
+    val kernel = plan.collect {
+      case g: GenerateExec if !g.generator.isInstanceOf[graft.functions.SeriesPack] => g
+    }
     assert(kernel.length == 1, s"expected one kernel explode:\n$plan")
     def exchangeBelow(p: SparkPlan): Option[ShuffleExchangeExec] = strip(p) match {
       case s: ShuffleExchangeExec => Some(s)
@@ -1091,5 +1100,46 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kernelInput = exchangeBelow(kernel.head.child)
     assert(kernelInput.exists(_.shuffleOrigin == REPARTITION_BY_NUM),
       s"the kernel's input exchange must pin its partition count against AQE coalescing:\n$plan")
+  }
+
+  /** Per Generate of `plan`: the operators of its own stage, itself and
+    * what it reads down to the stage's exchanges and leaves, whose
+    * expressions contain a `hit`. An explode of a NAMED array column draws an
+    * inferred `size(c) > 0` filter that the optimizer pushes below the
+    * projection computing `c`; the array expression is then built twice per
+    * row and this count reads 2. */
+  private def evaluationsPerGenerate(plan: org.apache.spark.sql.execution.SparkPlan,
+      hit: org.apache.spark.sql.catalyst.expressions.Expression => Boolean): Seq[Int] = {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: Exchange => Nil
+      case other => other +: other.children.flatMap(stage)
+    }
+    plan.collect { case g: GenerateExec => g }
+      .map(g => stage(g).count(_.expressions.exists(_.exists(hit))))
+      .filter(_ > 0)
+  }
+
+  test("exploded arrays are built once: exact Jaccard shingles, LM tokens, contamination grams") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, StringSplit}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    def once(name: String, df: org.apache.spark.sql.DataFrame,
+             hit: org.apache.spark.sql.catalyst.expressions.Expression => Boolean): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val counts = evaluationsPerGenerate(plan, hit)
+      assert(counts.nonEmpty && counts.forall(_ == 1),
+        s"$name: every explode's array must be built by one operator, got $counts:\n$plan")
+    }
+    once("exactJaccardPairs", graft.llm.TextOps.exactJaccardPairs(docs, "doc_id", "text",
+      shingleSize = 5, threshold = 0.8), _.isInstanceOf[ArrayDistinct])
+    val sp = spark
+    import sp.implicits._
+    val lm = Seq[(String, Double)](("a", -1.0), (null, -9.0)).toDF("token", "logp")
+    once("lmScore", graft.llm.TextOps.lmScore(docs, "doc_id", "text", lm),
+      _.isInstanceOf[StringSplit])
+    once("jaccardContamination", graft.llm.TextOps.jaccardContamination(docs,
+      docs.filter(org.apache.spark.sql.functions.col("doc_id") % 50 === 0),
+      "doc_id", "doc_id", "text", n = 13), _.isInstanceOf[graft.functions.WordGrams])
   }
 }
