@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkEntryFixtures._
-import graft.kernels.{Imputation, SeasonalityExt}
+import graft.kernels.SeasonalityExt
 import graft.ops.{Series, TsChangepointOp, TsDecompositionOp, TsExogOp, TsForecastOp}
 
 /** Tenth batch: planted-construction oracles for the changepoint surface
@@ -108,17 +108,10 @@ object SparkEntryV10 extends EntryPart {
           (size(col("coefficients")) > 0).as("has_coefficients"))),
     // pure sinusoid: each 2-period window decomposes with ~zero remainder,
     // so every windowed strength clears the 0.3 seasonality threshold
-    "ts_seasonality_changes_by" -> ((s, dir) => {
-      val chUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-        val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        if (clean.length < 14 || clean.exists(_.isNaN)) Seq.empty[Double]
-        else SeasonalityExt.detectChanges(clean, 7)._2.toSeq
-      })
-      Series.gather(sinusoid7(s, dir), "g", "ds", "y")
-        .select(col("g"), posexplode(chUdf(col("_vs"), col("_nu"))))
-        .select(col("g"), col("pos").as("window_index"),
-          (col("col") >= 0.3).as("seasonal"))
-    }),
+    "ts_seasonality_changes_by" -> ((s, dir) =>
+      Series.mapKernel(sinusoid7(s, dir), Seq("g"), "ds", "y")(o =>
+        o.clean(14).toSeq.flatMap(SeasonalityExt.detectChanges(_, 7)._2.toSeq.zipWithIndex))
+        .select(col("g"), col("_r._2").as("window_index"), (col("_r._1") >= 0.3).as("seasonal"))),
   )
 
   def oracleSql: Map[String, String] = rows(

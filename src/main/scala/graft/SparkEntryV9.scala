@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntryFixtures._
-import graft.kernels.{Conformal, Imputation, SeasonalityExt}
+import graft.kernels.{Conformal, SeasonalityExt}
 import graft.ops.{Series, TsDecompositionOp}
 
 /** Ninth batch: planted-construction oracles for the peak and seasonality
@@ -42,37 +42,20 @@ object SparkEntryV9 extends EntryPart {
       graft.ops.TsDecompositionOp.classifySeasonalityBy(sinusoid7(s, dir), "g", "ds", "y", 7)
         .select(col("g"), col("timing_classification"), col("modulation_type"),
           col("has_stable_timing"), col("is_seasonal"))),
-    "ts_amplitude_modulation_by" -> ((s, dir) => {
-      val amUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-        val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        if (clean.length < 14 || clean.exists(_.isNaN)) None
-        else Some(SeasonalityExt.amplitudeModulation(clean, 7))
-      })
-      Series.gather(sinusoid7(s, dir), "g", "ds", "y")
-        .select(col("g"), amUdf(col("_vs"), col("_nu")).as("_a"))
-        .filter(col("_a").isNotNull)
-        .select(col("g"), col("_a.is_seasonal"), col("_a.modulation_type"),
-          col("_a.has_modulation"))
-    }),
+    "ts_amplitude_modulation_by" -> ((s, dir) =>
+      Series.mapKernel(sinusoid7(s, dir), Seq("g"), "ds", "y")(o =>
+        o.clean(14).toSeq.map(SeasonalityExt.amplitudeModulation(_, 7)))
+        .select(col("g"), col("_r.is_seasonal"), col("_r.modulation_type"),
+          col("_r.has_modulation"))),
     "ts_analyze_seasonality_by" -> ((s, dir) =>
       graft.ops.TsDecompositionOp.analyzeSeasonalityBy(sinusoid7(s, dir), "g", "ds", "y")
         .select(col("g"), col("primary_period"), col("is_seasonal"),
           round(col("trend_strength"), 6).as("trend_strength"))),
     // contract: one instantaneous-period estimate per input point
-    "ts_instantaneous_period_by" -> ((s, dir) => {
-      val ipUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-        val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        if (clean.length < 4 || clean.exists(_.isNaN)) None
-        else {
-          val r = SeasonalityExt.instantaneousPeriod(clean)
-          Some((r.period.toSeq, r.amplitude.toSeq))
-        }
-      })
-      Series.gather(dailyEvents(s, dir), "g", "ds", "y")
-        .select(col("g"), ipUdf(col("_vs"), col("_nu")).as("_o"))
-        .filter(col("_o").isNotNull)
-        .select(col("g"), size(col("_o._1")).as("n_points"))
-    }),
+    "ts_instantaneous_period_by" -> ((s, dir) =>
+      Series.mapKernel(dailyEvents(s, dir), Seq("g"), "ds", "y")(o =>
+        o.clean(4).toSeq.map(SeasonalityExt.instantaneousPeriod(_).period.length))
+        .select(col("g"), col("_r").as("n_points"))),
     // degenerate residuals: every bootstrap path accumulates the same step,
     // so the intervals collapse to lastY + 3·h regardless of the RNG
     "ts_bootstrap_degenerate" -> ((s, dir) => {

@@ -184,11 +184,11 @@ object Features {
     else Peaks.detectPeaks(values, None, Some(minProm)).length.toDouble
 
   /** Pearson correlation of the observed first-digit distribution with
-    * Benford's law. */
+    * Benford's law. Zeros and ±Inf have no first digit and are skipped. */
   private def benford(values: Array[Double]): Double = {
     val digits = values.flatMap { v =>
       val a = math.abs(v)
-      if (a < 1e-300) None
+      if (a < 1e-300 || a.isInfinite) None
       else {
         var x = a
         while (x >= 10) x /= 10

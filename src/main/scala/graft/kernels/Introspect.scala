@@ -10,6 +10,23 @@ package graft.kernels
   * leaf-ensemble metadata surfaced as leaf_names/coefficients. */
 object Introspect {
 
+  private val Inspectable = Seq("AutoETS", "AutoARIMA", "AutoTheta", "AutoTBATS", "MFLES",
+    "AutoMFLES", "MSTL", "AutoMSTL", "Laplace")
+  private val Explainable = Seq("ETS", "MSTL", "AutoMSTL", "Theta")
+
+  private def unsupported(model: String, capability: String, models: Seq[String]) =
+    new Forecast.InvalidInput(s"Model '$model' does not implement $capability. " +
+      s"Supported models: ${models.mkString(", ")}.")
+
+  /** Throws [[inspect]]'s InvalidInput unless `model` (canonical name) is
+    * Inspectable; lets a caller reject it before any data is read. */
+  def requireInspectable(model: String): Unit =
+    if (!Inspectable.contains(model)) throw unsupported(model, "Inspectable", Inspectable)
+
+  /** Throws [[explain]]'s InvalidInput unless `model` is Explainable. */
+  def requireExplainable(model: String): Unit =
+    if (!Explainable.contains(model)) throw unsupported(model, "Explainable", Explainable)
+
   final case class InspectOut(model_name: String,
                               alpha: Option[Double], beta: Option[Double],
                               gamma: Option[Double], phi: Option[Double],
@@ -79,10 +96,7 @@ object Introspect {
         }
         InspectOut(name, None, None, None, None, None, None,
           None, None, None, f.leafWeights, f.leafNames)
-      case other =>
-        throw new Forecast.InvalidInput(
-          s"Model '$other' does not implement Inspectable. Supported models: " +
-            "AutoETS, AutoARIMA, AutoTheta, AutoTBATS, MFLES, AutoMFLES, MSTL, AutoMSTL, Laplace.")
+      case other => throw unsupported(other, "Inspectable", Inspectable)
     }
   }
 
@@ -145,10 +159,7 @@ object Introspect {
         } else steps.map(_ => 0.0)
         val level = steps.zipWithIndex.map { case (_, i) => fc(i) - seasonal(i) }
         ExplainOut(steps, level, steps.map(_ => 0.0), seasonal, steps.map(_ => 0.0), "Theta")
-      case other =>
-        throw new Forecast.InvalidInput(
-          s"Model '$other' does not implement Explainable. Supported models: " +
-            "ETS, MSTL, AutoMSTL, Theta.")
+      case other => throw unsupported(other, "Explainable", Explainable)
     }
   }
 }

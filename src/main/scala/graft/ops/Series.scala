@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.kernels.{Forecast, Imputation}
+
 /** Series gathering and date-type plumbing shared by the grouped operators.
   *
   * The reference materializes each group into dense arrays via
@@ -14,7 +18,8 @@ import org.apache.spark.sql.types._
   * a sort, then a native aggregate ([[graft.functions.SeriesGather]]) that
   * merges a series' packed records and sorts them by time. No raw row
   * reaches an aggregate, so none goes through the sort Spark's object hash
-  * aggregate falls back to past 128 keys per task.
+  * aggregate falls back to past 128 keys per task. [[mapKernel]] is the
+  * per-series kernel stage every grouped operator builds on.
   *
   * Date columns may be DATE, TIMESTAMP, INTEGER or BIGINT and are normalized
   * to epoch micros (raw value for integer columns), with the original type
@@ -101,6 +106,55 @@ object Series {
     * joins or aggregates on the key pays its own exchange (no op in `ops/`
     * does). */
   def gather(df: DataFrame, groupCol: String, dsCol: String, yCol: String): DataFrame =
-    CpuBound.repartition(gatherBy(df, Seq(groupCol), dsCol, yCol))
-      .select(col(groupCol), col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
+    gatherSeries(df, Seq(groupCol), dsCol, yCol)
+
+  /** [[gather]] on `keys`; no keys gathers the whole input into one series
+    * with no exchange at all. */
+  private def gatherSeries(df: DataFrame, keys: Seq[String], dsCol: String,
+                           yCol: String): DataFrame = {
+    val s = gatherBy(df, keys, dsCol, yCol)
+    (if (keys.isEmpty) s else CpuBound.repartition(s)).select(keys.map(col) ++ Seq(
+      col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu")): _*)
+  }
+
+  /** One gathered series as a kernel sees it: epoch-micros times `ts`,
+    * values `vs` (NaN where y is null) and the y-is-null mask `nu`, sorted by
+    * time. */
+  final case class Obs(ts: Array[Long], vs: Array[Double], nu: Array[Boolean]) {
+    /** True where y is not null. */
+    def valid: Array[Boolean] = nu.map(!_)
+
+    /** `vs` with null gaps linearly interpolated
+      * ([[graft.kernels.Imputation.fillInterpolate]]). */
+    def filled: Array[Double] = Imputation.fillInterpolate(vs, valid)
+
+    /** [[filled]] if it has at least `minLength` points and no NaN (a NaN y,
+      * or a null that interpolation cannot reach); None otherwise. */
+    def clean(minLength: Int): Option[Array[Double]] =
+      Some(filled).filter(c => c.length >= minLength && !c.exists(_.isNaN))
+  }
+
+  /** The per-series kernel stage of every `_by` operator (reference
+    * ts_macros.cpp:575-602: GROUP BY gather → per-group kernel → unnest).
+    * Gathers each `keys` group as [[gather]] does, with its round-robin
+    * kernel exchange (no keys: the whole input is one series, no exchange),
+    * calls `kernel` once per series on primitive arrays and explodes the
+    * rows it returns into `(keys…, _r)`.
+    *
+    * Skip rule (ts_forecast_native.cpp:666-672): a kernel that throws
+    * InsufficientData or ComputationError gives its series zero rows; any
+    * other exception propagates and aborts the query. A kernel with one row
+    * per series returns a 0- or 1-element Seq. The explode reads the UDF
+    * call itself, never a named kernel column: Spark pushes a filter on such
+    * a column below the projection and evaluates the kernel a second time
+    * there. */
+  def mapKernel[R: TypeTag](df: DataFrame, keys: Seq[String], dsCol: String, yCol: String)
+                           (kernel: Obs => Seq[R]): DataFrame = {
+    val run = udf { (ts: Array[Long], vs: Array[Double], nu: Array[Boolean]) =>
+      try kernel(Obs(ts, vs, nu))
+      catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => Seq.empty[R] }
+    }
+    gatherSeries(df, keys, dsCol, yCol)
+      .select(keys.map(col) :+ explode(run(col("_ts"), col("_vs"), col("_nu"))).as("_r"): _*)
+  }
 }

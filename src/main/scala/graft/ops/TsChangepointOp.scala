@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.kernels.Changepoint
 
 /** Changepoint operators (reference ts_macros.cpp:489-538,
-  * ts_changepoints.cpp, ts_cv wiring in changepoint.rs). */
+  * ts_changepoints.cpp, ts_cv wiring in changepoint.rs). Each is one
+  * [[Series.mapKernel]] stage; a series too short for BOCPD (InsufficientData)
+  * is skipped by its skip rule. */
 object TsChangepointOp {
 
   final case class CpRow(t: Long, y: Double, is_changepoint: Boolean,
@@ -18,16 +20,10 @@ object TsChangepointOp {
                            hazardLambda: Double = 250.0,
                            includeProbabilities: Boolean = true): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      try {
-        val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        val r = Changepoint.bocpd(clean, hazardLambda, includeProbabilities)
-        Some(ts.indices.map(i => CpRow(ts(i), vs(i), r.isChangepoint(i), r.probability(i))))
-      } catch { case _: graft.kernels.Forecast.FcError => None }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(cpUdf(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol),
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol) { s =>
+      val r = Changepoint.bocpd(s.filled, hazardLambda, includeProbabilities)
+      s.ts.indices.map(i => CpRow(s.ts(i), s.vs(i), r.isChangepoint(i), r.probability(i)))
+    }.select(col(groupCol),
         Series.fromMicros(col("_r.t"), dsType).as(dsCol),
         when(!isnan(col("_r.y")), col("_r.y")).as(yCol),
         col("_r.is_changepoint").as("is_changepoint"),
@@ -44,16 +40,9 @@ object TsChangepointOp {
                  hazardRate: Double = 0.004): DataFrame = {
     require(java.lang.Double.isFinite(hazardRate), s"hazardRate must be finite, got $hazardRate")
     val dsType = df.schema(dsCol).dataType
-    val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      try {
-        val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        val r = Changepoint.bocpd(clean, 1.0 / math.max(hazardRate, 0.001),
-          includeProbabilities = false)
-        r.changepoints.toSeq.map(i => (i, ts(i)))
-      } catch { case _: graft.kernels.Forecast.FcError => Seq.empty[(Int, Long)] }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(cpUdf(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      Changepoint.bocpd(s.filled, 1.0 / math.max(hazardRate, 0.001), includeProbabilities = false)
+        .changepoints.toSeq.map(i => (i, s.ts(i))))
       .select(col(groupCol), col("_r._1").as("changepoint_index"),
         Series.fromMicros(col("_r._2"), dsType).as(dsCol))
   }
@@ -68,14 +57,9 @@ object TsChangepointOp {
     val cost = Changepoint.Cost.parse(costFn)
     require(minSize >= 1, s"minSize must be >= 1, got $minSize")
     val dsType = df.schema(dsCol).dataType
-    val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.exists(_.isNaN)) Seq.empty[(Int, Long)]
-      else Changepoint.pelt(clean, minSize, penalty, cost)
-        .map(i => (i, ts(i))).toSeq
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(cpUdf(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(0).toSeq.flatMap(c =>
+        Changepoint.pelt(c, minSize, penalty, cost).map(i => (i, s.ts(i)))))
       .select(col(groupCol),
         col("_r._1").as("changepoint_index"),
         Series.fromMicros(col("_r._2"), dsType).as(dsCol))

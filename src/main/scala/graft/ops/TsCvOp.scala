@@ -201,9 +201,10 @@ object TsCvOp {
     // one shuffle: gather each group's full ordered series (positions match
     // cvFoldsBy's row_number-over-ds — all rows counted, null-ds rows sort
     // first and are dropped from the kernel input only, like cvForecastBy).
-    // This keeps sort_array(collect_list(struct)) rather than the native
-    // Series.sortedSeries, which skips null-ds rows: here they must stay in
-    // the array because they count toward every fold position.
+    // This keeps sort_array(collect_list(struct)) rather than
+    // Series.gatherBy (and so Series.mapKernel), whose packer skips null-ds
+    // rows: here they must stay in the array because they count toward
+    // every fold position.
     // The struct carries only (t, v, nu): the original ds value is
     // reconstructed from the micros sort key on output (Series.fromMicros
     // is toMicros' exact inverse), so the gather shuffle never moves a

@@ -3,11 +3,13 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Decomposition, Detrend, Imputation, Peaks, Periods}
+import graft.kernels.{Decomposition, Detrend, Peaks, Periods, SeasonalityExt}
 
 /** Decomposition / detrend / period / peak operators (reference
   * ts_macros.cpp:419-538, :1890-2015; ts_decomposition.cpp; ts_detrend.cpp;
-  * ts_periods.cpp; ts_peaks.cpp). */
+  * ts_periods.cpp; ts_peaks.cpp). Each is one [[Series.mapKernel]] stage
+  * over the gap-interpolated series; a series shorter than its kernel's
+  * minimum, or with a NaN left after interpolation, gives no rows. */
 object TsDecompositionOp {
 
   final case class DecompRow(t: Long, y: Double, trend: Double, seasonal: Double,
@@ -15,31 +17,31 @@ object TsDecompositionOp {
 
   /** ts_mstl_decomposition_by: per-row (group, ds, y, trend, seasonal_total,
     * remainder); `insufficient_data` mode ∈ fail | nan | skip
-    * (decomposition.rs:8-41). */
+    * (decomposition.rs:8-41). Empty `periods` or an unknown mode fails here,
+    * at call time, with an IllegalArgumentException. */
   def mstlDecompositionBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                           periods: Seq[Int], insufficientData: String = "skip"): DataFrame = {
+    require(periods.nonEmpty, "periods must not be empty")
+    require(Set("fail", "nan", "skip").contains(insufficientData),
+      s"insufficientData must be fail|nan|skip, got '$insufficientData'")
     val dsType = df.schema(dsCol).dataType
     val minLen = 2 * periods.max
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < minLen || clean.exists(_.isNaN)) {
-        insufficientData match {
-          case "skip" => None
-          case "nan" => Some(ts.indices.map(i =>
-            DecompRow(ts(i), vs(i), Double.NaN, Double.NaN, Double.NaN)))
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol) { s =>
+      s.clean(minLen) match {
+        case Some(clean) =>
+          val r = Decomposition.mstl(clean, periods)
+          val totalSeasonal = Array.tabulate(clean.length)(i => r.seasonals.map(_._2(i)).sum)
+          s.ts.indices.map(i =>
+            DecompRow(s.ts(i), clean(i), r.trend(i), totalSeasonal(i), r.remainder(i)))
+        case None => insufficientData match {
+          case "skip" => Nil
+          case "nan" => s.ts.indices.map(i =>
+            DecompRow(s.ts(i), s.vs(i), Double.NaN, Double.NaN, Double.NaN))
           case _ => throw new IllegalArgumentException(
-            s"mstl: series too short (need $minLen, got ${clean.length})")
+            s"mstl: series too short (need $minLen, got ${s.ts.length})")
         }
-      } else {
-        val r = Decomposition.mstl(clean, periods)
-        val totalSeasonal = Array.tabulate(clean.length)(i => r.seasonals.map(_._2(i)).sum)
-        Some(ts.indices.map(i =>
-          DecompRow(ts(i), clean(i), r.trend(i), totalSeasonal(i), r.remainder(i))))
       }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(udfF(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
+    }.select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
         col("_r.y").as(yCol), col("_r.trend").as("trend"),
         col("_r.seasonal").as("seasonal"), col("_r.remainder").as("remainder"))
   }
@@ -56,65 +58,51 @@ object TsDecompositionOp {
       s"method must be additive|multiplicative, got '$method'")
     val dsType = df.schema(dsCol).dataType
     val mult = method == "multiplicative"
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 2 * math.max(period, 2) || clean.exists(_.isNaN)) None
-      else {
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(2 * math.max(period, 2)).toSeq.flatMap { clean =>
         val r = Decomposition.classical(clean, period, mult)
-        Some(ts.indices.map(i =>
-          DecompRow(ts(i), clean(i), r.trend(i), r.seasonal(i), r.remainder(i))))
-      }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(udfF(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
+        s.ts.indices.map(i =>
+          DecompRow(s.ts(i), clean(i), r.trend(i), r.seasonal(i), r.remainder(i)))
+      })
       .select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
         col("_r.y").as(yCol), col("_r.trend").as("trend"),
         col("_r.seasonal").as("seasonal"), col("_r.remainder").as("remainder"),
         lit(period).as("period"), lit(method).as("method"))
   }
 
-  final case class DetrendRow(t: Long, y: Double, trend: Double, detrended: Double)
+  final case class DetrendRow(t: Long, y: Double, trend: Double, detrended: Double,
+                              method: String)
 
-  /** ts_detrend_by: per-row (group, ds, y, trend, detrended) + per-group
-    * method/rss via a companion summary if needed. */
+  /** ts_detrend_by: per-row (group, ds, y, trend, detrended, method). */
   def detrendBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                 method: String = "auto"): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 4 || clean.exists(_.isNaN)) None
-      else {
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(4).toSeq.flatMap { clean =>
         val r = Detrend.detrend(clean, method)
-        Some((r.method, ts.indices.map(i => DetrendRow(ts(i), clean(i), r.trend(i), r.detrended(i)))))
-      }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), udfF(col("_ts"), col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
-      .select(col(groupCol), col("_o._1").as("method"), explode(col("_o._2")).as("_r"))
+        s.ts.indices.map(i => DetrendRow(s.ts(i), clean(i), r.trend(i), r.detrended(i), r.method))
+      })
       .select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
         col("_r.y").as(yCol), col("_r.trend").as("trend"),
-        col("_r.detrended").as("detrended"), col("method"))
+        col("_r.detrended").as("detrended"), col("_r.method").as("method"))
   }
 
-  /** ts_detect_periods_by: one row per detected period per group. */
+  /** ts_detect_periods_by: one row per detected period per group (one row
+    * with null period fields where none is detected). A series too short for
+    * the method (its IllegalArgumentException) gives no rows. */
   def detectPeriodsBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                       method: String = "fft", maxPeriod: Option[Int] = None,
-                      minConfidence: Option[Double] = None): DataFrame = {
-    val udfF = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 4 || clean.exists(_.isNaN)) None
-      else scala.util.Try(Periods.detectPeriods(clean, method, maxPeriod, minConfidence)).toOption
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), udfF(col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
-      .select(col(groupCol), col("_o.primaryPeriod").as("primary_period"),
-        col("_o.method").as("method"), explode_outer(col("_o.periods")).as("_p"))
+                      minConfidence: Option[Double] = None): DataFrame =
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(4).toSeq.flatMap { clean =>
+        try Seq(Periods.detectPeriods(clean, method, maxPeriod, minConfidence))
+        catch { case _: IllegalArgumentException => Nil }
+      })
+      .select(col(groupCol), col("_r.primaryPeriod").as("primary_period"),
+        col("_r.method").as("method"), explode_outer(col("_r.periods")).as("_p"))
       .select(col(groupCol), col("primary_period"), col("method"),
         col("_p.period").as("period"), col("_p.confidence").as("confidence"),
         col("_p.strength").as("strength"), col("_p.iteration").as("iteration"))
-  }
 
   final case class PeakRow(index: Int, t: Long, value: Double, prominence: Double)
 
@@ -123,77 +111,58 @@ object TsDecompositionOp {
                     minDistance: Option[Double] = None,
                     minProminence: Option[Double] = None): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 3 || clean.exists(_.isNaN)) Seq.empty[PeakRow]
-      else Peaks.detectPeaks(clean, minDistance, minProminence)
-        .map(p => PeakRow(p.index, ts(p.index), p.value, p.prominence))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(udfF(col("_ts"), col("_vs"), col("_nu"))).as("_p"))
-      .select(col(groupCol), col("_p.index").as("peak_index"),
-        Series.fromMicros(col("_p.t"), dsType).as(dsCol),
-        col("_p.value").as("peak_value"), col("_p.prominence").as("prominence"))
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(3).toSeq.flatMap(clean => Peaks.detectPeaks(clean, minDistance, minProminence)
+        .map(p => PeakRow(p.index, s.ts(p.index), p.value, p.prominence))))
+      .select(col(groupCol), col("_r.index").as("peak_index"),
+        Series.fromMicros(col("_r.t"), dsType).as(dsCol),
+        col("_r.value").as("peak_value"), col("_r.prominence").as("prominence"))
   }
 
-  /** ts_analyze_peak_timing_by. */
+  /** ts_analyze_peak_timing_by. A `period` that is not positive (NaN
+    * included) fails here, at call time, with an IllegalArgumentException. */
   def analyzePeakTimingBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                           period: Double): DataFrame = {
-    val udfF = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 3 || clean.exists(_.isNaN)) None
-      else Some(Peaks.analyzePeakTiming(clean, period))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), udfF(col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
-      .select(col(groupCol), col("_o.meanInterval").as("mean_interval"),
-        col("_o.intervalStd").as("interval_std"),
-        col("_o.timingVariability").as("timing_variability"),
-        col("_o.isRegular").as("is_regular"), col("_o.nPeaks").as("n_peaks"))
+    require(period > 0, s"period must be positive, got $period")
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(3).toSeq.map(Peaks.analyzePeakTiming(_, period)))
+      .select(col(groupCol), col("_r.meanInterval").as("mean_interval"),
+        col("_r.intervalStd").as("interval_std"),
+        col("_r.timingVariability").as("timing_variability"),
+        col("_r.isRegular").as("is_regular"), col("_r.nPeaks").as("n_peaks"))
   }
 
   /** ts_analyze_seasonality_by (seasonality.rs:380-440): per-group detected
     * periods with clamped-ACF strengths, primary period and trend/seasonal
     * strength. Groups shorter than 4 clean points are skipped. */
   def analyzeSeasonalityBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
-                           maxPeriod: Option[Int] = None): DataFrame = {
-    val u = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 4 || clean.exists(_.isNaN)) None
-      else Some(graft.kernels.SeasonalityExt.analyze(clean, maxPeriod))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), u(col("_vs"), col("_nu")).as("_a"))
-      .filter(col("_a").isNotNull)
-      .select(col(groupCol), col("_a.periods").as("periods"),
-        col("_a.strengths").as("strengths"),
-        col("_a.primary_period").as("primary_period"),
-        col("_a.trend_strength").as("trend_strength"),
-        col("_a.seasonal_strength").as("seasonal_strength"),
-        col("_a.is_seasonal").as("is_seasonal"))
-  }
+                           maxPeriod: Option[Int] = None): DataFrame =
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(4).toSeq.map(SeasonalityExt.analyze(_, maxPeriod)))
+      .select(col(groupCol), col("_r.periods").as("periods"),
+        col("_r.strengths").as("strengths"),
+        col("_r.primary_period").as("primary_period"),
+        col("_r.trend_strength").as("trend_strength"),
+        col("_r.seasonal_strength").as("seasonal_strength"),
+        col("_r.is_seasonal").as("is_seasonal"))
 
   /** ts_classify_seasonality_by (ts_macros.cpp:461; seasonality_ext timing
     * classification): per-group stability/modulation classification at a
-    * fixed period. Groups shorter than two full cycles are skipped. */
+    * fixed period. Groups shorter than two full cycles are skipped. A
+    * `period` below 1 fails here, at call time, with an
+    * IllegalArgumentException. */
   def classifySeasonalityBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                             period: Int): DataFrame = {
-    val u = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 2 * period || clean.exists(_.isNaN)) None
-      else Some(graft.kernels.SeasonalityExt.classify(clean, period))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), u(col("_vs"), col("_nu")).as("_c"))
-      .filter(col("_c").isNotNull)
-      .select(col(groupCol), col("_c.timing_classification").as("timing_classification"),
-        col("_c.modulation_type").as("modulation_type"),
-        col("_c.has_stable_timing").as("has_stable_timing"),
-        col("_c.timing_variability").as("timing_variability"),
-        col("_c.seasonal_strength").as("seasonal_strength"),
-        col("_c.is_seasonal").as("is_seasonal"),
-        col("_c.cycle_strengths").as("cycle_strengths"),
-        col("_c.weak_seasons").as("weak_seasons"))
+    require(period > 0, s"period must be positive, got $period")
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(2 * period).toSeq.map(SeasonalityExt.classify(_, period)))
+      .select(col(groupCol), col("_r.timing_classification").as("timing_classification"),
+        col("_r.modulation_type").as("modulation_type"),
+        col("_r.has_stable_timing").as("has_stable_timing"),
+        col("_r.timing_variability").as("timing_variability"),
+        col("_r.seasonal_strength").as("seasonal_strength"),
+        col("_r.is_seasonal").as("is_seasonal"),
+        col("_r.cycle_strengths").as("cycle_strengths"),
+        col("_r.weak_seasons").as("weak_seasons"))
   }
 }

@@ -44,9 +44,9 @@ object TsExogOp {
     val dsType = df.schema(dsCol).dataType
     val freq = Frequency.parse(frequency).forIntegerDs(Series.isIntegerDs(dsType))
 
-    // collect_list of structs, not the native Series.sortedSeries: each row
-    // also carries its regressor array `x`, which the primitive (t, v, nu)
-    // buffers cannot hold
+    // collect_list of structs, not Series.gatherBy (nor Series.mapKernel on
+    // top of it): each row also carries its regressor array `x`, which the
+    // packed primitive (t, v, nu) arrays cannot hold
     val hist = df.filter(col(dsCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(sort_array(collect_list(struct(

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Features, Imputation}
+import graft.kernels.Features
 
 /** Feature-extraction operators (reference ts_features.cpp:55 — one output
   * column per feature, named from the catalog; ts_features_list catalog fn
@@ -12,26 +12,21 @@ import graft.kernels.{Features, Imputation}
 object TsFeaturesOp {
 
   /** ts_features_by: one wide row per group with one column per requested
-    * feature (default: the full 117-feature catalog). */
+    * feature (default: the full 117-feature catalog), from one
+    * [[Series.mapKernel]] stage. A group with a NaN left after gap
+    * interpolation gives no row. */
   def featuresBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                  features: Seq[String] = Features.allNames): DataFrame = {
     val unknown = features.filterNot(Features.allNames.contains)
     require(unknown.isEmpty, s"Unknown feature(s): ${unknown.mkString(", ")}")
-    val fUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.exists(_.isNaN)) None
-      else {
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      s.clean(0).toSeq.map { clean =>
         val all = Features.extract(clean)
-        Some(features.map(all(_)))
-      }
-    })
-    val gathered = Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), fUdf(col("_vs"), col("_nu")).as("_f"))
-      .filter(col("_f").isNotNull)
-    val cols = col(groupCol) +: features.zipWithIndex.map { case (name, i) =>
-      element_at(col("_f"), i + 1).as(name)
-    }
-    gathered.select(cols: _*)
+        features.map(all(_))
+      })
+      .select(col(groupCol) +: features.zipWithIndex.map { case (name, i) =>
+        element_at(col("_r"), i + 1).as(name)
+      }: _*)
   }
 
   /** ts_features_list (ts_features.cpp:160-246): the feature catalog in the

@@ -7,8 +7,9 @@ import graft.kernels.{Quality, Stats}
 import graft.types.Frequency
 
 /** Statistics and data-quality operators (reference ts_macros.cpp:27-173).
-  * Shape: groupBy + ordered gather → kernel → one wide row per group, with
-  * the caller's group column name preserved.
+  * Shape: one [[Series.mapKernel]] stage (gather → kernel → one wide row per
+  * group, under its skip rule), with the caller's group column name
+  * preserved.
   */
 object TsStatsOp {
 
@@ -17,11 +18,9 @@ object TsStatsOp {
               frequency: String): DataFrame = {
     val freq = Frequency.parse(frequency)
       .forIntegerDs(Series.isIntegerDs(df.schema(dsCol).dataType))
-    val statsUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) =>
-      Stats.computeWithDates(vs.toArray, nu.map(!_).toArray, ts.toArray, freq))
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), statsUdf(col("_ts"), col("_vs"), col("_nu")).as("_stats"))
-      .select(col(groupCol), col("_stats.*"))
+    Series.mapKernel(df, Seq(groupCol), dsCol, yCol)(s =>
+      Seq(Stats.computeWithDates(s.vs, s.valid, s.ts, freq)))
+      .select(col(groupCol), col("_r.*"))
   }
 
   /** ts_quality_report over a stats table (ts_macros.cpp:90-104). */
@@ -46,11 +45,8 @@ object TsStatsOp {
   /** ts_data_quality: per-series quality scores (ts_macros.cpp:124-150).
     * Output column named `unique_id` like the reference. */
   def dataQualityBy(df: DataFrame, idCol: String, dsCol: String, yCol: String): DataFrame = {
-    val qUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) =>
-      Quality.compute(vs.toArray, nu.map(!_).toArray, None))
-    Series.gather(df, idCol, dsCol, yCol)
-      .select(col(idCol).as("unique_id"), qUdf(col("_vs"), col("_nu")).as("_q"))
-      .select(col("unique_id"), col("_q.*"))
+    Series.mapKernel(df, Seq(idCol), dsCol, yCol)(s => Seq(Quality.compute(s.vs, s.valid, None)))
+      .select(col(idCol).as("unique_id"), col("_r.*"))
   }
 
   /** ts_data_quality_summary (ts_macros.cpp:152-173). */

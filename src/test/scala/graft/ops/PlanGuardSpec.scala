@@ -1102,6 +1102,41 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"the kernel's input exchange must pin its partition count against AQE coalescing:\n$plan")
   }
 
+  test("per-series kernel stage: each of the 18 mapKernel operators evaluates its kernel in one operator, on a REPARTITION_BY_NUM exchange") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.col
+    // a filter on a named kernel column is pushed below the projection that
+    // computes it, so the kernel runs in both operators: in the merge
+    // aggregate's stage (which AQE may fold onto one task) and again after
+    // the round-robin exchange
+    val df = (0 until 3).map(i => KernelStageOps.healthy(spark, s"s$i")).reduce(_ unionByName _)
+    def readsRepartitionByNum(p: SparkPlan): Boolean = p match {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_NUM
+      case w: WholeStageCodegenExec => readsRepartitionByNum(w.child)
+      case i: InputAdapter => readsRepartitionByNum(i.child)
+      case pr: ProjectExec => readsRepartitionByNum(pr.child)
+      case _ => false
+    }
+    val ops = KernelStageOps.keyed.map(_ -> true) ++ KernelStageOps.keyless.map(_ -> false)
+    assert(ops.length == 18)
+    val faults = ops.flatMap { case ((name, op), keyed) =>
+      val plan = op(if (keyed) df else df.filter(col("g") === "s0").drop("g"))
+        .queryExecution.executedPlan
+      val kernel = plan.collect {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p
+      }
+      if (kernel.length != 1)
+        Some(s"$name: the kernel is evaluated in ${kernel.length} operators:\n$plan")
+      else if (keyed && !kernel.head.children.forall(readsRepartitionByNum))
+        Some(s"$name: the kernel does not read a REPARTITION_BY_NUM exchange:\n$plan")
+      else None
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
+  }
+
   /** Per Generate of `plan`: the operators of its own stage, itself and
     * what it reads down to the stage's exchanges and leaves, whose
     * expressions contain a `hit`. An explode of a NAMED array column draws an
