@@ -26,8 +26,8 @@ final class PqCodebooks(val cents: Array[Array[Array[Double]]], val m: Int,
   * oracle replays): per (sub, code) the squared distance accumulates
   * LEFT-TO-RIGHT over dimensions (`acc += d·d` — identical to the SQL
   * `list_reduce` fold), and ties keep the SMALLEST code (strict `<`
-  * update). PqOpsSpec pins expression ≡ the plain-Scala executable spec
-  * [[graft.llm.PqOps.encodeRef]]. */
+  * update). PqOpsSpec pins expression ≡ its plain-Scala executable spec
+  * `encodeRef`. */
 case class PqEncodeVector(child: Expression, cb: PqCodebooks)
     extends UnaryExpression {
 

@@ -12,15 +12,20 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
 /** Map-side series packer: folds an input partition's `(keys, t, v, nu)`
-  * rows into ONE packed `(keys, t[], v[], nu[])` record per key, without a
-  * sort.
+  * rows into ONE packed `(keys, p: binary)` record per key, without a sort.
   *
   * Children are the key expressions followed by `t: bigint`, `v: double` and
   * `nu: boolean`. Each row is appended, in arrival order, to its key's
   * [[SeriesBuffer]] in a hash map; the map is emitted when the partition
-  * ends (`terminate`). A row with a null `t` is skipped, a null `v` reads as
-  * NaN and a null `nu` as true — the null rules of [[SeriesGather]], which
-  * merges the packed records per key.
+  * ends (`terminate`), each buffer as one packed record (`n, t[n], v[n]`
+  * and the `nu` flags as bits, see [[SeriesBuffer]]). A row with a null `t`
+  * is skipped, a null `v` reads as NaN and a null `nu` as true.
+  * [[SeriesMerge]] merges the packed records per key above the key exchange.
+  *
+  * Keys are packed in the form Spark's `groupBy` compares them in: float and
+  * double keys, also inside structs and arrays, are normalized (-0.0 becomes
+  * 0.0, every NaN one canonical NaN), so that equal groups have equal bytes
+  * in the packer's map, the exchange's hash and the merge's run check.
   *
   * This takes the place of the map-side partial aggregate, which Spark plans
   * for a typed aggregate as an object hash aggregate: past 128 keys in a task
@@ -49,14 +54,15 @@ case class SeriesPack(children: Seq[Expression]) extends Generator with CodegenF
   }
 
   override def elementSchema: StructType = StructType(
-    keys.zipWithIndex.map { case (k, i) => StructField(s"k$i", k.dataType, k.nullable) } ++
-      SeriesBuffer.fields)
+    keys.zipWithIndex.map { case (k, i) => StructField(s"k$i", k.dataType, k.nullable) } :+
+      StructField("p", BinaryType, nullable = false))
 
   override def supportCodegen: Boolean = false
 
   override def prettyName: String = "series_pack"
 
-  @transient private lazy val keyOf = UnsafeProjection.create(keys)
+  @transient private lazy val keyOf =
+    UnsafeProjection.create(keys.map(GraftExpressionBridge.normalizeFloats))
   @transient private var packer: SeriesPacker = _
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
@@ -116,7 +122,8 @@ private[functions] final class SeriesPacker(tmm: TaskMemoryManager)
     groups = new java.util.HashMap[UnsafeRow, SeriesBuffer]()
     held = 0L
     freeMemory(used)
-    out.entrySet().iterator().asScala.map(e => new JoinedRow(e.getKey, e.getValue.toRow))
+    out.entrySet().iterator().asScala
+      .map(e => new JoinedRow(e.getKey, InternalRow(e.getValue.toPacked)))
   }
 
   /** Held buffers cannot be released on another consumer's request: they

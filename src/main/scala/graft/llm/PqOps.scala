@@ -88,40 +88,6 @@ object PqOps {
     }
   }
 
-  /** Plain-Scala executable specs of the three native expressions (the
-    * parity reference PqOpsSpec pins against). */
-  private[graft] def encodeRef(v: Array[Double], model: PqModel): Array[Int] =
-    Array.tabulate(model.m) { s =>
-      val base = s * model.subDim
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      for (c <- 0 until model.nCodes) {
-        var acc = 0.0
-        for (i <- 0 until model.subDim) {
-          val d = v(base + i) - model.cents(s)(c)(i)
-          acc += d * d
-        }
-        if (acc < bestD) { bestD = acc; best = c }
-      }
-      best
-    }
-
-  private[graft] def lutRef(q: Array[Double], model: PqModel): Array[Double] =
-    Array.tabulate(model.m * model.nCodes) { j =>
-      val s = j / model.nCodes
-      val c = j % model.nCodes
-      var acc = 0.0
-      for (i <- 0 until model.subDim) acc += q(s * model.subDim + i) * model.cents(s)(c)(i)
-      acc
-    }
-
-  private[graft] def adcRef(codes: Array[Int], lut: Array[Double],
-                            m: Int, nCodes: Int): Double = {
-    var acc = 0.0
-    for (s <- 0 until m) acc += lut(s * nCodes + codes(s))
-    acc
-  }
-
   /** Train per-subspace codebooks. `iters = 0` returns the seed codebooks
     * (the first nCodes vectors by id, sliced — the oracle-replayable
     * form); each Lloyd iteration re-encodes with the native expression and

@@ -1517,38 +1517,13 @@ object TextOps {
 
   /** SimHash (64-bit) over shingles: sign-sum of per-feature hash bits.
     * Near-dups have small Hamming distance. Native codegen expression
-    * ([[graft.functions.SimHash64]]); the UDF form it replaced survives as
-    * the bit-parity reference in MinHashParitySpec. */
+    * ([[graft.functions.SimHash64]]); the UDF form it replaced is the
+    * bit-parity reference in MinHashParitySpec. */
   def simHash(df: DataFrame, textCol: String, shingleSize: Int = 5,
               out: String = "simhash"): DataFrame = {
     val B = org.apache.spark.sql.GraftExpressionBridge
     df.withColumn(out, B.column(graft.functions.SimHash64(
       B.expression(coalesce(col(textCol), lit(""))), shingleSize)))
-  }
-
-  /** The UDF form [[simHash]] replaced — kept as the executable
-    * specification for MinHashParitySpec. */
-  private[graft] def simHashUdf(df: DataFrame, textCol: String,
-                                shingleSize: Int = 5,
-                                out: String = "simhash"): DataFrame = {
-    val simUdf = udf((text: String) => {
-      val hs = shingleHashSet(if (text == null) "" else text, shingleSize)
-      val counts = new Array[Int](64)
-      var j = 0
-      while (j < hs.length) {
-        var b = 0
-        while (b < 64) {
-          if (((hs(j) >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-        j += 1
-      }
-      var sig = 0L
-      var b = 0
-      while (b < 64) { if (counts(b) > 0) sig |= (1L << b); b += 1 }
-      sig
-    })
-    df.withColumn(out, simUdf(col(textCol)))
   }
 
   /** Rolling-hash document fingerprint (winnowing-style): min xxhash64 of

@@ -14,12 +14,14 @@ import graft.kernels.{Forecast, Imputation}
   * `LIST(value ORDER BY date)` inside a GROUP BY (ts_macros.cpp:37-42), with
   * memory O(group) (ts_forecast_native.cpp:23-26). The Spark shape is a
   * map-side packer ([[graft.functions.SeriesPack]]) that folds each input
-  * partition's rows of a series into one record of primitive arrays without
-  * a sort, then a native aggregate ([[graft.functions.SeriesGather]]) that
-  * merges a series' packed records and sorts them by time. No raw row
-  * reaches an aggregate, so none goes through the sort Spark's object hash
-  * aggregate falls back to past 128 keys per task. [[mapKernel]] is the
-  * per-series kernel stage every grouped operator builds on.
+  * partition's rows of a series into one packed record without a sort, a
+  * key exchange, Spark's spillable sort on the keys, and a streaming merge
+  * ([[graft.functions.SeriesMerge]]) that appends each run of a series'
+  * records, sorts it by time and emits it, holding one series at a time.
+  * No aggregate is involved, so nothing reaches the sort an object hash
+  * aggregate falls back to past 128 keys per task, and no buffer is
+  * serialized between aggregate steps. [[mapKernel]] is the per-series
+  * kernel stage every grouped operator builds on.
   *
   * Date columns may be DATE, TIMESTAMP, INTEGER or BIGINT and are normalized
   * to epoch micros (raw value for integer columns), with the original type
@@ -58,7 +60,7 @@ object Series {
     case _ => false
   }
 
-  /** Each input partition's rows folded into one `(keys, _t, _v, _nu)`
+  /** Each input partition's rows folded into one `(keys, _p)` packed
     * record per key ([[graft.functions.SeriesPack]]): epoch-micros
     * timestamps, values (NaN where y is null) and the y-is-null mask, in
     * arrival order. Rows with a null ds are skipped. */
@@ -67,34 +69,52 @@ object Series {
     val inputs = keys.map(col) ++ Seq(toMicros(col(dsCol), df.schema(dsCol).dataType),
       coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)), col(yCol).isNull)
     df.select(B.column(graft.functions.SeriesPack(inputs.map(B.expression)))
-      .as(keys :+ "_t" :+ "_v" :+ "_nu"))
+      .as(keys :+ "_p"))
+  }
+
+  /** [[pack]] behind the exchange that brings each key's records together:
+    * hash-partitioned on the keys, or one partition when there are none. At
+    * most one record per series and input partition crosses it (more only
+    * where a packer flushed under memory pressure). The keyed exchange is an
+    * ordinary one: AQE may coalesce it, and its hash partitioning on the keys
+    * is what a join on them needs. */
+  private[graft] def packBy(df: DataFrame, keys: Seq[String], dsCol: String,
+                            yCol: String): DataFrame = {
+    val packed = pack(df, keys, dsCol, yCol)
+    if (keys.isEmpty) packed.repartition(1) else packed.repartition(keys.map(col): _*)
+  }
+
+  /** Merge exchanged packed records ([[packBy]]) into one
+    * `(…, _s: struct<t, v, nu>)` row per series: a sort within partitions on
+    * `keys`, then [[graft.functions.SeriesMerge]]. Every column of `packed`
+    * but `_p` is part of the series key, so a column that is constant per
+    * key (a join's payload) rides along. */
+  private[graft] def merge(packed: DataFrame, keys: Seq[String]): DataFrame = {
+    val B = org.apache.spark.sql.GraftExpressionBridge
+    val carried = packed.columns.toSeq.filter(_ != "_p")
+    val sorted = if (keys.isEmpty) packed else packed.sortWithinPartitions(keys.map(col): _*)
+    val merged = graft.functions.SeriesMerge((carried :+ "_p").map(c => B.expression(col(c))))
+    sorted.select(B.column(merged).as(carried :+ "_s"))
   }
 
   /** Gather each `keys` group into one `_s: struct<t, v, nu>` of parallel
     * arrays sorted by time (see [[pack]]); no keys gathers the whole input
-    * into one row.
+    * into one row, also when the input is empty.
     *
-    * Plan shape: packer → key exchange → merge aggregate. The packed records
-    * cross a `repartition` on the keys, so the merge aggregate's partial and
-    * final steps both run after it and the map stage holds no aggregate; at
-    * most one record per series and input partition crosses the exchange
-    * (more only where a packer flushed under memory pressure). The exchange
-    * is an ordinary one: AQE may coalesce it, and its hash partitioning on
-    * the keys is what a join on them downstream needs. */
-  def gatherBy(df: DataFrame, keys: Seq[String], dsCol: String, yCol: String): DataFrame = {
-    val B = org.apache.spark.sql.GraftExpressionBridge
-    val merged = B.column(graft.functions.SeriesGather(B.expression(col("_t")),
-      B.expression(col("_v")), B.expression(col("_nu"))).toAggregateExpression()).as("_s")
-    val packed = pack(df, keys, dsCol, yCol)
-    if (keys.isEmpty) packed.agg(merged)
-    else packed.repartition(keys.map(col): _*).groupBy(keys.map(col): _*).agg(merged)
-  }
+    * Plan shape: packer → key exchange → sort within partitions on the keys
+    * → streaming merge. The merge runs entirely above the exchange and holds
+    * one series at a time; the sort spills under memory pressure. The
+    * output is not known to Spark as hash-partitioned on the keys (the merge
+    * emits new columns): a consumer that joins on them joins the exchanged
+    * records before the merge instead ([[packBy]], [[merge]]). */
+  def gatherBy(df: DataFrame, keys: Seq[String], dsCol: String, yCol: String): DataFrame =
+    merge(packBy(df, keys, dsCol, yCol), keys)
 
   /** Gather each group into parallel arrays `(_ts, _vs, _nu)` sorted by time
     * (see [[gatherBy]]).
     *
-    * Plan shape: packer → group-key exchange → merge aggregate → round-robin
-    * `repartition(n)` → the caller's per-series kernel.
+    * Plan shape: packer → group-key exchange → sort → streaming merge →
+    * round-robin `repartition(n)` → the caller's per-series kernel.
     *
     * Partitioning: the gather output feeds PER-SERIES KERNELS (forecast
     * optimizers, stats, changepoints), a CPU-bound stage ([[CpuBound]]).
@@ -109,7 +129,7 @@ object Series {
     gatherSeries(df, Seq(groupCol), dsCol, yCol)
 
   /** [[gather]] on `keys`; no keys gathers the whole input into one series
-    * with no exchange at all. */
+    * behind a one-partition exchange, with no kernel exchange after it. */
   private def gatherSeries(df: DataFrame, keys: Seq[String], dsCol: String,
                            yCol: String): DataFrame = {
     val s = gatherBy(df, keys, dsCol, yCol)
@@ -137,7 +157,8 @@ object Series {
   /** The per-series kernel stage of every `_by` operator (reference
     * ts_macros.cpp:575-602: GROUP BY gather → per-group kernel → unnest).
     * Gathers each `keys` group as [[gather]] does, with its round-robin
-    * kernel exchange (no keys: the whole input is one series, no exchange),
+    * kernel exchange (no keys: the whole input is one series, no kernel
+    * exchange),
     * calls `kernel` once per series on primitive arrays and explodes the
     * rows it returns into `(keys…, _r)`.
     *

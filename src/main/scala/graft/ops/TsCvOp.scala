@@ -118,11 +118,13 @@ object TsCvOp {
     val testCounts = test.groupBy(col("fold_id"), col(groupCol))
       .agg(count(lit(1)).cast(IntegerType).as("_h"))
 
-    // no round-robin exchange here (unlike Series.gather): the join with
-    // testCounts needs the (fold_id, g) hash partitioning the gather
-    // already has, and a round-robin exchange would add a second one
-    val gathered = Series.gatherBy(train, Seq("fold_id", groupCol), dsCol, yCol)
-      .join(testCounts, Seq("fold_id", groupCol))
+    // no round-robin exchange here (unlike Series.gather): the test counts
+    // join the packed records on the (fold_id, g) hash partitioning of the
+    // gather's key exchange, before the merge, which carries `_h` as part
+    // of the key; joined after the merge, they would need an exchange more
+    val keys = Seq("fold_id", groupCol)
+    val gathered = Series.merge(
+      Series.packBy(train, keys, dsCol, yCol).join(testCounts, keys), keys)
 
     val fcUdf = udf((vs: Array[Double], nu: Array[Boolean], h: Int) => {
       try {

@@ -239,11 +239,35 @@ class MinHashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rn == rr)
   }
 
+  /** The UDF form [[TextOps.simHash]] replaced: its executable
+    * specification. */
+  private def simHashUdf(df: org.apache.spark.sql.DataFrame, textCol: String,
+                         shingleSize: Int = 5): org.apache.spark.sql.DataFrame = {
+    val simUdf = udf((text: String) => {
+      val hs = TextOps.shingleHashSet(if (text == null) "" else text, shingleSize)
+      val counts = new Array[Int](64)
+      var j = 0
+      while (j < hs.length) {
+        var b = 0
+        while (b < 64) {
+          if (((hs(j) >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
+          b += 1
+        }
+        j += 1
+      }
+      var sig = 0L
+      var b = 0
+      while (b < 64) { if (counts(b) > 0) sig |= (1L << b); b += 1 }
+      sig
+    })
+    df.withColumn("simhash", simUdf(col(textCol)))
+  }
+
   test("native simhash is bit-identical to the UDF") {
     val native = TextOps.simHash(fixture, "text")
       .select("id", "simhash")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val udf = TextOps.simHashUdf(fixture, "text")
+    val udf = simHashUdf(fixture, "text")
       .select("id", "simhash")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == udf)

@@ -30,6 +30,38 @@ class PqOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** Plain-Scala executable specs of the three native expressions. */
+  private def encodeRef(v: Array[Double], model: PqOps.PqModel): Array[Int] =
+    Array.tabulate(model.m) { s =>
+      val base = s * model.subDim
+      var best = 0
+      var bestD = Double.PositiveInfinity
+      for (c <- 0 until model.nCodes) {
+        var acc = 0.0
+        for (i <- 0 until model.subDim) {
+          val d = v(base + i) - model.cents(s)(c)(i)
+          acc += d * d
+        }
+        if (acc < bestD) { bestD = acc; best = c }
+      }
+      best
+    }
+
+  private def lutRef(q: Array[Double], model: PqOps.PqModel): Array[Double] =
+    Array.tabulate(model.m * model.nCodes) { j =>
+      val s = j / model.nCodes
+      val c = j % model.nCodes
+      var acc = 0.0
+      for (i <- 0 until model.subDim) acc += q(s * model.subDim + i) * model.cents(s)(c)(i)
+      acc
+    }
+
+  private def adcRef(codes: Array[Int], lut: Array[Double], m: Int, nCodes: Int): Double = {
+    var acc = 0.0
+    for (s <- 0 until m) acc += lut(s * nCodes + codes(s))
+    acc
+  }
+
   private def randVec(rng: scala.util.Random, dim: Int): Array[Double] =
     Array.fill(dim)(rng.nextDouble() * 2 - 1)
 
@@ -57,7 +89,7 @@ class PqOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val enc = PqOps.pqEncode(df, model, "v")
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](2)).toMap
     vecs.foreach { case (vid, v) =>
-      assert(enc(vid) === PqOps.encodeRef(v.toArray, model).toSeq,
+      assert(enc(vid) === encodeRef(v.toArray, model).toSeq,
         s"encode mismatch for $vid")
     }
     // LUT + ADC through a real plan
@@ -66,9 +98,9 @@ class PqOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       k = vecs.size)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     q.foreach { case (qid, qv) =>
-      val lut = PqOps.lutRef(qv.toArray, model)
+      val lut = lutRef(qv.toArray, model)
       vecs.foreach { case (vid, v) =>
-        val expected = BigDecimal(PqOps.adcRef(PqOps.encodeRef(v.toArray, model),
+        val expected = BigDecimal(adcRef(encodeRef(v.toArray, model),
           lut, m, nCodes)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         assert(math.abs(scored((qid, vid)) - expected) < 1e-12,
           s"adc mismatch for ($qid, $vid)")

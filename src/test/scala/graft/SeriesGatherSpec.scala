@@ -7,22 +7,32 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{SeriesBuffer, SeriesGather}
+import graft.functions.{SeriesBuffer, SeriesMerge}
 import graft.ops.Series
 
+object SeriesGatherSpec {
+  /** One generated row: a value for every key kind, then ds and y. */
+  final case class Row6(gi: Option[Int], gd: Option[Double], gf: Option[Float],
+                        gs: Option[String], ds: Option[Int], y: Option[Double])
+}
+
 /** Parity of the native series gather (the [[graft.functions.SeriesPack]]
-  * packer and the [[SeriesGather]] merge behind `Series.gather`) with the
-  * form it replaced,
-  * `sort_array(collect_list(struct(t, v, nu)))`, kept here as the executable
-  * specification. Element-for-element equality of `_ts/_vs/_nu` on
-  * generated groups with duplicate timestamps, null/NaN/±Inf y, single-point
-  * and all-null groups, null-ds rows, a null group key, and groups split
-  * across many input partitions; plus a 100k-point group, the buffer's
-  * serialized form, the map stage's sort fallback and DATE round trips in a
-  * non-UTC session.
-  * The one tie neither form orders — a +0.0 and a -0.0 at the same
-  * timestamp — is compared as a multiset. */
+  * packer and the [[SeriesMerge]] streaming merge behind `Series.gather`)
+  * with the form it replaced,
+  * `sort_array(collect_list(struct(t, v, nu)))` under `groupBy`, kept here
+  * as the executable specification. Element-for-element equality of
+  * `_ts/_vs/_nu` on generated groups with duplicate timestamps,
+  * null/NaN/±Inf y, single-point and all-null groups, null-ds rows, and
+  * groups split across many input partitions, keyed by nullable int,
+  * double, float, string and two-column keys (the float keys with 0.0,
+  * -0.0 and NaNs of several payloads, which `groupBy` puts in one group per
+  * value); plus a 100k-point group, one series spread over 64 input
+  * partitions, the keyless gather of an empty input, the packed record's
+  * byte form, the sort fallback in every stage and DATE round trips in a
+  * non-UTC session. The one tie neither form orders — a +0.0 and a -0.0 at
+  * the same timestamp — is compared as a multiset. */
 class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import SeriesGatherSpec.Row6
 
   private var spark: SparkSession = _
 
@@ -39,24 +49,48 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  /** The replaced gather, verbatim: the executable specification. */
-  private def referenceGather(df: DataFrame, groupCol: String, dsCol: String,
+  /** The replaced gather: the executable specification. */
+  private def referenceGather(df: DataFrame, keys: Seq[String], dsCol: String,
                               yCol: String): DataFrame = {
     val dsType = df.schema(dsCol).dataType
     df.filter(col(dsCol).isNotNull)
-      .groupBy(col(groupCol))
+      .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(
         Series.toMicros(col(dsCol), dsType).as("t"),
         coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
         col(yCol).isNull.as("nu")))).as("_s"))
-      .select(col(groupCol), col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
+      .select(keys.map(col) ++ Seq(col("_s.t").as("_ts"), col("_s.v").as("_vs"),
+        col("_s.nu").as("_nu")): _*)
   }
+
+  /** `Series.gather` on one key, `Series.gatherBy` on several. */
+  private def gathered(df: DataFrame, keys: Seq[String]): DataFrame =
+    if (keys.length == 1) Series.gather(df, keys.head, "ds", "y")
+    else Series.gatherBy(df, keys, "ds", "y").select(keys.map(col) ++ Seq(
+      col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu")): _*)
 
   private type Gathered = (Seq[Long], Seq[Double], Seq[Boolean])
 
-  private def snap(df: DataFrame): Map[Any, Gathered] = df.collect().map { r =>
-    r.get(0) -> ((r.getSeq[Long](1), r.getSeq[Double](2), r.getSeq[Boolean](3)))
-  }.toMap
+  /** A key value as its bits, so that groups differing only in the sign of
+    * a zero or the payload of a NaN stay apart. */
+  private def keyBits(v: Any): Any = v match {
+    case d: Double => ("double", java.lang.Double.doubleToRawLongBits(d))
+    case f: Float => ("float", java.lang.Float.floatToRawIntBits(f))
+    case other => other
+  }
+
+  /** Rows by the bits of their `nKeys` leading key columns; a key emitted
+    * twice fails. */
+  private def snap(df: DataFrame, nKeys: Int = 1): Map[Any, Gathered] = {
+    val rows = df.collect().toSeq.map { r =>
+      val k = (0 until nKeys).map(i => keyBits(r.get(i)))
+      (if (nKeys == 1) k.head else k) ->
+        ((r.getSeq[Long](nKeys), r.getSeq[Double](nKeys + 1), r.getSeq[Boolean](nKeys + 2)))
+    }
+    val m = rows.toMap
+    assert(m.size == rows.size, s"a group was emitted more than once: ${rows.map(_._1)}")
+    m
+  }
 
   /** Element-for-element on (t, nu, v) with canonical NaN bits, except that
     * ±0.0 compare equal position-wise and their signs per (t, nu) are
@@ -90,28 +124,93 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
     Gen.frequency(9 -> Gen.choose(-3, 25).map(Some(_)), 1 -> Gen.const(None))
 
   // ~10% null group keys: null is a group of its own, as in groupBy
-  private val gGen: Gen[Option[Int]] =
-    Gen.frequency(9 -> Gen.choose(0, 7).map(Some(_)), 1 -> Gen.const(None))
+  private def nullable[T](g: Gen[T]): Gen[Option[T]] =
+    Gen.frequency(9 -> g.map(Some(_)), 1 -> Gen.const(None))
+
+  // signed zeros and NaNs of several payloads: one group each per groupBy
+  private val doubleKeys = Seq(0.0, -0.0, Double.NaN,
+    java.lang.Double.longBitsToDouble(0x7ff8000000000123L),
+    java.lang.Double.longBitsToDouble(0xfff0000000000001L), 1.5, -2.0)
+  private val floatKeys = Seq(0.0f, -0.0f, Float.NaN,
+    java.lang.Float.intBitsToFloat(0x7fc00123), java.lang.Float.intBitsToFloat(0xff800001), 1.5f)
+
+  private val rowGen: Gen[Row6] = for {
+    gi <- nullable(Gen.choose(0, 7))
+    gd <- nullable(Gen.oneOf(doubleKeys))
+    gf <- nullable(Gen.oneOf(floatKeys))
+    gs <- nullable(Gen.oneOf("a", "b", "", "ä", "a key longer than one word"))
+    ds <- dsGen
+    y <- yGen
+  } yield Row6(gi, gd, gf, gs, ds, y)
+
+  /** The key columns of each generated case. */
+  private val keyKinds = Seq(Seq("gi"), Seq("gd"), Seq("gf"), Seq("gs"), Seq("gi", "gs"))
 
   // rows come in generated order, so every group arrives out of time order
   private val caseGen = for {
     n <- Gen.choose(0, 250)
-    rows <- Gen.listOfN(n, for { g <- gGen; ds <- dsGen; y <- yGen } yield (g, ds, y))
+    rows <- Gen.listOfN(n, rowGen)
     parts <- Gen.choose(1, 8)
-  } yield (rows, parts)
+    keys <- Gen.oneOf(keyKinds)
+  } yield (rows, parts, keys)
 
   test("Series.gather equals sort_array(collect_list(struct)) on generated hostile groups") {
     val sp = spark
     import sp.implicits._
-    val prop = Prop.forAll(caseGen) { case (rows, parts) =>
+    val prop = Prop.forAll(caseGen) { case (rows, parts, keys) =>
       // round-robin input partitions split every group across many of them
-      val df = rows.toDF("g", "ds", "y").repartition(parts)
-      val d = diff(snap(Series.gather(df, "g", "ds", "y")), snap(referenceGather(df, "g", "ds", "y")))
-      d.foreach(m => println(s"[series-gather] $m"))
+      val df = rows.toDF().select((keys :+ "ds" :+ "y").map(col): _*).repartition(parts)
+      val d = diff(snap(gathered(df, keys), keys.length),
+        snap(referenceGather(df, keys, "ds", "y"), keys.length))
+      d.foreach(m => println(s"[series-gather] $keys: $m"))
       d.isEmpty
     }
-    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop)
     assert(r.passed, s"$r")
+  }
+
+  test("float keys group as groupBy does: -0.0 is 0.0 and every NaN is one NaN") {
+    val sp = spark
+    import sp.implicits._
+    val df = doubleKeys.take(4).zipWithIndex.map { case (k, i) => (k, i, i.toDouble) }
+      .toDF("g", "ds", "y").repartition(4)
+    val got = snap(Series.gather(df, "g", "ds", "y"))
+    assert(got.keySet == Set(keyBits(0.0), keyBits(Double.NaN)), s"${got.keySet}")
+    assert(diff(got, snap(referenceGather(df, Seq("g"), "ds", "y"))).isEmpty)
+    assert(got(keyBits(0.0))._1 == Seq(0L, 1L) && got(keyBits(Double.NaN))._1 == Seq(2L, 3L))
+  }
+
+  test("one series spread over 64 input partitions matches the reference") {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(5)
+    val rows = rnd.shuffle((0 until 3000).toVector).map { i =>
+      (if (i % 10 == 0) "b" else "a", i % 1200, if (i % 31 == 0) None else Some((i % 17) - 8.0))
+    }
+    val df = rows.toDF("g", "ds", "y").repartition(64)
+    val got = snap(Series.gather(df, "g", "ds", "y"))
+    assert(got("a")._1.length == 2700 && got("b")._1.length == 300)
+    assert(diff(got, snap(referenceGather(df, Seq("g"), "ds", "y"))).isEmpty)
+  }
+
+  test("the keyless gather of an empty input is one empty series, as the aggregate gave") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.sql.Row
+    val local = Seq.empty[(Int, Option[Double])].toDF("ds", "y")
+    val noPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], local.schema)
+    val filtered = Seq((1, Some(1.0))).toDF("ds", "y").filter(col("ds") > 5)
+    for ((name, df) <- Seq("local" -> local, "no partitions" -> noPartitions, "filtered" -> filtered)) {
+      val got = Series.gatherBy(df, Nil, "ds", "y").collect()
+      assert(got.length == 1, s"$name: ${got.toSeq}")
+      val s = got(0).getStruct(0)
+      assert(s.getSeq[Long](0).isEmpty && s.getSeq[Double](1).isEmpty && s.getSeq[Boolean](2).isEmpty,
+        s"$name: $s")
+      // the aggregate it replaced: one row of empty arrays
+      val ref = df.agg(sort_array(collect_list(struct(col("ds").cast(LongType).as("t"),
+        col("y").as("v"), col("y").isNull.as("nu")))).as("_s")).collect()
+      assert(ref.length == 1 && ref(0).getSeq[Row](0).isEmpty)
+    }
   }
 
   test("single-point, all-null-y and null-ds-only groups match the reference") {
@@ -124,7 +223,7 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4, Some(2), Some(1.0)), (4, None, Some(9.0)), (4, Some(1), Some(-0.0))
     ).toDF("g", "ds", "y").repartition(3)
     val got = snap(Series.gather(df, "g", "ds", "y"))
-    assert(diff(got, snap(referenceGather(df, "g", "ds", "y"))).isEmpty)
+    assert(diff(got, snap(referenceGather(df, Seq("g"), "ds", "y"))).isEmpty)
     assert(got.keySet == Set(1, 2, 4))
     assert(got(2)._1 == Seq(0L, 1L, 1L) && got(2)._3 == Seq(true, true, true))
     assert(got(2)._2.forall(_.isNaN))
@@ -145,27 +244,29 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
       .repartition(8)
     val got = snap(Series.gather(df, "g", "ds", "y"))
     assert(got(1L)._1.length == n)
-    assert(diff(got, snap(referenceGather(df, "g", "ds", "y"))).isEmpty)
+    assert(diff(got, snap(referenceGather(df, Seq("g"), "ds", "y"))).isEmpty)
   }
 
-  test("the aggregation buffer survives a serialize/deserialize round trip") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val agg = SeriesGather(Literal(0L), Literal(0.0), Literal(false))
+  test("a packed record survives the pack/merge byte round trip") {
     val rnd = new scala.util.Random(11)
     for (n <- Seq(0, 1, 7, 8, 9, 64, 1001)) {
-      val b = agg.createAggregationBuffer()
+      val b = SeriesBuffer.empty()
       (0 until n).foreach { i =>
-        b.append(rnd.nextLong(), if (i % 3 == 0) Double.NaN else rnd.nextGaussian(), rnd.nextBoolean())
+        b.append(rnd.nextLong(), if (i % 3 == 0) java.lang.Double.longBitsToDouble(
+          0x7ff8000000000000L | rnd.nextInt(1000)) else rnd.nextGaussian(), rnd.nextBoolean())
       }
-      val back: SeriesBuffer = agg.deserialize(agg.serialize(b))
-      assert(back.size == n)
-      assert(back.ts.take(n).sameElements(b.ts.take(n)), s"n=$n ts")
-      assert(back.vs.take(n).map(java.lang.Double.doubleToRawLongBits)
-        .sameElements(b.vs.take(n).map(java.lang.Double.doubleToRawLongBits)), s"n=$n vs")
-      assert(back.nu.take(n).sameElements(b.nu.take(n)), s"n=$n nu")
-      // a deserialized buffer keeps growing
-      back.append(1L, 1.0, true)
-      assert(back.size == n + 1 && back.nu(n))
+      val p = b.toPacked
+      assert(p.length == 4 + 16 * n + (n + 7) / 8, s"n=$n: ${p.length} bytes")
+      // appended after an element already held, as the merge appends a
+      // series' second record
+      val back = SeriesBuffer.empty()
+      back.append(-1L, -0.0, true)
+      back.appendPacked(p)
+      assert(back.size == n + 1)
+      assert(back.ts.take(n + 1).sameElements(-1L +: b.ts.take(n)), s"n=$n ts")
+      assert(back.vs.take(n + 1).map(java.lang.Double.doubleToRawLongBits)
+        .sameElements((-0.0 +: b.vs.take(n)).map(java.lang.Double.doubleToRawLongBits)), s"n=$n vs")
+      assert(back.nu.take(n + 1).sameElements(true +: b.nu.take(n)), s"n=$n nu")
     }
   }
 
@@ -177,49 +278,35 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!f.nullable && !f.dataType.asInstanceOf[ArrayType].containsNull, s"$f")
     }
     val B = org.apache.spark.sql.GraftExpressionBridge
-    val bad = B.column(SeriesGather(B.expression(col("ds")), B.expression(col("y")),
-      B.expression(col("y").isNull)).toAggregateExpression())
-    val e = intercept[org.apache.spark.sql.AnalysisException](df.groupBy("g").agg(bad).schema)
-    assert(e.getMessage.contains("series_gather"), e.getMessage)
+    val bad = B.column(SeriesMerge(Seq(B.expression(col("g")), B.expression(col("y")))))
+    val e = intercept[org.apache.spark.sql.AnalysisException](df.select(bad).schema)
+    assert(e.getMessage.contains("series_merge"), e.getMessage)
   }
 
-  test("the gather's map stage never falls back to a sort, past 128 series per input partition") {
-    import org.apache.spark.sql.execution.SparkPlan
+  test("no stage of the gather falls back to a sort, past 128 series per task") {
+    import org.apache.spark.sql.execution.{GenerateExec, SortExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val sp = spark
     import sp.implicits._
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // 1,000 series of 6 points, round-robined over 2 input partitions:
-      // every input partition holds all 1,000 series, far past the object
-      // hash aggregate's 128-key sort fallback
+      // every input partition, and each of the 4 reduce partitions, holds
+      // far more series than an object hash aggregate's 128-key threshold
       val df = (0 until 6000).map(i => (i % 1000, i / 1000, (i % 13).toDouble))
         .toDF("g", "ds", "y").repartition(2)
       val gathered = Series.gather(df, "g", "ds", "y")
       // collect runs this plan; count() would plan and run another
       assert(gathered.collect().length == 1000)
       val plan = gathered.queryExecution.executedPlan
-      // the map stage of the group-key exchange: everything under it down
-      // to the input exchange
-      def stage(p: SparkPlan): Seq[SparkPlan] = p match {
-        case _: Exchange => Nil
-        case other => other +: other.children.flatMap(stage)
-      }
-      val keyExchange = plan.collect {
-        case s: ShuffleExchangeExec if (s.outputPartitioning match {
-          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("g")
-          case _ => false
-        }) => s
-      }
-      assert(keyExchange.length == 1, s"one exchange keyed on g:\n$plan")
-      val fellBack = stage(keyExchange.head.child).collect { case a: BaseAggregateExec =>
+      val fellBack = plan.collect { case a: BaseAggregateExec =>
         a.nodeName -> a.metrics.get("numTasksFallBacked").map(_.value).getOrElse(0L)
       }
-      assert(fellBack.forall(_._2 == 0L),
-        s"map-side aggregates fell back to a sort: $fellBack\n$plan")
+      assert(fellBack.forall(_._2 == 0L), s"aggregates fell back to a sort: $fellBack\n$plan")
+      assert(plan.collect { case g: GenerateExec if g.generator.isInstanceOf[SeriesMerge] => g }
+        .length == 1 && plan.collect { case s: SortExec => s }.length == 1,
+        s"the series meet in one sort and one merge:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
@@ -256,7 +343,7 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
-  test("the single-series forecast gathers through the same aggregate") {
+  test("the single-series forecast gathers through the same merge") {
     val sp = spark
     import sp.implicits._
     val df = (0 until 40).map(i => (i, if (i == 7) None else Some((i % 7).toDouble))).reverse
@@ -268,10 +355,10 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 }
 
-/** The packer's flush path: in a session whose execution memory is a few
-  * MB, a task's packer is refused a grant, emits what it holds and starts
-  * again, so one series crosses the exchange as several packed records; the
-  * gather still equals the reference form. */
+/** Memory pressure: in a session whose execution memory is a few MB, a
+  * task's packer is refused a grant, emits what it holds and starts again,
+  * so one series crosses the exchange as several packed records; and the
+  * sort under the merge spills. The gather is the same either way. */
 class SeriesPackFlushSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -292,27 +379,46 @@ class SeriesPackFlushSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  // 300 series x 2,000 points in ONE input partition: ~10 MB of buffers
+  private def input: DataFrame = spark.range(0, 600000, 1, 1)
+    .select((col("id") % 300).as("g"), (col("id") / 300).cast(IntegerType).as("ds"),
+      when(col("id") % 101 === 0, lit(null)).otherwise((col("id") % 17).cast(DoubleType)).as("y"))
+
+  /** Each series has one point per ds, so time order is ds order. */
+  private val want = (0L until 300L).map { g =>
+    val ids = (0L until 2000L).map(k => g + 300 * k)
+    (g, ids.map(_ / 300), ids.map(id => if (id % 101 == 0) Double.NaN else (id % 17).toDouble)
+      .map(java.lang.Double.doubleToLongBits), ids.map(_ % 101 == 0))
+  }
+
+  private def bits(gathered: DataFrame) = gathered.collect().map { r =>
+    (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2).map(java.lang.Double.doubleToLongBits),
+      r.getSeq[Boolean](3))
+  }.sortBy(_._1).toSeq
+
   test("a refused grant flushes the packer; the gather is unchanged") {
-    // 300 series x 2,000 points in ONE input partition: ~10 MB of buffers
-    val df = spark.range(0, 600000, 1, 1)
-      .select((col("id") % 300).as("g"), (col("id") / 300).cast(IntegerType).as("ds"),
-        when(col("id") % 101 === 0, lit(null)).otherwise((col("id") % 17).cast(DoubleType)).as("y"))
+    val df = input
     val packed = Series.pack(df, Seq("g"), "ds", "y").groupBy("g").count()
     val perKey = packed.agg(min(col("count")), max(col("count"))).head()
     assert(packed.count() == 300)
     assert(perKey.getLong(1) > 1L, s"no flush: one packed record per series ($perKey)")
-    val got = Series.gather(df, "g", "ds", "y")
-      .select(col("g"), col("_ts"), col("_vs"), col("_nu"))
-    // each series has one point per ds, so time order is ds order
-    val want = (0L until 300L).map { g =>
-      val ids = (0L until 2000L).map(k => g + 300 * k)
-      (g, ids.map(_ / 300), ids.map(id => if (id % 101 == 0) Double.NaN else (id % 17).toDouble)
-        .map(java.lang.Double.doubleToLongBits), ids.map(_ % 101 == 0))
-    }
-    val bits = got.collect().map { r =>
-      (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2).map(java.lang.Double.doubleToLongBits),
-        r.getSeq[Boolean](3))
-    }.sortBy(_._1).toSeq
-    assert(bits == want)
+    assert(bits(Series.gather(df, "g", "ds", "y")) == want)
+  }
+
+  test("the merge's sort spills under memory pressure; the gather is unchanged") {
+    import org.apache.spark.sql.execution.SortExec
+    val conf = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(k => k -> spark.conf.get(k))
+    // one reduce task takes every packed record: far more than its memory
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try {
+      val gathered = Series.gather(input, "g", "ds", "y")
+      assert(bits(gathered) == want)
+      val spilled = gathered.queryExecution.executedPlan.collect { case s: SortExec =>
+        s.metrics("spillSize").value
+      }
+      assert(spilled.length == 1 && spilled.head > 0L, s"the sort did not spill: $spilled")
+    } finally conf.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

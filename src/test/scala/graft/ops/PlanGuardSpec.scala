@@ -1034,8 +1034,9 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"the text column must prune out of every scan:\n$plan")
   }
 
-  // the partial aggregate packs each series before the group-key exchange,
-  // the kernel reads a count-pinned round-robin exchange, and no cartesian
+  // the packer packs each series before the group-key exchange, one sort and
+  // the streaming merge bring a series' records together above it, the
+  // kernel reads a count-pinned round-robin exchange, and no cartesian
   test("flagship forecast: packed map-side gather, REPARTITION_BY_NUM kernel input") {
     val df = graft.ops.TsForecastOp.forecastBy(
       events
@@ -1047,10 +1048,9 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.queryExecution.executedPlan
     assert(!plan.toString.contains("CartesianProduct"),
       "per-series forecasting must never cross-join")
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec,
-      SparkPlan, WholeStageCodegenExec}
+      SortExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     def strip(p: SparkPlan): SparkPlan = p match {
@@ -1060,8 +1060,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the group-key exchange carries the PACKED records of the map-side
     // packer — one per series and input partition — never the raw
-    // (g, ds, y) rows, and the map stage holds no aggregate that could fall
-    // back to a sort
+    // (g, ds, y) rows
     val keyExchanges = plan.collect {
       case s: ShuffleExchangeExec if (s.outputPartitioning match {
         case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("g")
@@ -1069,27 +1068,32 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       }) => s
     }
     assert(keyExchanges.length == 1, s"expected one exchange keyed on g alone:\n$plan")
-    strip(keyExchanges.head.child) match {
-      case g: GenerateExec =>
-        assert(g.generator.isInstanceOf[graft.functions.SeriesPack],
-          s"the key exchange must sit on the series packer:\n$g")
+    val packer = strip(keyExchanges.head.child) match {
+      case g: GenerateExec if g.generator.isInstanceOf[graft.functions.SeriesPack] => g
       case other => fail(s"raw rows cross the group-key exchange:\n$other")
     }
+    // above it: one sort within partitions, then the streaming merge
     val merges = plan.collect {
-      case a: BaseAggregateExec if a.aggregateExpressions.exists(
-        _.aggregateFunction.isInstanceOf[graft.functions.SeriesGather]) => a
+      case g: GenerateExec if g.generator.isInstanceOf[graft.functions.SeriesMerge] => g
     }
-    assert(merges.map(_.aggregateExpressions.head.mode).toSet == Set(Partial, Final) &&
-      merges.exists(m => m.aggregateExpressions.head.mode == Partial &&
-        (strip(m.child) eq keyExchanges.head)),
-      s"the merge aggregate runs entirely above the key exchange:\n$plan")
+    assert(merges.length == 1 && (strip(merges.head.child) match {
+      case s: SortExec => !s.global && (strip(s.child) eq keyExchanges.head)
+      case _ => false
+    }), s"the merge must read a sort within partitions of the key exchange:\n$plan")
+    // no aggregate anywhere in the gather: every aggregate of the plan is
+    // the input's own, below the packer
+    val inputAggs = packer.child.collect { case a: BaseAggregateExec => a }
+    val aggs = plan.collect { case a: BaseAggregateExec => a }
+    assert(aggs.forall(a => inputAggs.exists(_ eq a)),
+      s"the gather must not aggregate (an object hash aggregate falls back to a sort):\n$plan")
     // r11: the kernel must read from an exchange with an EXPLICIT partition
     // count (REPARTITION_BY_NUM) — AQE's byte-based coalescing otherwise folds
     // the tiny gathered-series table to ONE partition and the whole
     // per-series kernel stage runs on a single core (measured: the AutoETS
     // bench stage at 2.2 s wall ≈ its 2.3 s single-thread kernel CPU)
     val kernel = plan.collect {
-      case g: GenerateExec if !g.generator.isInstanceOf[graft.functions.SeriesPack] => g
+      case g: GenerateExec if !g.generator.isInstanceOf[graft.functions.SeriesPack] &&
+        !g.generator.isInstanceOf[graft.functions.SeriesMerge] => g
     }
     assert(kernel.length == 1, s"expected one kernel explode:\n$plan")
     def exchangeBelow(p: SparkPlan): Option[ShuffleExchangeExec] = strip(p) match {
@@ -1102,6 +1106,27 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"the kernel's input exchange must pin its partition count against AQE coalescing:\n$plan")
   }
 
+  test("gather users keep their exchange counts: keyed and keyless kernel stages, cvForecastBy") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val sp = spark
+    import sp.implicits._
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.executedPlan.collect { case s: ShuffleExchangeExec => s }.length
+    val series = (0 until 60).map(i => (s"s${i % 3}", i / 3, (i % 7).toDouble)).toDF("g", "ds", "y")
+    // the key exchange and the kernel's round-robin exchange
+    assert(exchanges(graft.ops.TsForecastOp.forecastBy(series, "g", "ds", "y", "Naive", 3, "1d")) == 2)
+    // one exchange into the one partition the whole input is gathered in
+    assert(exchanges(graft.ops.TsForecastOp.forecastSingle(
+      series.filter(col("g") === "s0").drop("g"), "ds", "y", "Naive", 3)) == 1)
+    // the test counts, the gather's key exchange (the counts join the
+    // packed records on it; joined after the merge they would need one
+    // more), the test rows' step window and the two sides of the step join
+    val folds = series.withColumn("fold_id", lit(1L))
+      .withColumn("split", when(col("ds") < 15, "train").otherwise("test"))
+    assert(exchanges(graft.ops.TsCvOp.cvForecastBy(folds, "g", "ds", "y", "Naive")) == 5)
+  }
+
   test("per-series kernel stage: each of the 18 mapKernel operators evaluates its kernel in one operator, on a REPARTITION_BY_NUM exchange") {
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan,
@@ -1110,7 +1135,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.col
     // a filter on a named kernel column is pushed below the projection that
     // computes it, so the kernel runs in both operators: in the merge
-    // aggregate's stage (which AQE may fold onto one task) and again after
+    // stage (which AQE may fold onto one task) and again after
     // the round-robin exchange
     val df = (0 until 3).map(i => KernelStageOps.healthy(spark, s"s$i")).reduce(_ unionByName _)
     def readsRepartitionByNum(p: SparkPlan): Boolean = p match {
