@@ -11,15 +11,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, JoinedR
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
-/** Map-side series packer: folds an input partition's `(keys, t, v, nu)`
-  * rows into ONE packed `(keys, p: binary)` record per key, without a sort.
+/** Map-side series packer: folds an input partition's
+  * `(keys, t, v_1..v_width, nu)` rows into ONE packed `(keys, p: binary)`
+  * record per key, without a sort.
   *
-  * Children are the key expressions followed by `t: bigint`, `v: double` and
-  * `nu: boolean`. Each row is appended, in arrival order, to its key's
-  * [[SeriesBuffer]] in a hash map; the map is emitted when the partition
-  * ends (`terminate`), each buffer as one packed record (`n, t[n], v[n]`
-  * and the `nu` flags as bits, see [[SeriesBuffer]]). A row with a null `t`
-  * is skipped, a null `v` reads as NaN and a null `nu` as true.
+  * Children are the key expressions followed by `t: bigint`, `width` value
+  * lanes `v_j: double` and `nu: boolean`. Each row is appended, in arrival
+  * order, to its key's [[SeriesBuffer]] in a hash map; the map is emitted
+  * when the partition ends (`terminate`), each buffer as one packed record
+  * (`n, t[n], v[n * width]` and the `nu` flags as bits, see
+  * [[SeriesBuffer]]). A row with a null `t` is skipped, a null `v_j` reads
+  * as NaN and a null `nu` as true.
   * [[SeriesMerge]] merges the packed records per key above the key exchange.
   *
   * Keys are packed in the form Spark's `groupBy` compares them in: float and
@@ -39,18 +41,19 @@ import org.apache.spark.sql.types._
   * flush is legal because the records are partial: a key may then cross the
   * exchange as more than one record, which the merge appends. It writes no
   * spill file and never sorts. */
-case class SeriesPack(children: Seq[Expression]) extends Generator with CodegenFallback {
+case class SeriesPack(children: Seq[Expression], width: Int) extends Generator with CodegenFallback {
 
-  private def keys: Seq[Expression] = children.dropRight(3)
-  private def t: Expression = children(children.length - 3)
-  private def v: Expression = children(children.length - 2)
+  private def keys: Seq[Expression] = children.dropRight(width + 2)
+  private def t: Expression = children(children.length - width - 2)
+  @transient private lazy val lanes = children.takeRight(width + 1).init.toArray
   private def nu: Expression = children.last
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val got = children.takeRight(3).map(_.dataType)
-    if (got == Seq(LongType, DoubleType, BooleanType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (keys..., bigint, double, boolean) inputs, got ${got.map(_.sql).mkString(", ")}")
+    val got = children.takeRight(width + 2).map(_.dataType)
+    if (width >= 1 && got == (LongType +: Seq.fill(width)(DoubleType) :+ BooleanType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects (keys..., bigint, $width x double, " +
+      s"boolean) inputs, got ${got.map(_.sql).mkString(", ")}")
   }
 
   override def elementSchema: StructType = StructType(
@@ -64,17 +67,22 @@ case class SeriesPack(children: Seq[Expression]) extends Generator with CodegenF
   @transient private lazy val keyOf =
     UnsafeProjection.create(keys.map(GraftExpressionBridge.normalizeFloats))
   @transient private var packer: SeriesPacker = _
+  /** The current row's lanes. */
+  @transient private lazy val row = new Array[Double](width)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val tv = t.eval(input)
     if (tv == null) Nil
     else {
-      if (packer == null) packer = SeriesPacker.forTask()
-      val vv = v.eval(input)
+      if (packer == null) packer = SeriesPacker.forTask(width)
+      var j = 0
+      while (j < width) {
+        val vv = lanes(j).eval(input)
+        row(j) = if (vv == null) Double.NaN else vv.asInstanceOf[Double]
+        j += 1
+      }
       val nv = nu.eval(input)
-      packer.add(keyOf(input), tv.asInstanceOf[Long],
-        if (vv == null) Double.NaN else vv.asInstanceOf[Double],
-        nv == null || nv.asInstanceOf[Boolean])
+      packer.add(keyOf(input), tv.asInstanceOf[Long], row, nv == null || nv.asInstanceOf[Boolean])
     }
   }
 
@@ -85,9 +93,9 @@ case class SeriesPack(children: Seq[Expression]) extends Generator with CodegenF
     copy(children = newChildren)
 }
 
-/** One task's open hash map of series buffers, accounted as execution
-  * memory. */
-private[functions] final class SeriesPacker(tmm: TaskMemoryManager)
+/** One task's open hash map of series buffers of `width` lanes, accounted
+  * as execution memory. */
+private[functions] final class SeriesPacker(tmm: TaskMemoryManager, width: Int)
     extends MemoryConsumer(tmm, MemoryMode.ON_HEAP) {
 
   import SeriesPacker._
@@ -95,20 +103,22 @@ private[functions] final class SeriesPacker(tmm: TaskMemoryManager)
   private var groups = new java.util.HashMap[UnsafeRow, SeriesBuffer]()
   /** Estimated bytes the map holds; `used` is the grant. */
   private var held = 0L
+  /** Bytes per element: a long, the lanes' doubles and a boolean. */
+  private val slotBytes = 9L + 8L * width
 
   /** Append one row to its key's buffer. Returns the flushed records when
     * the grant for the grown buffers is refused, else nothing. */
-  def add(key: UnsafeRow, t: Long, v: Double, nu: Boolean): IterableOnce[InternalRow] = {
+  def add(key: UnsafeRow, t: Long, v: Array[Double], nu: Boolean): IterableOnce[InternalRow] = {
     var b = groups.get(key)
     if (b == null) {
-      b = SeriesBuffer.empty()
+      b = SeriesBuffer.empty(width)
       val k = key.copy()
       groups.put(k, b)
-      held += GroupBytes + k.getSizeInBytes + b.ts.length.toLong * SlotBytes
+      held += GroupBytes + k.getSizeInBytes + b.ts.length * slotBytes
     }
     val cap = b.ts.length
     b.append(t, v, nu)
-    if (b.ts.length != cap) held += (b.ts.length - cap).toLong * SlotBytes
+    if (b.ts.length != cap) held += (b.ts.length - cap) * slotBytes
     if (held <= used) Nil
     else {
       val want = math.max(held - used, Chunk)
@@ -133,8 +143,6 @@ private[functions] final class SeriesPacker(tmm: TaskMemoryManager)
 }
 
 private[functions] object SeriesPacker {
-  /** Bytes per element: a long, a double and a boolean. */
-  val SlotBytes = 17L
   /** Per-key overhead besides the key bytes: map entry, key row, buffer and
     * three array headers. */
   val GroupBytes = 160L
@@ -143,9 +151,9 @@ private[functions] object SeriesPacker {
 
   /** A packer for the running task; its grant is returned when the task
     * ends, also when the task stops before the partition's end. */
-  def forTask(): SeriesPacker = {
+  def forTask(width: Int): SeriesPacker = {
     val ctx = TaskContext.get()
-    val p = new SeriesPacker(GraftExpressionBridge.taskMemoryManager(ctx))
+    val p = new SeriesPacker(GraftExpressionBridge.taskMemoryManager(ctx), width)
     ctx.addTaskCompletionListener[Unit](_ => p.freeMemory(p.getUsed))
     p
   }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Data Selection with Importance Resampling (DSIR — Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling",
@@ -37,19 +37,6 @@ object DsirOps {
 
   private val P = SampleOps.P
 
-  /** Rolling hash of a token string: fold `h ← (131·h + ord(char)) mod P`
-    * from `h₀ = seed` — identical to [[TextOps.hashEmbed]]'s tokHash, so
-    * DuckDB replays it with list_reduce. */
-  private def tokHash(tok: Column, seed: Long): Column = {
-    val s0 = ((seed % P) + P) % P
-    aggregate(
-      transform(sequence(lit(1), length(tok)), i => ascii(tok.substr(i, lit(1))).cast(LongType)),
-      lit(s0), (acc, c) => (acc * lit(131L) + c) % lit(P))
-  }
-
-  private def toks(textCol: Column): Column =
-    filter(split(lower(trim(textCol)), "[ \\t\\n\\r\\f]+"), t => length(t) > 0)
-
   /** Array of feature bucket ids for one document: hashed unigrams plus
     * hashed bigrams (adjacent pairs joined by one space — so the bigram
     * hash is the rolling hash of the exact string `"t1 t2"`). One-pass
@@ -60,23 +47,6 @@ object DsirOps {
       graft.functions.NgramBucketHashes(
         org.apache.spark.sql.GraftExpressionBridge.expression(lower(trim(textCol))),
         numBuckets, seed))
-
-  /** The declarative composition the native expression replaced — kept as
-    * the bit-parity reference for DsirFeatureParitySpec (it IS the form the
-    * DuckDB oracle replays). */
-  private[graft] def featureBucketsReference(textCol: Column, numBuckets: Int,
-                                           seed: Long): Column = {
-    val ts = toks(textCol)
-    val unis = transform(ts, t => pmod(tokHash(t, seed), lit(numBuckets.toLong)))
-    // size-1 bigrams "t_i t_{i+1}" (0-based get; the when-guard keeps
-    // sequence() from producing a descending range on short docs)
-    val bis = when(size(ts) >= 2,
-      transform(sequence(lit(1), size(ts) - 1), i =>
-        pmod(tokHash(concat(get(ts, i - 1), lit(" "), get(ts, i)), seed),
-          lit(numBuckets.toLong))))
-      .otherwise(array().cast(ArrayType(LongType)))
-    concat(unis, bis)
-  }
 
   /** (bucket, cnt) counts over a corpus — key space bounded by numBuckets,
     * map-side combined. */

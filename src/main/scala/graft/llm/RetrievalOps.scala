@@ -28,13 +28,13 @@ import org.apache.spark.sql.types.LongType
   */
 object RetrievalOps {
 
-  private def toks(textCol: Column): Column =
+  private[graft] def toks(textCol: Column): Column =
     filter(split(lower(trim(textCol)), "[ \\t\\n\\r\\f]+"), t => length(t) > 0)
 
   /** The top-k heap keys on a LONG doc id; a non-integral id (e.g. string
     * URLs) would silently cast to NULL and collapse every document onto one
     * key — fail fast instead (the k/k1/b require discipline). */
-  private def requireIntegralId(name: String,
+  private[graft] def requireIntegralId(name: String,
                                 t: org.apache.spark.sql.types.DataType): Unit =
     require(Seq(org.apache.spark.sql.types.ByteType,
         org.apache.spark.sql.types.ShortType,
@@ -43,7 +43,7 @@ object RetrievalOps {
         s"bounded top-k heap as LONG), got $t — hash or dense-rank string " +
         "ids to LONG first")
 
-  private def topKAgg(vid: Column, sim: Column, k: Int): Column =
+  private[graft] def topKAgg(vid: Column, sim: Column, k: Int): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       graft.functions.TopKByScore(
         org.apache.spark.sql.GraftExpressionBridge.expression(vid),
@@ -55,7 +55,7 @@ object RetrievalOps {
     * `explode → groupBy(doc, term)` shuffle whose only purpose was
     * counting within single documents. `_dl` (total tokens) folds over the
     * ≤-distinct-terms entry array. */
-  private def docTermTf(df: DataFrame, docIdCol: String, textCol: String): DataFrame = {
+  private[graft] def docTermTf(df: DataFrame, docIdCol: String, textCol: String): DataFrame = {
     val entries = org.apache.spark.sql.GraftExpressionBridge.column(
       graft.functions.TokenTfEntries(
         org.apache.spark.sql.GraftExpressionBridge.expression(
@@ -134,42 +134,6 @@ object RetrievalOps {
       .withColumn("_idf",
         log(lit(1.0) + (col("_n") - col("_df") + lit(0.5)) / (col("_df") + lit(0.5))))
       .select(col("_term"), col("_qids"), col("_idf"), col("_avgdl"))
-  }
-
-  /** The broadcast-join form of [[bm25TopK]] — kept as the executable
-    * specification of the scoring semantics (the MinHashParity /
-    * bigramScoreWithModelJoins discipline): query-vocab-hit tf rows probe
-    * ONE per-term qmeta broadcast, explode to their qid fan-out, and reduce
-    * through a (qid, doc)-keyed DECIMAL-free double sum rounded at 6
-    * decimals. Bit-parity with the production per-doc scorer is pinned in
-    * DsirRetrievalSpec. */
-  private[graft] def bm25TopKJoins(corpus: DataFrame, docIdCol: String,
-                                   textCol: String, queries: DataFrame,
-                                   qidCol: String, qtextCol: String, k: Int,
-                                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val docIdType = corpus.schema(docIdCol).dataType
-    requireIntegralId(docIdCol, docIdType)
-    val qvocab = queries.select(
-        explode(toks(col(qtextCol))).as("_term")).distinct()
-    val tf = docTermTf(corpus, docIdCol, textCol)
-      .join(broadcast(qvocab), Seq("_term"))
-    val qmeta = bm25Qmeta(corpus, docIdCol, textCol, queries, qidCol, qtextCol)
-    val perQuery = tf
-      .join(broadcast(qmeta), Seq("_term"))
-      .withColumn("_w",
-        col("_idf") * (col("_tf") * lit(k1 + 1.0)) /
-          (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl"))))
-      .select(explode(col("_qids")).as("_qid"), col("_doc"), col("_w"))
-      .groupBy(col("_qid"), col("_doc"))
-      .agg(round(sum(col("_w")), 6).as("_score"))
-    perQuery
-      .select(col("_qid"), col("_doc").cast(LongType).as("_docL"), col("_score"))
-      .groupBy(col("_qid"))
-      .agg(topKAgg(col("_docL"), col("_score"), k).as("_top"))
-      .select(col("_qid"), posexplode(col("_top")))
-      .select(col("_qid").as(qidCol), (col("pos") + 1).cast("int").as("rank"),
-        col("col.vid").cast(docIdType).as(docIdCol), col("col.sim").as("score"))
   }
 
   private def bm25Build(corpus: DataFrame, docIdCol: String, textCol: String,
@@ -544,25 +508,6 @@ object RetrievalOps {
       .select(col("_qid"), posexplode(col("_top")))
       .select(col("_qid").as(qidCol), (col("pos") + 1).cast("int").as("rank"),
         col("col.vid").cast(docIdType).as("doc_id"), col("col.sim").as("score"))
-  }
-
-  /** Self-contained doc-grouped entry — the test/PlanGuard hook (the public
-    * entry picks its path adaptively; this forces doc-grouped). */
-  private[graft] def bm25QueryIndexDocGrouped(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, qidCol: String, qtextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val prep = indexQueryPrep(spark, path, queries, qidCol, qtextCol)
-    docGroupedCore(spark, path, queries, qidCol, prep.qmeta, k, k1, b)
-  }
-
-  /** Self-contained term-pruned entry — the test hook. */
-  private[graft] def bm25QueryIndexPruned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, qidCol: String, qtextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val prep = indexQueryPrep(spark, path, queries, qidCol, qtextCol)
-    prunedCore(spark, path, qidCol, prep.qmeta, prep.buckets, k, k1, b)
   }
 
   // ------------------------------------------------ hybrid (lexical+dense)

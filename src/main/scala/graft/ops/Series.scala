@@ -60,15 +60,21 @@ object Series {
     case _ => false
   }
 
+  /** A ds column as epoch micros (raw value for integer columns). */
+  def micros(df: DataFrame, dsCol: String): Column = toMicros(col(dsCol), df.schema(dsCol).dataType)
+
   /** Each input partition's rows folded into one `(keys, _p)` packed
-    * record per key ([[graft.functions.SeriesPack]]): epoch-micros
-    * timestamps, values (NaN where y is null) and the y-is-null mask, in
-    * arrival order. Rows with a null ds are skipped. */
-  private[graft] def pack(df: DataFrame, keys: Seq[String], dsCol: String, yCol: String): DataFrame = {
+    * record per key ([[graft.functions.SeriesPack]]): the times `t` (a
+    * bigint, see [[micros]]), one value lane per column of `values` (NaN
+    * where null) and the mask of a null first value, in arrival order. Rows
+    * with a null `t` are skipped: a caller that keeps null-time rows maps
+    * them to a time of its own. */
+  private[graft] def pack(df: DataFrame, keys: Seq[String], t: Column,
+                          values: Seq[Column]): DataFrame = {
     val B = org.apache.spark.sql.GraftExpressionBridge
-    val inputs = keys.map(col) ++ Seq(toMicros(col(dsCol), df.schema(dsCol).dataType),
-      coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)), col(yCol).isNull)
-    df.select(B.column(graft.functions.SeriesPack(inputs.map(B.expression)))
+    val lanes = values.map(v => coalesce(v.cast(DoubleType), lit(Double.NaN)))
+    val inputs = keys.map(col) ++ (t +: lanes) :+ values.head.isNull
+    df.select(B.column(graft.functions.SeriesPack(inputs.map(B.expression), values.length))
       .as(keys :+ "_p"))
   }
 
@@ -78,9 +84,9 @@ object Series {
     * where a packer flushed under memory pressure). The keyed exchange is an
     * ordinary one: AQE may coalesce it, and its hash partitioning on the keys
     * is what a join on them needs. */
-  private[graft] def packBy(df: DataFrame, keys: Seq[String], dsCol: String,
-                            yCol: String): DataFrame = {
-    val packed = pack(df, keys, dsCol, yCol)
+  private[graft] def packBy(df: DataFrame, keys: Seq[String], t: Column,
+                            values: Seq[Column]): DataFrame = {
+    val packed = pack(df, keys, t, values)
     if (keys.isEmpty) packed.repartition(1) else packed.repartition(keys.map(col): _*)
   }
 
@@ -98,8 +104,9 @@ object Series {
   }
 
   /** Gather each `keys` group into one `_s: struct<t, v, nu>` of parallel
-    * arrays sorted by time (see [[pack]]); no keys gathers the whole input
-    * into one row, also when the input is empty.
+    * arrays sorted by `(t, v_1..v_w, nu)` (see [[pack]]), `v` holding the
+    * `w` lanes element by element ([[lanes]]); no keys gathers the whole
+    * input into one row, also when the input is empty.
     *
     * Plan shape: packer → key exchange → sort within partitions on the keys
     * → streaming merge. The merge runs entirely above the exchange and holds
@@ -107,11 +114,15 @@ object Series {
     * output is not known to Spark as hash-partitioned on the keys (the merge
     * emits new columns): a consumer that joins on them joins the exchanged
     * records before the merge instead ([[packBy]], [[merge]]). */
-  def gatherBy(df: DataFrame, keys: Seq[String], dsCol: String, yCol: String): DataFrame =
-    merge(packBy(df, keys, dsCol, yCol), keys)
+  def gatherBy(df: DataFrame, keys: Seq[String], t: Column, values: Seq[Column]): DataFrame =
+    merge(packBy(df, keys, t, values), keys)
 
-  /** Gather each group into parallel arrays `(_ts, _vs, _nu)` sorted by time
-    * (see [[gatherBy]]).
+  /** A gathered `v` array of `w` lanes, one array per lane. */
+  def lanes(vs: Array[Double], w: Int): Array[Array[Double]] =
+    Array.tabulate(w, vs.length / w)((j, i) => vs(i * w + j))
+
+  /** Gather each group's `(ds, y)` series into parallel arrays
+    * `(_ts, _vs, _nu)` sorted by time (see [[gatherBy]]).
     *
     * Plan shape: packer → group-key exchange → sort → streaming merge →
     * round-robin `repartition(n)` → the caller's per-series kernel.
@@ -126,13 +137,13 @@ object Series {
     * joins or aggregates on the key pays its own exchange (no op in `ops/`
     * does). */
   def gather(df: DataFrame, groupCol: String, dsCol: String, yCol: String): DataFrame =
-    gatherSeries(df, Seq(groupCol), dsCol, yCol)
+    gatherSeries(df, Seq(groupCol), micros(df, dsCol), Seq(col(yCol)))
 
   /** [[gather]] on `keys`; no keys gathers the whole input into one series
     * behind a one-partition exchange, with no kernel exchange after it. */
-  private def gatherSeries(df: DataFrame, keys: Seq[String], dsCol: String,
-                           yCol: String): DataFrame = {
-    val s = gatherBy(df, keys, dsCol, yCol)
+  private def gatherSeries(df: DataFrame, keys: Seq[String], t: Column,
+                           values: Seq[Column]): DataFrame = {
+    val s = gatherBy(df, keys, t, values)
     (if (keys.isEmpty) s else CpuBound.repartition(s)).select(keys.map(col) ++ Seq(
       col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu")): _*)
   }
@@ -156,11 +167,10 @@ object Series {
 
   /** The per-series kernel stage of every `_by` operator (reference
     * ts_macros.cpp:575-602: GROUP BY gather → per-group kernel → unnest).
-    * Gathers each `keys` group as [[gather]] does, with its round-robin
-    * kernel exchange (no keys: the whole input is one series, no kernel
-    * exchange),
-    * calls `kernel` once per series on primitive arrays and explodes the
-    * rows it returns into `(keys…, _r)`.
+    * Gathers each `keys` group's `(ds, y)` series as [[gather]] does, with
+    * its round-robin kernel exchange (no keys: the whole input is one
+    * series, no kernel exchange), calls `kernel` once per series on
+    * primitive arrays and explodes the rows it returns into `(keys…, _r)`.
     *
     * Skip rule (ts_forecast_native.cpp:666-672): a kernel that throws
     * InsufficientData or ComputationError gives its series zero rows; any
@@ -170,12 +180,19 @@ object Series {
     * a column below the projection and evaluates the kernel a second time
     * there. */
   def mapKernel[R: TypeTag](df: DataFrame, keys: Seq[String], dsCol: String, yCol: String)
-                           (kernel: Obs => Seq[R]): DataFrame = {
+                           (kernel: Obs => Seq[R]): DataFrame =
+    mapLanes(df, keys, micros(df, dsCol), Seq(col(yCol)))(kernel)
+
+  /** [[mapKernel]] on the series of times `t` and value lanes `values`
+    * ([[gatherBy]]); the kernel reads lane `j` of element `i` at
+    * `vs(i * w + j)` ([[lanes]]), and `nu` masks a null first value. */
+  private[graft] def mapLanes[R: TypeTag](df: DataFrame, keys: Seq[String], t: Column,
+                                          values: Seq[Column])(kernel: Obs => Seq[R]): DataFrame = {
     val run = udf { (ts: Array[Long], vs: Array[Double], nu: Array[Boolean]) =>
       try kernel(Obs(ts, vs, nu))
       catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => Seq.empty[R] }
     }
-    gatherSeries(df, keys, dsCol, yCol)
+    gatherSeries(df, keys, t, values)
       .select(keys.map(col) :+ explode(run(col("_ts"), col("_vs"), col("_nu"))).as("_r"): _*)
   }
 }

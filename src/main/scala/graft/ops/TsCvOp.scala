@@ -96,13 +96,14 @@ object TsCvOp {
   final case class CvFcStep(step: Int, yhat: Double, yhat_lower: Double,
                             yhat_upper: Double, model_name: String)
 
-  /** Per-fold kernel output of the all-folds-in-one-call backtest UDF.
-    * `model_name` sits at the FOLD level (it is constant across a fold's
-    * steps) and the steps carry only the three forecast doubles — the
-    * compact rows the backtest pins stay string-free per step. */
-  final case class BtStep(yhat: Double, yhat_lower: Double, yhat_upper: Double)
-  final case class BtFoldFc(fold_id: Long, test_start: Long, test_end: Long,
-                            model_name: String, steps: Seq[BtStep])
+  /** Per-fold kernel output of the all-folds-in-one-call backtest UDF: one
+    * step per test row, with its time `t` (micros), its `actual` y (None
+    * where y is null) and the forecast. `model_name` sits at the FOLD level
+    * (it is constant across a fold's steps), so the steps the backtest pins
+    * stay string-free. */
+  final case class BtStep(t: Long, actual: Option[Double], yhat: Double, yhat_lower: Double,
+                          yhat_upper: Double)
+  final case class BtFoldFc(fold_id: Long, model_name: String, steps: Seq[BtStep])
 
   /** ts_cv_forecast_by: fit per (fold, group) on train rows, predict at the
     * existing test-row dates (horizon = test-row count). Output preserves all
@@ -123,8 +124,8 @@ object TsCvOp {
     // gather's key exchange, before the merge, which carries `_h` as part
     // of the key; joined after the merge, they would need an exchange more
     val keys = Seq("fold_id", groupCol)
-    val gathered = Series.merge(
-      Series.packBy(train, keys, dsCol, yCol).join(testCounts, keys), keys)
+    val packed = Series.packBy(train, keys, Series.micros(train, dsCol), Seq(col(yCol)))
+    val gathered = Series.merge(packed.join(testCounts, keys), keys)
 
     val fcUdf = udf((vs: Array[Double], nu: Array[Boolean], h: Int) => {
       try {
@@ -158,35 +159,26 @@ object TsCvOp {
         col("yhat"), col("yhat_lower"), col("yhat_upper"), col("model_name"))
   }
 
-  /** Per-fold metric (across all groups, ts_backtest_native.cpp:280-374,
-    * :876-886): the reference's full accepted set — mae | mse | rmse | mape |
-    * smape | bias | r2 | coverage. Returned as a plain aggregate expression:
-    * the caller reduces it per fold with a `groupBy("fold_id")` (map-side
-    * partial agg, ≤nFolds result rows) and broadcast-joins the scores back —
-    * a Window partitioned by fold_id alone would funnel the whole backtest
-    * output through ≤nFolds partitions, a straggler/OOM at 100× scale.
-    *
-    * Deviation (documented): the reference silently falls back to rmse on an
-    * unknown metric name; we raise, so a typo'd metric cannot masquerade as
-    * a different score. */
-  // (the exploded-row fold metric lived here; superseded by
-  // compactFoldScores, which computes the same closed forms from the
-  // compact pinned rows' partial sums)
-
   /** ts_backtest_auto_by: per-(fold,group) fit/predict → error columns
     * + per-fold metric. Output (fold_id, group, ds, yhat, actual, error,
     * abs_error, yhat_lower, yhat_upper, model_name, fold_metric_score)
     * (ts_backtest_native.cpp:447-478).
     *
-    * Scale shape: each group's ordered series is gathered ONCE (a single
-    * shuffle on the group key carries every input row exactly once), then the
-    * fold fan-out happens map-side on the gathered row — `explode` over fold
-    * ids followed by array `slice`s for the train/test windows, consumed
-    * immediately by the forecast kernel. Unlike the cvFoldsBy→cvForecastBy
+    * Scale shape: each group's ordered series is gathered ONCE
+    * ([[Series.gatherBy]]: a single shuffle on the group key carries every
+    * input row exactly once), then one kernel call per group computes every
+    * fold on the gathered arrays. Unlike the cvFoldsBy→cvForecastBy
     * composition this never shuffles train rows duplicated ×nFolds (an
     * expanding backtest would otherwise blow the input up ~nFolds·n/2 rows)
     * and traverses the input plan once, not three times. Fold semantics are
-    * identical to cvFoldsBy (position-based per group, same defaults). */
+    * identical to cvFoldsBy (position-based per group, same defaults):
+    * null-ds rows count toward the positions and sort first.
+    *
+    * `metric` is the per-fold score over all groups
+    * (ts_backtest_native.cpp:280-374, :876-886): mae | mse | rmse | mape |
+    * smape | bias | r2 | coverage. Deviation (documented): the reference
+    * silently falls back to rmse on an unknown metric name; we raise, so a
+    * typo'd metric cannot masquerade as a different score. */
   def backtestAutoBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                      horizon: Int, nFolds: Int, frequency: String = "1d",
                      params: Map[String, String] = Map.empty, metric: String = "rmse"): DataFrame = {
@@ -200,103 +192,70 @@ object TsCvOp {
     val opts = Forecast.optionsFromParams(method, 1, fcKeys - "method")
     val dsType = df.schema(dsCol).dataType
 
-    // one shuffle: gather each group's full ordered series (positions match
-    // cvFoldsBy's row_number-over-ds — all rows counted, null-ds rows sort
-    // first and are dropped from the kernel input only, like cvForecastBy).
-    // This keeps sort_array(collect_list(struct)) rather than
-    // Series.gatherBy (and so Series.mapKernel), whose packer skips null-ds
-    // rows: here they must stay in the array because they count toward
-    // every fold position.
-    // The struct carries only (t, v, nu): the original ds value is
-    // reconstructed from the micros sort key on output (Series.fromMicros
-    // is toMicros' exact inverse), so the gather shuffle never moves a
-    // redundant date column.
-    val gathered = df
-      .groupBy(col(groupCol))
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu")))).as("_s"))
-      .withColumn("_n", size(col("_s")).cast(LongType))
-      .filter(col("_n") >= 2)
-      .filter(if (isFixed) col("_n") >= p.minTrainSize else lit(true))
+    // one shuffle: gather each group's full ordered series. A null ds is
+    // the time Long.MinValue, so null-ds rows sort first and count toward
+    // every fold position (cvFoldsBy's row_number over ds); the kernel
+    // drops them from its train input only, like cvForecastBy
+    val gathered = Series.gatherBy(df, Seq(groupCol),
+      coalesce(Series.toMicros(col(dsCol), dsType), lit(Long.MinValue)), Seq(col(yCol)))
 
-    val init: Column =
-      if (p.initialTrainSize > 0) lit(p.initialTrainSize)
-      else {
-        val auto = greatest(col("_n") - lit(horizon.toLong * nFolds), lit(1L))
-        if (isFixed) greatest(auto, lit(p.minTrainSize)) else auto
-      }
-
-    // ONE kernel call per group computes every fold: the UDF receives the
-    // gathered series once and slices train windows internally, so the
-    // series arrays are never duplicated ×nFolds through an explode/slice
-    // (an expanding backtest would otherwise materialize ~nFolds·n/2
-    // elements per group before the kernel ever ran — the dominant cost at
-    // scale and the dominant measured cost at 10×). Fold boundary/validity
-    // arithmetic is identical to cvFoldsBy's column form, evaluated on
-    // (n, init) scalars.
-    val isClip = p.clipHorizon
-    val minTrain = p.minTrainSize
-    val gap = p.gap
-    // null-ds rows sort FIRST (the struct sort key `t` is null), so the
-    // kernel receives their COUNT `k` instead of a per-position boolean
-    // array — one fewer boxed array across the UDF boundary per group
-    val fcAllUdf = udf((vs: Seq[Double], nulls: Seq[Boolean], k: Long,
-                        n: Long, init: Long) => {
+    // ONE kernel call per group computes every fold, slicing the train
+    // windows out of the gathered arrays, so the series is never duplicated
+    // ×nFolds through an explode/slice (an expanding backtest would
+    // otherwise materialize ~nFolds·n/2 elements per group before the
+    // kernel ever ran — the dominant cost at scale). Fold boundary/validity
+    // arithmetic is cvFoldsBy's column form, evaluated on scalars.
+    val fcAllUdf = udf((ts: Array[Long], vs: Array[Double], nu: Array[Boolean]) => {
+      val n = ts.length.toLong
       val acc = Seq.newBuilder[BtFoldFc]
-      var f = 1L
-      while (f <= nFolds) {
-        val trainEnd = init - 1 + (f - 1) * skip
-        val testStart = trainEnd + 1 + gap
-        val valid = (!isFixed || trainEnd + 1 >= minTrain) &&
-          (if (isClip) testStart < n else testStart + horizon - 1 < n)
-        if (valid) {
-          val testEnd = math.min(testStart + horizon - 1, n - 1)
-          val trainStart = if (isFixed) math.max(trainEnd + 1 - minTrain, 0L) else 0L
-          val vb = Array.newBuilder[Double]
-          val kb = Array.newBuilder[Boolean]
-          var i = math.max(trainStart, k).toInt
-          val end = math.min(trainEnd, n - 1).toInt
-          while (i <= end) {
-            vb += vs(i); kb += !nulls(i)
-            i += 1
+      if (n >= 2 && (!isFixed || n >= p.minTrainSize)) {
+        val init =
+          if (p.initialTrainSize > 0) p.initialTrainSize
+          else {
+            val auto = math.max(n - horizon.toLong * nFolds, 1L)
+            if (isFixed) math.max(auto, p.minTrainSize) else auto
           }
-          val h = (testEnd - testStart + 1).toInt
-          try {
-            val o = Forecast.forecast(vb.result(), kb.result(), opts.copy(horizon = h))
-            acc += BtFoldFc(f, testStart, testEnd, o.modelName,
-              (0 until o.point.length).map(j =>
-                BtStep(o.point(j), o.lower(j), o.upper(j))))
-          } catch {
-            case _: Forecast.InsufficientData | _: Forecast.ComputationError => ()
+        val k = ts.segmentLength(_ == Long.MinValue)
+        var f = 1L
+        while (f <= nFolds) {
+          val trainEnd = init - 1 + (f - 1) * skip
+          val testStart = trainEnd + 1 + p.gap
+          val valid = (!isFixed || trainEnd + 1 >= p.minTrainSize) &&
+            (if (p.clipHorizon) testStart < n else testStart + horizon - 1 < n)
+          if (valid) {
+            val testEnd = math.min(testStart + horizon - 1, n - 1)
+            val trainStart = if (isFixed) math.max(trainEnd + 1 - p.minTrainSize, 0L) else 0L
+            val from = math.max(trainStart, k.toLong).toInt
+            val until = math.min(trainEnd, n - 1).toInt + 1
+            val h = (testEnd - testStart + 1).toInt
+            try {
+              val o = Forecast.forecast(vs.slice(from, until), nu.slice(from, until).map(!_),
+                opts.copy(horizon = h))
+              // the train window is not empty, so no test row has a null ds
+              acc += BtFoldFc(f, o.modelName, (0 until h).map { j =>
+                val i = testStart.toInt + j
+                BtStep(ts(i), if (nu(i)) None else Some(vs(i)), o.point(j), o.lower(j), o.upper(j))
+              })
+            } catch {
+              case _: Forecast.InsufficientData | _: Forecast.ComputationError => ()
+            }
           }
+          f += 1
         }
-        f += 1
       }
       acc.result()
     })
 
     // Compact per-(group, fold) forecast rows — the heavy kernel output
-    // BEFORE fan-out: one row per group-fold carrying two h-element arrays,
-    // ~horizon× smaller than the exploded output. The pinned payload is
-    // slim: the sort key `t` (micros) was only needed for ordering inside
-    // `_s`; the output reads v/nu/d alone.
+    // BEFORE fan-out: one row per group-fold carrying its h steps.
     // The explode takes the UDF call itself, not a named column holding it:
     // for an attribute input Spark infers `size(c) > 0 AND isnotnull(c)`
     // and pushes it below the projection with the call substituted, which
     // would run the kernel up to three times per group.
     val perFold = gathered
-      .select(col(groupCol), col("_s"),
-        explode(fcAllUdf(col("_s.v"), col("_s.nu"),
-          size(filter(col("_s"), e => e.getField("t").isNull)).cast(LongType),
-          col("_n"), init)).as("_f"))
+      .select(col(groupCol), explode(fcAllUdf(col("_s.t"), col("_s.v"), col("_s.nu"))).as("_f"))
       .select(col("_f.fold_id").as("fold_id"), col(groupCol),
-        slice(col("_s"), (col("_f.test_start") + 1).cast(IntegerType),
-          (col("_f.test_end") - col("_f.test_start") + 1).cast(IntegerType))
-          .as("_test"),
-        col("_f.model_name").as("_mn"),
-        col("_f.steps").as("_steps"))
+        col("_f.model_name").as("_mn"), col("_f.steps").as("_steps"))
 
     // Pin the compact kernel output so the per-fold score (a global aggregate
     // over ALL groups) and the row-level output both read it WITHOUT either
@@ -315,23 +274,19 @@ object TsCvOp {
     val pinned = graft.llm.Pin(perFold, eager = false).df
 
     val out = pinned
-      .withColumn("_z", explode(arrays_zip(col("_test"), col("_steps"))))
+      .withColumn("_z", explode(col("_steps")))
       .select(col("fold_id"), col(groupCol),
-        Series.fromMicros(col("_z._test.t"), dsType).as(dsCol),
-        col("_z._steps.yhat").as("yhat"),
-        when(col("_z._test.nu"), lit(null).cast(DoubleType))
-          .otherwise(col("_z._test.v")).as("actual"),
-        col("_z._steps.yhat_lower").as("yhat_lower"),
-        col("_z._steps.yhat_upper").as("yhat_upper"),
+        Series.fromMicros(col("_z.t"), dsType).as(dsCol),
+        col("_z.yhat").as("yhat"), col("_z.actual").as("actual"),
+        col("_z.yhat_lower").as("yhat_lower"), col("_z.yhat_upper").as("yhat_upper"),
         col("_mn").as("model_name"))
-      .filter(col("yhat").isNotNull)
       .withColumn("error", col("actual") - col("yhat"))
       .withColumn("abs_error", abs(col("error")))
 
     // Per-fold score WITHOUT a fold_id-partitioned Window (which would funnel
     // the whole output through ≤nFolds partitions at scale) and WITHOUT a
     // second pass over the exploded rows: each compact (group, fold) row
-    // reduces its test/step arrays to the metric's partial sums in place
+    // reduces its steps to the metric's partial sums in place
     // (a ≤horizon-element fold, pure codegen), a groupBy(fold_id) combines
     // them map-side to ≤nFolds rows, and the ≤nFolds scores are collected
     // (bounded by construction) and stamped onto the output as a literal
@@ -350,7 +305,7 @@ object TsCvOp {
   }
 
   /** Fold-level metric computed from the COMPACT pinned rows: per
-    * (group, fold) row the zipped test/step arrays reduce to the metric's
+    * (group, fold) row the steps reduce to the metric's
     * partial-sum terms (count / Σ|e| / Σe² / …, each a single `aggregate`
     * fold over ≤horizon elements), a fold_id aggregate sums the partials,
     * and the closed-form metric is evaluated on the sums. Algebraically
@@ -361,16 +316,13 @@ object TsCvOp {
     * Returns (fold_id → score) for the ≤nFolds observed folds; None encodes
     * a null score (e.g. mape with no nonzero actuals). */
   private def compactFoldScores(pinned: DataFrame, metric: String): Seq[(Long, Option[Double])] = {
-    def zipped = arrays_zip(col("_test"), col("_steps"))
-    // per-step accessors; `valid` = both actual and forecast present
-    def te(e: Column) = e.getField("_test")
-    def st(e: Column) = e.getField("_steps")
-    def a(e: Column) = te(e).getField("v")
-    def yh(e: Column) = st(e).getField("yhat")
+    // per-step accessors; `valid` = the actual is present
+    def a(e: Column) = e.getField("actual")
+    def yh(e: Column) = e.getField("yhat")
     def err(e: Column) = a(e) - yh(e)
-    def valid(e: Column) = !te(e).getField("nu") && yh(e).isNotNull
+    def valid(e: Column) = a(e).isNotNull
     def term(f: Column => Column): Column =
-      aggregate(zipped, lit(0.0), (acc, e) => acc + coalesce(f(e), lit(0.0)))
+      aggregate(col("_steps"), lit(0.0), (acc, e) => acc + coalesce(f(e), lit(0.0)))
     // terms are (per-step contribution, guarded to 0 outside its domain);
     // the formula receives the per-fold SUMS in declaration order
     val (terms, formula): (Seq[Column => Column], Seq[Column] => Column) = metric match {
@@ -411,10 +363,9 @@ object TsCvOp {
           when(ssTot > 0, lit(1.0) - s(1) / ssTot).otherwise(lit(Double.NaN))
         })
       case "coverage" => (Seq(
-        e => when(yh(e).isNotNull, 1.0).otherwise(0.0),
-        e => when(yh(e).isNotNull && !te(e).getField("nu") &&
-          a(e) >= st(e).getField("yhat_lower") &&
-          a(e) <= st(e).getField("yhat_upper"), 1.0).otherwise(0.0)),
+        _ => lit(1.0),
+        e => when(valid(e) && a(e) >= e.getField("yhat_lower") &&
+          a(e) <= e.getField("yhat_upper"), 1.0).otherwise(0.0)),
         s => when(s(0) > 0, s(1) / s(0)))
       case other => throw new IllegalArgumentException(
         s"Unknown metric '$other' (mae|mse|rmse|mape|smape|bias|r2|coverage)")

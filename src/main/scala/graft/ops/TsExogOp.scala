@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -44,74 +44,72 @@ object TsExogOp {
     val dsType = df.schema(dsCol).dataType
     val freq = Frequency.parse(frequency).forIntegerDs(Series.isIntegerDs(dsType))
 
-    // collect_list of structs, not Series.gatherBy (nor Series.mapKernel on
-    // top of it): each row also carries its regressor array `x`, which the
-    // packed primitive (t, v, nu) arrays cannot hold
-    val hist = df.filter(col(dsCol).isNotNull)
-      .groupBy(col(groupCol))
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu"),
-        array(xregCols.map(c => col(c).cast(DoubleType)): _*).as("x")))).as("_s"))
+    // history and future rows gathered as ONE series per group, lanes
+    // (y, x_1..x_k, future?): one key exchange and no join. The regressors
+    // are packed only when the model uses them; a null one fails the query.
+    val k = if (useExog) xregCols.length else 0
+    def rows(d: DataFrame, ds: String, y: Column, xs: Seq[String], future: Double) =
+      d.filter(col(groupCol).isNotNull && col(ds).isNotNull).select(
+        (col(groupCol) +: Series.micros(d, ds).as("_t") +: y.cast(DoubleType).as("_y") +:
+          xs.take(k).zipWithIndex.map { case (c, j) => regressor(c).as(s"_x$j") }) :+
+          lit(future).as("_f"): _*)
+    val both = rows(df, dsCol, col(yCol), xregCols, 0.0)
+      .unionByName(rows(future, futureDsCol, lit(null), futureXregCols, 1.0))
 
-    val futType = future.schema(futureDsCol).dataType
-    val fut = future.filter(col(futureDsCol).isNotNull)
-      .groupBy(col(groupCol))
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(futureDsCol), futType).as("t"),
-        array(futureXregCols.map(c => col(c).cast(DoubleType)): _*).as("x")))).as("_f"))
-
-    val k = xregCols.length
-    val fcUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean],
-                     xs: Seq[Seq[Double]], futX: Seq[Seq[Double]]) => {
-      try {
-        if (useExog && futX.length < horizon)
+    Series.mapLanes(both, Seq(groupCol), col("_t"),
+        ("_y" +: (0 until k).map(j => s"_x$j") :+ "_f").map(col)) { s =>
+      val lanes = Series.lanes(s.vs, k + 2)
+      val (hist, fut) = s.ts.indices.partition(lanes(k + 1)(_) == 0.0)
+      // a group without history or without future rows gives no rows
+      if (hist.isEmpty || fut.isEmpty) Nil
+      else {
+        if (useExog && fut.length < horizon)
           throw new Forecast.InvalidInput(
-            s"future exogenous rows (${futX.length}) < horizon ($horizon)")
-        val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
+            s"future exogenous rows (${fut.length}) < horizon ($horizon)")
+        val clean = Imputation.fillInterpolate(hist.map(i => lanes(0)(i)).toArray,
+          hist.map(i => !s.nu(i)).toArray)
         if (clean.length < 3) throw new Forecast.InsufficientData(3, clean.length)
-        val lastT = ts.last
+        val lastT = s.ts(hist.last)
         if (!useExog) {
           // non-exog-capable model or no regressors: standard forecast
           val out = Forecast.forecast(clean, Array.fill(clean.length)(true), opts)
-          Some((0 until horizon).map { h =>
+          (0 until horizon).map { h =>
             ExogStep(h + 1, freq.advance(lastT, h + 1L),
               out.point(h), out.lower(h), out.upper(h), out.modelName)
-          })
+          }
         } else {
           // regress out X (OLS with intercept), model the residuals, add back
           val n = clean.length
-          val design = Array.tabulate(n, k + 1)((i, j) => if (j == 0) 1.0 else xs(i)(j - 1))
-          val beta = Linalg.olsSolve(design, clean)
-          val residuals = Array.tabulate(n) { i =>
+          val x = lanes.slice(1, k + 1)
+          def xb(beta: Array[Double], row: Int): Double = {
             var pred = beta(0)
             var j = 0
-            while (j < k) { pred += beta(j + 1) * xs(i)(j); j += 1 }
-            clean(i) - pred
+            while (j < k) { pred += beta(j + 1) * x(j)(row); j += 1 }
+            pred
           }
+          val design = Array.tabulate(n, k + 1)((i, j) => if (j == 0) 1.0 else x(j - 1)(hist(i)))
+          val beta = Linalg.olsSolve(design, clean)
+          val residuals = Array.tabulate(n)(i => clean(i) - xb(beta, hist(i)))
           val out = Forecast.forecast(residuals, Array.fill(n)(true), opts)
-          Some((0 until horizon).map { h =>
-            var xb = beta(0)
-            var j = 0
-            while (j < k) { xb += beta(j + 1) * futX(h)(j); j += 1 }
+          (0 until horizon).map { h =>
+            val b = xb(beta, fut(h))
             ExogStep(h + 1, freq.advance(lastT, h + 1L),
-              out.point(h) + xb, out.lower(h) + xb, out.upper(h) + xb,
-              exogName.get)
-          })
+              out.point(h) + b, out.lower(h) + b, out.upper(h) + b, exogName.get)
+          }
         }
-      } catch {
-        case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
       }
-    })
-
-    hist.join(fut, Seq(groupCol))
-      .select(col(groupCol),
-        explode(fcUdf(col("_s.t"), col("_s.v"), col("_s.nu"), col("_s.x"), col("_f.x"))).as("_r"))
-      .select(col(groupCol), col("_r.forecast_step").as("forecast_step"),
+    }.select(col(groupCol), col("_r.forecast_step").as("forecast_step"),
         Series.fromMicros(col("_r.t"), dsType).as(dsCol),
         col("_r.yhat").as("yhat"), col("_r.yhat_lower").as("yhat_lower"),
         col("_r.yhat_upper").as("yhat_upper"), col("_r.model_name").as("model_name"))
+  }
+
+  /** A regressor column as a double; a null value fails the query. */
+  private def regressor(c: String): Column = {
+    val checked = udf((x: java.lang.Double) =>
+      if (x == null) throw new Forecast.InvalidInput(s"regressor column '$c' has a null value")
+      else x.doubleValue)
+    checked(col(c).cast(DoubleType))
   }
 
   /** Single-series variant (ts_forecast_exog, ts_macros.cpp:756-830). */

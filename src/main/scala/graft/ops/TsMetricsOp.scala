@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -15,21 +15,19 @@ import graft.kernels.Metrics
 object TsMetricsOp {
 
   /** Gather `valueCols` per group (all other columns except `dateCol`),
-    * date-ordered, and apply `f` to the value arrays. */
+    * date-ordered ([[Series.gatherBy]], one lane per value column, NaN where
+    * null), and apply `f` to the value arrays. A null date is the time
+    * Long.MinValue: its rows sort first and count. */
   private def gatherApply(df: DataFrame, dateCol: String, valueCols: Seq[String],
-                          out: String, f: Seq[Column] => Column): DataFrame = {
+                          out: String, f: Array[Array[Double]] => Double): DataFrame = {
     val nonGroup = (dateCol +: valueCols).toSet
     val groupCols = df.columns.filterNot(nonGroup.contains).toSeq
     require(groupCols.nonEmpty,
       s"no group columns left after excluding ${nonGroup.mkString(", ")}")
-    val packed = struct((col(dateCol).as("_d") +:
-      valueCols.zipWithIndex.map { case (c, i) =>
-        coalesce(col(c).cast(DoubleType), lit(Double.NaN)).as(s"_v$i")
-      }): _*)
-    df.groupBy(groupCols.map(col): _*)
-      .agg(sort_array(collect_list(packed)).as("_s"))
-      .select(groupCols.map(col) :+
-        f(valueCols.indices.map(i => col(s"_s._v$i"))).as(out): _*)
+    val w = valueCols.length
+    val u = udf((vs: Array[Double]) => f(Series.lanes(vs, w)))
+    Series.gatherBy(df, groupCols, coalesce(Series.micros(df, dateCol), lit(Long.MinValue)),
+      valueCols.map(col)).select(groupCols.map(col) :+ u(col("_s.v")).as(out): _*)
   }
 
   /** mae | mse | rmse | mape | smape | r2 | bias over (actual, forecast),
@@ -44,9 +42,7 @@ object TsMetricsOp {
       case other => throw new IllegalArgumentException(
         s"Unknown metric '$other' (mae|mse|rmse|mape|smape|r2|bias)")
     }
-    val u = udf((a: Seq[Double], p: Seq[Double]) => fn(a.toArray, p.toArray))
-    gatherApply(df, dateCol, Seq(actualCol, forecastCol), metric,
-      vs => u(vs(0), vs(1)))
+    gatherApply(df, dateCol, Seq(actualCol, forecastCol), metric, v => fn(v(0), v(1)))
   }
 
   /** MASE against a baseline forecast column (`_ts_mase_native`): rows where
@@ -56,39 +52,30 @@ object TsMetricsOp {
              forecastCol: String, baselineCol: String): DataFrame = {
     val clean = df.filter(Seq(actualCol, forecastCol, baselineCol).map(c =>
       col(c).isNotNull && !isnan(col(c).cast(DoubleType))).reduce(_ && _))
-    val u = udf((a: Seq[Double], f: Seq[Double], b: Seq[Double]) => {
-      val denom = Metrics.mae(a.toArray, b.toArray)
-      if (denom == 0.0 || denom.isNaN) Double.NaN
-      else Metrics.mae(a.toArray, f.toArray) / denom
+    gatherApply(clean, dateCol, Seq(actualCol, forecastCol, baselineCol), "mase", v => {
+      val denom = Metrics.mae(v(0), v(2))
+      if (denom == 0.0 || denom.isNaN) Double.NaN else Metrics.mae(v(0), v(1)) / denom
     })
-    gatherApply(clean, dateCol, Seq(actualCol, forecastCol, baselineCol), "mase",
-      vs => u(vs(0), vs(1), vs(2)))
   }
 
   /** Relative MAE of two competing forecasts (ts_macros.cpp:2097). */
   def rmaeBy(df: DataFrame, dateCol: String, actualCol: String,
              pred1Col: String, pred2Col: String): DataFrame = {
-    val u = udf((a: Seq[Double], p1: Seq[Double], p2: Seq[Double]) =>
-      Metrics.rmae(a.toArray, p1.toArray, p2.toArray))
     gatherApply(df, dateCol, Seq(actualCol, pred1Col, pred2Col), "rmae",
-      vs => u(vs(0), vs(1), vs(2)))
+      v => Metrics.rmae(v(0), v(1), v(2)))
   }
 
   /** Empirical interval coverage (ts_macros.cpp:2107). */
   def coverageBy(df: DataFrame, dateCol: String, actualCol: String,
                  lowerCol: String, upperCol: String): DataFrame = {
-    val u = udf((a: Seq[Double], lo: Seq[Double], hi: Seq[Double]) =>
-      Metrics.coverage(a.toArray, lo.toArray, hi.toArray))
     gatherApply(df, dateCol, Seq(actualCol, lowerCol, upperCol), "coverage",
-      vs => u(vs(0), vs(1), vs(2)))
+      v => Metrics.coverage(v(0), v(1), v(2)))
   }
 
   /** Pinball loss at a quantile level (ts_macros.cpp:2117). */
   def quantileLossBy(df: DataFrame, dateCol: String, actualCol: String,
                      forecastCol: String, quantile: Double): DataFrame = {
-    val u = udf((a: Seq[Double], p: Seq[Double]) =>
-      Metrics.quantileLoss(a.toArray, p.toArray, quantile))
     gatherApply(df, dateCol, Seq(actualCol, forecastCol), "quantile_loss",
-      vs => u(vs(0), vs(1)))
+      v => Metrics.quantileLoss(v(0), v(1), quantile))
   }
 }

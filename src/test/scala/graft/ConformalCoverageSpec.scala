@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{TsCvOp, TsForecastOp}
+import graft.ops.TsForecastOp
 
 /** Port of test/sql/ts_conformal_coverage.test: end-to-end split-conformal
   * coverage validation over a heterogeneous panel — fit on train, calibrate

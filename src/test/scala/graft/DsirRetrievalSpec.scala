@@ -10,7 +10,10 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.{DsirOps, MixOps, RetrievalOps}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{ArrayType, LongType}
+
+import graft.llm.{DsirOps, MixOps, RetrievalOps, SampleOps}
 
 /** Batch-21 curation ops: DSIR importance resampling (Xie et al. 2023),
   * BM25 top-k retrieval (Robertson & Zaragoza 2009), and UniMax budget
@@ -116,7 +119,7 @@ class DsirRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
               lower(trim(col("text")))), nb, seed)).as("f"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       val ref = df.select(col("id"),
-          DsirOps.featureBucketsReference(col("text"), nb, seed).as("f"))
+          DsirRetrievalSpec.featureBucketsReference(col("text"), nb, seed).as("f"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(native == ref, s"nb=$nb seed=$seed")
     }
@@ -250,7 +253,7 @@ class DsirRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
         java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
     val prod = snap(RetrievalOps.bm25TopK(corpus, "doc_id", "text",
       queries, "qid", "text", k = 5))
-    val spec = snap(RetrievalOps.bm25TopKJoins(corpus, "doc_id", "text",
+    val spec = snap(DsirRetrievalSpec.bm25TopKJoins(corpus, "doc_id", "text",
       queries, "qid", "text", k = 5))
     assert(prod == spec, s"production $prod vs joins spec $spec")
     assert(prod.nonEmpty && !prod.exists(_._3 == 7L),
@@ -287,9 +290,9 @@ class DsirRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     RetrievalOps.bm25BuildIndex(corpus, "doc_id", "text", dir, nTermBuckets = 4)
     def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val viaDg = snap(RetrievalOps.bm25QueryIndexDocGrouped(spark, dir,
+    val viaDg = snap(DsirRetrievalSpec.bm25QueryIndexDocGrouped(spark, dir,
       queries, "qid", "text", k = 5))
-    val viaPruned = snap(RetrievalOps.bm25QueryIndexPruned(spark, dir,
+    val viaPruned = snap(DsirRetrievalSpec.bm25QueryIndexPruned(spark, dir,
       queries, "qid", "text", k = 5))
     val direct = snap(RetrievalOps.bm25TopK(corpus, "doc_id", "text",
       queries, "qid", "text", k = 5))
@@ -452,5 +455,95 @@ class DsirRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       RetrievalOps.hybridTopK(corpus, "doc_id", "text", "vec",
         qs, "qid", "text", "vec", k = 4, kCand = 0)
     }
+  }
+}
+
+/** The replaced forms the retrieval and DSIR operators are checked
+  * against: the broadcast-join BM25 scorer, the two index-query paths
+  * forced one at a time, and the declarative DSIR feature buckets. */
+object DsirRetrievalSpec {
+  private val R = RetrievalOps
+
+  /** The broadcast-join form of [[RetrievalOps.bm25TopK]] — kept as the
+    * executable specification of the scoring semantics (the MinHashParity /
+    * bigramScoreWithModelJoins discipline): query-vocab-hit tf rows probe
+    * ONE per-term qmeta broadcast, explode to their qid fan-out, and reduce
+    * through a (qid, doc)-keyed DECIMAL-free double sum rounded at 6
+    * decimals. Bit-parity with the production per-doc scorer is pinned in
+    * the spec above. */
+  def bm25TopKJoins(corpus: DataFrame, docIdCol: String, textCol: String, queries: DataFrame,
+                    qidCol: String, qtextCol: String, k: Int,
+                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val docIdType = corpus.schema(docIdCol).dataType
+    R.requireIntegralId(docIdCol, docIdType)
+    val qvocab = queries.select(
+        explode(R.toks(col(qtextCol))).as("_term")).distinct()
+    val tf = R.docTermTf(corpus, docIdCol, textCol)
+      .join(broadcast(qvocab), Seq("_term"))
+    val qmeta = R.bm25Qmeta(corpus, docIdCol, textCol, queries, qidCol, qtextCol)
+    val perQuery = tf
+      .join(broadcast(qmeta), Seq("_term"))
+      .withColumn("_w",
+        col("_idf") * (col("_tf") * lit(k1 + 1.0)) /
+          (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl"))))
+      .select(explode(col("_qids")).as("_qid"), col("_doc"), col("_w"))
+      .groupBy(col("_qid"), col("_doc"))
+      .agg(round(sum(col("_w")), 6).as("_score"))
+    perQuery
+      .select(col("_qid"), col("_doc").cast(LongType).as("_docL"), col("_score"))
+      .groupBy(col("_qid"))
+      .agg(R.topKAgg(col("_docL"), col("_score"), k).as("_top"))
+      .select(col("_qid"), posexplode(col("_top")))
+      .select(col("_qid").as(qidCol), (col("pos") + 1).cast("int").as("rank"),
+        col("col.vid").cast(docIdType).as(docIdCol), col("col.sim").as("score"))
+  }
+
+  /** Self-contained doc-grouped entry — the test/PlanGuard hook (the public
+    * entry picks its path adaptively; this forces doc-grouped). */
+  def bm25QueryIndexDocGrouped(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, qidCol: String, qtextCol: String,
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val prep = R.indexQueryPrep(spark, path, queries, qidCol, qtextCol)
+    R.docGroupedCore(spark, path, queries, qidCol, prep.qmeta, k, k1, b)
+  }
+
+  /** Self-contained term-pruned entry — the test hook. */
+  def bm25QueryIndexPruned(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, qidCol: String, qtextCol: String,
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val prep = R.indexQueryPrep(spark, path, queries, qidCol, qtextCol)
+    R.prunedCore(spark, path, qidCol, prep.qmeta, prep.buckets, k, k1, b)
+  }
+
+  /** Rolling hash of a token string: fold `h ← (131·h + ord(char)) mod P`
+    * from `h₀ = seed` — identical to [[graft.llm.TextOps.hashEmbed]]'s
+    * tokHash, so DuckDB replays it with list_reduce. */
+  private def tokHash(tok: Column, seed: Long): Column = {
+    val s0 = ((seed % SampleOps.P) + SampleOps.P) % SampleOps.P
+    aggregate(
+      transform(sequence(lit(1), length(tok)), i => ascii(tok.substr(i, lit(1))).cast(LongType)),
+      lit(s0), (acc, c) => (acc * lit(131L) + c) % lit(SampleOps.P))
+  }
+
+  private def toks(textCol: Column): Column =
+    filter(split(lower(trim(textCol)), "[ \\t\\n\\r\\f]+"), t => length(t) > 0)
+
+  /** The declarative composition the native expression replaced — kept as
+    * the bit-parity reference of the native feature buckets (it IS the
+    * form the DuckDB oracle replays). */
+  def featureBucketsReference(textCol: Column, numBuckets: Int, seed: Long): Column = {
+    val ts = toks(textCol)
+    val unis = transform(ts, t => pmod(tokHash(t, seed), lit(numBuckets.toLong)))
+    // size-1 bigrams "t_i t_{i+1}" (0-based get; the when-guard keeps
+    // sequence() from producing a descending range on short docs)
+    val bis = when(size(ts) >= 2,
+      transform(sequence(lit(1), size(ts) - 1), i =>
+        pmod(tokHash(concat(get(ts, i - 1), lit(" "), get(ts, i)), seed),
+          lit(numBuckets.toLong))))
+      .otherwise(array().cast(ArrayType(LongType)))
+    concat(unis, bis)
   }
 }

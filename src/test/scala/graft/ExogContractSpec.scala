@@ -107,4 +107,20 @@ class ExogContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"step ${i + 1}: ${out(i).getAs[Double]("yhat")} vs $expected")
     }
   }
+
+  test("a null regressor value fails with an InvalidInput naming its column") {
+    def named(df: => DataFrame, column: String): Unit = {
+      val e = intercept[Throwable](df.collect())
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: graft.kernels.Forecast.InvalidInput => i }
+      assert(cause.exists(_.getMessage.contains(s"'$column'")), e)
+    }
+    val nullHist = hist.withColumn("x1", when(col("ds") === day(5), lit(null)).otherwise(col("x1")))
+    named(TsExogOp.forecastExogBy(nullHist, "g", "ds", "y", Seq("x1"), future(4), "ds", Seq("x1"),
+      "ARIMA", 4, "1d"), "x1")
+    val nullFuture = future(4).withColumnRenamed("x1", "fx")
+      .withColumn("fx", when(col("ds") === day(22), lit(null)).otherwise(col("fx")))
+    named(TsExogOp.forecastExogBy(hist, "g", "ds", "y", Seq("x1"), nullFuture, "ds", Seq("fx"),
+      "ARIMA", 4, "1d"), "fx")
+  }
 }

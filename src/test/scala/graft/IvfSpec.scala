@@ -53,8 +53,6 @@ class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("similarityJoin: exhaustive probing equals the brute-force threshold join; pruned is a subset") {
-    val sp = spark
-    import sp.implicits._
     val corpus = clustered
     // halves, NOT parity: i % 4 assigns clusters, so parity would give the
     // two sides disjoint clusters and an empty reference join

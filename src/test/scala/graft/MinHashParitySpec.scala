@@ -79,8 +79,6 @@ class MinHashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("native shingle-hash set is bit-identical to the UDF composition, including order") {
-    val sp = spark
-    import sp.implicits._
     val B = org.apache.spark.sql.GraftExpressionBridge
     for (n <- Seq(3, 5, 9)) {
       val native = fixture.select(col("id"),
@@ -274,8 +272,6 @@ class MinHashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("banded buckets partition documents exactly as the signature slices do") {
-    val sp = spark
-    import sp.implicits._
     // add exact duplicates so same-slice collisions actually occur
     val docs = fixture.unionByName(
       fixture.filter(col("id") <= 3L)

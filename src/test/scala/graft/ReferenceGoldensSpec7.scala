@@ -116,8 +116,6 @@ class ReferenceGoldensSpec7 extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hydration masks unknown features on test rows (ts_hydrate_split.test)") {
-    val sp = spark
-    import sp.implicits._
     val features = twoGroupSeries.withColumn("temperature", col("value") * 2 + 1)
     val folds = TsCvOp.cvFoldsBy(twoGroupSeries, "id", "ds", "value", 1, 2)
     val hydrated = TsCvOp.cvHydrateBy(folds, features.drop("value"), "id", "ds",

@@ -11,17 +11,20 @@ import graft.functions.{SeriesBuffer, SeriesMerge}
 import graft.ops.Series
 
 object SeriesGatherSpec {
-  /** One generated row: a value for every key kind, then ds and y. */
-  final case class Row6(gi: Option[Int], gd: Option[Double], gf: Option[Float],
-                        gs: Option[String], ds: Option[Int], y: Option[Double])
+  /** One generated row: a value for every key kind, then ds and three
+    * value lanes. */
+  final case class GenRow(gi: Option[Int], gd: Option[Double], gf: Option[Float],
+                          gs: Option[String], ds: Option[Int], y: Option[Double],
+                          y2: Option[Double], y3: Option[Double])
 }
 
 /** Parity of the native series gather (the [[graft.functions.SeriesPack]]
   * packer and the [[SeriesMerge]] streaming merge behind `Series.gather`)
   * with the form it replaced,
-  * `sort_array(collect_list(struct(t, v, nu)))` under `groupBy`, kept here
-  * as the executable specification. Element-for-element equality of
-  * `_ts/_vs/_nu` on generated groups with duplicate timestamps,
+  * `sort_array(collect_list(struct(t, v_1..v_w, nu)))` under `groupBy`,
+  * kept here as the executable specification. Element-for-element equality
+  * of `_ts/_vs/_nu`, with one and with three value lanes, on generated
+  * groups with duplicate timestamps,
   * null/NaN/±Inf y, single-point and all-null groups, null-ds rows, and
   * groups split across many input partitions, keyed by nullable int,
   * double, float, string and two-column keys (the float keys with 0.0,
@@ -30,9 +33,9 @@ object SeriesGatherSpec {
   * partitions, the keyless gather of an empty input, the packed record's
   * byte form, the sort fallback in every stage and DATE round trips in a
   * non-UTC session. The one tie neither form orders — a +0.0 and a -0.0 at
-  * the same timestamp — is compared as a multiset. */
+  * the same timestamp and equal other lanes — is compared as a multiset. */
 class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
-  import SeriesGatherSpec.Row6
+  import SeriesGatherSpec.GenRow
 
   private var spark: SparkSession = _
 
@@ -49,24 +52,27 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  /** The replaced gather: the executable specification. */
+  /** The replaced gather: the executable specification. The value lanes
+    * are `yCols`, `_vs` holds them element by element. */
   private def referenceGather(df: DataFrame, keys: Seq[String], dsCol: String,
-                              yCol: String): DataFrame = {
+                              yCols: String*): DataFrame = {
     val dsType = df.schema(dsCol).dataType
+    val lanes = yCols.indices.map(j => s"v$j")
     df.filter(col(dsCol).isNotNull)
       .groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu")))).as("_s"))
-      .select(keys.map(col) ++ Seq(col("_s.t").as("_ts"), col("_s.v").as("_vs"),
+      .agg(sort_array(collect_list(struct((Series.toMicros(col(dsCol), dsType).as("t") +:
+        yCols.zip(lanes).map { case (y, v) =>
+          coalesce(col(y).cast(DoubleType), lit(Double.NaN)).as(v)
+        }) :+ col(yCols.head).isNull.as("nu"): _*))).as("_s"))
+      .select(keys.map(col) ++ Seq(col("_s.t").as("_ts"),
+        flatten(transform(col("_s"), e => array(lanes.map(e.getField): _*))).as("_vs"),
         col("_s.nu").as("_nu")): _*)
   }
 
-  /** `Series.gather` on one key, `Series.gatherBy` on several. */
-  private def gathered(df: DataFrame, keys: Seq[String]): DataFrame =
-    if (keys.length == 1) Series.gather(df, keys.head, "ds", "y")
-    else Series.gatherBy(df, keys, "ds", "y").select(keys.map(col) ++ Seq(
+  /** `Series.gather` on one key and one lane, `Series.gatherBy` otherwise. */
+  private def gathered(df: DataFrame, keys: Seq[String], yCols: String*): DataFrame =
+    if (keys.length == 1 && yCols == Seq("y")) Series.gather(df, keys.head, "ds", "y")
+    else Series.gatherBy(df, keys, Series.micros(df, "ds"), yCols.map(col)).select(keys.map(col) ++ Seq(
       col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu")): _*)
 
   private type Gathered = (Seq[Long], Seq[Double], Seq[Boolean])
@@ -93,14 +99,19 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Element-for-element on (t, nu, v) with canonical NaN bits, except that
-    * ±0.0 compare equal position-wise and their signs per (t, nu) are
-    * compared as a multiset. Returns a mismatch description, or None. */
-  private def diff(a: Map[Any, Gathered], b: Map[Any, Gathered]): Option[String] = {
+    * ±0.0 compare equal position-wise and the signs of the `w`-lane records
+    * that tie on (t, nu, lanes with ±0.0 equal) are compared as a multiset.
+    * Returns a mismatch description, or None. */
+  private def diff(a: Map[Any, Gathered], b: Map[Any, Gathered], w: Int = 1): Option[String] = {
     def key(v: Double): Long = if (v == 0.0) 0L else java.lang.Double.doubleToLongBits(v)
-    def zeroSigns(g: Gathered): Map[(Long, Boolean), Seq[Long]] =
-      g._1.indices.filter(i => g._2(i) == 0.0)
-        .groupBy(i => (g._1(i), g._3(i)))
-        .map { case (k, is) => k -> is.map(i => java.lang.Double.doubleToRawLongBits(g._2(i))).sorted }
+    def zeroSigns(g: Gathered): Map[Any, Seq[String]] = {
+      val recs = g._2.grouped(w).toIndexedSeq
+      g._1.indices.filter(i => recs(i).contains(0.0))
+        .groupBy(i => (g._1(i), g._3(i), recs(i).map(key)))
+        .map { case (k, is) =>
+          k -> is.map(i => recs(i).map(java.lang.Double.doubleToRawLongBits).mkString(",")).sorted
+        }
+    }
     if (a.keySet != b.keySet) return Some(s"groups ${a.keySet} vs ${b.keySet}")
     a.keys.toSeq.flatMap { g =>
       val (x, y) = (a(g), b(g))
@@ -134,14 +145,16 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val floatKeys = Seq(0.0f, -0.0f, Float.NaN,
     java.lang.Float.intBitsToFloat(0x7fc00123), java.lang.Float.intBitsToFloat(0xff800001), 1.5f)
 
-  private val rowGen: Gen[Row6] = for {
+  private val rowGen: Gen[GenRow] = for {
     gi <- nullable(Gen.choose(0, 7))
     gd <- nullable(Gen.oneOf(doubleKeys))
     gf <- nullable(Gen.oneOf(floatKeys))
     gs <- nullable(Gen.oneOf("a", "b", "", "ä", "a key longer than one word"))
     ds <- dsGen
     y <- yGen
-  } yield Row6(gi, gd, gf, gs, ds, y)
+    y2 <- yGen
+    y3 <- yGen
+  } yield GenRow(gi, gd, gf, gs, ds, y, y2, y3)
 
   /** The key columns of each generated case. */
   private val keyKinds = Seq(Seq("gi"), Seq("gd"), Seq("gf"), Seq("gs"), Seq("gi", "gs"))
@@ -157,16 +170,18 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Series.gather equals sort_array(collect_list(struct)) on generated hostile groups") {
     val sp = spark
     import sp.implicits._
-    val prop = Prop.forAll(caseGen) { case (rows, parts, keys) =>
-      // round-robin input partitions split every group across many of them
-      val df = rows.toDF().select((keys :+ "ds" :+ "y").map(col): _*).repartition(parts)
-      val d = diff(snap(gathered(df, keys), keys.length),
-        snap(referenceGather(df, keys, "ds", "y"), keys.length))
-      d.foreach(m => println(s"[series-gather] $keys: $m"))
-      d.isEmpty
+    for ((lanes, cases) <- Seq(Seq("y") -> 50, Seq("y", "y2", "y3") -> 30)) {
+      val prop = Prop.forAll(caseGen) { case (rows, parts, keys) =>
+        // round-robin input partitions split every group across many of them
+        val df = rows.toDF().select((keys ++ ("ds" +: lanes)).map(col): _*).repartition(parts)
+        val d = diff(snap(gathered(df, keys, lanes: _*), keys.length),
+          snap(referenceGather(df, keys, "ds", lanes: _*), keys.length), lanes.length)
+        d.foreach(m => println(s"[series-gather] $keys $lanes: $m"))
+        d.isEmpty
+      }
+      val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(cases), prop)
+      assert(r.passed, s"$lanes: $r")
     }
-    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop)
-    assert(r.passed, s"$r")
   }
 
   test("float keys group as groupBy does: -0.0 is 0.0 and every NaN is one NaN") {
@@ -201,7 +216,7 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
     val noPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], local.schema)
     val filtered = Seq((1, Some(1.0))).toDF("ds", "y").filter(col("ds") > 5)
     for ((name, df) <- Seq("local" -> local, "no partitions" -> noPartitions, "filtered" -> filtered)) {
-      val got = Series.gatherBy(df, Nil, "ds", "y").collect()
+      val got = Series.gatherBy(df, Nil, Series.micros(df, "ds"), Seq(col("y"))).collect()
       assert(got.length == 1, s"$name: ${got.toSeq}")
       val s = got(0).getStruct(0)
       assert(s.getSeq[Long](0).isEmpty && s.getSeq[Double](1).isEmpty && s.getSeq[Boolean](2).isEmpty,
@@ -249,24 +264,35 @@ class SeriesGatherSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a packed record survives the pack/merge byte round trip") {
     val rnd = new scala.util.Random(11)
-    for (n <- Seq(0, 1, 7, 8, 9, 64, 1001)) {
-      val b = SeriesBuffer.empty()
-      (0 until n).foreach { i =>
-        b.append(rnd.nextLong(), if (i % 3 == 0) java.lang.Double.longBitsToDouble(
-          0x7ff8000000000000L | rnd.nextInt(1000)) else rnd.nextGaussian(), rnd.nextBoolean())
+    def raw(vs: Seq[Double]) = vs.map(java.lang.Double.doubleToRawLongBits)
+    for (w <- Seq(1, 3); n <- Seq(0, 1, 7, 8, 9, 64, 1001)) {
+      val elems = (0 until n).map { i =>
+        (rnd.nextLong(), Array.fill(w)(if (i % 3 == 0) java.lang.Double.longBitsToDouble(
+          0x7ff8000000000000L | rnd.nextInt(1000)) else rnd.nextGaussian()), rnd.nextBoolean())
       }
+      val b = SeriesBuffer.empty(w)
+      elems.foreach { case (t, v, nu) => b.append(t, v, nu) }
       val p = b.toPacked
-      assert(p.length == 4 + 16 * n + (n + 7) / 8, s"n=$n: ${p.length} bytes")
+      // n, t[n], v[n * w] and the nu bits in the platform's byte order: for
+      // one lane, the record's form before value lanes existed
+      val want = java.nio.ByteBuffer.allocate(4 + 8 * n * (1 + w) + (n + 7) / 8)
+        .order(java.nio.ByteOrder.nativeOrder()).putInt(n)
+      elems.foreach(e => want.putLong(e._1))
+      elems.foreach(e => e._2.foreach(want.putDouble))
+      elems.grouped(8).foreach(g => want.put(g.zipWithIndex.map { case (e, i) =>
+        if (e._3) 1 << i else 0 }.sum.toByte))
+      assert(p.sameElements(want.array()), s"w=$w n=$n: packed bytes")
+      if (n > 0) assert(SeriesBuffer.widthOf(p) == w, s"w=$w n=$n: width")
       // appended after an element already held, as the merge appends a
       // series' second record
-      val back = SeriesBuffer.empty()
-      back.append(-1L, -0.0, true)
+      val back = SeriesBuffer.empty(w)
+      back.append(-1L, Array.fill(w)(-0.0), true)
       back.appendPacked(p)
       assert(back.size == n + 1)
-      assert(back.ts.take(n + 1).sameElements(-1L +: b.ts.take(n)), s"n=$n ts")
-      assert(back.vs.take(n + 1).map(java.lang.Double.doubleToRawLongBits)
-        .sameElements((-0.0 +: b.vs.take(n)).map(java.lang.Double.doubleToRawLongBits)), s"n=$n vs")
-      assert(back.nu.take(n + 1).sameElements(true +: b.nu.take(n)), s"n=$n nu")
+      assert(back.ts.take(n + 1).sameElements(-1L +: b.ts.take(n)), s"w=$w n=$n ts")
+      assert(raw(back.vs.take((n + 1) * w).toSeq) == raw(Seq.fill(w)(-0.0) ++ b.vs.take(n * w)),
+        s"w=$w n=$n vs")
+      assert(back.nu.take(n + 1).sameElements(true +: b.nu.take(n)), s"w=$w n=$n nu")
     }
   }
 
@@ -398,7 +424,7 @@ class SeriesPackFlushSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a refused grant flushes the packer; the gather is unchanged") {
     val df = input
-    val packed = Series.pack(df, Seq("g"), "ds", "y").groupBy("g").count()
+    val packed = Series.pack(df, Seq("g"), Series.micros(df, "ds"), Seq(col("y"))).groupBy("g").count()
     val perKey = packed.agg(min(col("count")), max(col("count"))).head()
     assert(packed.count() == 300)
     assert(perKey.getLong(1) > 1L, s"no flush: one packed record per series ($perKey)")

@@ -11,9 +11,10 @@ import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-/** Every [[Series.mapKernel]] operator ([[KernelStageOps]]) on one healthy
-  * 60-point group next to one hostile group: a single point, all-null y, NaN
-  * y, ±Inf y or duplicate ds. No task may fail or run past the time limit,
+/** Every [[Series.mapKernel]] operator ([[KernelStageOps]]), and the
+  * backtest, exogenous forecast and metric table, which gather more than
+  * `(ds, y)`, on one healthy 60-point group next to one hostile group: a
+  * single point, all-null y, NaN y, ±Inf y or duplicate ds. No task may fail or run past the time limit,
   * and the healthy group's rows must equal its rows from the healthy group
   * alone: a hostile series is isolated by the skip rule, never able to
   * abort, stall or change a neighbour. The keyless `forecastSingle` runs on
@@ -69,7 +70,25 @@ class KernelStageHostileSpec extends AnyFunSuite with BeforeAndAfterAll with Tim
     rows
   }
 
-  KernelStageOps.keyed.foreach { case (name, op) =>
+  /** The backtest without its fold score, which aggregates every group; the
+    * exogenous forecast with a day-of-week regressor and the 7 days after
+    * each group's last ds as its future; the rmse of y against a shifted
+    * forecast. */
+  private val gatherOps: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "backtestAutoBy" -> (df => TsCvOp.backtestAutoBy(df, "g", "ds", "y", 7, 2, "1d",
+      Map("method" -> "AutoETS", "seasonal_period" -> "7"))
+      .select("g", "fold_id", "ds", "yhat", "actual", "yhat_lower", "yhat_upper", "model_name")),
+    "forecastExogBy" -> { df =>
+      def withX(d: DataFrame) = d.withColumn("x", dayofweek(col("ds")).cast("double"))
+      val future = df.groupBy("g").agg(max("ds").as("last"))
+        .select(col("g"), explode(sequence(date_add(col("last"), 1), date_add(col("last"), 7))).as("ds"))
+      TsExogOp.forecastExogBy(withX(df), "g", "ds", "y", Seq("x"), withX(future), "ds", Seq("x"),
+        "AutoARIMA", 7)
+    },
+    "metricBy" -> (df => TsMetricsOp.metricBy(df.withColumn("f", col("y") * 0.9 + 1.0), "ds", "y",
+      "f", "rmse")))
+
+  (KernelStageOps.keyed ++ gatherOps).foreach { case (name, op) =>
     test(s"$name: a hostile group neither fails a task nor changes the healthy group's rows") {
       val healthy = KernelStageOps.healthy(spark, "h")
       val alone = run(s"$name on the healthy group", op(healthy))

@@ -892,7 +892,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft_pg_bm25idx").toString
     graft.llm.RetrievalOps.bm25BuildIndex(docs, "doc_id", "text", dir,
       nTermBuckets = 8)
-    val plan = graft.llm.RetrievalOps.bm25QueryIndexDocGrouped(spark, dir,
+    val plan = graft.DsirRetrievalSpec.bm25QueryIndexDocGrouped(spark, dir,
       qs, "qid", "text", k = 10).queryExecution.executedPlan
     assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty,
       s"no sort-merge join on the doc-grouped index path:\n$plan")
@@ -1014,7 +1014,6 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("per-group percentile: CDF windows run over the distinct-score rollup, never the corpus") {
-    import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val df = graft.llm.QuantileOps.percentileByGroup(docs, "lang", "doc_id", "n_chars")
     val plan = df.queryExecution.executedPlan
@@ -1125,6 +1124,29 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val folds = series.withColumn("fold_id", lit(1L))
       .withColumn("split", when(col("ds") < 15, "train").otherwise("test"))
     assert(exchanges(graft.ops.TsCvOp.cvForecastBy(folds, "g", "ds", "y", "Naive")) == 5)
+    // the key exchange under the pinned kernel output (read through its
+    // cached plan) and none above it: the fold scores are a literal lookup
+    val mode = spark.conf.get(graft.llm.Pin.ModeKey, "local")
+    spark.conf.set(graft.llm.Pin.ModeKey, "disk")
+    try {
+      val bt = graft.ops.TsCvOp.backtestAutoBy(series, "g", "ds", "y", 3, 2, "1d",
+        Map("method" -> "Naive"))
+      def pinned(p: org.apache.spark.sql.execution.SparkPlan): Int = p.collect {
+        case _: ShuffleExchangeExec => 1
+        case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          pinned(m.relation.cachedPlan)
+      }.sum
+      assert(pinned(bt.queryExecution.executedPlan) == 1)
+      bt.unpersist()
+    } finally spark.conf.set(graft.llm.Pin.ModeKey, mode)
+    // history and future rows meet in one key exchange, and the kernel
+    // reads a round-robin one
+    val future = (0 until 9).map(i => (s"s${i % 3}", 20 + i / 3, 1.0 + i % 2)).toDF("g", "ds", "x")
+    assert(exchanges(graft.ops.TsExogOp.forecastExogBy(series.withColumn("x", col("y") % 2),
+      "g", "ds", "y", Seq("x"), future, "ds", Seq("x"), "AutoARIMA", 3)) == 2)
+    // the key exchange alone
+    assert(exchanges(graft.ops.TsMetricsOp.metricBy(series.withColumn("f", col("y") + 1),
+      "ds", "y", "f", "mae")) == 1)
   }
 
   test("per-series kernel stage: each of the 18 mapKernel operators evaluates its kernel in one operator, on a REPARTITION_BY_NUM exchange") {
