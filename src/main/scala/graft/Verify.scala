@@ -22,7 +22,9 @@ object Verify {
     val failed = SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).flatMap {
       case (name, fn) =>
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          // one file per result behind an exchange: a narrow coalesce(1)
+          // would run the query's whole last stage as one task
+          fn(spark, sfDir).repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
           None
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")

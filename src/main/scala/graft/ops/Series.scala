@@ -78,44 +78,29 @@ object Series {
       .as(keys :+ "_p"))
   }
 
-  /** [[pack]] behind the exchange that brings each key's records together:
-    * hash-partitioned on the keys, or one partition when there are none. At
-    * most one record per series and input partition crosses it (more only
-    * where a packer flushed under memory pressure). The keyed exchange is an
-    * ordinary one: AQE may coalesce it, and its hash partitioning on the keys
-    * is what a join on them needs. */
-  private[graft] def packBy(df: DataFrame, keys: Seq[String], t: Column,
-                            values: Seq[Column]): DataFrame = {
-    val packed = pack(df, keys, t, values)
-    if (keys.isEmpty) packed.repartition(1) else packed.repartition(keys.map(col): _*)
-  }
-
-  /** Merge exchanged packed records ([[packBy]]) into one
-    * `(…, _s: struct<t, v, nu>)` row per series: a sort within partitions on
-    * `keys`, then [[graft.functions.SeriesMerge]]. Every column of `packed`
-    * but `_p` is part of the series key, so a column that is constant per
-    * key (a join's payload) rides along. */
-  private[graft] def merge(packed: DataFrame, keys: Seq[String]): DataFrame = {
-    val B = org.apache.spark.sql.GraftExpressionBridge
-    val carried = packed.columns.toSeq.filter(_ != "_p")
-    val sorted = if (keys.isEmpty) packed else packed.sortWithinPartitions(keys.map(col): _*)
-    val merged = graft.functions.SeriesMerge((carried :+ "_p").map(c => B.expression(col(c))))
-    sorted.select(B.column(merged).as(carried :+ "_s"))
-  }
-
   /** Gather each `keys` group into one `_s: struct<t, v, nu>` of parallel
     * arrays sorted by `(t, v_1..v_w, nu)` (see [[pack]]), `v` holding the
     * `w` lanes element by element ([[lanes]]); no keys gathers the whole
     * input into one row, also when the input is empty.
     *
-    * Plan shape: packer → key exchange → sort within partitions on the keys
-    * → streaming merge. The merge runs entirely above the exchange and holds
+    * Plan shape: packer → key exchange (hash-partitioned on the keys, or one
+    * partition when there are none) → sort within partitions on the keys →
+    * streaming merge ([[graft.functions.SeriesMerge]]). At most one record
+    * per series and input partition crosses the exchange (more only where a
+    * packer flushed under memory pressure); it is an ordinary one, so AQE
+    * may coalesce it. The merge runs entirely above the exchange and holds
     * one series at a time; the sort spills under memory pressure. The
     * output is not known to Spark as hash-partitioned on the keys (the merge
-    * emits new columns): a consumer that joins on them joins the exchanged
-    * records before the merge instead ([[packBy]], [[merge]]). */
-  def gatherBy(df: DataFrame, keys: Seq[String], t: Column, values: Seq[Column]): DataFrame =
-    merge(packBy(df, keys, t, values), keys)
+    * emits new columns). */
+  def gatherBy(df: DataFrame, keys: Seq[String], t: Column, values: Seq[Column]): DataFrame = {
+    val B = org.apache.spark.sql.GraftExpressionBridge
+    val packed = pack(df, keys, t, values)
+    val sorted =
+      if (keys.isEmpty) packed.repartition(1)
+      else packed.repartition(keys.map(col): _*).sortWithinPartitions(keys.map(col): _*)
+    val merged = graft.functions.SeriesMerge((keys :+ "_p").map(c => B.expression(col(c))))
+    sorted.select(B.column(merged).as(keys :+ "_s"))
+  }
 
   /** A gathered `v` array of `w` lanes, one array per lane. */
   def lanes(vs: Array[Double], w: Int): Array[Array[Double]] =

@@ -14,81 +14,118 @@ import graft.kernels.Forecast
   * (ts_cv_folds_native.cpp:523-650): initial train size defaults so the last
   * fold's test window ends at the data end; `skip_length` defaults to the
   * horizon; `window_type` ∈ expanding | fixed | sliding; folds that don't fit
-  * are dropped (`clip_horizon` keeps partially-fitting last tests).
+  * are dropped (`clip_horizon` keeps partially-fitting last tests). The
+  * policy is written once, as [[CvParams.folds]].
   *
-  * Spark shape: row_number + count windows give (pos, n) per row; rows are
-  * multiplied by the fold ids they belong to via explode — fully distributed,
-  * no per-group materialization or driver-side boundary computation.
+  * Spark shape: `cvFoldsBy` takes (pos, n) per row from row_number + count
+  * windows and multiplies each row by the folds it belongs to through an
+  * explode of `folds(n)`, fully distributed with no driver-side boundary
+  * computation. `cvForecastBy` and `backtestAutoBy` are per-series kernels
+  * on [[Series.mapLanes]]: one gather, a round-robin kernel exchange and one
+  * kernel call per series.
   */
 object TsCvOp {
+
+  /** One fold of a group: inclusive train and test windows as positions into
+    * the group's ds-sorted rows. */
+  final case class CvFold(id: Long, trainStart: Long, trainEnd: Long,
+                          testStart: Long, testEnd: Long)
 
   final case class CvParams(
       gap: Long = 0, embargo: Long = 0, windowType: String = "expanding",
       minTrainSize: Long = 1, initialTrainSize: Long = -1, skipLength: Long = -1,
-      clipHorizon: Boolean = false)
+      clipHorizon: Boolean = false) {
+
+    /** The valid folds of a group of `n` rows, in id order. Fold `f`'s train
+      * window ends at `init - 1 + (f - 1)·skip`, where `init` is
+      * `initial_train_size` or, by default, `max(n - horizon·nFolds, 1)`
+      * (at least `min_train_size` for a fixed or sliding window), and
+      * `skip` is `skip_length` or the horizon. It starts at 0 (expanding)
+      * or `min_train_size` rows before its end (fixed, sliding). The test
+      * window starts `gap` rows after the train window and holds `horizon`
+      * rows, fewer at the data end. A fold is valid when its whole test
+      * window fits (with `clip_horizon`: when it starts inside the data)
+      * and, for a fixed or sliding window, its train window reaches
+      * `min_train_size`. A group of fewer than 2 rows, or fewer than
+      * `min_train_size` under a fixed or sliding window, has no folds. */
+    def folds(n: Long, horizon: Int, nFolds: Int): Seq[CvFold] = {
+      val isFixed = windowType == "fixed" || windowType == "sliding"
+      if (n < 2 || (isFixed && n < minTrainSize)) Nil
+      else {
+        val skip = if (skipLength > 0) skipLength else horizon.toLong
+        val init =
+          if (initialTrainSize > 0) initialTrainSize
+          else {
+            val auto = math.max(n - horizon.toLong * nFolds, 1L)
+            if (isFixed) math.max(auto, minTrainSize) else auto
+          }
+        (1L to nFolds.toLong).flatMap { f =>
+          val trainEnd = init - 1 + (f - 1) * skip
+          val testStart = trainEnd + 1 + gap
+          val fits = if (clipHorizon) testStart < n else testStart + horizon - 1 < n
+          if (!fits || (isFixed && trainEnd + 1 < minTrainSize)) None
+          else Some(CvFold(f,
+            if (isFixed) math.max(trainEnd + 1 - minTrainSize, 0L) else 0L,
+            math.min(trainEnd, n - 1), testStart, math.min(testStart + horizon - 1, n - 1)))
+        }
+      }
+    }
+  }
 
   val validCvKeys: Set[String] = Set("gap", "embargo", "window_type", "min_train_size",
     "initial_train_size", "skip_length", "clip_horizon")
 
+  /** The CV parameters; an unknown key, a `window_type` other than
+    * expanding | fixed | sliding, a non-integer number or a non-boolean
+    * `clip_horizon` fails with an error that names the key. */
   def parseCvParams(params: Map[String, String]): CvParams = {
     val unknown = params.keySet -- validCvKeys
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
         s"ts_cv_folds_by: Unknown parameter(s): ${unknown.toSeq.sorted.mkString(", ")}. " +
           s"Valid: ${validCvKeys.toSeq.sorted.mkString(", ")}")
+    def parsed[T](key: String, default: T, kind: String)(parse: String => Option[T]): T =
+      params.get(key).fold(default)(v => parse(v).getOrElse(
+        throw new IllegalArgumentException(s"CV parameter '$key' must be $kind, got '$v'")))
+    def long(key: String, default: Long) = parsed(key, default, "an integer")(_.toLongOption)
+    val windowType = parsed("window_type", "expanding", "expanding|fixed|sliding")(
+      Some(_).filter(Set("expanding", "fixed", "sliding")))
     CvParams(
-      gap = params.getOrElse("gap", "0").toLong,
-      embargo = params.getOrElse("embargo", "0").toLong,
-      windowType = params.getOrElse("window_type", "expanding"),
-      minTrainSize = params.getOrElse("min_train_size", "1").toLong,
-      initialTrainSize = params.getOrElse("initial_train_size", "-1").toLong,
-      skipLength = params.getOrElse("skip_length", "-1").toLong,
-      clipHorizon = params.get("clip_horizon").exists(_.toBoolean))
+      gap = long("gap", 0), embargo = long("embargo", 0), windowType = windowType,
+      minTrainSize = long("min_train_size", 1),
+      initialTrainSize = long("initial_train_size", -1),
+      skipLength = long("skip_length", -1),
+      clipHorizon = parsed("clip_horizon", false, "true or false")(_.toBooleanOption))
+  }
+
+  /** The call-time checks of a fold layout. */
+  private def requireFolds(nFolds: Int, horizon: Int): Unit = {
+    require(horizon >= 1, s"horizon must be at least 1, got $horizon")
+    require(nFolds >= 1, s"n_folds must be at least 1, got $nFolds")
   }
 
   /** ts_cv_folds_by: rows tagged (fold_id, split ∈ train|test). */
   def cvFoldsBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                 nFolds: Int, horizon: Int, params: Map[String, String] = Map.empty): DataFrame = {
     val p = parseCvParams(params)
-    require(Set("expanding", "fixed", "sliding").contains(p.windowType),
-      s"window_type must be expanding|fixed|sliding, got '${p.windowType}'")
-    val isFixed = p.windowType == "fixed" || p.windowType == "sliding"
-    val skip = if (p.skipLength > 0) p.skipLength else horizon.toLong
+    requireFolds(nFolds, horizon)
+    val folds = udf((n: Long) => p.folds(n, horizon, nFolds))
 
+    // the explode takes the UDF call itself, not a named column holding it
+    // (see Series.mapKernel), so the folds are computed once per row
     val w = Window.partitionBy(col(groupCol)).orderBy(col(dsCol))
     val wAll = Window.partitionBy(col(groupCol))
-    val base = df
+    val tagged = df
       .withColumn("_pos", row_number().over(w) - 1)
       .withColumn("_n", count(lit(1)).over(wAll))
-      .filter(col("_n") >= 2)
-      .filter(if (isFixed) col("_n") >= p.minTrainSize else lit(true))
+      .select(col(groupCol), col(dsCol), col(yCol), col("_pos"),
+        explode(folds(col("_n"))).as("_f"))
 
-    val init: Column =
-      if (p.initialTrainSize > 0) lit(p.initialTrainSize)
-      else {
-        val auto = greatest(col("_n") - lit(horizon.toLong * nFolds), lit(1L))
-        if (isFixed) greatest(auto, lit(p.minTrainSize)) else auto
-      }
-
-    val folded = base
-      .withColumn("_fold", explode(sequence(lit(1L), lit(nFolds.toLong))))
-      .withColumn("_train_end", init - 1 + (col("_fold") - 1) * lit(skip))
-      .withColumn("_test_start", col("_train_end") + 1 + lit(p.gap))
-      .withColumn("_test_end", least(col("_test_start") + lit(horizon - 1), col("_n") - 1))
-
-    val foldValid =
-      (if (isFixed) col("_train_end") + 1 >= p.minTrainSize else lit(true)) &&
-        (if (p.clipHorizon) col("_test_start") < col("_n")
-         else col("_test_start") + lit(horizon - 1) < col("_n"))
-
-    val trainStart: Column =
-      if (isFixed) greatest(col("_train_end") + 1 - p.minTrainSize, lit(0L)) else lit(0L)
-    val isTrain = col("_pos") >= trainStart && col("_pos") <= col("_train_end")
-    val isTest = col("_pos") >= col("_test_start") && col("_pos") <= col("_test_end")
-
-    folded.filter(foldValid && (isTrain || isTest))
+    val isTrain = col("_pos").between(col("_f.trainStart"), col("_f.trainEnd"))
+    val isTest = col("_pos").between(col("_f.testStart"), col("_f.testEnd"))
+    tagged.filter(isTrain || isTest)
       .select(col(groupCol), col(dsCol), col(yCol),
-        col("_fold").as("fold_id"),
+        col("_f.id").as("fold_id"),
         when(isTrain, "train").otherwise("test").as("split"))
   }
 
@@ -96,11 +133,10 @@ object TsCvOp {
   final case class CvFcStep(step: Int, yhat: Double, yhat_lower: Double,
                             yhat_upper: Double, model_name: String)
 
-  /** Per-fold kernel output of the all-folds-in-one-call backtest UDF: one
-    * step per test row, with its time `t` (micros), its `actual` y (None
-    * where y is null) and the forecast. `model_name` sits at the FOLD level
-    * (it is constant across a fold's steps), so the steps the backtest pins
-    * stay string-free. */
+  /** Per-fold kernel output of the backtest: one step per test row, with
+    * its time `t` (micros), its `actual` y (None where y is null) and the
+    * forecast. `model_name` sits at the FOLD level (it is constant across a
+    * fold's steps), so the steps the backtest pins stay string-free. */
   final case class BtStep(t: Long, actual: Option[Double], yhat: Double, yhat_lower: Double,
                           yhat_upper: Double)
   final case class BtFoldFc(fold_id: Long, model_name: String, steps: Seq[BtStep])
@@ -116,33 +152,28 @@ object TsCvOp {
     val train = folds.filter(col("split") === "train")
     val test = folds.filter(col("split") === "test")
 
-    val testCounts = test.groupBy(col("fold_id"), col(groupCol))
-      .agg(count(lit(1)).cast(IntegerType).as("_h"))
-
-    // no round-robin exchange here (unlike Series.gather): the test counts
-    // join the packed records on the (fold_id, g) hash partitioning of the
-    // gather's key exchange, before the merge, which carries `_h` as part
-    // of the key; joined after the merge, they would need an exchange more
-    val keys = Seq("fold_id", groupCol)
-    val packed = Series.packBy(train, keys, Series.micros(train, dsCol), Seq(col(yCol)))
-    val gathered = Series.merge(packed.join(testCounts, keys), keys)
-
-    val fcUdf = udf((vs: Array[Double], nu: Array[Boolean], h: Int) => {
-      try {
-        val out = Forecast.forecast(vs, nu.map(!_), opts.copy(horizon = h))
-        Some((0 until out.point.length).map(i =>
-          CvFcStep(i + 1, out.point(i), out.lower(i), out.upper(i), out.modelName)))
-      } catch {
-        case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
+    // train and test rows gathered as ONE series per (fold_id, g), lanes
+    // (y, test?). A null-ds train row has no time and is not gathered; a
+    // null-ds test row is gathered at Long.MinValue, so it counts toward
+    // the horizon
+    val micros = Series.micros(folds, dsCol)
+    val t = when(col("split") === "train", micros)
+      .when(col("split") === "test", coalesce(micros, lit(Long.MinValue)))
+    val preds = Series.mapLanes(folds, Seq("fold_id", groupCol), t,
+        Seq(col(yCol), (col("split") === "test").cast(DoubleType))) { s =>
+      val lanes = Series.lanes(s.vs, 2)
+      val (fit, ahead) = s.ts.indices.partition(lanes(1)(_) == 0.0)
+      // a (fold, group) without train rows or without test rows gives no rows
+      if (fit.isEmpty || ahead.isEmpty) Nil
+      else {
+        val out = Forecast.forecast(fit.map(lanes(0)(_)).toArray, fit.map(!s.nu(_)).toArray,
+          opts.copy(horizon = ahead.length))
+        (0 until out.point.length).map(i =>
+          CvFcStep(i + 1, out.point(i), out.lower(i), out.upper(i), out.modelName))
       }
-    })
-
-    val preds = gathered
-      .select(col("fold_id"), col(groupCol),
-        explode(fcUdf(col("_s.v"), col("_s.nu"), col("_h"))).as("_p"))
-      .select(col("fold_id"), col(groupCol), col("_p.step").as("_step"),
-        col("_p.yhat").as("yhat"), col("_p.yhat_lower").as("yhat_lower"),
-        col("_p.yhat_upper").as("yhat_upper"), col("_p.model_name").as("model_name"))
+    }.select(col("fold_id"), col(groupCol), col("_r.step").as("_step"),
+        col("_r.yhat").as("yhat"), col("_r.yhat_lower").as("yhat_lower"),
+        col("_r.yhat_upper").as("yhat_upper"), col("_r.model_name").as("model_name"))
 
     val wTest = Window.partitionBy(col("fold_id"), col(groupCol)).orderBy(col(dsCol))
     val testWithStep = test.withColumn("_step", row_number().over(wTest))
@@ -164,15 +195,16 @@ object TsCvOp {
     * abs_error, yhat_lower, yhat_upper, model_name, fold_metric_score)
     * (ts_backtest_native.cpp:447-478).
     *
-    * Scale shape: each group's ordered series is gathered ONCE
-    * ([[Series.gatherBy]]: a single shuffle on the group key carries every
-    * input row exactly once), then one kernel call per group computes every
-    * fold on the gathered arrays. Unlike the cvFoldsBy→cvForecastBy
-    * composition this never shuffles train rows duplicated ×nFolds (an
-    * expanding backtest would otherwise blow the input up ~nFolds·n/2 rows)
-    * and traverses the input plan once, not three times. Fold semantics are
-    * identical to cvFoldsBy (position-based per group, same defaults):
-    * null-ds rows count toward the positions and sort first.
+    * Scale shape: each group's ordered series is gathered ONCE on the
+    * per-series kernel stage ([[Series.mapLanes]]: a single key exchange
+    * carries every input row exactly once, and the kernel reads a
+    * round-robin exchange that AQE never coalesces), then one kernel call
+    * per group computes every fold ([[CvParams.folds]]) on the gathered
+    * arrays. Unlike the cvFoldsBy→cvForecastBy composition this never
+    * shuffles train rows duplicated ×nFolds (an expanding backtest would
+    * otherwise blow the input up ~nFolds·n/2 rows) and traverses the input
+    * plan once, not three times. Null-ds rows count toward the positions
+    * and sort first, as in cvFoldsBy.
     *
     * `metric` is the per-fold score over all groups
     * (ts_backtest_native.cpp:280-374, :876-886): mae | mse | rmse | mape |
@@ -184,78 +216,37 @@ object TsCvOp {
                      params: Map[String, String] = Map.empty, metric: String = "rmse"): DataFrame = {
     val (cvKeys, fcKeys) = params.partition { case (k, _) => validCvKeys.contains(k) }
     val p = parseCvParams(cvKeys)
-    require(Set("expanding", "fixed", "sliding").contains(p.windowType),
-      s"window_type must be expanding|fixed|sliding, got '${p.windowType}'")
-    val isFixed = p.windowType == "fixed" || p.windowType == "sliding"
-    val skip = if (p.skipLength > 0) p.skipLength else horizon.toLong
+    requireFolds(nFolds, horizon)
     val method = fcKeys.getOrElse("method", "AutoETS")
     val opts = Forecast.optionsFromParams(method, 1, fcKeys - "method")
     val dsType = df.schema(dsCol).dataType
 
-    // one shuffle: gather each group's full ordered series. A null ds is
-    // the time Long.MinValue, so null-ds rows sort first and count toward
-    // every fold position (cvFoldsBy's row_number over ds); the kernel
-    // drops them from its train input only, like cvForecastBy
-    val gathered = Series.gatherBy(df, Seq(groupCol),
-      coalesce(Series.toMicros(col(dsCol), dsType), lit(Long.MinValue)), Seq(col(yCol)))
-
-    // ONE kernel call per group computes every fold, slicing the train
-    // windows out of the gathered arrays, so the series is never duplicated
-    // ×nFolds through an explode/slice (an expanding backtest would
-    // otherwise materialize ~nFolds·n/2 elements per group before the
-    // kernel ever ran — the dominant cost at scale). Fold boundary/validity
-    // arithmetic is cvFoldsBy's column form, evaluated on scalars.
-    val fcAllUdf = udf((ts: Array[Long], vs: Array[Double], nu: Array[Boolean]) => {
-      val n = ts.length.toLong
-      val acc = Seq.newBuilder[BtFoldFc]
-      if (n >= 2 && (!isFixed || n >= p.minTrainSize)) {
-        val init =
-          if (p.initialTrainSize > 0) p.initialTrainSize
-          else {
-            val auto = math.max(n - horizon.toLong * nFolds, 1L)
-            if (isFixed) math.max(auto, p.minTrainSize) else auto
-          }
-        val k = ts.segmentLength(_ == Long.MinValue)
-        var f = 1L
-        while (f <= nFolds) {
-          val trainEnd = init - 1 + (f - 1) * skip
-          val testStart = trainEnd + 1 + p.gap
-          val valid = (!isFixed || trainEnd + 1 >= p.minTrainSize) &&
-            (if (p.clipHorizon) testStart < n else testStart + horizon - 1 < n)
-          if (valid) {
-            val testEnd = math.min(testStart + horizon - 1, n - 1)
-            val trainStart = if (isFixed) math.max(trainEnd + 1 - p.minTrainSize, 0L) else 0L
-            val from = math.max(trainStart, k.toLong).toInt
-            val until = math.min(trainEnd, n - 1).toInt + 1
-            val h = (testEnd - testStart + 1).toInt
-            try {
-              val o = Forecast.forecast(vs.slice(from, until), nu.slice(from, until).map(!_),
-                opts.copy(horizon = h))
-              // the train window is not empty, so no test row has a null ds
-              acc += BtFoldFc(f, o.modelName, (0 until h).map { j =>
-                val i = testStart.toInt + j
-                BtStep(ts(i), if (nu(i)) None else Some(vs(i)), o.point(j), o.lower(j), o.upper(j))
-              })
-            } catch {
-              case _: Forecast.InsufficientData | _: Forecast.ComputationError => ()
-            }
-          }
-          f += 1
+    // A null ds is the time Long.MinValue, so null-ds rows sort first and
+    // count toward every fold position (cvFoldsBy's row_number over ds);
+    // the kernel drops them from its train input only, like cvForecastBy.
+    // Each fold's train window is a slice of the gathered arrays, so the
+    // series is never duplicated ×nFolds.
+    val perFold = Series.mapLanes(df, Seq(groupCol),
+        coalesce(Series.micros(df, dsCol), lit(Long.MinValue)), Seq(col(yCol))) { s =>
+      val k = s.ts.segmentLength(_ == Long.MinValue)
+      p.folds(s.ts.length, horizon, nFolds).flatMap { f =>
+        val from = math.max(f.trainStart, k.toLong).toInt
+        val until = f.trainEnd.toInt + 1
+        val h = (f.testEnd - f.testStart + 1).toInt
+        try {
+          val o = Forecast.forecast(s.vs.slice(from, until), s.nu.slice(from, until).map(!_),
+            opts.copy(horizon = h))
+          // the train window is not empty, so no test row has a null ds
+          Some(BtFoldFc(f.id, o.modelName, (0 until h).map { j =>
+            val i = f.testStart.toInt + j
+            BtStep(s.ts(i), if (s.nu(i)) None else Some(s.vs(i)), o.point(j), o.lower(j), o.upper(j))
+          }))
+        } catch {
+          case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
         }
       }
-      acc.result()
-    })
-
-    // Compact per-(group, fold) forecast rows — the heavy kernel output
-    // BEFORE fan-out: one row per group-fold carrying its h steps.
-    // The explode takes the UDF call itself, not a named column holding it:
-    // for an attribute input Spark infers `size(c) > 0 AND isnotnull(c)`
-    // and pushes it below the projection with the call substituted, which
-    // would run the kernel up to three times per group.
-    val perFold = gathered
-      .select(col(groupCol), explode(fcAllUdf(col("_s.t"), col("_s.v"), col("_s.nu"))).as("_f"))
-      .select(col("_f.fold_id").as("fold_id"), col(groupCol),
-        col("_f.model_name").as("_mn"), col("_f.steps").as("_steps"))
+    }.select(col("_r.fold_id").as("fold_id"), col(groupCol),
+      col("_r.model_name").as("_mn"), col("_r.steps").as("_steps"))
 
     // Pin the compact kernel output so the per-fold score (a global aggregate
     // over ALL groups) and the row-level output both read it WITHOUT either

@@ -206,4 +206,26 @@ class AdaptivePlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kernelOps.length == 1,
       s"the forecast UDF must be evaluated by exactly one operator:\n${render(plans)}")
   }
+
+  test("backtest: the forecast kernel reads a REPARTITION_BY_NUM exchange, never a coalesced read") {
+    val plans = finalPlans {
+      graft.ops.TsCvOp.backtestAutoBy(backtestSeries, "g", "ds", "y", 7, 3, "1d",
+        Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse").collect()
+    }
+    // the shuffle reads of the kernel's stage: AQE coalesces the few KB of
+    // gathered series onto one task unless the exchange carries its count
+    def reads(p: SparkPlan): Seq[SparkPlan] = p match {
+      case r: AQEShuffleReadExec => Seq(r)
+      case q: ShuffleQueryStageExec => Seq(q)
+      case other => other.children.flatMap(reads)
+    }
+    val kernel = plans.flatMap(nodes).filter(
+      _.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))).distinct
+    assert(kernel.length == 1, render(plans))
+    val inputs = reads(kernel.head)
+    assert(inputs.nonEmpty && inputs.forall {
+      case q: ShuffleQueryStageExec => q.shuffle.shuffleOrigin == REPARTITION_BY_NUM
+      case _ => false
+    }, s"the kernel must read a REPARTITION_BY_NUM exchange directly:\n${render(plans)}")
+  }
 }

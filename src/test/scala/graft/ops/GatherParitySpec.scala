@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pinned rows of the operators whose series gather carries more than
   * `(ds, y)`: the backtest (null-ds rows count toward fold positions), the
+  * CV forecast (train and test rows of a fold in one series), the
   * metric tables (several value columns, null dates sorting first) and the
   * exogenous forecast (history and future regressors, groups on one side
   * only). Each case's rows are rendered in full precision and compared with
   * the rows these operators gave when each gathered through its own
-  * `sort_array(collect_list(struct(...)))`, so any change in gather order,
+  * `sort_array(collect_list(struct(...)))` (the CV forecast: when it joined
+  * its test-row counts to its train-row gather), so any change in gather order,
   * null handling or group matching shows as a changed row. */
 class GatherParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -171,5 +173,51 @@ class GatherParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         "[a,2,2024-01-22,31.75,18.35322615328601,45.14677384671399,Naive]",
         "[a,3,2024-01-23,31.75,15.342369938044072,48.15763006195593,Naive]",
         "[a,4,2024-01-24,31.75,12.804100733931897,50.6958992660681,Naive]")))
+  }
+
+  /** Hand-built folds. Fold 1: group "a" has a null-ds train row, a
+    * duplicate last train ds and a null-ds test row; "b" has test rows
+    * only, "c" train rows only, and a null group has both. Fold 2: group
+    * "a" on a longer train window. */
+  private def cvFoldsInput: DataFrame = {
+    val s = spark
+    import s.implicits._
+    def rows(fold: Long, g: String, days: Seq[Int], split: String) =
+      days.map(i => (fold, g, Option(day(i)), Option((i % 4) + 0.5 * i), split))
+    val a = rows(1, "a", 0 until 10, "train") ++ rows(1, "a", Seq(10, 11), "test") ++ Seq(
+      (1L, "a", None, Some(30.0), "train"), (1L, "a", Some(day(9)), Some(2.0), "train"),
+      (1L, "a", None, Some(5.0), "test"))
+    val others = rows(1, "b", Seq(5, 6), "test") ++ rows(1, "c", 0 until 8, "train") ++
+      rows(1, null, 0 until 8, "train") ++ rows(1, null, Seq(8, 9), "test") ++
+      rows(2, "a", 0 until 12, "train") ++ rows(2, "a", Seq(12, 13), "test")
+    (a ++ others).toDF("fold_id", "g", "ds", "y", "split").repartition(3)
+  }
+
+  /** The test rows carry the predictions; train rows pass through. */
+  test("cvForecastBy: null-ds rows, one-sided folds, duplicate ds and a null group") {
+    val folds = cvFoldsInput
+    def cv(m: String) = rows(TsCvOp.cvForecastBy(folds, "g", "ds", "y", m).filter("split = 'test'"))
+    checkAll(
+      ("Naive", cv("Naive"), Seq(
+        "[1,a,2024-01-11,7.0,test,5.5,0.38832417380893425,10.611675826191066,Naive]",
+        "[1,a,2024-01-12,8.5,test,5.5,-0.7604987523438709,11.76049875234387,Naive]",
+        "[1,a,null,5.0,test,5.5,1.88549936007295,9.11450063992705,Naive]",
+        "[1,b,2024-01-06,3.5,test,null,null,null,null]",
+        "[1,b,2024-01-07,5.0,test,null,null,null,null]",
+        "[1,null,2024-01-09,4.0,test,null,null,null,null]",
+        "[1,null,2024-01-10,5.5,test,null,null,null,null]",
+        "[2,a,2024-01-13,6.0,test,8.5,3.9121065109718742,13.087893489028126,Naive]",
+        "[2,a,2024-01-14,7.5,test,8.5,2.0117388050932057,14.988261194906794,Naive]")),
+      // the null-ds train row (y = 30) would move every SES level
+      ("SES", cv("SES"), Seq(
+        "[1,a,2024-01-11,7.0,test,4.115283537149999,-0.9963922890410668,9.226959363341065,SES]",
+        "[1,a,2024-01-12,8.5,test,4.115283537149999,-2.145215215193872,10.37578228949387,SES]",
+        "[1,a,null,5.0,test,4.115283537149999,0.5007828972229489,7.729784177077049,SES]",
+        "[1,b,2024-01-06,3.5,test,null,null,null,null]",
+        "[1,b,2024-01-07,5.0,test,null,null,null,null]",
+        "[1,null,2024-01-09,4.0,test,null,null,null,null]",
+        "[1,null,2024-01-10,5.5,test,null,null,null,null]",
+        "[2,a,2024-01-13,6.0,test,6.260198476005,1.672304986976874,10.848091965033126,SES]",
+        "[2,a,2024-01-14,7.5,test,6.260198476005,-0.22806271890179453,12.748459670911794,SES]")))
   }
 }

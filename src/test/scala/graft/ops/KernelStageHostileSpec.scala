@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
 /** Every [[Series.mapKernel]] operator ([[KernelStageOps]]), and the
-  * backtest, exogenous forecast and metric table, which gather more than
-  * `(ds, y)`, on one healthy 60-point group next to one hostile group: a
-  * single point, all-null y, NaN y, ±Inf y or duplicate ds. No task may fail or run past the time limit,
+  * backtest, CV forecast, exogenous forecast and metric table, which
+  * gather more than `(ds, y)`, on one healthy 60-point group next to one
+  * hostile group: a single point, all-null y, NaN y, ±Inf y or duplicate ds. No task may fail or run past the time limit,
   * and the healthy group's rows must equal its rows from the healthy group
   * alone: a hostile series is isolated by the skip rule, never able to
   * abort, stall or change a neighbour. The keyless `forecastSingle` runs on
@@ -70,14 +70,17 @@ class KernelStageHostileSpec extends AnyFunSuite with BeforeAndAfterAll with Tim
     rows
   }
 
-  /** The backtest without its fold score, which aggregates every group; the
-    * exogenous forecast with a day-of-week regressor and the 7 days after
+  /** The backtest without its fold score, which aggregates every group;
+    * the CV forecast over two folds; the exogenous forecast with a day-of-week regressor and the 7 days after
     * each group's last ds as its future; the rmse of y against a shifted
     * forecast. */
   private val gatherOps: Seq[(String, DataFrame => DataFrame)] = Seq(
     "backtestAutoBy" -> (df => TsCvOp.backtestAutoBy(df, "g", "ds", "y", 7, 2, "1d",
       Map("method" -> "AutoETS", "seasonal_period" -> "7"))
       .select("g", "fold_id", "ds", "yhat", "actual", "yhat_lower", "yhat_upper", "model_name")),
+    "cvForecastBy" -> (df => TsCvOp.cvForecastBy(TsCvOp.cvFoldsBy(df, "g", "ds", "y", 2, 7),
+      "g", "ds", "y", "AutoETS", Map("seasonal_period" -> "7"))
+      .select("g", "fold_id", "ds", "y", "split", "yhat", "yhat_lower", "yhat_upper", "model_name")),
     "forecastExogBy" -> { df =>
       def withX(d: DataFrame) = d.withColumn("x", dayofweek(col("ds")).cast("double"))
       val future = df.groupBy("g").agg(max("ds").as("last"))

@@ -1118,14 +1118,14 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one exchange into the one partition the whole input is gathered in
     assert(exchanges(graft.ops.TsForecastOp.forecastSingle(
       series.filter(col("g") === "s0").drop("g"), "ds", "y", "Naive", 3)) == 1)
-    // the test counts, the gather's key exchange (the counts join the
-    // packed records on it; joined after the merge they would need one
-    // more), the test rows' step window and the two sides of the step join
+    // the gather's key exchange, the kernel's round-robin exchange, the
+    // test rows' step window and the two sides of the step join
     val folds = series.withColumn("fold_id", lit(1L))
       .withColumn("split", when(col("ds") < 15, "train").otherwise("test"))
     assert(exchanges(graft.ops.TsCvOp.cvForecastBy(folds, "g", "ds", "y", "Naive")) == 5)
-    // the key exchange under the pinned kernel output (read through its
-    // cached plan) and none above it: the fold scores are a literal lookup
+    // the key exchange and the kernel's round-robin exchange under the
+    // pinned kernel output (read through its cached plan) and none above
+    // it: the fold scores are a literal lookup
     val mode = spark.conf.get(graft.llm.Pin.ModeKey, "local")
     spark.conf.set(graft.llm.Pin.ModeKey, "disk")
     try {
@@ -1136,7 +1136,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
         case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
           pinned(m.relation.cachedPlan)
       }.sum
-      assert(pinned(bt.queryExecution.executedPlan) == 1)
+      assert(pinned(bt.queryExecution.executedPlan) == 2)
       bt.unpersist()
     } finally spark.conf.set(graft.llm.Pin.ModeKey, mode)
     // history and future rows meet in one key exchange, and the kernel
@@ -1149,17 +1149,24 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       "ds", "y", "f", "mae")) == 1)
   }
 
-  test("per-series kernel stage: each of the 18 mapKernel operators evaluates its kernel in one operator, on a REPARTITION_BY_NUM exchange") {
+  /** Why the per-series kernel of `plan` is not one operator on a
+    * REPARTITION_BY_NUM exchange, if it is not (`keyed = false`: one
+    * operator on any input). A filter on a named kernel column is pushed
+    * below the projection that computes it, so the kernel runs in both
+    * operators: in the merge stage (which AQE may fold onto one task) and
+    * again after the round-robin exchange. The plans of cached relations
+    * (a pin in `disk` mode) are read through. */
+  private def kernelStageFault(name: String, plan: org.apache.spark.sql.execution.SparkPlan,
+                               keyed: Boolean): Option[String] = {
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan,
       WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-    import org.apache.spark.sql.functions.col
-    // a filter on a named kernel column is pushed below the projection that
-    // computes it, so the kernel runs in both operators: in the merge
-    // stage (which AQE may fold onto one task) and again after
-    // the round-robin exchange
-    val df = (0 until 3).map(i => KernelStageOps.healthy(spark, s"s$i")).reduce(_ unionByName _)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case other => other.children.flatMap(nodes)
+    })
     def readsRepartitionByNum(p: SparkPlan): Boolean = p match {
       case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_NUM
       case w: WholeStageCodegenExec => readsRepartitionByNum(w.child)
@@ -1167,20 +1174,44 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       case pr: ProjectExec => readsRepartitionByNum(pr.child)
       case _ => false
     }
+    val kernel = nodes(plan).filter(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])))
+    if (kernel.length != 1)
+      Some(s"$name: the kernel is evaluated in ${kernel.length} operators:\n$plan")
+    else if (keyed && !kernel.head.children.forall(readsRepartitionByNum))
+      Some(s"$name: the kernel does not read a REPARTITION_BY_NUM exchange:\n$plan")
+    else None
+  }
+
+  test("per-series kernel stage: each of the 18 mapKernel operators evaluates its kernel in one operator, on a REPARTITION_BY_NUM exchange") {
+    import org.apache.spark.sql.functions.col
+    val df = (0 until 3).map(i => KernelStageOps.healthy(spark, s"s$i")).reduce(_ unionByName _)
     val ops = KernelStageOps.keyed.map(_ -> true) ++ KernelStageOps.keyless.map(_ -> false)
     assert(ops.length == 18)
     val faults = ops.flatMap { case ((name, op), keyed) =>
-      val plan = op(if (keyed) df else df.filter(col("g") === "s0").drop("g"))
-        .queryExecution.executedPlan
-      val kernel = plan.collect {
-        case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p
-      }
-      if (kernel.length != 1)
-        Some(s"$name: the kernel is evaluated in ${kernel.length} operators:\n$plan")
-      else if (keyed && !kernel.head.children.forall(readsRepartitionByNum))
-        Some(s"$name: the kernel does not read a REPARTITION_BY_NUM exchange:\n$plan")
-      else None
+      kernelStageFault(name, op(if (keyed) df else df.filter(col("g") === "s0").drop("g"))
+        .queryExecution.executedPlan, keyed)
     }
+    assert(faults.isEmpty, faults.mkString("\n"))
+  }
+
+  test("per-series kernel stage: the backtest and cvForecastBy kernels run in one operator, on a REPARTITION_BY_NUM exchange") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val df = (0 until 3).map(i => KernelStageOps.healthy(spark, s"s$i")).reduce(_ unionByName _)
+    // folds built without cvFoldsBy, whose fold UDF would count as a kernel
+    val folds = df.withColumn("fold_id", lit(1L))
+      .withColumn("split", when(col("ds") < "2024-02-20", "train").otherwise("test"))
+    val cv = kernelStageFault("cvForecastBy", graft.ops.TsCvOp.cvForecastBy(folds, "g", "ds", "y",
+      "Naive").queryExecution.executedPlan, keyed = true)
+    // the backtest's kernel sits under its pin, read through its cached plan
+    val mode = spark.conf.get(graft.llm.Pin.ModeKey, "local")
+    spark.conf.set(graft.llm.Pin.ModeKey, "disk")
+    val bt = try {
+      val out = graft.ops.TsCvOp.backtestAutoBy(df, "g", "ds", "y", 7, 2, "1d",
+        Map("method" -> "Naive"))
+      try kernelStageFault("backtestAutoBy", out.queryExecution.executedPlan, keyed = true)
+      finally out.unpersist()
+    } finally spark.conf.set(graft.llm.Pin.ModeKey, mode)
+    val faults = cv ++ bt
     assert(faults.isEmpty, faults.mkString("\n"))
   }
 
